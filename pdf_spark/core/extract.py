@@ -1,6 +1,6 @@
 """Per-document extraction: bytes -> spans -> deterministic text.
 
-This is the pure function the Spark ``mapInPandas`` stage applies per row
+This is the pure function the Spark ``mapInArrow`` stage applies per row
 (SURVEY.md §3 EP1: everything from ``pdf_resolver_new`` through the content
 interpreter stays inside the UDF; only flat span/text columns cross the
 Arrow boundary).
@@ -17,6 +17,7 @@ executor runs the same IEEE-754 ops on the same bytes (SURVEY.md §7.3).
 
 from __future__ import annotations
 
+from operator import attrgetter
 from typing import Optional
 
 from pdf_spark.core.document import Resolver
@@ -302,22 +303,34 @@ def assign_columns(spans: list) -> None:
                 s.col = 1 if s.x >= gutter else 0
 
 
-def assemble_text(spans: list[Span]) -> str:
-    """Deterministic (page, col, y desc, x asc, glyph_order) sort + line
-    joins; ``col`` comes from :func:`assign_columns` (0 unless the page
+_line_key = attrgetter("page", "col", "y")
+
+
+def reading_lines(spans: list) -> list[list]:
+    """The one reading order: a deterministic (page, col, y desc, x asc,
+    glyph_order) sort, broken into lines wherever (page, col, y) changes;
+    ``col`` comes from :func:`assign_columns` (0 unless the page
     unambiguously reads as two columns)."""
-    if not spans:
-        return ""
-    ordered = sorted(spans, key=lambda s: (s.page, s.col, -s.y, s.x, s.glyph_order))
-    parts: list[str] = []
+    lines: list[list] = []
     prev_key = None
-    for s in ordered:
-        key = (s.page, s.col, s.y)
-        if prev_key is not None and key != prev_key:
-            parts.append("\n")
-        parts.append(s.text)
-        prev_key = key
-    return "".join(parts)
+    for s in sorted(
+        spans, key=lambda s: (s.page, s.col, -s.y, s.x, s.glyph_order)
+    ):
+        key = _line_key(s)
+        if key != prev_key:
+            line = [s]
+            lines.append(line)
+            prev_key = key
+        else:
+            line.append(s)
+    return lines
+
+
+def assemble_text(spans: list[Span]) -> str:
+    """Plain text: :func:`reading_lines` joined by newlines."""
+    return "\n".join(
+        ["".join([s.text for s in line]) for line in reading_lines(spans)]
+    )
 
 
 def extract_text(data: Optional[bytes], max_bytes: int = DEFAULT_MAX_BYTES):
@@ -384,42 +397,39 @@ def detect_table_cells(
     return out
 
 
-def classify_headings(
-    spans: list, ratio: float = 1.3
-) -> list[tuple[int, str]]:
-    """Font-size heading detection (layout tier; the PDF twin of the
-    HTML heading walk in qx18): body size = the modal span size over the
-    document (ties -> smaller, the prose size), a LINE is a heading when
-    every span on it is >= ``ratio`` x body size. Returns
-    ``(line_index, line_text)`` in reading order over the heading lines
-    only — the signal a markdownified-PDF tier would prefix with '#'."""
-    if not spans:
-        return []
+def _heading_flags(spans: list, lines: list, ratio: float) -> list[bool]:
+    """Body size = the modal span size over the document, weighted by
+    text length (ties -> smaller, the prose size); a line is a heading
+    when every span on it is >= ``ratio`` x body size."""
     freq: dict = {}
     for s in spans:
         freq[s.size] = freq.get(s.size, 0) + len(s.text)
     body = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-    ordered = sorted(
-        spans, key=lambda s: (s.page, s.col, -s.y, s.x, s.glyph_order)
-    )
-    lines: list[tuple[list, bool]] = []
-    prev_key = None
-    for s in ordered:
-        key = (s.page, s.col, s.y)
-        if key != prev_key:
-            lines.append(([], True))
-            prev_key = key
-        lines[-1][0].append(s.text)
-        if s.size < ratio * body:
-            lines[-1] = (lines[-1][0], False)
+    return [not any(s.size < ratio * body for s in line) for line in lines]
+
+
+def classify_headings(
+    spans: list, ratio: float = 1.3
+) -> list[tuple[int, str]]:
+    """Font-size heading detection (layout tier; the PDF twin of the
+    HTML heading walk in qx18) per :func:`_heading_flags`. Returns
+    ``(line_index, line_text)`` in reading order over the heading lines
+    only — the signal a markdownified-PDF tier would prefix with '#'."""
+    if not spans:
+        return []
+    lines = reading_lines(spans)
     return [
-        (i, "".join(texts)) for i, (texts, is_h) in enumerate(lines) if is_h
+        (i, "".join(s.text for s in line))
+        for i, (line, is_h) in enumerate(
+            zip(lines, _heading_flags(spans, lines, ratio))
+        )
+        if is_h
     ]
 
 
 def assemble_markdown(spans: list, ratio: float = 1.3) -> str:
     """Markdownified-PDF serialization (the PDF twin of
-    ``htmltext.extract_markdown``): same deterministic reading order as
+    ``htmltext.extract_markdown``): the :func:`reading_lines` of
     :func:`assemble_text`, with :func:`classify_headings`' font-size
     rule prefixing heading lines with ``## ``. Stripping the markers
     recovers :func:`assemble_text`'s output exactly (content coverage
@@ -427,18 +437,8 @@ def assemble_markdown(spans: list, ratio: float = 1.3) -> str:
     contract, now held on the PDF side too)."""
     if not spans:
         return ""
-    heads = {i for i, _ in classify_headings(spans, ratio)}
-    ordered = sorted(
-        spans, key=lambda s: (s.page, s.col, -s.y, s.x, s.glyph_order)
-    )
-    lines: list[str] = []
-    prev_key = None
-    for s in ordered:
-        key = (s.page, s.col, s.y)
-        if key != prev_key:
-            lines.append("")
-            prev_key = key
-        lines[-1] += s.text
+    lines = reading_lines(spans)
     return "\n".join(
-        ("## " + l) if i in heads else l for i, l in enumerate(lines)
+        ("## " if is_h else "") + "".join(s.text for s in line)
+        for line, is_h in zip(lines, _heading_flags(spans, lines, ratio))
     )

@@ -757,8 +757,8 @@ def extract_internal_links(resolver) -> list:
     named: dict = {}
 
     def remember(key, value_ref) -> None:
-        if key is not None and key not in named:
-            named[bytes(key)] = value_ref
+        if key is not None:
+            named.setdefault(bytes(key), value_ref)
 
     try:
         cat = resolver.catalog()

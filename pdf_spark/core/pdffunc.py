@@ -174,6 +174,23 @@ def _ps_truncate(x: Number) -> Number:
     return float(math.trunc(x))
 
 
+# bitshift beyond a 64-bit word only grows attacker-controlled bigints
+_MAX_SHIFT = 64
+
+
+def _real_pow(base: float, exponent: Number, what: str) -> float:
+    """``base ** exponent`` inside the PdfError contract: 0 to a negative
+    power, overflow and complex results (negative base, fractional
+    exponent) raise instead of escaping as Python errors or values."""
+    try:
+        y = base ** exponent
+    except ArithmeticError:
+        raise PdfError(INCORRECT_TYPE, what) from None
+    if isinstance(y, complex):
+        raise PdfError(INCORRECT_TYPE, what)
+    return y
+
+
 def eval_calculator(prog: PSProgram, inputs: Sequence[Number]) -> List[Any]:
     """Run the calculator on ``inputs`` (pushed first-to-last); return stack."""
     stack: List[Any] = list(inputs)
@@ -304,7 +321,7 @@ def eval_calculator(prog: PSProgram, inputs: Sequence[Number]) -> List[Any]:
                 stack.append(deg)
             elif op == "exp":
                 a, b = _num2(stack)
-                stack.append(float(a) ** float(b))
+                stack.append(_real_pow(float(a), float(b), "exp domain"))
             elif op == "ln":
                 a = _num1(stack)
                 if a <= 0:
@@ -363,6 +380,8 @@ def eval_calculator(prog: PSProgram, inputs: Sequence[Number]) -> List[Any]:
             elif op == "bitshift":
                 shift = _int1(stack)
                 a = _int1(stack)
+                if abs(shift) > _MAX_SHIFT:
+                    raise PdfError(INCORRECT_TYPE, "bitshift out of range")
                 stack.append(a << shift if shift >= 0 else a >> (-shift))
             elif op == "true":
                 stack.append(True)
@@ -585,7 +604,7 @@ def eval_function(fn: PdfFunction, inputs: Sequence[Number]) -> List[Number]:
         m = fn.n_outputs or 1
         if fn.range is not None and len(fn.range) != 2 * m:
             raise PdfError(INCORRECT_TYPE, "Range length")
-        xn = x ** fn.n
+        xn = _real_pow(x, fn.n, "type 2 exponent domain")
         out: List[Number] = []
         for j in range(m):
             c0 = fn.c0[j] if fn.c0 is not None else 0.0

@@ -17,9 +17,6 @@ knows what must come out without parsing anything.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -33,7 +30,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_spark.core.extract import extract_document, assemble_text
-from pdf_spark.functions.tables import load
+from pdf_spark.functions.tables import load, map_rows
 from pdf_spark.gen.pdfgen import N_VARIANTS, _GOOD_VARIANTS, generate_doc
 from pdf_spark.operators.extract import extract_spans
 
@@ -53,20 +50,18 @@ _ROUNDTRIP_SCHEMA = StructType(
 def _qx01(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id", "text")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "ok": [], "variant": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                variant = int(doc_id) % N_VARIANTS
-                pdf, expected, vname, _ = generate_doc(text or "", variant)
-                r = extract_document(pdf)
-                got = assemble_text(r.spans) if r.ok else None
-                out["doc_id"].append(int(doc_id))
-                out["ok"].append(bool(r.ok and got == expected))
-                out["variant"].append(vname)
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id, text):
+        variant = doc_id % N_VARIANTS
+        pdf, expected, vname, _ = generate_doc(text or "", variant)
+        r = extract_document(pdf)
+        got = assemble_text(r.spans) if r.ok else None
+        yield {
+            "doc_id": doc_id,
+            "ok": bool(r.ok and got == expected),
+            "variant": vname,
+        }
 
-    return docs.mapInPandas(roundtrip, _ROUNDTRIP_SCHEMA).select("doc_id", "ok")
+    return map_rows(docs, roundtrip, _ROUNDTRIP_SCHEMA).select("doc_id", "ok")
 
 
 QUERIES["qx01_roundtrip_match"] = _qx01
@@ -85,17 +80,12 @@ _ERRHIST_SCHEMA = StructType(
 def _qx02(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id", "text")
 
-    def corrupt_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            codes = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                variant = N_VARIANTS + int(doc_id) % 5
-                pdf, _, _, _ = generate_doc(text or "", variant)
-                codes.append(extract_document(pdf).error_code)
-            yield pd.DataFrame({"error_code": codes, "n": [1] * len(codes)})
+    def corrupt_extract(doc_id, text):
+        pdf, _, _, _ = generate_doc(text or "", N_VARIANTS + doc_id % 5)
+        yield {"error_code": extract_document(pdf).error_code, "n": 1}
 
     return (
-        docs.mapInPandas(corrupt_extract, _ERRHIST_SCHEMA)
+        map_rows(docs, corrupt_extract, _ERRHIST_SCHEMA)
         .groupBy("error_code")
         .agg(F.sum("n").alias("n"))
     )
@@ -152,16 +142,14 @@ def _qx03(spark: SparkSession, sf: str) -> DataFrame:
         i for i, (name, _) in enumerate(_GOOD_VARIANTS) if name == "td_tj_flate"
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"url": [], "html": [], "n_lines": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                t = text if isinstance(text, str) else ""
-                pdf, _, _, _ = generate_doc(t, td_tj_flate)
-                out["url"].append(str(int(doc_id)))
-                out["html"].append(pdf)
-                out["n_lines"].append(len(wrap_lines(t)))
-            yield pd.DataFrame(out)
+    def gen(doc_id, text):
+        t = text if isinstance(text, str) else ""
+        pdf, _, _, _ = generate_doc(t, td_tj_flate)
+        yield {
+            "url": str(doc_id),
+            "html": pdf,
+            "n_lines": len(wrap_lines(t)),
+        }
 
     # pages feeds two subtrees (spans + predicted); persist so the PDF
     # build + deflate inside the gen UDF runs once, not once per subtree
@@ -169,7 +157,7 @@ def _qx03(spark: SparkSession, sf: str) -> DataFrame:
     prev = _QX03_CACHE.pop("pages", None)
     if prev is not None and prev.sparkSession is docs.sparkSession:
         prev.unpersist()
-    pages = docs.mapInPandas(gen, _GEOM_SCHEMA).persist()
+    pages = map_rows(docs, gen, _GEOM_SCHEMA).persist()
     _QX03_CACHE["pages"] = pages
     predicted = pages.select("url", "n_lines")
     spans = extract_spans(pages)
@@ -218,21 +206,19 @@ def _qx04(spark: SparkSession, sf: str) -> DataFrame:
     from doc_id % N_VARIANTS and asserts n_ok == n."""
     docs = load(spark, sf, "documents").select("doc_id", "text")
 
-    def per_variant(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {"variant": [], "n": [], "n_ok": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                variant = int(doc_id) % N_VARIANTS
-                pdf, expected, vname, _ = generate_doc(text or "", variant)
-                r = extract_document(pdf)
-                got = assemble_text(r.spans) if r.ok else None
-                rows["variant"].append(vname)
-                rows["n"].append(1)
-                rows["n_ok"].append(int(bool(r.ok and got == expected)))
-            yield pd.DataFrame(rows)
+    def per_variant(doc_id, text):
+        variant = doc_id % N_VARIANTS
+        pdf, expected, vname, _ = generate_doc(text or "", variant)
+        r = extract_document(pdf)
+        got = assemble_text(r.spans) if r.ok else None
+        yield {
+            "variant": vname,
+            "n": 1,
+            "n_ok": int(bool(r.ok and got == expected)),
+        }
 
     return (
-        docs.mapInPandas(per_variant, _VARIANT_SCHEMA)
+        map_rows(docs, per_variant, _VARIANT_SCHEMA)
         .groupBy("variant")
         .agg(
             F.sum("n").cast("long").alias("n"),
@@ -275,46 +261,44 @@ def _qx05(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents").select("doc_id", "text")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"url": [], "html": [], "n_lines": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                t = text if isinstance(text, str) else ""
-                lines = wrap_lines(t)
-                ops = [b"BT", b"/F1 " + _n(FONT_SIZE) + b" Tf"]
-                for i, line in enumerate(lines):
-                    # paragraph gap: one extra line height after every 4th
-                    y = TOP_Y - i * LINE_HEIGHT - (i // 4) * LINE_HEIGHT
-                    ops.append(b"1 0 0 1 " + _n(LEFT_X) + b" " + _n(y) + b" Tm")
-                    ops.append(b"(" + esc(line) + b") Tj")
-                ops.append(b"ET")
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica>>")
-                cont = b.stream(b"\n".join(ops), filters="FlateDecode")
-                b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-                b.set(
-                    pages_id,
-                    b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>",
-                )
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-                    b"/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R>>",
-                )
-                out["url"].append(str(int(doc_id)))
-                out["html"].append(b.build(cat))
-                out["n_lines"].append(len(lines))
-            yield pd.DataFrame(out)
+    def gen(doc_id, text):
+        t = text if isinstance(text, str) else ""
+        lines = wrap_lines(t)
+        ops = [b"BT", b"/F1 " + _n(FONT_SIZE) + b" Tf"]
+        for i, line in enumerate(lines):
+            # paragraph gap: one extra line height after every 4th
+            y = TOP_Y - i * LINE_HEIGHT - (i // 4) * LINE_HEIGHT
+            ops.append(b"1 0 0 1 " + _n(LEFT_X) + b" " + _n(y) + b" Tm")
+            ops.append(b"(" + esc(line) + b") Tj")
+        ops.append(b"ET")
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica>>")
+        cont = b.stream(b"\n".join(ops), filters="FlateDecode")
+        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
+        b.set(
+            pages_id,
+            b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>",
+        )
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
+            b"/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R>>",
+        )
+        yield {
+            "url": str(doc_id),
+            "html": b.build(cat),
+            "n_lines": len(lines),
+        }
 
     prev = _QX03_CACHE.pop("qx05_pages", None)
     if prev is not None and prev.sparkSession is docs.sparkSession:
         prev.unpersist()
-    pages = docs.mapInPandas(gen, _GEOM_SCHEMA).persist()
+    pages = map_rows(docs, gen, _GEOM_SCHEMA).persist()
     _QX03_CACHE["qx05_pages"] = pages
     predicted = pages.select(
         "url", (F.ceil(F.col("n_lines") / 4)).cast("long").alias("n_para_expected")
@@ -356,55 +340,50 @@ def _qx06(spark: SparkSession, sf: str) -> DataFrame:
       independent of the payload, so it is computed once from a probe page
       and must match on every document.
     """
+    from pdf_spark.core.htmltext import extract_main_blocks
+    from pdf_spark.gen.htmlgen import (
+        expected_for_variant,
+        html_article,
+        html_messy,
+        html_table_list,
+        html_win1251,
+    )
+    from pdf_spark.gen.pdfgen import wrap_lines
+
     docs = load(spark, sf, "documents").select("doc_id", "text")
-
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.htmltext import extract_main_blocks
-        from pdf_spark.gen.htmlgen import (
-            expected_for_variant,
-            html_article,
-            html_messy,
-            html_table_list,
-            html_win1251,
+    variants = (
+        ("html_article", html_article),
+        ("html_messy", html_messy),
+        ("html_table_list", html_table_list),
+        ("html_win1251", html_win1251),
+    )
+    planted = {
+        name: sum(
+            1
+            for b in extract_main_blocks(fn(["probe line"]))
+            if b.label == "bad"
         )
-        from pdf_spark.gen.pdfgen import wrap_lines
+        for name, fn in variants
+    }
 
-        variants = (
-            ("html_article", html_article),
-            ("html_messy", html_messy),
-            ("html_table_list", html_table_list),
-            ("html_win1251", html_win1251),
-        )
-        planted = {
-            name: sum(
+    def check(doc_id, text):
+        lines = wrap_lines(text if isinstance(text, str) else "")
+        ok = True
+        for name, fn in variants:
+            data = fn(lines)
+            r = extract_document(data)
+            got = assemble_text(r.spans) if r.ok else None
+            ok = ok and got == expected_for_variant(name, lines)
+            n_bad = sum(
                 1
-                for b in extract_main_blocks(fn(["probe line"]))
+                for b in extract_main_blocks(data)
                 if b.label == "bad"
             )
-            for name, fn in variants
-        }
-        for batch in batches:
-            out = {"doc_id": [], "ok": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                lines = wrap_lines(text if isinstance(text, str) else "")
-                ok = True
-                for name, fn in variants:
-                    data = fn(lines)
-                    r = extract_document(data)
-                    got = assemble_text(r.spans) if r.ok else None
-                    ok = ok and got == expected_for_variant(name, lines)
-                    n_bad = sum(
-                        1
-                        for b in extract_main_blocks(data)
-                        if b.label == "bad"
-                    )
-                    ok = ok and n_bad == planted[name]
-                out["doc_id"].append(int(doc_id))
-                out["ok"].append(bool(ok))
-            yield pd.DataFrame(out)
+            ok = ok and n_bad == planted[name]
+        yield {"doc_id": doc_id, "ok": bool(ok)}
 
     ok_schema = StructType([_ROUNDTRIP_SCHEMA.fields[0], _ROUNDTRIP_SCHEMA.fields[1]])
-    return docs.mapInPandas(check, ok_schema)
+    return map_rows(docs, check, ok_schema)
 
 
 QUERIES["qx06_html_boilerplate_strip"] = _qx06
@@ -429,20 +408,15 @@ def _qx07(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents").select("doc_id", "text")
 
-    def kinds(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"kind": [], "n": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                payload, _, _, _ = generate_doc(
-                    text if isinstance(text, str) else "",
-                    int(doc_id) % N_VARIANTS,
-                )
-                out["kind"].append(payload_kind(payload))
-                out["n"].append(1)
-            yield pd.DataFrame(out)
+    def kinds(doc_id, text):
+        payload, _, _, _ = generate_doc(
+            text if isinstance(text, str) else "",
+            doc_id % N_VARIANTS,
+        )
+        yield {"kind": payload_kind(payload), "n": 1}
 
     return (
-        docs.mapInPandas(kinds, _KIND_SCHEMA)
+        map_rows(docs, kinds, _KIND_SCHEMA)
         .groupBy("kind")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -488,20 +462,15 @@ def _qx08(spark: SparkSession, sf: str) -> DataFrame:
         [StructField("href", StringType()), StructField("n", LongType())]
     )
 
-    def links(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"href": [], "n": []}
-            for text in batch["text"]:
-                page = html_article(
-                    wrap_lines(text if isinstance(text, str) else "")
-                )
-                for href in extract_links(page):
-                    out["href"].append(href)
-                    out["n"].append(1)
-            yield pd.DataFrame(out)
+    def links(_doc_id, text):
+        page = html_article(
+            wrap_lines(text if isinstance(text, str) else "")
+        )
+        for href in extract_links(page):
+            yield {"href": href, "n": 1}
 
     return (
-        docs.mapInPandas(links, schema)
+        map_rows(docs, links, schema)
         .groupBy("href")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -546,32 +515,27 @@ def _qx09(spark: SparkSession, sf: str) -> DataFrame:
         [_ROUNDTRIP_SCHEMA.fields[0], _ROUNDTRIP_SCHEMA.fields[1]]
     )
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "ok": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                lines = wrap_lines(text if isinstance(text, str) else "")
-                rows_html = "".join(
-                    f"<tr><td>{i}</td><td>{len(l.split())}</td>"
-                    f"<td>{escape(l)}</td></tr>"
-                    for i, l in enumerate(lines)
-                )
-                page = (
-                    "<!doctype html><html><body><table>"
-                    + rows_html
-                    + "</table></body></html>"
-                ).encode()
-                cells = extract_tables(page)
-                exp = []
-                for i, l in enumerate(lines):
-                    exp.append((0, i, 0, str(i)))
-                    exp.append((0, i, 1, str(len(l.split()))))
-                    exp.append((0, i, 2, " ".join(l.split())))
-                out["doc_id"].append(int(doc_id))
-                out["ok"].append(cells == exp)
-            yield pd.DataFrame(out)
+    def check(doc_id, text):
+        lines = wrap_lines(text if isinstance(text, str) else "")
+        rows_html = "".join(
+            f"<tr><td>{i}</td><td>{len(l.split())}</td>"
+            f"<td>{escape(l)}</td></tr>"
+            for i, l in enumerate(lines)
+        )
+        page = (
+            "<!doctype html><html><body><table>"
+            + rows_html
+            + "</table></body></html>"
+        ).encode()
+        cells = extract_tables(page)
+        exp = []
+        for i, l in enumerate(lines):
+            exp.append((0, i, 0, str(i)))
+            exp.append((0, i, 1, str(len(l.split()))))
+            exp.append((0, i, 2, " ".join(l.split())))
+        yield {"doc_id": doc_id, "ok": cells == exp}
 
-    return docs.mapInPandas(check, ok_schema)
+    return map_rows(docs, check, ok_schema)
 
 
 QUERIES["qx09_html_table_cells"] = _qx09
@@ -606,80 +570,81 @@ def _qx10(spark: SparkSession, sf: str) -> DataFrame:
     agree — so the oracle recomputing title/author/created/lang/canonical
     arithmetically from doc_id catches a wrong decode in either tier
     (a disagreement nulls the column and fails the value hash)."""
+    from html import escape
+
     from pdf_spark.core.document import Resolver
     from pdf_spark.core.htmltext import extract_html_meta
     from pdf_spark.core.meta import extract_pdf_meta
-    from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj, _escb
+    from pdf_spark.gen.pdfgen import (
+        F_HELV,
+        PdfBuilder,
+        _content_td_tj,
+        _escb,
+        wrap_lines,
+    )
 
     docs = load(spark, sf, "documents").select("doc_id", "text")
 
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from html import escape
+    def meta(i, text):
+        title = f"Doc {i} 例"
+        author = _AUTHORS[i % 4]
+        created = (
+            f"2024-{1 + i % 12:02d}-{1 + i % 28:02d}"
+            f"T{i % 24:02d}:30:00+00:00"
+        )
+        lang = _LANGS[i % 3]
+        canonical = f"https://example.com/doc/{i}"
+        lines = wrap_lines(text if isinstance(text, str) else "")
 
-        from pdf_spark.gen.pdfgen import wrap_lines
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
+        t16 = b"\xfe\xff" + title.encode("utf-16-be")
+        date = (
+            f"D:2024{1 + i % 12:02d}{1 + i % 28:02d}"
+            f"{i % 24:02d}3000Z"
+        ).encode()
+        info = b.add(
+            b"<</Title(" + _escb(t16) + b")/Author("
+            + author.encode() + b")/CreationDate(" + date + b")>>"
+        )
+        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
+        b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
+            b"/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R>>",
+        )
+        pdf = b.build(cat, trailer_extra=b"/Info " + str(info).encode() + b" 0 R")
 
-        for batch in batches:
-            out = {k.name: [] for k in _META_SCHEMA.fields}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                i = int(doc_id)
-                title = f"Doc {i} 例"
-                author = _AUTHORS[i % 4]
-                created = (
-                    f"2024-{1 + i % 12:02d}-{1 + i % 28:02d}"
-                    f"T{i % 24:02d}:30:00+00:00"
-                )
-                lang = _LANGS[i % 3]
-                canonical = f"https://example.com/doc/{i}"
-                lines = wrap_lines(text if isinstance(text, str) else "")
+        page_html = (
+            f'<!doctype html><html lang="{lang}"><head>'
+            f"<title>{escape(title)}</title>"
+            f'<link rel="canonical" href="{canonical}">'
+            f'<meta name="author" content="{escape(author)}">'
+            "</head><body><p>"
+            + escape(" ".join(lines) or "x")
+            + "</p></body></html>"
+        ).encode()
 
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
-                t16 = b"\xfe\xff" + title.encode("utf-16-be")
-                date = (
-                    f"D:2024{1 + i % 12:02d}{1 + i % 28:02d}"
-                    f"{i % 24:02d}3000Z"
-                ).encode()
-                info = b.add(
-                    b"<</Title(" + _escb(t16) + b")/Author("
-                    + author.encode() + b")/CreationDate(" + date + b")>>"
-                )
-                b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-                b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-                    b"/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R>>",
-                )
-                pdf = b.build(cat, trailer_extra=b"/Info " + str(info).encode() + b" 0 R")
+        pm = extract_pdf_meta(Resolver(pdf))
+        hm = extract_html_meta(page_html)
+        agree_title = pm["title"] if pm["title"] == hm["title"] else None
+        yield {
+            "doc_id": i,
+            "title": agree_title,
+            "author": pm["author"],
+            "created": pm["created"],
+            "lang": hm["lang"],
+            "canonical": hm["canonical"],
+        }
 
-                page_html = (
-                    f'<!doctype html><html lang="{lang}"><head>'
-                    f"<title>{escape(title)}</title>"
-                    f'<link rel="canonical" href="{canonical}">'
-                    f'<meta name="author" content="{escape(author)}">'
-                    "</head><body><p>"
-                    + escape(" ".join(lines) or "x")
-                    + "</p></body></html>"
-                ).encode()
-
-                pm = extract_pdf_meta(Resolver(pdf))
-                hm = extract_html_meta(page_html)
-                agree_title = pm["title"] if pm["title"] == hm["title"] else None
-                out["doc_id"].append(i)
-                out["title"].append(agree_title)
-                out["author"].append(pm["author"])
-                out["created"].append(pm["created"])
-                out["lang"].append(hm["lang"])
-                out["canonical"].append(hm["canonical"])
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(meta, _META_SCHEMA)
+    return map_rows(docs, meta, _META_SCHEMA)
 
 
 QUERIES["qx10_doc_metadata"] = _qx10
@@ -719,53 +684,47 @@ def _qx11(spark: SparkSession, sf: str) -> DataFrame:
         [StructField("href", StringType()), StructField("n", LongType())]
     )
 
-    def links(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"href": [], "n": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                i = int(doc_id)
-                lines = wrap_lines(text if isinstance(text, str) else "")
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
-                uris = (
-                    b"https://example.com/next",
-                    b"https://example.com/refs",
-                    b"https://example.com/doc/" + str(i).encode(),
-                )
-                annots = [
-                    b.add(
-                        b"<</Type/Annot/Subtype/Link/Rect[0 0 1 1]"
-                        b"/A<</S/URI/URI(" + u + b")>>>>"
-                    )
-                    for u in uris
-                ]
-                annots.append(
-                    b.add(b"<</Type/Annot/Subtype/Text/Rect[0 0 1 1]>>")
-                )
-                b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-                b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-                    b"/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R"
-                    b"/Annots["
-                    + b" ".join(str(a).encode() + b" 0 R" for a in annots)
-                    + b"]>>",
-                )
-                pdf = b.build(cat)
-                for href in extract_pdf_links(Resolver(pdf)):
-                    out["href"].append(href)
-                    out["n"].append(1)
-            yield pd.DataFrame(out)
+    def links(i, text):
+        lines = wrap_lines(text if isinstance(text, str) else "")
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
+        uris = (
+            b"https://example.com/next",
+            b"https://example.com/refs",
+            b"https://example.com/doc/" + str(i).encode(),
+        )
+        annots = [
+            b.add(
+                b"<</Type/Annot/Subtype/Link/Rect[0 0 1 1]"
+                b"/A<</S/URI/URI(" + u + b")>>>>"
+            )
+            for u in uris
+        ]
+        annots.append(
+            b.add(b"<</Type/Annot/Subtype/Text/Rect[0 0 1 1]>>")
+        )
+        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
+        b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
+            b"/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R"
+            b"/Annots["
+            + b" ".join(str(a).encode() + b" 0 R" for a in annots)
+            + b"]>>",
+        )
+        pdf = b.build(cat)
+        for href in extract_pdf_links(Resolver(pdf)):
+            yield {"href": href, "n": 1}
 
     return (
-        docs.mapInPandas(links, schema)
+        map_rows(docs, links, schema)
         .groupBy("href")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -794,6 +753,8 @@ def _qx12(spark: SparkSession, sf: str) -> DataFrame:
     the parsed record; ``ok`` additionally asserts payload byte equality
     through the full decode stack — the oracle recomputes every column
     from doc_id."""
+    from html import escape
+
     from pdf_spark.gen.pdfgen import wrap_lines
     from pdf_spark.sources.warc import build_response_record, records_to_rows, write_warc
 
@@ -808,41 +769,34 @@ def _qx12(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from html import escape
+    def roundtrip(i, text):
+        lines = wrap_lines(text if isinstance(text, str) else "")
+        payload = (
+            "<html><body><p>"
+            + escape(" ".join(lines) or "x")
+            + "</p></body></html>"
+        ).encode()
+        url = f"warc://doc/{i}"
+        rec = build_response_record(
+            url,
+            "2024-01-01T00:00:00Z",
+            payload,
+            chunked=bool(i % 4 in (1, 3)),
+            content_gzip=bool(i % 4 in (2, 3)),
+        )
+        rows = list(records_to_rows(write_warc([rec])))
+        got_url, _, got_payload, status, mime = (
+            rows[0] if rows else (None, None, None, 0, "")
+        )
+        yield {
+            "doc_id": i,
+            "url": got_url,
+            "http_status": int(status),
+            "mime": mime,
+            "ok": bool(len(rows) == 1 and got_payload == payload),
+        }
 
-        for batch in batches:
-            out = {k.name: [] for k in schema.fields}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                i = int(doc_id)
-                lines = wrap_lines(text if isinstance(text, str) else "")
-                payload = (
-                    "<html><body><p>"
-                    + escape(" ".join(lines) or "x")
-                    + "</p></body></html>"
-                ).encode()
-                url = f"warc://doc/{i}"
-                rec = build_response_record(
-                    url,
-                    "2024-01-01T00:00:00Z",
-                    payload,
-                    chunked=bool(i % 4 in (1, 3)),
-                    content_gzip=bool(i % 4 in (2, 3)),
-                )
-                rows = list(records_to_rows(write_warc([rec])))
-                got_url, _, got_payload, status, mime = (
-                    rows[0] if rows else (None, None, None, 0, "")
-                )
-                out["doc_id"].append(i)
-                out["url"].append(got_url)
-                out["http_status"].append(int(status))
-                out["mime"].append(mime)
-                out["ok"].append(
-                    bool(len(rows) == 1 and got_payload == payload)
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(roundtrip, schema)
+    return map_rows(docs, roundtrip, schema)
 
 
 QUERIES["qx12_warc_ingest"] = _qx12
@@ -878,63 +832,55 @@ def _qx13(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def outline(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "pos": [], "level": [], "title": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                i = int(doc_id)
-                n_ch = 1 + i % 3
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(
-                    _content_td_tj(wrap_lines(text if isinstance(text, str) else "")),
-                    filters="FlateDecode",
-                )
-                root = b.reserve()
-                chapters = [b.reserve() for _ in range(n_ch)]
-                sections = [b.reserve() for _ in range(n_ch)]
-                r = lambda n: str(n).encode() + b" 0 R"
-                b.set(
-                    root,
-                    b"<</Type/Outlines/First " + r(chapters[0])
-                    + b"/Last " + r(chapters[-1]) + b">>",
-                )
-                for c in range(n_ch):
-                    nxt = b"/Next " + r(chapters[c + 1]) if c + 1 < n_ch else b""
-                    b.set(
-                        chapters[c],
-                        b"<</Title(Chapter " + str(c).encode() + b" of doc "
-                        + str(i).encode() + b")/Parent " + r(root)
-                        + b"/First " + r(sections[c]) + b"/Last "
-                        + r(sections[c]) + nxt + b">>",
-                    )
-                    b.set(
-                        sections[c],
-                        b"<</Title(Section " + str(c).encode() + b".1)/Parent "
-                        + r(chapters[c]) + b">>",
-                    )
-                b.set(cat, b"<</Type/Catalog/Pages " + r(pages_id)
-                      + b"/Outlines " + r(root) + b">>")
-                b.set(pages_id, b"<</Type/Pages/Kids[" + r(page) + b"]/Count 1>>")
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + r(pages_id)
-                    + b"/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + r(font) + b">>>>"
-                    b"/Contents " + r(cont) + b">>",
-                )
-                items = extract_pdf_outline(Resolver(b.build(cat)))
-                for pos, (level, title) in enumerate(items):
-                    out["doc_id"].append(i)
-                    out["pos"].append(pos)
-                    out["level"].append(level)
-                    out["title"].append(title)
-            yield pd.DataFrame(out)
+    def outline(i, text):
+        n_ch = 1 + i % 3
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(
+            _content_td_tj(wrap_lines(text if isinstance(text, str) else "")),
+            filters="FlateDecode",
+        )
+        root = b.reserve()
+        chapters = [b.reserve() for _ in range(n_ch)]
+        sections = [b.reserve() for _ in range(n_ch)]
+        r = lambda n: str(n).encode() + b" 0 R"
+        b.set(
+            root,
+            b"<</Type/Outlines/First " + r(chapters[0])
+            + b"/Last " + r(chapters[-1]) + b">>",
+        )
+        for c in range(n_ch):
+            nxt = b"/Next " + r(chapters[c + 1]) if c + 1 < n_ch else b""
+            b.set(
+                chapters[c],
+                b"<</Title(Chapter " + str(c).encode() + b" of doc "
+                + str(i).encode() + b")/Parent " + r(root)
+                + b"/First " + r(sections[c]) + b"/Last "
+                + r(sections[c]) + nxt + b">>",
+            )
+            b.set(
+                sections[c],
+                b"<</Title(Section " + str(c).encode() + b".1)/Parent "
+                + r(chapters[c]) + b">>",
+            )
+        b.set(cat, b"<</Type/Catalog/Pages " + r(pages_id)
+              + b"/Outlines " + r(root) + b">>")
+        b.set(pages_id, b"<</Type/Pages/Kids[" + r(page) + b"]/Count 1>>")
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + r(pages_id)
+            + b"/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + r(font) + b">>>>"
+            b"/Contents " + r(cont) + b">>",
+        )
+        items = extract_pdf_outline(Resolver(b.build(cat)))
+        for pos, (level, title) in enumerate(items):
+            yield {"doc_id": i, "pos": pos, "level": level, "title": title}
 
-    return docs.mapInPandas(outline, schema)
+    return map_rows(docs, outline, schema)
 
 
 QUERIES["qx13_pdf_outline"] = _qx13
@@ -972,35 +918,32 @@ def _qx14(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def lift(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
+    import json
 
-        for batch in batches:
-            out = {"doc_id": [], "n_blocks": [], "raw": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                ld = json.dumps(
-                    {
-                        "@context": "https://schema.org",
-                        "@type": "Article",
-                        "headline": f"Headline {i}",
-                        "author": {"@type": "Person", "name": f"Author {i % 7}"},
-                        "wordCount": i % 1000,
-                    }
-                )
-                page = (
-                    "<html><head>"
-                    f'<script type="application/ld+json">{ld}</script>'
-                    "<script>var decoy = '</p>{\"@type\":\"Fake\"}';</script>"
-                    "</head><body>x</body></html>"
-                ).encode()
-                blocks = extract_jsonld(page)
-                out["doc_id"].append(i)
-                out["n_blocks"].append(len(blocks))
-                out["raw"].append(blocks[0] if blocks else None)
-            yield pd.DataFrame(out)
+    def lift(i, _text):
+        ld = json.dumps(
+            {
+                "@context": "https://schema.org",
+                "@type": "Article",
+                "headline": f"Headline {i}",
+                "author": {"@type": "Person", "name": f"Author {i % 7}"},
+                "wordCount": i % 1000,
+            }
+        )
+        page = (
+            "<html><head>"
+            f'<script type="application/ld+json">{ld}</script>'
+            "<script>var decoy = '</p>{\"@type\":\"Fake\"}';</script>"
+            "</head><body>x</body></html>"
+        ).encode()
+        blocks = extract_jsonld(page)
+        yield {
+            "doc_id": i,
+            "n_blocks": len(blocks),
+            "raw": blocks[0] if blocks else None,
+        }
 
-    lifted = docs.mapInPandas(lift, raw_schema)
+    lifted = map_rows(docs, lift, raw_schema)
     return lifted.select(
         "doc_id",
         "n_blocks",
@@ -1042,31 +985,24 @@ def _qx15(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def evaluate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "probe": [], "allowed": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                robots = (
-                    "User-agent: trainbot\n"
-                    "Disallow: /private/\n"
-                    f"Allow: /private/doc{i % 3}.html\n"
-                    "\n"
-                    "User-agent: *\n"
-                    "Disallow: /\n"
-                ).encode()
-                paths = [f"/private/doc{j}.html" for j in range(3)] + ["/public/x"]
-                verdicts = allowed_mask(robots, "trainbot/1.0", paths)
-                verdicts.append(
-                    is_allowed(parse_robots(robots), "otherbot", "/public/x")
-                )
-                for probe, allowed in zip(("p0", "p1", "p2", "pub", "other"), verdicts):
-                    out["doc_id"].append(i)
-                    out["probe"].append(probe)
-                    out["allowed"].append(bool(allowed))
-            yield pd.DataFrame(out)
+    def evaluate(i):
+        robots = (
+            "User-agent: trainbot\n"
+            "Disallow: /private/\n"
+            f"Allow: /private/doc{i % 3}.html\n"
+            "\n"
+            "User-agent: *\n"
+            "Disallow: /\n"
+        ).encode()
+        paths = [f"/private/doc{j}.html" for j in range(3)] + ["/public/x"]
+        verdicts = allowed_mask(robots, "trainbot/1.0", paths)
+        verdicts.append(
+            is_allowed(parse_robots(robots), "otherbot", "/public/x")
+        )
+        for probe, allowed in zip(("p0", "p1", "p2", "pub", "other"), verdicts):
+            yield {"doc_id": i, "probe": probe, "allowed": bool(allowed)}
 
-    return docs.mapInPandas(evaluate, schema)
+    return map_rows(docs, evaluate, schema)
 
 
 QUERIES["qx15_robots_rules"] = _qx15
@@ -1107,39 +1043,36 @@ def _qx16(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def frontier(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k.name: [] for k in schema.fields}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                n = 2 + i % 4
-                urls = "".join(
-                    f"<url><loc>https://site{i % 10}.example/p/{j}?a=1&amp;b=2</loc>"
-                    f"<lastmod>2024-0{1 + j % 9}-01</lastmod></url>"
-                    for j in range(n)
-                )
-                sm = _gz.compress(
-                    (f'<?xml version="1.0"?><urlset>{urls}</urlset>').encode(),
-                    mtime=0,
-                )
-                idx = (
-                    f"<sitemapindex><sitemap><loc>https://site{i % 10}.example"
-                    f"/s-{i}.xml.gz</loc></sitemap></sitemapindex>"
-                ).encode()
-                kind, entries = parse_sitemap(sm)
-                ikind, ientries = parse_sitemap(idx)
-                n_children = len(ientries) if ikind == "index" else -1
-                if kind != "urlset":
-                    entries = []
-                for pos, (loc, lastmod) in enumerate(entries):
-                    out["doc_id"].append(i)
-                    out["pos"].append(pos)
-                    out["loc"].append(loc)
-                    out["lastmod"].append(lastmod)
-                    out["n_index_children"].append(n_children)
-            yield pd.DataFrame(out)
+    def frontier(i):
+        n = 2 + i % 4
+        urls = "".join(
+            f"<url><loc>https://site{i % 10}.example/p/{j}?a=1&amp;b=2</loc>"
+            f"<lastmod>2024-0{1 + j % 9}-01</lastmod></url>"
+            for j in range(n)
+        )
+        sm = _gz.compress(
+            (f'<?xml version="1.0"?><urlset>{urls}</urlset>').encode(),
+            mtime=0,
+        )
+        idx = (
+            f"<sitemapindex><sitemap><loc>https://site{i % 10}.example"
+            f"/s-{i}.xml.gz</loc></sitemap></sitemapindex>"
+        ).encode()
+        kind, entries = parse_sitemap(sm)
+        ikind, ientries = parse_sitemap(idx)
+        n_children = len(ientries) if ikind == "index" else -1
+        if kind != "urlset":
+            entries = []
+        for pos, (loc, lastmod) in enumerate(entries):
+            yield {
+                "doc_id": i,
+                "pos": pos,
+                "loc": loc,
+                "lastmod": lastmod,
+                "n_index_children": n_children,
+            }
 
-    return docs.mapInPandas(frontier, schema)
+    return map_rows(docs, frontier, schema)
 
 
 QUERIES["qx16_sitemap_frontier"] = _qx16
@@ -1174,43 +1107,40 @@ def _qx17(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def frontier(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k.name: [] for k in schema.fields}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                n = 1 + i % 3
-                if i % 2 == 0:
-                    items = "".join(
-                        f"<item><title><![CDATA[Post {i}-{j}]]></title>"
-                        f"<link>https://feed{i % 5}.example/p/{j}</link></item>"
-                        for j in range(n)
-                    )
-                    feed = (
-                        '<?xml version="1.0"?><rss version="2.0"><channel>'
-                        f"<title>chan</title>{items}</channel></rss>"
-                    ).encode()
-                else:
-                    items = "".join(
-                        f"<entry><title>Post {i}-{j}</title>"
-                        f'<link rel="alternate" href="https://feed{i % 5}.example/p/{j}"/>'
-                        "</entry>"
-                        for j in range(n)
-                    )
-                    feed = (
-                        '<feed xmlns="http://www.w3.org/2005/Atom">'
-                        f"<title>chan</title>{items}</feed>"
-                    ).encode()
-                kind, entries = parse_feed(feed)
-                for pos, (link, title) in enumerate(entries):
-                    out["doc_id"].append(i)
-                    out["pos"].append(pos)
-                    out["kind"].append(kind)
-                    out["link"].append(link)
-                    out["title"].append(title)
-            yield pd.DataFrame(out)
+    def frontier(i):
+        n = 1 + i % 3
+        if i % 2 == 0:
+            items = "".join(
+                f"<item><title><![CDATA[Post {i}-{j}]]></title>"
+                f"<link>https://feed{i % 5}.example/p/{j}</link></item>"
+                for j in range(n)
+            )
+            feed = (
+                '<?xml version="1.0"?><rss version="2.0"><channel>'
+                f"<title>chan</title>{items}</channel></rss>"
+            ).encode()
+        else:
+            items = "".join(
+                f"<entry><title>Post {i}-{j}</title>"
+                f'<link rel="alternate" href="https://feed{i % 5}.example/p/{j}"/>'
+                "</entry>"
+                for j in range(n)
+            )
+            feed = (
+                '<feed xmlns="http://www.w3.org/2005/Atom">'
+                f"<title>chan</title>{items}</feed>"
+            ).encode()
+        kind, entries = parse_feed(feed)
+        for pos, (link, title) in enumerate(entries):
+            yield {
+                "doc_id": i,
+                "pos": pos,
+                "kind": kind,
+                "link": link,
+                "title": title,
+            }
 
-    return docs.mapInPandas(frontier, schema)
+    return map_rows(docs, frontier, schema)
 
 
 QUERIES["qx17_feed_frontier"] = _qx17
@@ -1244,28 +1174,20 @@ def _qx18(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def headings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k.name: [] for k in schema.fields}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                n = 1 + i % 3
-                secs = "".join(
-                    f"<h2>Part {j} &amp; more</h2><p>body</p>" for j in range(n)
-                )
-                page = (
-                    f"<html><body><h1>Doc {i}</h1>{secs}"
-                    "<script>var d='<h3>decoy</h3>';</script>"
-                    f"<h2>Tail {i} (unclosed)"
-                ).encode()
-                for pos, (level, title) in enumerate(extract_headings(page)):
-                    out["doc_id"].append(i)
-                    out["pos"].append(pos)
-                    out["level"].append(level)
-                    out["title"].append(title)
-            yield pd.DataFrame(out)
+    def headings(i):
+        n = 1 + i % 3
+        secs = "".join(
+            f"<h2>Part {j} &amp; more</h2><p>body</p>" for j in range(n)
+        )
+        page = (
+            f"<html><body><h1>Doc {i}</h1>{secs}"
+            "<script>var d='<h3>decoy</h3>';</script>"
+            f"<h2>Tail {i} (unclosed)"
+        ).encode()
+        for pos, (level, title) in enumerate(extract_headings(page)):
+            yield {"doc_id": i, "pos": pos, "level": level, "title": title}
 
-    return docs.mapInPandas(headings, schema)
+    return map_rows(docs, headings, schema)
 
 
 QUERIES["qx18_html_headings"] = _qx18
@@ -1301,28 +1223,20 @@ def _qx19(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def anchors(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k.name: [] for k in schema.fields}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                page = (
-                    '<html><body><nav><a href="/home">Home page</a></nav>'
-                    f'<p>See <a href="/doc/{i}">doc <b>number {i}</b></a> now.</p>'
-                    "<a name='x'>not a link</a>"
-                    f'<a href="/next?id={i}&amp;ref=a">next &gt; page</a>'
-                    "</body></html>"
-                ).encode()
-                for pos, (href, anchor) in enumerate(
-                    extract_links_with_text(page)
-                ):
-                    out["doc_id"].append(i)
-                    out["pos"].append(pos)
-                    out["href"].append(href)
-                    out["anchor"].append(anchor)
-            yield pd.DataFrame(out)
+    def anchors(i):
+        page = (
+            '<html><body><nav><a href="/home">Home page</a></nav>'
+            f'<p>See <a href="/doc/{i}">doc <b>number {i}</b></a> now.</p>'
+            "<a name='x'>not a link</a>"
+            f'<a href="/next?id={i}&amp;ref=a">next &gt; page</a>'
+            "</body></html>"
+        ).encode()
+        for pos, (href, anchor) in enumerate(
+            extract_links_with_text(page)
+        ):
+            yield {"doc_id": i, "pos": pos, "href": href, "anchor": anchor}
 
-    return docs.mapInPandas(anchors, schema)
+    return map_rows(docs, anchors, schema)
 
 
 QUERIES["qx19_anchor_text"] = _qx19
@@ -1356,36 +1270,30 @@ def _qx20(spark: SparkSession, sf: str) -> DataFrame:
         [StructField("doc_id", LongType()), StructField("href", StringType())]
     )
 
-    def lift(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "href": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                page = (
-                    '<html><body><a href="HTTPS://Site.Example/p/0#top">a</a>'
-                    f'<a href="https://site.example/doc/{i}">b</a></body></html>'
-                ).encode()
-                sm = (
-                    "<urlset>" + "".join(
-                        f"<url><loc>https://site.example/p/{j}</loc></url>"
-                        for j in range(1 + i % 3)
-                    ) + "</urlset>"
-                ).encode()
-                feed = (
-                    '<rss version="2.0"><channel>'
-                    "<item><link>https://site.example/p/0?utm_source=feed</link></item>"
-                    f"<item><link>https://site.example/doc/{i}</link></item>"
-                    "</channel></rss>"
-                ).encode()
-                hrefs = list(extract_links(page))
-                hrefs += [loc for loc, _ in parse_sitemap(sm)[1]]
-                hrefs += [link for link, _ in parse_feed(feed)[1]]
-                for h in hrefs:
-                    out["doc_id"].append(i)
-                    out["href"].append(h)
-            yield pd.DataFrame(out)
+    def lift(i):
+        page = (
+            '<html><body><a href="HTTPS://Site.Example/p/0#top">a</a>'
+            f'<a href="https://site.example/doc/{i}">b</a></body></html>'
+        ).encode()
+        sm = (
+            "<urlset>" + "".join(
+                f"<url><loc>https://site.example/p/{j}</loc></url>"
+                for j in range(1 + i % 3)
+            ) + "</urlset>"
+        ).encode()
+        feed = (
+            '<rss version="2.0"><channel>'
+            "<item><link>https://site.example/p/0?utm_source=feed</link></item>"
+            f"<item><link>https://site.example/doc/{i}</link></item>"
+            "</channel></rss>"
+        ).encode()
+        hrefs = list(extract_links(page))
+        hrefs += [loc for loc, _ in parse_sitemap(sm)[1]]
+        hrefs += [link for link, _ in parse_feed(feed)[1]]
+        for h in hrefs:
+            yield {"doc_id": i, "href": h}
 
-    lifted = docs.mapInPandas(lift, raw_schema)
+    lifted = map_rows(docs, lift, raw_schema)
     return (
         lifted.select("doc_id", canonicalize_url("href").alias("u"))
         .groupBy("doc_id")
@@ -1429,79 +1337,71 @@ def _qx21(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def fields(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "field": [], "ftype": [], "value": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(_content_td_tj(["form doc"]), filters="FlateDecode")
-                f1 = b.reserve()
-                w1 = b.add(
-                    b"<</Subtype/Widget/Rect[0 0 1 1]/Parent "
-                    + str(f1).encode() + b" 0 R>>"
-                )
-                b.set(
-                    f1,
-                    b"<</FT/Tx/T(name)/V(User " + str(i).encode() + b")/Kids["
-                    + str(w1).encode() + b" 0 R]>>",
-                )
-                utf16 = b"\xfe\xff" + f"Straße — 例 {i}".encode(
-                    "utf-16-be"
-                )
-                f2 = b.add(b"<</FT/Tx/T(title)/V(" + _escb(utf16) + b")>>")
-                box = b"/Yes" if i % 2 == 0 else b"/Off"
-                f3 = b.add(b"<</FT/Btn/T(subscribed)/V" + box + b">>")
-                parent = b.reserve()
-                k1 = b.add(
-                    b"<</T(street)/Parent " + str(parent).encode()
-                    + b" 0 R/V(Main St " + str(i % 97).encode() + b")>>"
-                )
-                k2 = b.add(
-                    b"<</T(city)/Parent " + str(parent).encode() + b" 0 R>>"
-                )
-                b.set(
-                    parent,
-                    b"<</FT/Tx/T(address)/V(Berlin)/Kids["
-                    + str(k1).encode() + b" 0 R " + str(k2).encode() + b" 0 R]>>",
-                )
-                acro = b.add(
-                    b"<</Fields["
-                    + b" ".join(
-                        str(f).encode() + b" 0 R" for f in (f1, f2, f3, parent)
-                    )
-                    + b"]>>"
-                )
-                b.set(
-                    cat,
-                    b"<</Type/Catalog/Pages " + str(pages_id).encode()
-                    + b" 0 R/AcroForm " + str(acro).encode() + b" 0 R>>",
-                )
-                b.set(
-                    pages_id,
-                    b"<</Type/Pages/Kids[" + str(page).encode()
-                    + b" 0 R]/Count 1>>",
-                )
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-                    b"/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R>>",
-                )
-                pdf = b.build(cat)
-                for fname, ftype, val in extract_form_fields(Resolver(pdf)):
-                    out["doc_id"].append(i)
-                    out["field"].append(fname)
-                    out["ftype"].append(ftype)
-                    out["value"].append(val)
-            yield pd.DataFrame(out)
+    def fields(i):
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(_content_td_tj(["form doc"]), filters="FlateDecode")
+        f1 = b.reserve()
+        w1 = b.add(
+            b"<</Subtype/Widget/Rect[0 0 1 1]/Parent "
+            + str(f1).encode() + b" 0 R>>"
+        )
+        b.set(
+            f1,
+            b"<</FT/Tx/T(name)/V(User " + str(i).encode() + b")/Kids["
+            + str(w1).encode() + b" 0 R]>>",
+        )
+        utf16 = b"\xfe\xff" + f"Straße — 例 {i}".encode(
+            "utf-16-be"
+        )
+        f2 = b.add(b"<</FT/Tx/T(title)/V(" + _escb(utf16) + b")>>")
+        box = b"/Yes" if i % 2 == 0 else b"/Off"
+        f3 = b.add(b"<</FT/Btn/T(subscribed)/V" + box + b">>")
+        parent = b.reserve()
+        k1 = b.add(
+            b"<</T(street)/Parent " + str(parent).encode()
+            + b" 0 R/V(Main St " + str(i % 97).encode() + b")>>"
+        )
+        k2 = b.add(
+            b"<</T(city)/Parent " + str(parent).encode() + b" 0 R>>"
+        )
+        b.set(
+            parent,
+            b"<</FT/Tx/T(address)/V(Berlin)/Kids["
+            + str(k1).encode() + b" 0 R " + str(k2).encode() + b" 0 R]>>",
+        )
+        acro = b.add(
+            b"<</Fields["
+            + b" ".join(
+                str(f).encode() + b" 0 R" for f in (f1, f2, f3, parent)
+            )
+            + b"]>>"
+        )
+        b.set(
+            cat,
+            b"<</Type/Catalog/Pages " + str(pages_id).encode()
+            + b" 0 R/AcroForm " + str(acro).encode() + b" 0 R>>",
+        )
+        b.set(
+            pages_id,
+            b"<</Type/Pages/Kids[" + str(page).encode()
+            + b" 0 R]/Count 1>>",
+        )
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
+            b"/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R>>",
+        )
+        pdf = b.build(cat)
+        for fname, ftype, val in extract_form_fields(Resolver(pdf)):
+            yield {"doc_id": i, "field": fname, "ftype": ftype, "value": val}
 
-    return docs.mapInPandas(fields, schema)
+    return map_rows(docs, fields, schema)
 
 
 QUERIES["qx21_form_fields"] = _qx21
@@ -1546,70 +1446,66 @@ def _qx22(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def inventory(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "n_images": [], "max_w": [],
-                   "max_h": [], "sum_pixels": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                w, h = 100 + i % 50, 50 + i % 40
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(_content_td_tj(["img doc"]), filters="FlateDecode")
-                imgs = [
-                    b.stream(
-                        b"\x00",
-                        extra_dict=(
-                            b"/Subtype/Image/Width " + str(w).encode()
-                            + b"/Height " + str(h).encode()
-                            + b"/BitsPerComponent 8/ColorSpace/DeviceRGB"
-                            + b"/Filter/DCTDecode"
-                        ),
-                    )
-                    for _ in range(1 + i % 3)
-                ]
-                inner = b.stream(
-                    b"\x00",
-                    extra_dict=(
-                        b"/Subtype/Image/Width 32/Height 32"
-                        b"/BitsPerComponent 1/Filter/FlateDecode"
-                    ),
-                )
-                form = b.stream(
-                    b"",
-                    extra_dict=(
-                        b"/Subtype/Form/BBox[0 0 1 1]"
-                        b"/Resources<</XObject<</Inner "
-                        + str(inner).encode() + b" 0 R>>>>"
-                    ),
-                )
-                xo = b"/Fm0 " + str(form).encode() + b" 0 R" + b"".join(
-                    b"/Im" + str(k).encode() + b" " + str(o).encode() + b" 0 R"
-                    for k, o in enumerate(imgs)
-                )
-                b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-                b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode()
-                              + b" 0 R]/Count 1>>")
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-                    b"/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>"
-                    b"/XObject<<" + xo + b">>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R>>",
-                )
-                rows = extract_image_inventory(Resolver(b.build(cat)))
-                out["doc_id"].append(i)
-                out["n_images"].append(len(rows))
-                out["max_w"].append(max((r[2] for r in rows), default=0))
-                out["max_h"].append(max((r[3] for r in rows), default=0))
-                out["sum_pixels"].append(sum(r[2] * r[3] for r in rows))
-            yield pd.DataFrame(out)
+    def inventory(i):
+        w, h = 100 + i % 50, 50 + i % 40
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(_content_td_tj(["img doc"]), filters="FlateDecode")
+        imgs = [
+            b.stream(
+                b"\x00",
+                extra_dict=(
+                    b"/Subtype/Image/Width " + str(w).encode()
+                    + b"/Height " + str(h).encode()
+                    + b"/BitsPerComponent 8/ColorSpace/DeviceRGB"
+                    + b"/Filter/DCTDecode"
+                ),
+            )
+            for _ in range(1 + i % 3)
+        ]
+        inner = b.stream(
+            b"\x00",
+            extra_dict=(
+                b"/Subtype/Image/Width 32/Height 32"
+                b"/BitsPerComponent 1/Filter/FlateDecode"
+            ),
+        )
+        form = b.stream(
+            b"",
+            extra_dict=(
+                b"/Subtype/Form/BBox[0 0 1 1]"
+                b"/Resources<</XObject<</Inner "
+                + str(inner).encode() + b" 0 R>>>>"
+            ),
+        )
+        xo = b"/Fm0 " + str(form).encode() + b" 0 R" + b"".join(
+            b"/Im" + str(k).encode() + b" " + str(o).encode() + b" 0 R"
+            for k, o in enumerate(imgs)
+        )
+        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
+        b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode()
+                      + b" 0 R]/Count 1>>")
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
+            b"/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>"
+            b"/XObject<<" + xo + b">>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R>>",
+        )
+        rows = extract_image_inventory(Resolver(b.build(cat)))
+        yield {
+            "doc_id": i,
+            "n_images": len(rows),
+            "max_w": max((r[2] for r in rows), default=0),
+            "max_h": max((r[3] for r in rows), default=0),
+            "sum_pixels": sum(r[2] * r[3] for r in rows),
+        }
 
-    return docs.mapInPandas(inventory, schema)
+    return map_rows(docs, inventory, schema)
 
 
 QUERIES["qx22_image_inventory"] = _qx22
@@ -1641,33 +1537,25 @@ def _qx23(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "idx": [], "src": [], "alt": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                n_imgs = 1 + i % 3
-                body = "".join(
-                    f'<p>text</p><img src="/img/{i}_{k}.jpg" '
-                    f'alt="caption {i} item {k}">'
-                    for k in range(n_imgs)
-                )
-                html = (
-                    "<html><body>"
-                    + body
-                    + "<script>var d='<img src=\"/decoy.jpg\" alt=\"x\">';"
-                    "</script>"
-                    + f'<img src="/img/{i}_plain.png">'
-                    + "</body></html>"
-                ).encode()
-                for idx, (src, alt) in enumerate(extract_image_alts(html)):
-                    out["doc_id"].append(i)
-                    out["idx"].append(idx)
-                    out["src"].append(src)
-                    out["alt"].append(alt)
-            yield pd.DataFrame(out)
+    def pairs(i):
+        n_imgs = 1 + i % 3
+        body = "".join(
+            f'<p>text</p><img src="/img/{i}_{k}.jpg" '
+            f'alt="caption {i} item {k}">'
+            for k in range(n_imgs)
+        )
+        html = (
+            "<html><body>"
+            + body
+            + "<script>var d='<img src=\"/decoy.jpg\" alt=\"x\">';"
+            "</script>"
+            + f'<img src="/img/{i}_plain.png">'
+            + "</body></html>"
+        ).encode()
+        for idx, (src, alt) in enumerate(extract_image_alts(html)):
+            yield {"doc_id": i, "idx": idx, "src": src, "alt": alt}
 
-    return docs.mapInPandas(pairs, schema)
+    return map_rows(docs, pairs, schema)
 
 
 QUERIES["qx23_image_alt_pairs"] = _qx23
@@ -1695,48 +1583,43 @@ def _qx24(spark: SparkSession, sf: str) -> DataFrame:
     grouping, separators), AND that stripping its markers recovers
     exactly the plain extracted text (the two serializers may never
     diverge on content coverage). Narrow mapInPandas, zero shuffles."""
+    import re as _re
+
+    from pdf_spark.core.htmltext import extract_main_text, extract_markdown
+    from pdf_spark.gen import htmlgen as hg
+    from pdf_spark.gen.pdfgen import wrap_lines
+
     docs = load(spark, sf, "documents").select("doc_id", "text")
+    variants = (
+        ("html_article", hg.html_article),
+        ("html_messy", hg.html_messy),
+        ("html_table_list", hg.html_table_list),
+        ("html_win1251", hg.html_win1251),
+        ("html_structured", hg.html_structured),
+    )
+    strip = _re.compile(r"^(#{1,6} |- |> |```$)", _re.M)
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re as _re
-
-        from pdf_spark.core.htmltext import extract_main_text, extract_markdown
-        from pdf_spark.gen import htmlgen as hg
-        from pdf_spark.gen.pdfgen import wrap_lines
-
-        variants = (
-            ("html_article", hg.html_article),
-            ("html_messy", hg.html_messy),
-            ("html_table_list", hg.html_table_list),
-            ("html_win1251", hg.html_win1251),
-            ("html_structured", hg.html_structured),
-        )
-        strip = _re.compile(r"^(#{1,6} |- |> |```$)", _re.M)
-        for batch in batches:
-            out = {"doc_id": [], "ok": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                lines = wrap_lines(text or "")
-                ok = True
-                for name, fn in variants:
-                    page = fn(lines)
-                    md = extract_markdown(page)
-                    if md != hg.expected_markdown_for_variant(name, lines):
-                        ok = False
-                        break
-                    flat = "\n".join(
-                        l for l in strip.sub("", md).split("\n") if l
-                    )
-                    if flat != extract_main_text(page):
-                        ok = False
-                        break
-                out["doc_id"].append(int(doc_id))
-                out["ok"].append(ok)
-            yield pd.DataFrame(out)
+    def check(doc_id, text):
+        lines = wrap_lines(text or "")
+        ok = True
+        for name, fn in variants:
+            page = fn(lines)
+            md = extract_markdown(page)
+            if md != hg.expected_markdown_for_variant(name, lines):
+                ok = False
+                break
+            flat = "\n".join(
+                l for l in strip.sub("", md).split("\n") if l
+            )
+            if flat != extract_main_text(page):
+                ok = False
+                break
+        yield {"doc_id": doc_id, "ok": ok}
 
     ok_schema = StructType(
         [StructField("doc_id", LongType()), StructField("ok", BooleanType())]
     )
-    return docs.mapInPandas(check, ok_schema)
+    return map_rows(docs, check, ok_schema)
 
 
 QUERIES["qx24_html_markdown"] = _qx24
@@ -1768,29 +1651,26 @@ def _qx25(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def schedule(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"host": [], "url": [], "crawl_delay": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                h = i % 20
-                robots = (
-                    "User-agent: trainbot\n"
-                    f"Crawl-delay: {1 + h % 5}\n"
-                    "Disallow: /private/\n"
-                    "\n"
-                    "User-agent: *\n"
-                    "Crawl-delay: 60\n"
-                ).encode()
-                delay = crawl_delay_for(robots, "trainbot/1.0")
-                host = f"host{h}.example"
-                for j in range(2 + i % 3):
-                    out["host"].append(host)
-                    out["url"].append(f"https://{host}/doc{i}/p{j}")
-                    out["crawl_delay"].append(int(delay))
-            yield pd.DataFrame(out)
+    def schedule(i):
+        h = i % 20
+        robots = (
+            "User-agent: trainbot\n"
+            f"Crawl-delay: {1 + h % 5}\n"
+            "Disallow: /private/\n"
+            "\n"
+            "User-agent: *\n"
+            "Crawl-delay: 60\n"
+        ).encode()
+        delay = crawl_delay_for(robots, "trainbot/1.0")
+        host = f"host{h}.example"
+        for j in range(2 + i % 3):
+            yield {
+                "host": host,
+                "url": f"https://{host}/doc{i}/p{j}",
+                "crawl_delay": int(delay),
+            }
 
-    per_url = docs.mapInPandas(schedule, schema)
+    per_url = map_rows(docs, schedule, schema)
     per_url.createOrReplaceTempView("qx25_frontier")
     return spark.sql(
         """
@@ -1881,20 +1761,12 @@ def _qx26(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id") % 10 == 0
     )
 
-    def recover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "row_idx": [], "col_idx": [], "cell_text": []}
-            for doc_id in batch["doc_id"]:
-                did = int(doc_id)
-                r = extract_document(_grid_pdf(did))
-                for _page, ri, ci, text in detect_table_cells(r.spans):
-                    out["doc_id"].append(did)
-                    out["row_idx"].append(ri)
-                    out["col_idx"].append(ci)
-                    out["cell_text"].append(text)
-            yield pd.DataFrame(out, columns=list(_TABLE_SCHEMA.names))
+    def recover(did):
+        r = extract_document(_grid_pdf(did))
+        for _page, ri, ci, text in detect_table_cells(r.spans):
+            yield dict(zip(_TABLE_SCHEMA.names, (did, ri, ci, text)))
 
-    return docs.mapInPandas(recover, _TABLE_SCHEMA)
+    return map_rows(docs, recover, _TABLE_SCHEMA)
 
 
 QUERIES["qx26_pdf_table_cells"] = _qx26
@@ -1965,19 +1837,12 @@ def _qx27(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "line_idx": [], "heading": []}
-            for doc_id in batch["doc_id"]:
-                did = int(doc_id)
-                r = extract_document(_heading_pdf(did))
-                for li, text in classify_headings(r.spans):
-                    out["doc_id"].append(did)
-                    out["line_idx"].append(li)
-                    out["heading"].append(text)
-            yield pd.DataFrame(out, columns=list(_HEAD_SCHEMA.names))
+    def detect(did):
+        r = extract_document(_heading_pdf(did))
+        for li, text in classify_headings(r.spans):
+            yield {"doc_id": did, "line_idx": li, "heading": text}
 
-    return docs.mapInPandas(detect, _HEAD_SCHEMA)
+    return map_rows(docs, detect, _HEAD_SCHEMA)
 
 
 QUERIES["qx27_pdf_headings"] = _qx27
@@ -2011,25 +1876,20 @@ def _qx28(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def serialize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "md": [], "coverage_equal": []}
-            for doc_id in batch["doc_id"]:
-                did = int(doc_id)
-                r = extract_document(_heading_pdf(did))
-                md = assemble_markdown(r.spans)
-                stripped = "\n".join(
-                    l[3:] if l.startswith("## ") else l
-                    for l in md.split("\n")
-                )
-                out["doc_id"].append(did)
-                out["md"].append(md)
-                out["coverage_equal"].append(
-                    stripped == assemble_text(r.spans)
-                )
-            yield pd.DataFrame(out, columns=list(_MD_SCHEMA.names))
+    def serialize(did):
+        r = extract_document(_heading_pdf(did))
+        md = assemble_markdown(r.spans)
+        stripped = "\n".join(
+            l[3:] if l.startswith("## ") else l
+            for l in md.split("\n")
+        )
+        yield {
+            "doc_id": did,
+            "md": md,
+            "coverage_equal": stripped == assemble_text(r.spans),
+        }
 
-    return docs.mapInPandas(serialize, _MD_SCHEMA)
+    return map_rows(docs, serialize, _MD_SCHEMA)
 
 
 QUERIES["qx28_pdf_markdown"] = _qx28
@@ -2077,80 +1937,77 @@ def _qx29(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def annots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "page_no": [], "subtype": [], "text": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(
-                    _content_td_tj(["annotated"]), filters="FlateDecode"
+    def annots(i):
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(
+            _content_td_tj(["annotated"]), filters="FlateDecode"
+        )
+        pop = b.reserve()
+        note = b"Fix section " + str(i % 50).encode()
+        a1 = b.add(
+            b"<</Type/Annot/Subtype/Text/Rect[0 0 9 9]/Contents("
+            + note + b")/Popup " + str(pop).encode() + b" 0 R>>"
+        )
+        b.set(
+            pop,
+            b"<</Type/Annot/Subtype/Popup/Rect[0 0 9 9]/Contents("
+            + note + b")>>",
+        )
+        u16 = b"\xfe\xff" + f"Nota — {i}".encode("utf-16-be")
+        a2 = b.add(
+            b"<</Type/Annot/Subtype/FreeText/Rect[0 0 9 9]/Contents("
+            + _escb(u16) + b")>>"
+        )
+        a3 = b.add(
+            b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]/Contents(alt)"
+            b"/A<</S/URI/URI(https://example.com)>>>>"
+        )
+        a4 = b.add(b"<</Type/Annot/Subtype/Square/Rect[0 0 9 9]>>")
+        ids = [a1, pop, a2, a3, a4]
+        if i % 3 == 0:
+            ids.append(
+                b.add(
+                    b"<</Type/Annot/Subtype/Highlight/Rect[0 0 9 9]"
+                    b"/Contents(hl " + str(i % 7).encode() + b")>>"
                 )
-                pop = b.reserve()
-                note = b"Fix section " + str(i % 50).encode()
-                a1 = b.add(
-                    b"<</Type/Annot/Subtype/Text/Rect[0 0 9 9]/Contents("
-                    + note + b")/Popup " + str(pop).encode() + b" 0 R>>"
-                )
-                b.set(
-                    pop,
-                    b"<</Type/Annot/Subtype/Popup/Rect[0 0 9 9]/Contents("
-                    + note + b")>>",
-                )
-                u16 = b"\xfe\xff" + f"Nota — {i}".encode("utf-16-be")
-                a2 = b.add(
-                    b"<</Type/Annot/Subtype/FreeText/Rect[0 0 9 9]/Contents("
-                    + _escb(u16) + b")>>"
-                )
-                a3 = b.add(
-                    b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]/Contents(alt)"
-                    b"/A<</S/URI/URI(https://example.com)>>>>"
-                )
-                a4 = b.add(b"<</Type/Annot/Subtype/Square/Rect[0 0 9 9]>>")
-                ids = [a1, pop, a2, a3, a4]
-                if i % 3 == 0:
-                    ids.append(
-                        b.add(
-                            b"<</Type/Annot/Subtype/Highlight/Rect[0 0 9 9]"
-                            b"/Contents(hl " + str(i % 7).encode() + b")>>"
-                        )
-                    )
-                b.set(
-                    cat,
-                    b"<</Type/Catalog/Pages " + str(pages_id).encode()
-                    + b" 0 R>>",
-                )
-                b.set(
-                    pages_id,
-                    b"<</Type/Pages/Kids[" + str(page).encode()
-                    + b" 0 R]/Count 1>>",
-                )
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-                    b"/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode()
-                    + b" 0 R>>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R"
-                    b"/Annots["
-                    + b" ".join(str(a).encode() + b" 0 R" for a in ids)
-                    + b"]>>",
-                )
-                pdf = b.build(cat)
-                for page_no, subtype, text in extract_annotation_texts(
-                    Resolver(pdf)
-                ):
-                    out["doc_id"].append(i)
-                    out["page_no"].append(page_no)
-                    out["subtype"].append(subtype)
-                    out["text"].append(text)
-            yield pd.DataFrame(out)
+            )
+        b.set(
+            cat,
+            b"<</Type/Catalog/Pages " + str(pages_id).encode()
+            + b" 0 R>>",
+        )
+        b.set(
+            pages_id,
+            b"<</Type/Pages/Kids[" + str(page).encode()
+            + b" 0 R]/Count 1>>",
+        )
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
+            b"/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode()
+            + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R"
+            b"/Annots["
+            + b" ".join(str(a).encode() + b" 0 R" for a in ids)
+            + b"]>>",
+        )
+        pdf = b.build(cat)
+        for page_no, subtype, text in extract_annotation_texts(
+            Resolver(pdf)
+        ):
+            yield {
+                "doc_id": i,
+                "page_no": page_no,
+                "subtype": subtype,
+                "text": text,
+            }
 
-    return docs.mapInPandas(annots, schema)
+    return map_rows(docs, annots, schema)
 
 
 QUERIES["qx29_annotation_texts"] = _qx29
@@ -2199,35 +2056,32 @@ def _qx30(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "robots": [], "canonical": []}
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                i = int(doc_id)
-                cls = i % 5
-                tags = {
-                    0: "",
-                    1: '<meta name="robots" content="noindex">',
-                    2: '<meta name="robots" content="noindex">'
-                       '<meta name="ROBOTS" content="nofollow">',
-                    3: '<meta name="robots" content="noindex, nofollow">',
-                    4: '<meta name="robots" content="all">',
-                }[cls]
-                canonical = f"https://example.com/doc/{i - i % 3}"
-                page = (
-                    f"<!doctype html><html><head><title>d{i}</title>{tags}"
-                    f'<link rel="canonical" href="{canonical}">'
-                    "</head><body><p>"
-                    + escape(str(text) or "x")
-                    + "</p></body></html>"
-                ).encode()
-                hm = extract_html_meta(page)
-                out["doc_id"].append(i)
-                out["robots"].append(hm["robots"])
-                out["canonical"].append(hm["canonical"])
-            yield pd.DataFrame(out)
+    def meta(i, text):
+        cls = i % 5
+        tags = {
+            0: "",
+            1: '<meta name="robots" content="noindex">',
+            2: '<meta name="robots" content="noindex">'
+               '<meta name="ROBOTS" content="nofollow">',
+            3: '<meta name="robots" content="noindex, nofollow">',
+            4: '<meta name="robots" content="all">',
+        }[cls]
+        canonical = f"https://example.com/doc/{i - i % 3}"
+        page = (
+            f"<!doctype html><html><head><title>d{i}</title>{tags}"
+            f'<link rel="canonical" href="{canonical}">'
+            "</head><body><p>"
+            + escape(str(text) or "x")
+            + "</p></body></html>"
+        ).encode()
+        hm = extract_html_meta(page)
+        yield {
+            "doc_id": i,
+            "robots": hm["robots"],
+            "canonical": hm["canonical"],
+        }
 
-    ex = docs.mapInPandas(meta, schema)
+    ex = map_rows(docs, meta, schema)
     ex.createOrReplaceTempView("qx30_extracted")
     return spark.sql(
         """
@@ -2305,103 +2159,94 @@ def _qx31(spark: SparkSession, sf: str) -> DataFrame:
             StructField("md5", StringType()),
         ]
     )
-    cols = list(schema.fieldNames())
+    def attachments(i):
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(
+            _content_td_tj(["attached"]), filters="FlateDecode"
+        )
+        csv = f"id,value\n{i},{i * i}".encode()
+        enc = zlib.compress(csv)
+        ef1 = b.add(
+            b"<</Length " + str(len(enc)).encode()
+            + b"/Filter/FlateDecode/Subtype/text#2Fcsv"
+            b"/Params<</Size " + str(len(csv)).encode() + b">>"
+            b">>\nstream\n" + enc + b"\nendstream"
+        )
+        spec1 = b.add(
+            b"<</Type/Filespec/F(data_" + str(i % 100).encode()
+            + b".csv)/EF<</F " + str(ef1).encode() + b" 0 R>>>>"
+        )
+        readme = f"readme {i % 5}".encode()
+        ef2 = b.add(
+            b"<</Length " + str(len(readme)).encode()
+            + b"/Subtype/text#2Fplain/Params<</Size "
+            + str(len(readme)).encode() + b">>"
+            b">>\nstream\n" + readme + b"\nendstream"
+        )
+        spec2 = b.add(
+            b"<</Type/Filespec/F(readme.txt)/Desc(attachment for doc "
+            + str(i).encode() + b")/EF<</F " + str(ef2).encode()
+            + b" 0 R>>>>"
+        )
+        spec_ext = b.add(b"<</Type/Filespec/F(external-only.bin)>>")
+        kid1 = b.add(
+            b"<</Names[(data) " + str(spec1).encode() + b" 0 R]>>"
+        )
+        kid2 = b.add(
+            b"<</Names[(ext) " + str(spec_ext).encode()
+            + b" 0 R (readme) " + str(spec2).encode() + b" 0 R]>>"
+        )
+        root = b.add(
+            b"<</Kids[" + str(kid1).encode() + b" 0 R "
+            + str(kid2).encode() + b" 0 R]>>"
+        )
+        annots = b""
+        if i % 2 == 0:
+            note = f"note {i % 7}".encode()
+            ef3 = b.add(
+                b"<</Length " + str(len(note)).encode()
+                + b"/Subtype/application#2Foctet-stream"
+                b"/Params<</Size " + str(len(note)).encode() + b">>"
+                b">>\nstream\n" + note + b"\nendstream"
+            )
+            spec3 = b.add(
+                b"<</Type/Filespec/F(note.bin)/EF<</F "
+                + str(ef3).encode() + b" 0 R>>>>"
+            )
+            a = b.add(
+                b"<</Type/Annot/Subtype/FileAttachment"
+                b"/Rect[0 0 9 9]/FS " + str(spec3).encode() + b" 0 R>>"
+            )
+            annots = b"/Annots[" + str(a).encode() + b" 0 R]"
+        b.set(
+            cat,
+            b"<</Type/Catalog/Pages " + str(pages_id).encode()
+            + b" 0 R/Names<</EmbeddedFiles " + str(root).encode()
+            + b" 0 R>>>>",
+        )
+        b.set(
+            pages_id,
+            b"<</Type/Pages/Kids[" + str(page).encode()
+            + b" 0 R]/Count 1>>",
+        )
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
+            b"/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode()
+            + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R" + annots
+            + b">>",
+        )
+        pdf = b.build(cat)
+        for row in extract_embedded_files(Resolver(pdf)):
+            yield dict(zip(schema.names, (i, *row)))
 
-    def attachments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict = {c: [] for c in cols}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(
-                    _content_td_tj(["attached"]), filters="FlateDecode"
-                )
-                csv = f"id,value\n{i},{i * i}".encode()
-                enc = zlib.compress(csv)
-                ef1 = b.add(
-                    b"<</Length " + str(len(enc)).encode()
-                    + b"/Filter/FlateDecode/Subtype/text#2Fcsv"
-                    b"/Params<</Size " + str(len(csv)).encode() + b">>"
-                    b">>\nstream\n" + enc + b"\nendstream"
-                )
-                spec1 = b.add(
-                    b"<</Type/Filespec/F(data_" + str(i % 100).encode()
-                    + b".csv)/EF<</F " + str(ef1).encode() + b" 0 R>>>>"
-                )
-                readme = f"readme {i % 5}".encode()
-                ef2 = b.add(
-                    b"<</Length " + str(len(readme)).encode()
-                    + b"/Subtype/text#2Fplain/Params<</Size "
-                    + str(len(readme)).encode() + b">>"
-                    b">>\nstream\n" + readme + b"\nendstream"
-                )
-                spec2 = b.add(
-                    b"<</Type/Filespec/F(readme.txt)/Desc(attachment for doc "
-                    + str(i).encode() + b")/EF<</F " + str(ef2).encode()
-                    + b" 0 R>>>>"
-                )
-                spec_ext = b.add(b"<</Type/Filespec/F(external-only.bin)>>")
-                kid1 = b.add(
-                    b"<</Names[(data) " + str(spec1).encode() + b" 0 R]>>"
-                )
-                kid2 = b.add(
-                    b"<</Names[(ext) " + str(spec_ext).encode()
-                    + b" 0 R (readme) " + str(spec2).encode() + b" 0 R]>>"
-                )
-                root = b.add(
-                    b"<</Kids[" + str(kid1).encode() + b" 0 R "
-                    + str(kid2).encode() + b" 0 R]>>"
-                )
-                annots = b""
-                if i % 2 == 0:
-                    note = f"note {i % 7}".encode()
-                    ef3 = b.add(
-                        b"<</Length " + str(len(note)).encode()
-                        + b"/Subtype/application#2Foctet-stream"
-                        b"/Params<</Size " + str(len(note)).encode() + b">>"
-                        b">>\nstream\n" + note + b"\nendstream"
-                    )
-                    spec3 = b.add(
-                        b"<</Type/Filespec/F(note.bin)/EF<</F "
-                        + str(ef3).encode() + b" 0 R>>>>"
-                    )
-                    a = b.add(
-                        b"<</Type/Annot/Subtype/FileAttachment"
-                        b"/Rect[0 0 9 9]/FS " + str(spec3).encode() + b" 0 R>>"
-                    )
-                    annots = b"/Annots[" + str(a).encode() + b" 0 R]"
-                b.set(
-                    cat,
-                    b"<</Type/Catalog/Pages " + str(pages_id).encode()
-                    + b" 0 R/Names<</EmbeddedFiles " + str(root).encode()
-                    + b" 0 R>>>>",
-                )
-                b.set(
-                    pages_id,
-                    b"<</Type/Pages/Kids[" + str(page).encode()
-                    + b" 0 R]/Count 1>>",
-                )
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-                    b"/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode()
-                    + b" 0 R>>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R" + annots
-                    + b">>",
-                )
-                pdf = b.build(cat)
-                for row in extract_embedded_files(Resolver(pdf)):
-                    out["doc_id"].append(i)
-                    for col, val in zip(cols[1:], row):
-                        out[col].append(val)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(attachments, schema)
+    return map_rows(docs, attachments, schema)
 
 
 QUERIES["qx31_embedded_files"] = _qx31
@@ -2463,98 +2308,89 @@ def _qx32(spark: SparkSession, sf: str) -> DataFrame:
             StructField("fit", StringType()),
         ]
     )
-    cols = list(schema.fieldNames())
-
-    def links(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict = {c: [] for c in cols}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                p1, p2, p3 = b.reserve(), b.reserve(), b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(
-                    _content_td_tj(["linked"]), filters="FlateDecode"
-                )
-                target = p2 if i % 2 == 0 else p3
-                a_dest = b.add(
-                    b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]/Dest["
-                    + str(target).encode() + b" 0 R/XYZ 0 792 0]>>"
-                )
-                wrapped = b.add(b"<</D[" + str(p2).encode() + b" 0 R/Fit]>>")
-                a_goto = b.add(
+    def links(i):
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        p1, p2, p3 = b.reserve(), b.reserve(), b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(
+            _content_td_tj(["linked"]), filters="FlateDecode"
+        )
+        target = p2 if i % 2 == 0 else p3
+        a_dest = b.add(
+            b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]/Dest["
+            + str(target).encode() + b" 0 R/XYZ 0 792 0]>>"
+        )
+        wrapped = b.add(b"<</D[" + str(p2).encode() + b" 0 R/Fit]>>")
+        a_goto = b.add(
+            b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
+            b"/A<</S/GoTo/D(sec.two)>>>>"
+        )
+        annot_ids = [a_dest, a_goto]
+        if i % 3 == 0:
+            annot_ids.append(
+                b.add(
                     b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
-                    b"/A<</S/GoTo/D(sec.two)>>>>"
+                    b"/A<</S/GoTo/D(no.such)>>>>"
                 )
-                annot_ids = [a_dest, a_goto]
-                if i % 3 == 0:
-                    annot_ids.append(
-                        b.add(
-                            b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
-                            b"/A<</S/GoTo/D(no.such)>>>>"
-                        )
-                    )
-                annot_ids.append(
-                    b.add(
-                        b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
-                        b"/A<</S/GoToR/F(other.pdf)/D[0/Fit]>>>>"
-                    )
-                )
-                annot_ids.append(
-                    b.add(
-                        b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
-                        b"/A<</S/URI/URI(https://example.com)>>>>"
-                    )
-                )
-                leaf = b.add(
-                    b"<</Names[(sec.two) " + str(wrapped).encode()
-                    + b" 0 R]>>"
-                )
-                b.set(
-                    cat,
-                    b"<</Type/Catalog/Pages " + str(pages_id).encode()
-                    + b" 0 R/Names<</Dests " + str(leaf).encode()
-                    + b" 0 R>>>>",
-                )
-                b.set(
-                    pages_id,
-                    b"<</Type/Pages/Kids[" + str(p1).encode() + b" 0 R "
-                    + str(p2).encode() + b" 0 R " + str(p3).encode()
-                    + b" 0 R]/Count 3>>",
-                )
-                common = (
-                    b" 0 R/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode()
-                    + b" 0 R>>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R"
-                )
-                b.set(
-                    p1,
-                    b"<</Type/Page/Parent " + str(pages_id).encode() + common
-                    + b"/Annots["
-                    + b" ".join(str(a).encode() + b" 0 R" for a in annot_ids)
-                    + b"]>>",
-                )
-                b.set(
-                    p2,
-                    b"<</Type/Page/Parent " + str(pages_id).encode()
-                    + common + b">>",
-                )
-                b.set(
-                    p3,
-                    b"<</Type/Page/Parent " + str(pages_id).encode()
-                    + common + b">>",
-                )
-                pdf = b.build(cat)
-                for row in extract_internal_links(Resolver(pdf)):
-                    out["doc_id"].append(i)
-                    for col, val in zip(cols[1:], row):
-                        out[col].append(val)
-            yield pd.DataFrame(out)
+            )
+        annot_ids.append(
+            b.add(
+                b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
+                b"/A<</S/GoToR/F(other.pdf)/D[0/Fit]>>>>"
+            )
+        )
+        annot_ids.append(
+            b.add(
+                b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
+                b"/A<</S/URI/URI(https://example.com)>>>>"
+            )
+        )
+        leaf = b.add(
+            b"<</Names[(sec.two) " + str(wrapped).encode()
+            + b" 0 R]>>"
+        )
+        b.set(
+            cat,
+            b"<</Type/Catalog/Pages " + str(pages_id).encode()
+            + b" 0 R/Names<</Dests " + str(leaf).encode()
+            + b" 0 R>>>>",
+        )
+        b.set(
+            pages_id,
+            b"<</Type/Pages/Kids[" + str(p1).encode() + b" 0 R "
+            + str(p2).encode() + b" 0 R " + str(p3).encode()
+            + b" 0 R]/Count 3>>",
+        )
+        common = (
+            b" 0 R/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode()
+            + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R"
+        )
+        b.set(
+            p1,
+            b"<</Type/Page/Parent " + str(pages_id).encode() + common
+            + b"/Annots["
+            + b" ".join(str(a).encode() + b" 0 R" for a in annot_ids)
+            + b"]>>",
+        )
+        b.set(
+            p2,
+            b"<</Type/Page/Parent " + str(pages_id).encode()
+            + common + b">>",
+        )
+        b.set(
+            p3,
+            b"<</Type/Page/Parent " + str(pages_id).encode()
+            + common + b">>",
+        )
+        pdf = b.build(cat)
+        for row in extract_internal_links(Resolver(pdf)):
+            yield dict(zip(schema.names, (i, *row)))
 
-    return docs.mapInPandas(links, schema)
+    return map_rows(docs, links, schema)
 
 
 QUERIES["qx32_internal_links"] = _qx32
@@ -2598,52 +2434,45 @@ def _qx33(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def labels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict = {"doc_id": [], "page_no": [], "label": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                kids = [b.reserve() for _ in range(4)]
-                font = b.add(F_HELV)
-                cont = b.stream(
-                    _content_td_tj(["labeled"]), filters="FlateDecode"
-                )
-                nums = (
-                    b"<</Nums[0<</S/r>> 2<</S/D/P(c" + str(i % 3).encode()
-                    + b"-)/St " + str(1 + i % 7).encode() + b">>]>>"
-                )
-                lab = b.add(nums)
-                b.set(
-                    cat,
-                    b"<</Type/Catalog/Pages " + str(pages_id).encode()
-                    + b" 0 R/PageLabels " + str(lab).encode() + b" 0 R>>",
-                )
-                b.set(
-                    pages_id,
-                    b"<</Type/Pages/Kids["
-                    + b" ".join(str(k).encode() + b" 0 R" for k in kids)
-                    + b"]/Count 4>>",
-                )
-                for k in kids:
-                    b.set(
-                        k,
-                        b"<</Type/Page/Parent " + str(pages_id).encode()
-                        + b" 0 R/MediaBox[0 0 612 792]"
-                        b"/Resources<</Font<</F1 " + str(font).encode()
-                        + b" 0 R>>>>"
-                        b"/Contents " + str(cont).encode() + b" 0 R>>",
-                    )
-                pdf = b.build(cat)
-                for page_no, label in extract_page_labels(Resolver(pdf)):
-                    out["doc_id"].append(i)
-                    out["page_no"].append(page_no)
-                    out["label"].append(label)
-            yield pd.DataFrame(out)
+    def labels(i):
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        kids = [b.reserve() for _ in range(4)]
+        font = b.add(F_HELV)
+        cont = b.stream(
+            _content_td_tj(["labeled"]), filters="FlateDecode"
+        )
+        nums = (
+            b"<</Nums[0<</S/r>> 2<</S/D/P(c" + str(i % 3).encode()
+            + b"-)/St " + str(1 + i % 7).encode() + b">>]>>"
+        )
+        lab = b.add(nums)
+        b.set(
+            cat,
+            b"<</Type/Catalog/Pages " + str(pages_id).encode()
+            + b" 0 R/PageLabels " + str(lab).encode() + b" 0 R>>",
+        )
+        b.set(
+            pages_id,
+            b"<</Type/Pages/Kids["
+            + b" ".join(str(k).encode() + b" 0 R" for k in kids)
+            + b"]/Count 4>>",
+        )
+        for k in kids:
+            b.set(
+                k,
+                b"<</Type/Page/Parent " + str(pages_id).encode()
+                + b" 0 R/MediaBox[0 0 612 792]"
+                b"/Resources<</Font<</F1 " + str(font).encode()
+                + b" 0 R>>>>"
+                b"/Contents " + str(cont).encode() + b" 0 R>>",
+            )
+        pdf = b.build(cat)
+        for page_no, label in extract_page_labels(Resolver(pdf)):
+            yield {"doc_id": i, "page_no": page_no, "label": label}
 
-    return docs.mapInPandas(labels, schema)
+    return map_rows(docs, labels, schema)
 
 
 QUERIES["qx33_page_labels"] = _qx33
@@ -2697,75 +2526,63 @@ def _qx34(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def profiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict = {c: [] for c in schema.fieldNames()}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                n_pages = 1 + i % 3
-                kids = [b.reserve() for _ in range(n_pages)]
-                font = b.add(F_HELV)
-                cont = b.stream(
-                    _content_td_tj(["profiled"]), filters="FlateDecode"
-                )
-                extra = b""
-                lang = {0: b"en", 1: b"de-DE", 2: b"ja", 4: b"pt-BR"}.get(
-                    i % 5
-                )
-                if lang is not None:
-                    extra += b"/Lang(" + lang + b")"
-                if i % 4 == 0:
-                    extra += b"/Version/2.0"
-                if i % 2 == 0:
-                    extra += b"/MarkInfo<</Marked true>>"
-                if i % 7 == 0:
-                    acro = b.add(b"<</Fields[]>>")
-                    extra += b"/AcroForm " + str(acro).encode() + b" 0 R"
-                b.set(
-                    cat,
-                    b"<</Type/Catalog/Pages " + str(pages_id).encode()
-                    + b" 0 R" + extra + b">>",
-                )
-                b.set(
-                    pages_id,
-                    b"<</Type/Pages/Kids["
-                    + b" ".join(str(k).encode() + b" 0 R" for k in kids)
-                    + b"]/Count " + str(n_pages).encode() + b">>",
-                )
-                for k in kids:
-                    b.set(
-                        k,
-                        b"<</Type/Page/Parent " + str(pages_id).encode()
-                        + b" 0 R/MediaBox[0 0 612 792]"
-                        b"/Resources<</Font<</F1 " + str(font).encode()
-                        + b" 0 R>>>>"
-                        b"/Contents " + str(cont).encode() + b" 0 R>>",
-                    )
-                trailer_extra = b""
-                if i % 3:
-                    first = i.to_bytes(16, "big")
-                    second = first if i % 3 == 1 else (i + 1).to_bytes(16, "big")
-                    trailer_extra = (
-                        b"/ID[<" + first.hex().encode() + b"><"
-                        + second.hex().encode() + b">]"
-                    )
-                prof = extract_doc_profile(
-                    Resolver(b.build(cat, trailer_extra=trailer_extra))
-                )
-                out["doc_id"].append(i)
-                out["lang"].append(prof["lang"])
-                out["version"].append(prof["version"])
-                out["page_count"].append(prof["page_count"])
-                out["tagged"].append(prof["tagged"])
-                out["has_acroform"].append(prof["has_acroform"])
-                out["file_id"].append(prof["file_id"])
-                out["id_unchanged"].append(prof["id_unchanged"])
-            yield pd.DataFrame(out)
+    def profiles(i):
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        n_pages = 1 + i % 3
+        kids = [b.reserve() for _ in range(n_pages)]
+        font = b.add(F_HELV)
+        cont = b.stream(
+            _content_td_tj(["profiled"]), filters="FlateDecode"
+        )
+        extra = b""
+        lang = {0: b"en", 1: b"de-DE", 2: b"ja", 4: b"pt-BR"}.get(
+            i % 5
+        )
+        if lang is not None:
+            extra += b"/Lang(" + lang + b")"
+        if i % 4 == 0:
+            extra += b"/Version/2.0"
+        if i % 2 == 0:
+            extra += b"/MarkInfo<</Marked true>>"
+        if i % 7 == 0:
+            acro = b.add(b"<</Fields[]>>")
+            extra += b"/AcroForm " + str(acro).encode() + b" 0 R"
+        b.set(
+            cat,
+            b"<</Type/Catalog/Pages " + str(pages_id).encode()
+            + b" 0 R" + extra + b">>",
+        )
+        b.set(
+            pages_id,
+            b"<</Type/Pages/Kids["
+            + b" ".join(str(k).encode() + b" 0 R" for k in kids)
+            + b"]/Count " + str(n_pages).encode() + b">>",
+        )
+        for k in kids:
+            b.set(
+                k,
+                b"<</Type/Page/Parent " + str(pages_id).encode()
+                + b" 0 R/MediaBox[0 0 612 792]"
+                b"/Resources<</Font<</F1 " + str(font).encode()
+                + b" 0 R>>>>"
+                b"/Contents " + str(cont).encode() + b" 0 R>>",
+            )
+        trailer_extra = b""
+        if i % 3:
+            first = i.to_bytes(16, "big")
+            second = first if i % 3 == 1 else (i + 1).to_bytes(16, "big")
+            trailer_extra = (
+                b"/ID[<" + first.hex().encode() + b"><"
+                + second.hex().encode() + b">]"
+            )
+        prof = extract_doc_profile(
+            Resolver(b.build(cat, trailer_extra=trailer_extra))
+        )
+        yield {"doc_id": i, **prof}
 
-    return docs.mapInPandas(profiles, schema)
+    return map_rows(docs, profiles, schema)
 
 
 QUERIES["qx34_doc_profile"] = _qx34
@@ -2830,82 +2647,75 @@ def _qx35(spark: SparkSession, sf: str) -> DataFrame:
         b"/ByteRange[0 0000000000 0000000000 0000000000]"
     )
 
-    def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict = {c: [] for c in schema.fieldNames()}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                if i % 5 == 4:
-                    continue  # unsigned doc: no row
-                b = PdfBuilder()
-                cat = b.reserve()
-                pages_id = b.reserve()
-                page = b.reserve()
-                font = b.add(F_HELV)
-                cont = b.stream(
-                    _content_td_tj(["signed"]), filters="FlateDecode"
-                )
-                subfilter = (
-                    b"adbe.pkcs7.detached" if i % 2 == 0
-                    else b"ETSI.CAdES.detached"
-                )
-                reason = b"certification" if i % 3 == 0 else b"approval"
-                sig_date = b"D:202601011200%02d+00'00'" % (i % 60)
-                sig = b.add(
-                    b"<</Type/Sig/Filter/Adobe.PPKLite/SubFilter/"
-                    + subfilter
-                    + b"/Name(Signer " + str(i % 11).encode() + b")"
-                    + b"/M(" + sig_date + b")"
-                    + b"/Reason(" + reason + b")"
-                    + _BR_PLACEHOLDER
-                    + b"/Contents<" + b"00" * 16 + b">>>"
-                )
-                fld = b.add(
-                    b"<</FT/Sig/T(Sig1)/V " + str(sig).encode() + b" 0 R"
-                    b"/Type/Annot/Subtype/Widget/Rect[0 0 0 0]>>"
-                )
-                b.set(
-                    cat,
-                    b"<</Type/Catalog/Pages " + str(pages_id).encode()
-                    + b" 0 R/AcroForm<</SigFlags 3/Fields["
-                    + str(fld).encode() + b" 0 R]>>>>",
-                )
-                b.set(
-                    pages_id,
-                    b"<</Type/Pages/Kids[" + str(page).encode()
-                    + b" 0 R]/Count 1>>",
-                )
-                b.set(
-                    page,
-                    b"<</Type/Page/Parent " + str(pages_id).encode()
-                    + b" 0 R/MediaBox[0 0 612 792]"
-                    b"/Resources<</Font<</F1 " + str(font).encode()
-                    + b" 0 R>>>>"
-                    b"/Contents " + str(cont).encode() + b" 0 R>>",
-                )
-                raw = b.build(cat)
-                # patch the ByteRange placeholder to the real [0 a b c]
-                # (same byte length -> xref offsets stay valid)
-                hole_a = raw.index(b"/Contents<") + len(b"/Contents")
-                hole_b = raw.index(b">", hole_a) + 1
-                br = b"/ByteRange[0 %010d %010d %010d]" % (
-                    hole_a, hole_b, len(raw) - hole_b
-                )
-                assert len(br) == len(_BR_PLACEHOLDER)
-                raw = raw.replace(_BR_PLACEHOLDER, br, 1)
-                if i % 4 == 0:  # post-signing incremental update
-                    raw += (
-                        b"\nxref\n0 0\ntrailer\n<<>>\nstartxref\n0\n%%EOF\n"
-                    )
-                elif i % 3 == 0:  # post-signing junk, no new revision
-                    raw += b"\n% appended-after-signing junk\n"
-                for row in extract_signatures(Resolver(raw)):
-                    out["doc_id"].append(i)
-                    for col, val in zip(schema.fieldNames()[1:], row):
-                        out[col].append(val)
-            yield pd.DataFrame(out)
+    def rows(i):
+        if i % 5 == 4:
+            return  # unsigned doc: no row
+        b = PdfBuilder()
+        cat = b.reserve()
+        pages_id = b.reserve()
+        page = b.reserve()
+        font = b.add(F_HELV)
+        cont = b.stream(
+            _content_td_tj(["signed"]), filters="FlateDecode"
+        )
+        subfilter = (
+            b"adbe.pkcs7.detached" if i % 2 == 0
+            else b"ETSI.CAdES.detached"
+        )
+        reason = b"certification" if i % 3 == 0 else b"approval"
+        sig_date = b"D:202601011200%02d+00'00'" % (i % 60)
+        sig = b.add(
+            b"<</Type/Sig/Filter/Adobe.PPKLite/SubFilter/"
+            + subfilter
+            + b"/Name(Signer " + str(i % 11).encode() + b")"
+            + b"/M(" + sig_date + b")"
+            + b"/Reason(" + reason + b")"
+            + _BR_PLACEHOLDER
+            + b"/Contents<" + b"00" * 16 + b">>>"
+        )
+        fld = b.add(
+            b"<</FT/Sig/T(Sig1)/V " + str(sig).encode() + b" 0 R"
+            b"/Type/Annot/Subtype/Widget/Rect[0 0 0 0]>>"
+        )
+        b.set(
+            cat,
+            b"<</Type/Catalog/Pages " + str(pages_id).encode()
+            + b" 0 R/AcroForm<</SigFlags 3/Fields["
+            + str(fld).encode() + b" 0 R]>>>>",
+        )
+        b.set(
+            pages_id,
+            b"<</Type/Pages/Kids[" + str(page).encode()
+            + b" 0 R]/Count 1>>",
+        )
+        b.set(
+            page,
+            b"<</Type/Page/Parent " + str(pages_id).encode()
+            + b" 0 R/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode()
+            + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R>>",
+        )
+        raw = b.build(cat)
+        # patch the ByteRange placeholder to the real [0 a b c]
+        # (same byte length -> xref offsets stay valid)
+        hole_a = raw.index(b"/Contents<") + len(b"/Contents")
+        hole_b = raw.index(b">", hole_a) + 1
+        br = b"/ByteRange[0 %010d %010d %010d]" % (
+            hole_a, hole_b, len(raw) - hole_b
+        )
+        assert len(br) == len(_BR_PLACEHOLDER)
+        raw = raw.replace(_BR_PLACEHOLDER, br, 1)
+        if i % 4 == 0:  # post-signing incremental update
+            raw += (
+                b"\nxref\n0 0\ntrailer\n<<>>\nstartxref\n0\n%%EOF\n"
+            )
+        elif i % 3 == 0:  # post-signing junk, no new revision
+            raw += b"\n% appended-after-signing junk\n"
+        for row in extract_signatures(Resolver(raw)):
+            yield dict(zip(schema.names, (i, *row)))
 
-    return docs.mapInPandas(rows, schema)
+    return map_rows(docs, rows, schema)
 
 
 QUERIES["qx35_signatures"] = _qx35
@@ -2966,48 +2776,45 @@ def _qx36(spark: SparkSession, sf: str) -> DataFrame:
     )
     langs = ["EN-US", "DE", "FR-ca"]
 
-    def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "pos": [], "rel": [], "hreflang": [], "href": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                head = [f'<link rel="canonical" href="https://ex.org/p{i}">']
-                for j in range(1 + i % 3):
-                    head.append(
-                        f'<link rel="alternate" hreflang="{langs[j]}" '
-                        f'href="https://ex.org/p{i}?lang={langs[j].lower()}">'
-                    )
-                head.append(
-                    '<link rel="alternate" type="application/rss+xml" '
-                    f'href="/feed{i}.xml">'
-                )
-                if i % 2 == 0:
-                    head.append('<link rel="next" href="?page=2">')
-                else:
-                    head.append('<link rel="prev" href="?page=0">')
-                head.append(f'<link rel="amphtml" href="https://amp.ex.org/p{i}">')
-                if i % 5 == 0:
-                    head.append(
-                        f'<link rel="canonical" href="https://ex.org/dup{i}">'
-                    )
-                head.append('<link rel="stylesheet" href="/s.css">')
-                head.append('<link rel="next">')
-                page = (
-                    "<html><head>" + "".join(head) + "</head><body>"
-                    "<script>document.write('<link rel=\"canonical\" "
-                    "href=\"https://evil/x\">')</script>p</body></html>"
-                ).encode()
-                for pos, (rel, hreflang, href) in enumerate(
-                    extract_link_relations(page)
-                ):
-                    out["doc_id"].append(i)
-                    out["pos"].append(pos)
-                    out["rel"].append(rel)
-                    out["hreflang"].append(hreflang)
-                    out["href"].append(href)
-            yield pd.DataFrame(out)
+    def rows(i):
+        head = [f'<link rel="canonical" href="https://ex.org/p{i}">']
+        for j in range(1 + i % 3):
+            head.append(
+                f'<link rel="alternate" hreflang="{langs[j]}" '
+                f'href="https://ex.org/p{i}?lang={langs[j].lower()}">'
+            )
+        head.append(
+            '<link rel="alternate" type="application/rss+xml" '
+            f'href="/feed{i}.xml">'
+        )
+        if i % 2 == 0:
+            head.append('<link rel="next" href="?page=2">')
+        else:
+            head.append('<link rel="prev" href="?page=0">')
+        head.append(f'<link rel="amphtml" href="https://amp.ex.org/p{i}">')
+        if i % 5 == 0:
+            head.append(
+                f'<link rel="canonical" href="https://ex.org/dup{i}">'
+            )
+        head.append('<link rel="stylesheet" href="/s.css">')
+        head.append('<link rel="next">')
+        page = (
+            "<html><head>" + "".join(head) + "</head><body>"
+            "<script>document.write('<link rel=\"canonical\" "
+            "href=\"https://evil/x\">')</script>p</body></html>"
+        ).encode()
+        for pos, (rel, hreflang, href) in enumerate(
+            extract_link_relations(page)
+        ):
+            yield {
+                "doc_id": i,
+                "pos": pos,
+                "rel": rel,
+                "hreflang": hreflang,
+                "href": href,
+            }
 
-    return docs.mapInPandas(rows, schema)
+    return map_rows(docs, rows, schema)
 
 
 QUERIES["qx36_link_relations"] = _qx36
@@ -3082,34 +2889,26 @@ def _qx37(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def lift(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from urllib.parse import urljoin
+    from urllib.parse import urljoin
 
-        for batch in batches:
-            out = {"doc_id": [], "eff_base": [], "pos": [], "href": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                page_url = f"https://www.site{i % 7}.example/dir{i % 3}/page{i}.html"
-                base_tag = '<base href="/assets/">' if i % 2 == 0 else ""
-                page = (
-                    f"<html><head>{base_tag}<title>t</title></head><body>"
-                    '<a href="next.html">n</a>'
-                    '<a href="/rooted/x">r</a>'
-                    '<a href="https://abs.example/p">a</a>'
-                    '<a href="../up.html">u</a>'
-                    f'<a href="?q={i % 4}">q</a>'
-                    "</body></html>"
-                ).encode()
-                base = extract_html_meta(page)["base"]
-                eff_base = urljoin(page_url, base) if base else page_url
-                for pos, href in enumerate(extract_links(page)):
-                    out["doc_id"].append(i)
-                    out["eff_base"].append(eff_base)
-                    out["pos"].append(pos)
-                    out["href"].append(href)
-            yield pd.DataFrame(out)
+    def lift(i):
+        page_url = f"https://www.site{i % 7}.example/dir{i % 3}/page{i}.html"
+        base_tag = '<base href="/assets/">' if i % 2 == 0 else ""
+        page = (
+            f"<html><head>{base_tag}<title>t</title></head><body>"
+            '<a href="next.html">n</a>'
+            '<a href="/rooted/x">r</a>'
+            '<a href="https://abs.example/p">a</a>'
+            '<a href="../up.html">u</a>'
+            f'<a href="?q={i % 4}">q</a>'
+            "</body></html>"
+        ).encode()
+        base = extract_html_meta(page)["base"]
+        eff_base = urljoin(page_url, base) if base else page_url
+        for pos, href in enumerate(extract_links(page)):
+            yield {"doc_id": i, "eff_base": eff_base, "pos": pos, "href": href}
 
-    lifted = docs.mapInPandas(lift, schema)
+    lifted = map_rows(docs, lift, schema)
     resolved = resolve_url(F.col("eff_base"), F.col("href"))
     return lifted.select(
         "doc_id",
@@ -3283,27 +3082,22 @@ def _qx38(spark: SparkSession, sf: str) -> DataFrame:
         )
         return b.build(cat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in ("doc_id", "n_images", "n_ok", "luma_flate",
-                                   "luma_dct", "luma_indexed", "luma_subbyte",
-                                   "luma_dct_prog", "luma_ccitt")}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                rows = extract_embedded_images(Resolver(build_doc(i)))
-                by_name = {r[1]: r for r in rows}
-                out["doc_id"].append(i)
-                out["n_images"].append(len(rows))
-                out["n_ok"].append(sum(1 for r in rows if r[8] is None))
-                out["luma_flate"].append(by_name["Im0"][5])
-                out["luma_dct"].append(by_name["Im1"][5])
-                out["luma_indexed"].append(by_name["Im2"][5])
-                out["luma_subbyte"].append(by_name["Im3"][5])
-                out["luma_dct_prog"].append(by_name["Im4"][5])
-                out["luma_ccitt"].append(by_name["Im5"][5])
-            yield pd.DataFrame(out)
+    def run(i):
+        rows = extract_embedded_images(Resolver(build_doc(i)))
+        by_name = {r[1]: r for r in rows}
+        yield {
+            "doc_id": i,
+            "n_images": len(rows),
+            "n_ok": sum(1 for r in rows if r[8] is None),
+            "luma_flate": by_name["Im0"][5],
+            "luma_dct": by_name["Im1"][5],
+            "luma_indexed": by_name["Im2"][5],
+            "luma_subbyte": by_name["Im3"][5],
+            "luma_dct_prog": by_name["Im4"][5],
+            "luma_ccitt": by_name["Im5"][5],
+        }
 
-    return docs.mapInPandas(run, schema)
+    return map_rows(docs, run, schema)
 
 
 QUERIES["qx38_embedded_image_decode"] = _qx38
@@ -3391,19 +3185,12 @@ def _qx39(spark: SparkSession, sf: str) -> DataFrame:
         )
         return b.build(cat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": [], "pixel_md5": [], "mean_luma": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                rows = extract_embedded_images(Resolver(build_doc(i)))
-                r = rows[0]
-                out["doc_id"].append(i)
-                out["pixel_md5"].append(r[7])
-                out["mean_luma"].append(r[5])
-            yield pd.DataFrame(out)
+    def run(i):
+        rows = extract_embedded_images(Resolver(build_doc(i)))
+        r = rows[0]
+        yield {"doc_id": i, "pixel_md5": r[7], "mean_luma": r[5]}
 
-    decoded = docs.mapInPandas(run, schema)
+    decoded = map_rows(docs, run, schema)
     w = Window.partitionBy("pixel_md5")
     return decoded.select(
         "doc_id",
@@ -3450,56 +3237,38 @@ def _qx40(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for d in (int(x) for x in batch["doc_id"]):
-                fam = d % 6
-                meta_tags = ""
-                headers = None
-                if d % 7 == 5:  # rawtext decoy, never honored
-                    meta_tags += (
-                        "<script>var s = \"<meta name='robots'"
-                        " content='noai'>\";</script>"
-                    )
-                if fam == 1:
-                    meta_tags += '<meta name="robots" content="noindex, noai">'
-                elif fam == 2:
-                    meta_tags += (
-                        '<meta name="robots" content="noimageai">'
-                        '<meta name="tdm-policy"'
-                        f' content="https://example.com/tdm/{d % 9}.json">'
-                    )
-                elif fam == 3:
-                    meta_tags += '<meta name="tdm-reservation" content="1">'
-                elif fam == 4:
-                    headers = "X-Robots-Tag: trainbot: noai\r\nServer: x"
-                elif fam == 5:
-                    meta_tags += '<meta name="tdm-reservation" content="0">'
-                    headers = "tdm-reservation: 1"
-                page = (
-                    "<html><head>" + meta_tags
-                    + f"<title>d{d}</title></head><body>b</body></html>"
-                )
-                r = ai_optout(page.encode("utf-8"), headers=headers)
-                rows.append(
-                    (d, r["noai"], r["noimageai"], r["tdm_reservation"],
-                     r["tdm_policy"], r["train_allowed"])
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r[0] for r in rows],
-                    "noai": [r[1] for r in rows],
-                    "noimageai": [r[2] for r in rows],
-                    "tdm_reservation": pd.array(
-                        [r[3] for r in rows], dtype="Int32"
-                    ),
-                    "tdm_policy": [r[4] for r in rows],
-                    "train_allowed": [r[5] for r in rows],
-                }
+    def run(d):
+        fam = d % 6
+        meta_tags = ""
+        headers = None
+        if d % 7 == 5:  # rawtext decoy, never honored
+            meta_tags += (
+                "<script>var s = \"<meta name='robots'"
+                " content='noai'>\";</script>"
             )
+        if fam == 1:
+            meta_tags += '<meta name="robots" content="noindex, noai">'
+        elif fam == 2:
+            meta_tags += (
+                '<meta name="robots" content="noimageai">'
+                '<meta name="tdm-policy"'
+                f' content="https://example.com/tdm/{d % 9}.json">'
+            )
+        elif fam == 3:
+            meta_tags += '<meta name="tdm-reservation" content="1">'
+        elif fam == 4:
+            headers = "X-Robots-Tag: trainbot: noai\r\nServer: x"
+        elif fam == 5:
+            meta_tags += '<meta name="tdm-reservation" content="0">'
+            headers = "tdm-reservation: 1"
+        page = (
+            "<html><head>" + meta_tags
+            + f"<title>d{d}</title></head><body>b</body></html>"
+        )
+        r = ai_optout(page.encode("utf-8"), headers=headers)
+        yield {"doc_id": d, **r}
 
-    return docs.mapInPandas(run, schema)
+    return map_rows(docs, run, schema)
 
 
 QUERIES["qx40_ai_optout"] = _qx40
@@ -3585,30 +3354,16 @@ def _qx41(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.document import Resolver
-        from pdf_spark.core.pdfimages import extract_inline_images
+    from pdf_spark.core.document import Resolver
+    from pdf_spark.core.pdfimages import extract_inline_images
 
-        for batch in batches:
-            rows = []
-            for d in (int(x) for x in batch["doc_id"]):
-                r = Resolver(_qx41_make_pdf(d))
-                imgs = extract_inline_images(r)
-                assert len(imgs) == 1 and imgs[0][8] is None, imgs
-                _pg, _idx, w, h, ch, luma, _ah, _md5, _err = imgs[0]
-                rows.append((d, len(imgs), w, h, ch, luma))
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r[0] for r in rows],
-                    "n_inline": [r[1] for r in rows],
-                    "width": [r[2] for r in rows],
-                    "height": [r[3] for r in rows],
-                    "channels": [r[4] for r in rows],
-                    "mean_luma": [r[5] for r in rows],
-                }
-            )
+    def run(d):
+        imgs = extract_inline_images(Resolver(_qx41_make_pdf(d)))
+        assert len(imgs) == 1 and imgs[0][8] is None, imgs
+        _pg, _idx, w, h, ch, luma, _ah, _md5, _err = imgs[0]
+        yield dict(zip(schema.names, (d, len(imgs), w, h, ch, luma)))
 
-    return docs.mapInPandas(run, schema)
+    return map_rows(docs, run, schema)
 
 
 QUERIES["qx41_inline_image_decode"] = _qx41
@@ -3669,55 +3424,40 @@ def _qx42(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for d in (int(x) for x in batch["doc_id"]):
-                fam = d % 5
-                vis = "v" * (10 + d % 13)
-                h1 = "h" * (5 + d % 7)
-                body = f"<p>{vis}</p>"
-                if fam == 1:
-                    body += f'<div style="display: none">{h1}</div>'
-                elif fam == 2:
-                    body += f"<span hidden>{h1}</span>"
-                elif fam == 3:
-                    q = "q" * (2 + d % 3)
-                    body += (
-                        f'<div aria-hidden="true"><p>{h1}</p>'
-                        f'<span style="visibility:hidden">{q}</span></div>'
-                    )
-                elif fam == 4:
-                    k = "k" * (3 + d % 4)
-                    body += (
-                        f'<p style="text-indent:-9999px">{h1}</p>'
-                        f'<i style="font-size:0">{k}</i>'
-                    )
-                if d % 3 == 0:
-                    body += (
-                        "<script>var s = \"<div style='display:none'>"
-                        "zzzzz</div>\";</script>"
-                    )
-                page = (
-                    "<html><head><title>t</title></head><body>"
-                    + body + "</body></html>"
-                )
-                r = hidden_audit(page.encode("utf-8"))
-                rows.append(
-                    (d, r["visible_chars"], r["hidden_chars"],
-                     r["n_hidden_nodes"], r["hidden_milli"])
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r[0] for r in rows],
-                    "visible_chars": [r[1] for r in rows],
-                    "hidden_chars": [r[2] for r in rows],
-                    "n_hidden_nodes": [r[3] for r in rows],
-                    "hidden_milli": [r[4] for r in rows],
-                }
+    def run(d):
+        fam = d % 5
+        vis = "v" * (10 + d % 13)
+        h1 = "h" * (5 + d % 7)
+        body = f"<p>{vis}</p>"
+        if fam == 1:
+            body += f'<div style="display: none">{h1}</div>'
+        elif fam == 2:
+            body += f"<span hidden>{h1}</span>"
+        elif fam == 3:
+            q = "q" * (2 + d % 3)
+            body += (
+                f'<div aria-hidden="true"><p>{h1}</p>'
+                f'<span style="visibility:hidden">{q}</span></div>'
             )
+        elif fam == 4:
+            k = "k" * (3 + d % 4)
+            body += (
+                f'<p style="text-indent:-9999px">{h1}</p>'
+                f'<i style="font-size:0">{k}</i>'
+            )
+        if d % 3 == 0:
+            body += (
+                "<script>var s = \"<div style='display:none'>"
+                "zzzzz</div>\";</script>"
+            )
+        page = (
+            "<html><head><title>t</title></head><body>"
+            + body + "</body></html>"
+        )
+        r = hidden_audit(page.encode("utf-8"))
+        yield {"doc_id": d, **r}
 
-    return docs.mapInPandas(run, schema)
+    return map_rows(docs, run, schema)
 
 
 QUERIES["qx42_hidden_content"] = _qx42
@@ -3845,26 +3585,14 @@ def _qx75(spark: SparkSession, sf: str) -> DataFrame:
         )
         return b.build(cat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.document import Resolver
-        from pdf_spark.core.meta import active_content_audit
+    from pdf_spark.core.document import Resolver
+    from pdf_spark.core.meta import active_content_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [active_content_audit(Resolver(_make(d))) for d in ids]
-            frame = {"doc_id": ids,
-                     "openaction_kind": [m["openaction_kind"] for m in metas]}
-            for c in ("has_openaction", "has_catalog_aa", "n_doc_js",
-                      "n_annot_js", "n_launch", "n_uri", "n_submit",
-                      "risky"):
-                frame[c] = pd.array([m[c] for m in metas], dtype="Int32")
-            yield pd.DataFrame(frame)[
-                ["doc_id", "has_openaction", "openaction_kind",
-                 "has_catalog_aa", "n_doc_js", "n_annot_js", "n_launch",
-                 "n_uri", "n_submit", "risky"]
-            ]
-
-    return docs.mapInPandas(run, schema)
+    return map_rows(
+        docs,
+        lambda d: [{"doc_id": d, **active_content_audit(Resolver(_make(d)))}],
+        schema,
+    )
 
 
 QUERIES["qx75_active_content"] = _qx75
@@ -3981,20 +3709,14 @@ def _qx76(spark: SparkSession, sf: str) -> DataFrame:
         )
         return b.build(cat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.document import Resolver
-        from pdf_spark.core.meta import struct_census
+    from pdf_spark.core.document import Resolver
+    from pdf_spark.core.meta import struct_census
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [struct_census(Resolver(_make(d))) for d in ids]
-            frame = {"doc_id": ids}
-            for c in ("tagged", "n_elems", "n_para", "n_headings",
-                      "n_figures", "n_fig_alt", "max_depth"):
-                frame[c] = pd.array([m[c] for m in metas], dtype="Int32")
-            yield pd.DataFrame(frame)
-
-    return docs.mapInPandas(run, schema)
+    return map_rows(
+        docs,
+        lambda d: [{"doc_id": d, **struct_census(Resolver(_make(d)))}],
+        schema,
+    )
 
 
 QUERIES["qx76_struct_census"] = _qx76

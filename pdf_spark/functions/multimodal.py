@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_spark.functions.tables import load, register_views
+from pdf_spark.functions.tables import load, map_rows, register_views
 
 QUERIES = {}
 ORACLE = {}
@@ -119,22 +119,15 @@ def _qm02(spark: SparkSession, sf: str) -> DataFrame:
         pil, imaging._PIL = imaging._PIL, None
         try:
             for batch in batches:
-                out = {
-                    k: []
-                    for k in (
-                        "doc_id", "width", "height", "n_channels", "mean_luma"
-                    )
-                }
-                for doc_id in batch["doc_id"]:
-                    w, h, c, m = imaging.image_features(
-                        _qm02_make_blob(int(doc_id))
-                    )
-                    out["doc_id"].append(int(doc_id))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_channels"].append(c)
-                    out["mean_luma"].append(m)
-                yield pd.DataFrame(out)
+                yield pd.DataFrame(
+                    [
+                        _features_row(
+                            d, imaging.image_features(_qm02_make_blob(d))
+                        )
+                        for d in batch["doc_id"].tolist()
+                    ],
+                    columns=_FEATURES_SCHEMA.names,
+                )
         finally:
             imaging._PIL = pil
 
@@ -205,31 +198,27 @@ def _qm03_make_gif(doc_id: int) -> bytes:
 
 
 def _qm03(spark: SparkSession, sf: str) -> DataFrame:
+    import hashlib
+
     from pdf_spark.core import imaging
 
-    docs = load(spark, sf, "documents").select("doc_id")
+    def sample(d: int) -> list:
+        frames = imaging.gif_frames(_qm03_make_gif(d))
+        return [
+            {
+                "doc_id": d,
+                "frame_idx": k,
+                "frame_md5": hashlib.md5(
+                    b"".join(bytes(r) for r in imaging._luma_rows(w, h, ch, s))
+                ).hexdigest(),
+            }
+            for k, (w, h, ch, s) in enumerate(frames)
+            if k % 3 == 0
+        ]
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for batch in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_md5": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                for k, (w, h, ch, s) in enumerate(
-                    imaging.gif_frames(_qm03_make_gif(i))
-                ):
-                    if k % 3:
-                        continue
-                    lum = b"".join(
-                        bytes(r) for r in imaging._luma_rows(w, h, ch, s)
-                    )
-                    out["doc_id"].append(i)
-                    out["frame_idx"].append(k)
-                    out["frame_md5"].append(hashlib.md5(lum).hexdigest())
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(sample, _FRAMES_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"), sample, _FRAMES_SCHEMA
+    )
 
 
 QUERIES["qm03_frame_sample"] = _qm03
@@ -288,25 +277,24 @@ def _qm04_make_wav(doc_id: int) -> bytes:
 def _qm04(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core import audio
 
-    docs = load(spark, sf, "documents").select("doc_id")
+    def featurize(d: int) -> list:
+        rate, _ch, _bits, frames, dur, _peak, mean_abs = (
+            audio.audio_features(_qm04_make_wav(d))
+        )
+        return [
+            {
+                "doc_id": d,
+                "sample_rate": rate,
+                "n_samples": frames,
+                "duration_ms": dur,
+                "mean_amp": mean_abs,
+                "n_hops": -(-frames // 160),
+            }
+        ]
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {f.name: [] for f in _AUDIO_SCHEMA.fields}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                rate, _ch, _bits, frames, dur, _peak, mean_abs = (
-                    audio.audio_features(_qm04_make_wav(i))
-                )
-                out["doc_id"].append(i)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(frames)
-                out["duration_ms"].append(dur)
-                out["mean_amp"].append(mean_abs)
-                out["n_hops"].append(-(-frames // 160))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(featurize, _AUDIO_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"), featurize, _AUDIO_SCHEMA
+    )
 
 
 QUERIES["qm04_audio_features"] = _qm04
@@ -490,6 +478,26 @@ _PNG_FEATURES_SCHEMA = StructType(
 )
 
 
+def _features_row(doc_id: int, feats: tuple) -> dict:
+    """(width, height, n_channels, mean_luma) from ``image_features``."""
+    return dict(zip(_PNG_FEATURES_SCHEMA.names, (doc_id, *feats)))
+
+
+def _ahash_row(doc_id: int, blob: bytes) -> dict:
+    from pdf_spark.core.imaging import average_hash
+
+    return {"doc_id": doc_id, "ahash_hex": format(average_hash(blob), "016x")}
+
+
+def _palette_row(doc_id: int, blob: bytes) -> dict:
+    from pdf_spark.core.imaging import image_features
+
+    return {
+        **_features_row(doc_id, image_features(blob)),
+        **_ahash_row(doc_id, blob),
+    }
+
+
 def _qm06_make_png(doc_id: int) -> bytes:
     """Deterministic real PNG for one doc: constant-pixel image whose
     dims/channels/value derive from doc_id (constant content means every
@@ -508,23 +516,11 @@ def _qm06_make_png(doc_id: int) -> bytes:
 def _qm06(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.imaging import image_features
 
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            feats = [image_features(_qm06_make_png(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                }
-            )
-
-    return docs.mapInPandas(run, _PNG_FEATURES_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_features_row(d, image_features(_qm06_make_png(d)))],
+        _PNG_FEATURES_SCHEMA,
+    )
 
 
 QUERIES["qm06_png_decode_features"] = _qm06
@@ -565,24 +561,11 @@ def _qm07_make_png(doc_id: int) -> bytes:
 
 
 def _qm07(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash
-
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "ahash_hex": [
-                        format(average_hash(_qm07_make_png(d)), "016x")
-                        for d in ids
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(run, _PNG_AHASH_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_ahash_row(d, _qm07_make_png(d))],
+        _PNG_AHASH_SCHEMA,
+    )
 
 
 QUERIES["qm07_png_ahash"] = _qm07
@@ -623,23 +606,11 @@ def _qm08_make_gif(doc_id: int) -> bytes:
 def _qm08(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.imaging import image_features
 
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            feats = [image_features(_qm08_make_gif(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                }
-            )
-
-    return docs.mapInPandas(run, _PNG_FEATURES_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_features_row(d, image_features(_qm08_make_gif(d)))],
+        _PNG_FEATURES_SCHEMA,
+    )
 
 
 QUERIES["qm08_gif_decode_features"] = _qm08
@@ -672,24 +643,11 @@ def _qm09_make_gif(doc_id: int) -> bytes:
 
 
 def _qm09(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash
-
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "ahash_hex": [
-                        format(average_hash(_qm09_make_gif(d)), "016x")
-                        for d in ids
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(run, _PNG_AHASH_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_ahash_row(d, _qm09_make_gif(d))],
+        _PNG_AHASH_SCHEMA,
+    )
 
 
 QUERIES["qm09_gif_ahash"] = _qm09
@@ -743,7 +701,6 @@ def _qm10(spark: SparkSession, sf: str) -> DataFrame:
     formats surface as 'other' rows, not errors."""
     from pdf_spark.core.imaging import image_meta
 
-    docs = load(spark, sf, "documents").select("doc_id")
     schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -754,21 +711,11 @@ def _qm10(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict = {c: [] for c in schema.fieldNames()}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                meta = image_meta(_qm10_make_blob(i))
-                fmt, w, h, ch = meta if meta else ("other", None, None, None)
-                out["doc_id"].append(i)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(ch)
-            yield pd.DataFrame(out)
+    def row(d: int) -> list:
+        meta = image_meta(_qm10_make_blob(d)) or ("other", None, None, None)
+        return [dict(zip(schema.names, (d, *meta)))]
 
-    return docs.mapInPandas(run, schema)
+    return map_rows(load(spark, sf, "documents").select("doc_id"), row, schema)
 
 
 QUERIES["qm10_image_meta"] = _qm10
@@ -829,23 +776,11 @@ def _qm11_make_jpeg(doc_id: int) -> bytes:
 def _qm11(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.imaging import image_features
 
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            feats = [image_features(_qm11_make_jpeg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                }
-            )
-
-    return docs.mapInPandas(run, _PNG_FEATURES_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_features_row(d, image_features(_qm11_make_jpeg(d)))],
+        _PNG_FEATURES_SCHEMA,
+    )
 
 
 QUERIES["qm11_jpeg_decode_features"] = _qm11
@@ -886,24 +821,11 @@ def _qm12_make_jpeg(doc_id: int) -> bytes:
 
 
 def _qm12(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash
-
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "ahash_hex": [
-                        format(average_hash(_qm12_make_jpeg(d)), "016x")
-                        for d in ids
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(run, _PNG_AHASH_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_ahash_row(d, _qm12_make_jpeg(d))],
+        _PNG_AHASH_SCHEMA,
+    )
 
 
 QUERIES["qm12_jpeg_ahash"] = _qm12
@@ -958,29 +880,11 @@ _PALETTE_SCHEMA = StructType(
 
 
 def _qm13(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash, image_features
-
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            blobs = [_qm13_make_png(d) for d in ids]
-            feats = [image_features(bl) for bl in blobs]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                    "ahash_hex": [
-                        format(average_hash(bl), "016x") for bl in blobs
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_palette_row(d, _qm13_make_png(d))],
+        _PALETTE_SCHEMA,
+    )
 
 
 QUERIES["qm13_png_palette_features"] = _qm13
@@ -1036,29 +940,11 @@ def _qm14_make_jpeg(doc_id: int) -> bytes:
 
 
 def _qm14(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash, image_features
-
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            blobs = [_qm14_make_jpeg(d) for d in ids]
-            feats = [image_features(bl) for bl in blobs]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                    "ahash_hex": [
-                        format(average_hash(bl), "016x") for bl in blobs
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_palette_row(d, _qm14_make_jpeg(d))],
+        _PALETTE_SCHEMA,
+    )
 
 
 QUERIES["qm14_jpeg_progressive"] = _qm14
@@ -1128,21 +1014,12 @@ def _qm15(spark: SparkSession, sf: str) -> DataFrame:
         pil, imaging._PIL = imaging._PIL, None
         try:
             for batch in batches:
-                ids = [int(d) for d in batch["doc_id"]]
-                blobs = [_qm15_make_webp(d) for d in ids]
-                feats = [imaging.image_features(bl) for bl in blobs]
                 yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "width": [f[0] for f in feats],
-                        "height": [f[1] for f in feats],
-                        "n_channels": [f[2] for f in feats],
-                        "mean_luma": [f[3] for f in feats],
-                        "ahash_hex": [
-                            format(imaging.average_hash(bl), "016x")
-                            for bl in blobs
-                        ],
-                    }
+                    [
+                        _palette_row(d, _qm15_make_webp(d))
+                        for d in batch["doc_id"].tolist()
+                    ],
+                    columns=_PALETTE_SCHEMA.names,
                 )
         finally:
             imaging._PIL = pil
@@ -1210,26 +1087,13 @@ def _qm16_make_wav(doc_id: int) -> bytes:
 def _qm16(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.audio import audio_features
 
-    docs = load(spark, sf, "documents").select("doc_id")
+    def row(d: int) -> list:
+        feats = audio_features(_qm16_make_wav(d))
+        return [dict(zip(_WAV_SCHEMA.names, (d, *feats)))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            feats = [audio_features(_qm16_make_wav(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "sample_rate": [f[0] for f in feats],
-                    "n_channels": [f[1] for f in feats],
-                    "bits": [f[2] for f in feats],
-                    "n_frames": [f[3] for f in feats],
-                    "duration_ms": [f[4] for f in feats],
-                    "peak": [f[5] for f in feats],
-                    "mean_abs": [f[6] for f in feats],
-                }
-            )
-
-    return docs.mapInPandas(run, _WAV_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"), row, _WAV_SCHEMA
+    )
 
 
 QUERIES["qm16_wav_pcm_features"] = _qm16
@@ -1403,21 +1267,12 @@ def _qm18(spark: SparkSession, sf: str) -> DataFrame:
         pil, imaging._PIL = imaging._PIL, None
         try:
             for batch in batches:
-                ids = [int(d) for d in batch["doc_id"]]
-                blobs = [_qm18_make_bmp(d) for d in ids]
-                feats = [imaging.image_features(bl) for bl in blobs]
                 yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "width": [f[0] for f in feats],
-                        "height": [f[1] for f in feats],
-                        "n_channels": [f[2] for f in feats],
-                        "mean_luma": [f[3] for f in feats],
-                        "ahash_hex": [
-                            format(imaging.average_hash(bl), "016x")
-                            for bl in blobs
-                        ],
-                    }
+                    [
+                        _palette_row(d, _qm18_make_bmp(d))
+                        for d in batch["doc_id"].tolist()
+                    ],
+                    columns=_PALETTE_SCHEMA.names,
                 )
         finally:
             imaging._PIL = pil
@@ -1499,21 +1354,12 @@ def _qm19(spark: SparkSession, sf: str) -> DataFrame:
         pil, imaging._PIL = imaging._PIL, None
         try:
             for batch in batches:
-                ids = [int(d) for d in batch["doc_id"]]
-                blobs = [_qm19_make_tiff(d) for d in ids]
-                feats = [imaging.image_features(bl) for bl in blobs]
                 yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "width": [f[0] for f in feats],
-                        "height": [f[1] for f in feats],
-                        "n_channels": [f[2] for f in feats],
-                        "mean_luma": [f[3] for f in feats],
-                        "ahash_hex": [
-                            format(imaging.average_hash(bl), "016x")
-                            for bl in blobs
-                        ],
-                    }
+                    [
+                        _palette_row(d, _qm19_make_tiff(d))
+                        for d in batch["doc_id"].tolist()
+                    ],
+                    columns=_PALETTE_SCHEMA.names,
                 )
         finally:
             imaging._PIL = pil
@@ -1593,27 +1439,13 @@ def _qm20_make_mp4(doc_id: int) -> bytes:
 
 
 def _qm20(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.video import mp4_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.video import mp4_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [mp4_meta(_qm20_make_mp4(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "brand": [m["brand"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_video": [m["n_video"] for m in metas],
-                    "n_audio": [m["n_audio"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _MP4_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **mp4_meta(_qm20_make_mp4(d))}],
+        _MP4_SCHEMA,
+    )
 
 
 QUERIES["qm20_mp4_meta"] = _qm20
@@ -1686,27 +1518,13 @@ def _qm21_make_mkv(doc_id: int) -> bytes:
 
 
 def _qm21(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.video import video_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.video import video_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [video_meta(_qm21_make_mkv(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "format": [m["format"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_video": [m["n_video"] for m in metas],
-                    "n_audio": [m["n_audio"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _MKV_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **video_meta(_qm21_make_mkv(d))}],
+        _MKV_SCHEMA,
+    )
 
 
 QUERIES["qm21_mkv_meta"] = _qm21
@@ -1774,26 +1592,13 @@ def _qm22_make_audio(doc_id: int) -> bytes:
 
 
 def _qm22(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.audio import audio_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.audio import audio_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [audio_meta(_qm22_make_audio(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "codec": [m["codec"] for m in metas],
-                    "channels": [m["channels"] for m in metas],
-                    "sample_rate": [m["sample_rate"] for m in metas],
-                    "bitrate_kbps": [m["bitrate_kbps"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _AUDIO_META_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **audio_meta(_qm22_make_audio(d))}],
+        _AUDIO_META_SCHEMA,
+    )
 
 
 QUERIES["qm22_audio_meta"] = _qm22
@@ -1892,37 +1697,26 @@ def _qm23_make_blob(doc_id: int) -> bytes:
 
 
 def _qm23(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.audio import audio_meta
+    from pdf_spark.core.imaging import image_meta
+    from pdf_spark.core.video import video_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.audio import audio_meta
-        from pdf_spark.core.imaging import image_meta
-        from pdf_spark.core.video import video_meta
+    def route(d: int) -> list:
+        blob = _qm23_make_blob(d)
+        im = image_meta(blob)
+        if im is not None:
+            return [{"doc_id": d, "modality": "image", "format": im[0]}]
+        au = audio_meta(blob)
+        if au["codec"] != "unknown":
+            return [{"doc_id": d, "modality": "audio", "format": au["codec"]}]
+        vi = video_meta(blob)
+        if vi["format"] != "unknown":
+            return [{"doc_id": d, "modality": "video", "format": vi["format"]}]
+        return [{"doc_id": d, "modality": "unknown", "format": "unknown"}]
 
-        def route(blob: bytes) -> tuple:
-            im = image_meta(blob)
-            if im is not None:
-                return ("image", im[0])
-            au = audio_meta(blob)
-            if au["codec"] != "unknown":
-                return ("audio", au["codec"])
-            vi = video_meta(blob)
-            if vi["format"] != "unknown":
-                return ("video", vi["format"])
-            return ("unknown", "unknown")
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            routed = [route(_qm23_make_blob(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "modality": [r[0] for r in routed],
-                    "format": [r[1] for r in routed],
-                }
-            )
-
-    return docs.mapInPandas(run, _ROUTER_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"), route, _ROUTER_SCHEMA
+    )
 
 
 QUERIES["qm23_media_router"] = _qm23
@@ -1994,37 +1788,13 @@ def _qm24_make_jpeg(doc_id: int) -> bytes:
 
 
 def _qm24(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.imaging import exif_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.imaging import exif_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [exif_meta(_qm24_make_jpeg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_exif": pd.array(
-                        [m["has_exif"] for m in metas], dtype="Int32"
-                    ),
-                    "endian": [m["endian"] for m in metas],
-                    "orientation": pd.array(
-                        [m["orientation"] for m in metas], dtype="Int32"
-                    ),
-                    "make": [m["make"] for m in metas],
-                    "model": [m["model"] for m in metas],
-                    "taken_at": [m["taken_at"] for m in metas],
-                    "pix_x": pd.array(
-                        [m["pix_x"] for m in metas], dtype="Int32"
-                    ),
-                    "pix_y": pd.array(
-                        [m["pix_y"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
-
-    return docs.mapInPandas(run, _EXIF_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **exif_meta(_qm24_make_jpeg(d))}],
+        _EXIF_SCHEMA,
+    )
 
 
 QUERIES["qm24_exif_meta"] = _qm24
@@ -2092,26 +1862,13 @@ def _qm25_make_flac(doc_id: int) -> bytes:
 
 
 def _qm25(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.audio import flac_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.audio import flac_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [flac_meta(_qm25_make_flac(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "channels": [m["channels"] for m in metas],
-                    "sample_rate": [m["sample_rate"] for m in metas],
-                    "bits_per_sample": [m["bits_per_sample"] for m in metas],
-                    "total_samples": [m["total_samples"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _FLAC_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **flac_meta(_qm25_make_flac(d))}],
+        _FLAC_SCHEMA,
+    )
 
 
 QUERIES["qm25_flac_meta"] = _qm25
@@ -2184,26 +1941,13 @@ def _qm26_make_blob(doc_id: int) -> bytes:
 
 
 def _qm26(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.imaging import animation_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.imaging import animation_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [animation_meta(_qm26_make_blob(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "format": [m["format"] for m in metas],
-                    "is_animated": [m["is_animated"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "loop_count": [m["loop_count"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _ANIM_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **animation_meta(_qm26_make_blob(d))}],
+        _ANIM_SCHEMA,
+    )
 
 
 QUERIES["qm26_animation_meta"] = _qm26
@@ -2285,47 +2029,28 @@ def _qm27_make_jpeg(doc_id: int) -> bytes:
 
 
 def _qm27(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.imaging import exif_gps, exif_meta, strip_exif_gps
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.imaging import exif_gps, exif_meta, strip_exif_gps
+    def row(d: int) -> list:
+        blob = _qm27_make_jpeg(d)
+        g = exif_gps(blob)
+        stripped = strip_exif_gps(blob)
+        orientation = exif_meta(blob)["orientation"]
+        kept = exif_meta(stripped)["orientation"] == orientation
+        return [
+            {
+                "doc_id": d,
+                "has_gps": g["has_gps"],
+                "lat_microdeg": g["lat_microdeg"],
+                "lon_microdeg": g["lon_microdeg"],
+                "gps_after_strip": exif_gps(stripped)["has_gps"],
+                "orientation_kept": 1 if kept else 0,
+            }
+        ]
 
-        for batch in batches:
-            rows = []
-            for d in (int(x) for x in batch["doc_id"]):
-                blob = _qm27_make_jpeg(d)
-                g = exif_gps(blob)
-                stripped = strip_exif_gps(blob)
-                kept = (
-                    exif_meta(stripped)["orientation"]
-                    == exif_meta(blob)["orientation"]
-                )
-                rows.append(
-                    (
-                        d,
-                        g["has_gps"],
-                        g["lat_microdeg"],
-                        g["lon_microdeg"],
-                        exif_gps(stripped)["has_gps"],
-                        1 if kept else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r[0] for r in rows],
-                    "has_gps": [r[1] for r in rows],
-                    "lat_microdeg": pd.array(
-                        [r[2] for r in rows], dtype="Int64"
-                    ),
-                    "lon_microdeg": pd.array(
-                        [r[3] for r in rows], dtype="Int64"
-                    ),
-                    "gps_after_strip": [r[4] for r in rows],
-                    "orientation_kept": [r[5] for r in rows],
-                }
-            )
-
-    return docs.mapInPandas(run, _GPS_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"), row, _GPS_SCHEMA
+    )
 
 
 QUERIES["qm27_exif_gps_strip"] = _qm27
@@ -2396,26 +2121,13 @@ def _qm28_make_mp4(doc_id: int) -> bytes:
 
 
 def _qm28(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.video import mp4_sample_table
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.video import mp4_sample_table
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [mp4_sample_table(_qm28_make_mp4(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": [m["n_samples"] for m in metas],
-                    "n_keyframes": [m["n_keyframes"] for m in metas],
-                    "media_duration_ms": [m["media_duration_ms"] for m in metas],
-                    "first_keyframe": [m["first_keyframe"] for m in metas],
-                    "last_keyframe": [m["last_keyframe"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _STBL_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **mp4_sample_table(_qm28_make_mp4(d))}],
+        _STBL_SCHEMA,
+    )
 
 
 QUERIES["qm28_mp4_keyframes"] = _qm28
@@ -2491,25 +2203,13 @@ def _qm29_make_jpeg(doc_id: int) -> bytes:
 
 
 def _qm29(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.imaging import jpeg_xmp_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.imaging import jpeg_xmp_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [jpeg_xmp_meta(_qm29_make_jpeg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_xmp": [m["has_xmp"] for m in metas],
-                    "creator_tool": [m["creator_tool"] for m in metas],
-                    "creator": [m["creator"] for m in metas],
-                    "is_ai_generated": [m["is_ai_generated"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _XMP_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **jpeg_xmp_meta(_qm29_make_jpeg(d))}],
+        _XMP_SCHEMA,
+    )
 
 
 QUERIES["qm29_xmp_ai_provenance"] = _qm29
@@ -2550,26 +2250,13 @@ def _qm30_make_webp(doc_id: int) -> bytes:
 
 
 def _qm30(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.imaging import animation_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.imaging import animation_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [animation_meta(_qm30_make_webp(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "format": [m["format"] for m in metas],
-                    "is_animated": [m["is_animated"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "loop_count": [m["loop_count"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _ANIM_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **animation_meta(_qm30_make_webp(d))}],
+        _ANIM_SCHEMA,
+    )
 
 
 QUERIES["qm30_webp_animation"] = _qm30
@@ -2627,26 +2314,13 @@ def _qm31_make_mp3(doc_id: int) -> bytes:
 
 
 def _qm31(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.audio import id3_tags
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.audio import id3_tags
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [id3_tags(_qm31_make_mp3(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_id3": [m["has_id3"] for m in metas],
-                    "version": [m["version"] for m in metas],
-                    "title": [m["title"] for m in metas],
-                    "artist": [m["artist"] for m in metas],
-                    "year": [m["year"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _ID3_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **id3_tags(_qm31_make_mp3(d))}],
+        _ID3_SCHEMA,
+    )
 
 
 QUERIES["qm31_id3_tags"] = _qm31
@@ -2710,43 +2384,39 @@ def _qm32_make_blob(fam: str, i: int) -> bytes:
 
 
 def _qm32(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.audio import audio_meta
+    from pdf_spark.core.imaging import image_meta
+    from pdf_spark.core.video import video_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.audio import audio_meta
-        from pdf_spark.core.imaging import image_meta
-        from pdf_spark.core.video import video_meta
+    def sniff(blob: bytes) -> str:
+        im = image_meta(blob)
+        if im is not None:
+            return im[0]
+        au = audio_meta(blob)
+        if au["codec"] != "unknown":
+            return au["codec"]
+        vi = video_meta(blob)
+        if vi["format"] != "unknown":
+            return vi["format"]
+        return "bin"
 
-        def sniff(blob: bytes) -> str:
-            im = image_meta(blob)
-            if im is not None:
-                return im[0]
-            au = audio_meta(blob)
-            if au["codec"] != "unknown":
-                return au["codec"]
-            vi = video_meta(blob)
-            if vi["format"] != "unknown":
-                return vi["format"]
-            return "bin"
+    def row(d: int) -> list:
+        declared = _QM32_FAMS[d % 6]
+        # every third doc's bytes are actually a DIFFERENT family
+        actual = _QM32_FAMS[(d + 2) % 6] if d % 3 == 0 else declared
+        sn = sniff(_qm32_make_blob(actual, d))
+        return [
+            {
+                "doc_id": d,
+                "declared": declared,
+                "sniffed": sn,
+                "mismatch": int(sn != declared),
+            }
+        ]
 
-        for batch in batches:
-            rows = []
-            for d in (int(x) for x in batch["doc_id"]):
-                declared = _QM32_FAMS[d % 6]
-                # every third doc's bytes are actually a DIFFERENT family
-                actual = _QM32_FAMS[(d + 2) % 6] if d % 3 == 0 else declared
-                sn = sniff(_qm32_make_blob(actual, d))
-                rows.append((d, declared, sn, int(sn != declared)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r[0] for r in rows],
-                    "declared": [r[1] for r in rows],
-                    "sniffed": [r[2] for r in rows],
-                    "mismatch": [r[3] for r in rows],
-                }
-            )
-
-    return docs.mapInPandas(run, _MISMATCH_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"), row, _MISMATCH_SCHEMA
+    )
 
 
 QUERIES["qm32_mime_mismatch"] = _qm32
@@ -2814,25 +2484,13 @@ def _qm33_make_png(doc_id: int) -> bytes:
 
 
 def _qm33(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.imaging import png_text_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.imaging import png_text_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [png_text_meta(_qm33_make_png(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_text": [m["has_text"] for m in metas],
-                    "software": [m["software"] for m in metas],
-                    "n_text_chunks": [m["n_text_chunks"] for m in metas],
-                    "is_ai_suspect": [m["is_ai_suspect"] for m in metas],
-                }
-            )
-
-    return docs.mapInPandas(run, _PNGTEXT_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **png_text_meta(_qm33_make_png(d))}],
+        _PNGTEXT_SCHEMA,
+    )
 
 
 QUERIES["qm33_png_text_provenance"] = _qm33
@@ -2905,37 +2563,13 @@ def _qm34_make_svg(doc_id: int) -> bytes:
 
 
 def _qm34(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.imaging import svg_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.imaging import svg_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [svg_meta(_qm34_make_svg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_svg": [m["is_svg"] for m in metas],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int64"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int64"
-                    ),
-                    "has_script": pd.array(
-                        [m["has_script"] for m in metas], dtype="Int32"
-                    ),
-                    "n_images": pd.array(
-                        [m["n_images"] for m in metas], dtype="Int64"
-                    ),
-                    "n_data_uri": pd.array(
-                        [m["n_data_uri"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
-
-    return docs.mapInPandas(run, _SVG_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **svg_meta(_qm34_make_svg(d))}],
+        _SVG_SCHEMA,
+    )
 
 
 QUERIES["qm34_svg_meta"] = _qm34
@@ -3004,38 +2638,19 @@ def _qm35_make_blob(doc_id: int) -> bytes:
 
 
 def _qm35(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.video import heif_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.video import heif_meta
+    def row(d: int) -> list:
+        try:
+            m = heif_meta(_qm35_make_blob(d))
+        except ValueError:
+            return [{**dict.fromkeys(_HEIF_SCHEMA.names), "doc_id": d,
+                     "is_heif": 0}]
+        return [{**m, "doc_id": d, "is_heif": 1}]
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            rows = []
-            for d in ids:
-                try:
-                    m = heif_meta(_qm35_make_blob(d))
-                    rows.append(
-                        (1, m["brand"], m["width"], m["height"],
-                         m["n_items"], m["is_animated"])
-                    )
-                except ValueError:
-                    rows.append((0, None, None, None, None, None))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_heif": [r[0] for r in rows],
-                    "brand": [r[1] for r in rows],
-                    "width": pd.array([r[2] for r in rows], dtype="Int64"),
-                    "height": pd.array([r[3] for r in rows], dtype="Int64"),
-                    "n_items": pd.array([r[4] for r in rows], dtype="Int64"),
-                    "is_animated": pd.array(
-                        [r[5] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    return docs.mapInPandas(run, _HEIF_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"), row, _HEIF_SCHEMA
+    )
 
 
 QUERIES["qm35_heif_meta"] = _qm35
@@ -3132,37 +2747,13 @@ def _qm36_make_blob(doc_id: int) -> bytes:
 
 
 def _qm36(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load(spark, sf, "documents").select("doc_id")
+    from pdf_spark.core.subtitles import subtitle_meta
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.subtitles import subtitle_meta
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [subtitle_meta(_qm36_make_blob(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "fmt": [m["fmt"] for m in metas],
-                    "n_cues": pd.array(
-                        [m["n_cues"] for m in metas], dtype="Int64"
-                    ),
-                    "speech_ms": pd.array(
-                        [m["speech_ms"] for m in metas], dtype="Int64"
-                    ),
-                    "span_ms": pd.array(
-                        [m["span_ms"] for m in metas], dtype="Int64"
-                    ),
-                    "n_chars": pd.array(
-                        [m["n_chars"] for m in metas], dtype="Int64"
-                    ),
-                    "density_milli": pd.array(
-                        [m["density_milli"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
-
-    return docs.mapInPandas(run, _SUB_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [{"doc_id": d, **subtitle_meta(_qm36_make_blob(d))}],
+        _SUB_SCHEMA,
+    )
 
 
 QUERIES["qm36_subtitle_cues"] = _qm36

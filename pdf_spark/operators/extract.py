@@ -164,72 +164,31 @@ def extract_spans(pages: DataFrame, max_bytes: int = DEFAULT_MAX_BYTES) -> DataF
 
     def run(batches):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        out_schema = pa.schema(
-            [
-                pa.field("url", pa.string()),
-                pa.field("page", pa.int32()),
-                pa.field("col", pa.int32()),
-                pa.field("y", pa.float64()),
-                pa.field("x", pa.float64()),
-                pa.field("glyph_order", pa.int64()),
-                pa.field("text", pa.string()),
-                pa.field("font", pa.string()),
-                pa.field("size", pa.float64()),
-                pa.field("status", pa.string()),
-                pa.field("error_code", pa.string()),
-            ]
-        )
+        out_schema = to_arrow_schema(SPANS_SCHEMA)
         for batch in batches:
             names = batch.schema.names
-            rows: dict[str, list] = {f.name: [] for f in SPANS_SCHEMA.fields}
+            rows: list[tuple] = []
             for url, data in zip(
                 batch.column(names.index("url")).to_pylist(),
                 batch.column(names.index("html")),
             ):
                 r = extract_document(data.as_py(), max_bytes)
-                if not r.ok:
-                    rows["url"].append(url)
-                    rows["page"].append(-1)
-                    rows["col"].append(0)
-                    rows["y"].append(0.0)
-                    rows["x"].append(0.0)
-                    rows["glyph_order"].append(0)
-                    rows["text"].append(None)
-                    rows["font"].append(None)
-                    rows["size"].append(0.0)
-                    rows["status"].append("error")
-                    rows["error_code"].append(r.error_code)
-                    continue
-                for s in r.spans:
-                    rows["url"].append(url)
-                    rows["page"].append(s.page)
-                    rows["col"].append(s.col)
-                    rows["y"].append(s.y)
-                    rows["x"].append(s.x)
-                    rows["glyph_order"].append(s.glyph_order)
-                    rows["text"].append(s.text)
-                    rows["font"].append(s.font)
-                    rows["size"].append(s.size)
-                    rows["status"].append("ok")
-                    rows["error_code"].append("")
-                if not r.spans:
-                    rows["url"].append(url)
-                    rows["page"].append(-1)
-                    rows["col"].append(0)
-                    rows["y"].append(0.0)
-                    rows["x"].append(0.0)
-                    rows["glyph_order"].append(0)
-                    rows["text"].append("")
-                    rows["font"].append(None)
-                    rows["size"].append(0.0)
-                    rows["status"].append("ok")
-                    rows["error_code"].append("")
+                spans = r.spans if r.ok else []
+                rows.extend(
+                    (url, s.page, s.col, s.y, s.x, s.glyph_order, s.text,
+                     s.font, s.size, "ok", "")
+                    for s in spans
+                )
+                if not spans:  # the page -1 marker: error or span-less doc
+                    rows.append(
+                        (url, -1, 0, 0.0, 0.0, 0, "" if r.ok else None, None,
+                         0.0, r.status, r.error_code)
+                    )
+            columns = list(zip(*rows)) or [()] * len(out_schema)
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(rows[f.name], out_schema.field(i).type)
-                    for i, f in enumerate(SPANS_SCHEMA.fields)
-                ],
+                [pa.array(c, f.type) for c, f in zip(columns, out_schema)],
                 schema=out_schema,
             )
 

@@ -84,21 +84,14 @@ def committed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 
 def remaining_pages(pages: DataFrame, spark: SparkSession, out_dir: str) -> DataFrame:
-    """Anti-join input against committed output -> resume from checkpoint."""
+    """Anti-join input against committed output -> resume from checkpoint.
+    The join strategy is the planner's: the url-only committed side is
+    broadcast while its size estimate is under the session's
+    ``autoBroadcastJoinThreshold`` and shuffled (AQE) above it."""
     done = committed_urls(spark, out_dir)
     if done is None:
         return pages
-    return pages.join(F.broadcast(done) if _small(done) else done, "url", "left_anti")
-
-
-def _small(df: DataFrame, limit: int = 5_000_000) -> bool:
-    # broadcast the committed-url set only when plausibly small; at real
-    # scale the committed set is huge and a shuffled anti-join (AQE-planned)
-    # is correct.
-    try:
-        return df.limit(limit + 1).count() <= limit
-    except Exception:
-        return False
+    return pages.join(done, "url", "left_anti")
 
 
 def new_run_id() -> str:

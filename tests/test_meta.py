@@ -801,6 +801,22 @@ def test_internal_links_legacy_dests_dict():
     assert (0, "GoTo", "sec.two", 1, "Fit") in got
 
 
+def test_internal_links_bytearray_name_tree_keys():
+    """A name-tree key may reach ``remember`` as a bytearray; it is
+    normalised before the lookup instead of dropping the rest of the
+    leaf's named destinations."""
+    from pdf_spark.core.meta import extract_internal_links
+
+    class BytearrayStrings(Resolver):
+        def resolve(self, obj):
+            out = super().resolve(obj)
+            return bytearray(out) if isinstance(out, bytes) else out
+
+    got = extract_internal_links(BytearrayStrings(_doc_with_internal_links()))
+    assert got == extract_internal_links(Resolver(_doc_with_internal_links()))
+    assert (0, "GoTo", "sec.two", 1, "Fit") in got
+
+
 def test_internal_links_never_raises_on_garbage():
     from pdf_spark.core.meta import extract_internal_links
     from pdf_spark.gen.pdfgen import generate_doc

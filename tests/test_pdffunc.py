@@ -93,6 +93,28 @@ class TestCalculator:
         with pytest.raises(PdfError):
             run_ps("{ true 1 and }")      # mixed and
 
+    @pytest.mark.parametrize(
+        "src",
+        [
+            "{ -2 0.5 exp }",   # complex result
+            "{ 0 -1 exp }",     # ZeroDivisionError
+            "{ 10 400 exp }",   # OverflowError
+        ],
+    )
+    def test_exp_domain_is_pdf_error(self, src):
+        with pytest.raises(PdfError):
+            run_ps(src)
+
+    def test_bitshift_bounded(self):
+        assert run_ps("{ 1 64 bitshift }") == [1 << 64]
+        assert run_ps("{ 1 -64 bitshift }") == [0]
+        with pytest.raises(PdfError):
+            run_ps("{ 1 65 bitshift }")
+        with pytest.raises(PdfError):
+            run_ps("{ 1 1000000000 bitshift }")
+        with pytest.raises(PdfError):
+            run_ps("{ 1 -65 bitshift }")
+
 
 class TestType2:
     def test_linear(self):
@@ -120,6 +142,23 @@ class TestType2:
             encode_function({"FunctionType": 2, "Domain": [0, 1], "N": 1})
         )
         assert eval_function(fn, [0.75]) == [0.75]  # C0=[0], C1=[1]
+
+    @pytest.mark.parametrize(
+        "domain,n,x",
+        [
+            ([0, 1], -1, 0.0),     # 0 ** -1: ZeroDivisionError
+            ([-1, 1], 0.5, -0.5),  # negative ** fractional: complex
+        ],
+    )
+    def test_exponent_domain_is_pdf_error(self, domain, n, x):
+        for extra in ({}, {"Range": [0, 1]}):
+            fn = parse_function_bytes(
+                encode_function(
+                    {"FunctionType": 2, "Domain": domain, "N": n, **extra}
+                )
+            )
+            with pytest.raises(PdfError):
+                eval_function(fn, [x])
 
 
 class TestType3:
