@@ -120,18 +120,29 @@ def skip_inline_image(data: bytes, pos: int) -> int:
         if m.lastgroup == "op" and m.group("op") == b"ID":
             break
         # any other token is part of the image dict; keep scanning
-    p = pos + 1  # consume the single post-ID whitespace byte
+    # pos + 1: consume the single post-ID whitespace byte
+    j = find_standalone_ei(data, pos + 1)
+    if j < 0:
+        raise PdfError(INVALID_OBJECT, "inline image: no EI terminator")
+    return j + 2
+
+
+def find_standalone_ei(data: bytes, start: int) -> int:
+    """Offset of the first ``EI`` at or after ``start`` that is a standalone
+    token (whitespace or start of data before; whitespace, a delimiter or
+    EOF after), so image bytes holding the pair ``EI`` cannot end an
+    inline image early; -1 when there is none."""
     n = len(data)
     while True:
-        j = data.find(b"EI", p)
+        j = data.find(b"EI", start)
         if j < 0:
-            raise PdfError(INVALID_OBJECT, "inline image: no EI terminator")
+            return -1
         nxt = data[j + 2] if j + 2 < n else None
         if (j == 0 or data[j - 1] in _WS_ONLY) and (
             nxt is None or nxt in _WS_ONLY or nxt in _DELIM_SET
         ):
-            return j + 2
-        p = j + 1
+            return j
+        start = j + 1
 
 # one alternation, ordered: number, name, simple string (no escapes/
 # nesting), hex string, array brackets, quote singletons, operator run.
@@ -188,10 +199,6 @@ _OP_STR = {s.encode("ascii"): s for s in OPERATORS}
 _WS_ONLY = frozenset(b"\x00\t\n\x0c\r ")
 
 
-def _hex_to_bytes(body: bytes) -> bytes:
-    return hex_body_to_bytes(body)
-
-
 def parse_content_stream(data: bytes) -> List[Op]:
     """Tokenize one decoded content stream into ``[(operator, operands)]``."""
     ops: List[Op] = []
@@ -244,7 +251,7 @@ def parse_content_stream(data: bytes) -> List[Op]:
             continue
         if g == "hstr":
             try:
-                cur.append(_hex_to_bytes(m.group("hstr")))
+                cur.append(hex_body_to_bytes(m.group("hstr")))
             except (ValueError, UnicodeDecodeError) as exc:  # pragma: no cover
                 raise PdfError(INVALID_OBJECT, f"bad hex string: {exc}") from None
             continue

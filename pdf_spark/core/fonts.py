@@ -27,7 +27,8 @@ out of scope, SURVEY.md §7.4):
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional
+from hashlib import md5 as _md5
+from typing import Optional
 
 from pdf_spark.core.cmap import CMap, get_predefined_cmap, parse_cmap
 from pdf_spark.core.encodings import (
@@ -51,62 +52,36 @@ DEFAULT_WIDTH = 500.0  # flat fallback (divergence, see module docstring)
 # the bytes — not the bytes themselves — so the entry-count bound actually
 # bounds memory (256 distinct 10 MB font programs must not pin 2.5 GB of
 # key material per executor).
-_CMAP_CACHE: dict[bytes, object] = {}
-_SFNT_CACHE: dict[bytes, object] = {}
 _ASSET_CACHE_MAX = 256
-
-
-from hashlib import md5 as _md5
 
 
 def _digest(data: bytes) -> bytes:
     return _md5(data).digest()
 
 
-def _parse_cmap_cached(data: bytes):
-    key = _digest(data)
-    cm = _CMAP_CACHE.get(key)
-    if cm is None:
-        cm = parse_cmap(data)
-        if len(_CMAP_CACHE) < _ASSET_CACHE_MAX:
-            _CMAP_CACHE[key] = cm
-    return cm
+def _memo(parse):
+    """``parse`` memoised on the digest of its bytes argument, in its own
+    executor-lifetime dict of at most ``_ASSET_CACHE_MAX`` entries."""
+    cache: dict[bytes, object] = {}
+
+    def cached(data: bytes):
+        key = _digest(data)
+        if key in cache:
+            return cache[key]
+        out = parse(data)
+        if len(cache) < _ASSET_CACHE_MAX:
+            cache[key] = out
+        return out
+
+    return cached
 
 
-def _parse_sfnt_cached(data: bytes):
-    key = _digest(data)
-    if key in _SFNT_CACHE:
-        return _SFNT_CACHE[key]
-    out = parse_sfnt_cmaps(data)
-    if len(_SFNT_CACHE) < _ASSET_CACHE_MAX:
-        _SFNT_CACHE[key] = out
-    return out
+_parse_cmap_cached = _memo(parse_cmap)
+_parse_sfnt_cached = _memo(parse_sfnt_cmaps)
+_parse_cff_cached = _memo(parse_cff_names)
+_parse_type1_cached = _memo(parse_type1_encoding)
 
 
-_CFF_CACHE: dict[bytes, object] = {}
-
-
-def _parse_cff_cached(data: bytes):
-    key = _digest(data)
-    if key in _CFF_CACHE:
-        return _CFF_CACHE[key]
-    out = parse_cff_names(data)
-    if len(_CFF_CACHE) < _ASSET_CACHE_MAX:
-        _CFF_CACHE[key] = out
-    return out
-
-
-_T1_CACHE: dict[bytes, object] = {}
-
-
-def _parse_type1_cached(data: bytes):
-    key = _digest(data)
-    if key in _T1_CACHE:
-        return _T1_CACHE[key]
-    out = parse_type1_encoding(data)
-    if len(_T1_CACHE) < _ASSET_CACHE_MAX:
-        _T1_CACHE[key] = out
-    return out
 SIMPLE_SUBTYPES = ("Type1", "TrueType", "MMType1", "Type3")
 
 # character collections whose CIDs 1..95 are the printable ASCII set in
@@ -251,9 +226,6 @@ class Font:
                 out.append(lead)
                 off += 1
         return out
-
-    def iter_codes(self, data: bytes) -> Iterator[int]:
-        yield from self.split_codes(data)
 
     # -- decode (render/font.c:89-248 priority, extraction-shaped) --
 
@@ -400,73 +372,45 @@ def _uniform_width(f: Font) -> Optional[float]:
     return fallback
 
 
-def _parse_cid_widths(w_array: list, resolver) -> dict[int, float]:
-    """The ``W`` array's two forms (font_widths.c:15-164):
-    ``c [w1 w2 ...]`` and ``c_first c_last w``."""
+def _parse_cid_widths(array: list, resolver, stride: int = 1) -> dict[int, float]:
+    """The ``W`` array (stride 1, font_widths.c:15-164) or the ``W2`` array
+    (stride 3, §9.7.4.3) in its two forms: ``c [m1 m2 ...]`` with
+    ``stride`` numbers per consecutive CID, and ``c_first c_last m ...``
+    with ``stride`` numbers for the whole run. Only the first number of a
+    group is kept: the width, or W2's vertical displacement w1 — its v
+    position vector shifts the glyph origin, not the span's deterministic
+    order."""
+    name = "W" if stride == 1 else "W2"
     out: dict[int, float] = {}
     i = 0
-    n = len(w_array)
+    n = len(array)
     while i < n:
-        first = resolver.resolve(w_array[i])
+        first = resolver.resolve(array[i])
         if not isinstance(first, (int, float)):
-            raise PdfError(INCORRECT_TYPE, "W array: expected number")
+            raise PdfError(INCORRECT_TYPE, f"{name} array: expected number")
         if i + 1 < n:
-            nxt = resolver.resolve(w_array[i + 1])
+            nxt = resolver.resolve(array[i + 1])
             if isinstance(nxt, list):
-                for k, w in enumerate(nxt):
-                    out[int(first) + k] = float(resolver.resolve(w))
+                for k in range(0, len(nxt) - len(nxt) % stride, stride):
+                    out[int(first) + k // stride] = float(resolver.resolve(nxt[k]))
                 i += 2
                 continue
-            if i + 2 < n:
+            if i + 1 + stride < n:
                 last = nxt
-                w = float(resolver.resolve(w_array[i + 2]))
+                w = float(resolver.resolve(array[i + 2]))
                 # CID codes are at most 2-byte in the decode path, so a run
                 # past 0xFFFF is garbage; an adversarial `0 2147483647 500`
                 # would otherwise materialize a multi-GB dict and OOM the
                 # executor instead of becoming an error row
                 if int(last) - int(first) > 0x10000:
                     raise PdfError(
-                        INCORRECT_TYPE, "W array: range exceeds CID space"
+                        INCORRECT_TYPE, f"{name} array: range exceeds CID space"
                     )
                 for c in range(int(first), int(last) + 1):
                     out[c] = w
-                i += 3
+                i += 2 + stride
                 continue
-        raise PdfError(INCORRECT_TYPE, "W array: truncated run")
-    return out
-
-
-def _parse_cid_vwidths(w2_array: list, resolver) -> dict[int, float]:
-    """The ``W2`` array's two forms (§9.7.4.3): ``c [w1 v1x v1y ...]``
-    (triplets per consecutive CID) and ``c_first c_last w1 v1x v1y``.
-    Extraction keeps only the vertical displacement w1 — the v position
-    vector shifts the glyph origin, not the span's deterministic order."""
-    out: dict[int, float] = {}
-    i = 0
-    n = len(w2_array)
-    while i < n:
-        first = resolver.resolve(w2_array[i])
-        if not isinstance(first, (int, float)):
-            raise PdfError(INCORRECT_TYPE, "W2 array: expected number")
-        if i + 1 < n:
-            nxt = resolver.resolve(w2_array[i + 1])
-            if isinstance(nxt, list):
-                for k in range(0, len(nxt) - (len(nxt) % 3), 3):
-                    out[int(first) + k // 3] = float(resolver.resolve(nxt[k]))
-                i += 2
-                continue
-            if i + 4 < n:
-                last = nxt
-                w1 = float(resolver.resolve(w2_array[i + 2]))
-                if int(last) - int(first) > 0x10000:
-                    raise PdfError(
-                        INCORRECT_TYPE, "W2 array: range exceeds CID space"
-                    )
-                for c in range(int(first), int(last) + 1):
-                    out[c] = w1
-                i += 5
-                continue
-        raise PdfError(INCORRECT_TYPE, "W2 array: truncated run")
+        raise PdfError(INCORRECT_TYPE, f"{name} array: truncated run")
     return out
 
 
@@ -678,7 +622,7 @@ def _load_font_uncached(font_obj, resolver) -> Font:
                 f.w1_default = float(w1)
         w2 = resolver.resolve(cid_font.get("W2"))
         if isinstance(w2, list):
-            f.cid_vwidths = _parse_cid_vwidths(w2, resolver)
+            f.cid_vwidths = _parse_cid_widths(w2, resolver, 3)
         w = resolver.resolve(cid_font.get("W"))
         if isinstance(w, list):
             f.cid_widths = _parse_cid_widths(w, resolver)

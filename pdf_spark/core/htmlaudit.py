@@ -1,19 +1,12 @@
-"""HTML compliance/cloaking audits — split out of ``core/htmltext.py``.
+"""HTML audits: AI-training opt-out, cloaking, soft redirects, charset,
+hreflang, SPA shells, data: URIs, srcset, publication dates, third-party
+resources, language channels and paywalls.
 
-These audits (AI-training opt-out per robots-meta/TDMRep, hidden-content
-cloaking detection) were originally appended to ``core/htmltext.py``
-(commits for qx40/E158 and qx42/E171). They are READ-ONLY consumers of
-the HTML tokenizer and are never invoked by the fused extraction path —
-but ``htmltext.py`` IS in the fused module set that
-``scripts/fused_manifest.py`` hashes to tie BENCH.md scaling rows to the
-measured code, so audit growth there silently drifted the manifest away
-from the frozen ``fused_sha`` the north-rule PASS row cites. Moving them
-here restores ``htmltext.py`` byte-identical to the frozen state and
-keeps future audit work off the measured path.
-
-Shares the main tokenizer (``_TOKEN_RE``/``_parse_attrs``/``_RAWTEXT``)
-so a <script> body can never fake a tag — the rawtext-decoy guarantee
-the unit tests pin.
+Each audit is a pure function of the payload bytes, read by the query
+matrix and never by the fused extraction path. The tag-level audits share
+``HtmlTokens`` and ``scan_tags`` with ``core/htmltext.py``, so a
+``<script>`` body can never fake a tag — the raw-text-decoy guarantee the
+unit tests pin.
 """
 
 from __future__ import annotations
@@ -25,10 +18,11 @@ from pdf_spark.core.htmltext import (  # noqa: WPS450 (shared tokenizer)
     _HIDDEN_TAGS,
     _MAX_STACK,
     _RAWTEXT,
-    _TOKEN_RE,
     _VOID,
+    HtmlTokens,
     _parse_attrs,
     decode_html,
+    scan_tags,
     unescape,
 )
 
@@ -43,32 +37,6 @@ from pdf_spark.core.htmltext import (  # noqa: WPS450 (shared tokenizer)
 # the most restrictive combination wins, exactly like robots-meta.
 
 
-def _scan_meta_attrs(html_text: str):
-    """Yield attr dicts of every <meta> tag, rawtext-safe (shares the
-    main tokenizer, so a <script> body can never fake a tag)."""
-    pos, n = 0, len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
-        start_tag = m.group(2)
-        if start_tag is None:
-            continue
-        low = start_tag.lower()
-        if low == "meta":
-            yield _parse_attrs(m.group(3))
-        elif low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
-
-
 def ai_optout(data: bytes, headers: bytes | str | None = None) -> dict:
     """``{noai, noimageai, tdm_reservation, tdm_policy, train_allowed}``
     from an HTML payload plus an optional raw HTTP header block.
@@ -79,7 +47,7 @@ def ai_optout(data: bytes, headers: bytes | str | None = None) -> dict:
     tokens: set = set()
     tdm_res = None
     tdm_policy = None
-    for attrs in _scan_meta_attrs(decode_html(data)):
+    for attrs in scan_tags(decode_html(data), "meta"):
         name = attrs.get("name", attrs.get("property", "")).lower()
         content = attrs.get("content", "").strip()
         if name == "robots" and content:
@@ -183,14 +151,8 @@ def hidden_audit(data: bytes) -> dict:
             return h, c
         return False, False
 
-    pos = 0
-    n = len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover — the regex is total
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         end_tag, start_tag, attrs = m.group(1, 2, 3)
         if start_tag is not None:
             tag = start_tag.lower()
@@ -198,13 +160,7 @@ def hidden_audit(data: bytes) -> dict:
             if tag in _VOID or self_closing:
                 continue
             if tag in _RAWTEXT:
-                close = re.compile(r"</\s*%s[\s>]" % re.escape(tag), re.I)
-                cm = close.search(html_text, pos)
-                if cm is None:
-                    pos = n
-                else:
-                    gt = html_text.find(">", cm.start())
-                    pos = n if gt == -1 else gt + 1
+                toks.skip_raw(tag)
                 continue
             closes = _AUTOCLOSE.get(tag)
             if closes:
@@ -271,7 +227,7 @@ def soft_redirects(data: bytes) -> dict:
     html_text = decode_html(data)
     delay = None
     target_host = None
-    for attrs in _scan_meta_attrs(html_text):
+    for attrs in scan_tags(html_text, "meta"):
         if attrs.get("http-equiv", "").strip().lower() != "refresh":
             continue
         m = _REFRESH_RE.match(attrs.get("content", ""))
@@ -374,33 +330,6 @@ def charset_detect(data: bytes) -> dict:
     }
 
 
-def _scan_tag_attrs(html_text: str, want: str):
-    """Yield attr dicts of every ``<want>`` start tag, rawtext-safe
-    (same tokenizer walk as :func:`_scan_meta_attrs`, so link tags
-    inside <script>/<style> bodies can never count)."""
-    pos, n = 0, len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
-        start_tag = m.group(2)
-        if start_tag is None:
-            continue
-        low = start_tag.lower()
-        if low == want:
-            yield _parse_attrs(m.group(3))
-        elif low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
-
-
 def hreflang_audit(data: bytes) -> dict:
     """Multilingual-alternate audit — the ``<link rel="alternate"
     hreflang>`` cluster declarations (Google's hreflang convention,
@@ -427,7 +356,7 @@ def hreflang_audit(data: bytes) -> dict:
     n_alt = 0
     langs = set()
     has_xdefault = 0
-    for attrs in _scan_tag_attrs(html_text, "link"):
+    for attrs in scan_tags(html_text, "link"):
         rel = attrs.get("rel", "").strip().lower()
         hl = attrs.get("hreflang", "").strip().lower()
         if rel != "alternate" or not hl:
@@ -467,18 +396,13 @@ def spa_shell_audit(data: bytes) -> dict:
     send-to-renderer rule.
     """
     html_text = decode_html(data)
-    pos, n = 0, len(html_text)
     text_chars = script_bytes = n_scripts = 0
     has_empty_root = has_noscript = 0
     root_depth = None  # depth inside a root/app container with no text yet
     root_text = 0
     depth = 0
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         end_tag, start_tag, attrs = m.group(1), m.group(2), m.group(3)
         if start_tag is None and end_tag is None:
             tok = m.group(0)
@@ -501,17 +425,10 @@ def spa_shell_audit(data: bytes) -> dict:
         if low in _RAWTEXT:
             if low == "noscript":
                 has_noscript = 1
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            body_end = cm.start() if cm else n
+            body = toks.skip_raw(low)
             if low == "script":
                 n_scripts += 1
-                script_bytes += body_end - pos
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
+                script_bytes += len(body)
             continue
         if low in _VOID:
             continue
@@ -562,25 +479,14 @@ def data_uri_inventory(data: bytes) -> dict:
     html_text = decode_html(data)
     n_uris = n_base64 = n_images = 0
     total = mx = 0
-    pos, n = 0, len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         start_tag = m.group(2)
         if start_tag is None:
             continue
         low = start_tag.lower()
         if low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
+            toks.skip_raw(low)
             continue
         attrs = m.group(3) or ""
         for dm in _DATA_URI_RE.finditer(attrs):
@@ -635,34 +541,11 @@ def srcset_audit(data: bytes) -> dict:
     srcset rather than src — the fraction a src-only harvester gets
     wrong.
     """
-    html_text = decode_html(data)
     n_images = n_with = n_cand = 0
     max_width = 0
     n_density_only = n_best = 0
-    pos, n = 0, len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
-        start_tag = m.group(2)
-        if start_tag is None:
-            continue
-        low = start_tag.lower()
-        if low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
-            continue
-        if low != "img":
-            continue
+    for a in scan_tags(decode_html(data), "img"):
         n_images += 1
-        a = _parse_attrs(m.group(3) or "")
         srcset = a.get("srcset", "").strip()
         if not srcset:
             continue
@@ -722,7 +605,7 @@ def pubdate_election(data: bytes, url: str = "") -> dict:
     """
     html_text = decode_html(data)
     date_meta = date_time = None
-    for attrs in _scan_meta_attrs(html_text):
+    for attrs in scan_tags(html_text, "meta"):
         prop = attrs.get("property", attrs.get("name", "")).lower()
         if prop == "article:published_time" and date_meta is None:
             m = _TIME_DT_RE.match(attrs.get("content", "").strip())
@@ -730,7 +613,7 @@ def pubdate_election(data: bytes, url: str = "") -> dict:
                 y, mo, dy = int(m.group(1)), int(m.group(2)), int(m.group(3))
                 if 1 <= mo <= 12 and 1 <= dy <= 31:
                     date_meta = y * 10000 + mo * 100 + dy
-    for tm in _scan_tag_attrs(html_text, "time"):
+    for tm in scan_tags(html_text, "time"):
         if date_time is not None:
             break
         m = _TIME_DT_RE.match(tm.get("datetime", "").strip())
@@ -790,25 +673,14 @@ def third_party_audit(data: bytes, page_url: str = "") -> dict:
     page_host = m.group(1).split("@")[-1].split(":")[0] if m else ""
     n_res = n_tp = n_iframes = 0
     hosts = set()
-    pos, n = 0, len(html_text)
-    while pos < n:
-        tk = _TOKEN_RE.match(html_text, pos)
-        if tk is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = tk.end()
+    toks = HtmlTokens(html_text)
+    for tk in toks:
         start_tag = tk.group(2)
         if start_tag is None:
             continue
         low = start_tag.lower()
         if low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
+            toks.skip_raw(low)
             if low != "script":
                 continue
             a = _parse_attrs(tk.group(3) or "")

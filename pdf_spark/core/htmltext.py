@@ -14,8 +14,9 @@ function of the payload bytes with the same contract as the PDF core
 3. **Tokenize** — a single linear regex scanner over the decoded text:
    comments, CDATA, declarations, end tags, start tags (quoted attributes
    may contain ``>``), text. Raw-text elements (``script``/``style``/
-   ``template``/``textarea``/``noscript``) are skipped to their matching
-   close tag so their bodies can never leak into text.
+   ``template``/``textarea``/``noscript``/``xmp``) are skipped to their
+   matching close tag so their bodies can never leak into text. Every
+   scanner here and in ``core/htmlaudit.py`` walks one ``HtmlTokens``.
 4. **Segment** — text accumulates into *blocks*; any block-level tag
    boundary flushes the current block. An element stack (depth-capped,
    with the HTML5 implied-end-tag rules for ``p``/``li``/``td``/…)
@@ -142,6 +143,45 @@ _TOKEN_RE = re.compile(
 
 # Elements whose raw bodies may contain '<' and must be skipped wholesale.
 _RAWTEXT = {"script", "style", "template", "textarea", "noscript", "xmp"}
+_RAW_CLOSE = {t: re.compile(r"</\s*%s[\s>]" % t, re.I) for t in _RAWTEXT}
+
+
+class HtmlTokens:
+    """The one token walk every HTML scanner shares.
+
+    Iterating yields each ``_TOKEN_RE`` match in document order (group 1:
+    end-tag name, 2: start-tag name, 3: start-tag attribute text; neither
+    for text, comments, declarations and stray ``<``). After a raw-text
+    start tag the caller calls :meth:`skip_raw` so the element's body — a
+    ``<script>`` string, say — can never fake a tag."""
+
+    __slots__ = ("text", "pos")
+
+    def __init__(self, text: str):
+        self.text = text
+        self.pos = 0
+
+    def __iter__(self):
+        text = self.text
+        n = len(text)
+        match = _TOKEN_RE.match  # total: every position matches one arm
+        while self.pos < n:
+            m = match(text, self.pos)
+            self.pos = m.end()
+            yield m
+
+    def skip_raw(self, tag: str) -> str:
+        """Consume the body of raw-text element ``tag`` (lowercase) and its
+        close tag, or run to EOF when unclosed; return the body."""
+        text = self.text
+        start = self.pos
+        cm = _RAW_CLOSE[tag].search(text, start)
+        if cm is None:
+            self.pos = len(text)
+            return text[start:]
+        gt = text.find(">", cm.start())
+        self.pos = len(text) if gt == -1 else gt + 1
+        return text[start:cm.start()]
 
 # Void elements: never pushed on the stack.
 _VOID = {
@@ -273,14 +313,8 @@ def segment_blocks(html_text: str) -> list[HtmlBlock]:
             return h, b, m
         return False, False, False
 
-    pos = 0
-    n = len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover — the regex is total
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         end_tag, start_tag, attrs = m.group(1, 2, 3)
         if start_tag is not None:
             tag = start_tag.lower()
@@ -294,13 +328,7 @@ def segment_blocks(html_text: str) -> list[HtmlBlock]:
                 continue
             if tag in _RAWTEXT:
                 # skip the raw body to the matching close tag (or EOF)
-                close = re.compile(r"</\s*%s[\s>]" % re.escape(tag), re.I)
-                cm = close.search(html_text, pos)
-                if cm is None:
-                    pos = n
-                else:
-                    gt = html_text.find(">", cm.start())
-                    pos = n if gt == -1 else gt + 1
+                toks.skip_raw(tag)
                 continue
             closes = _AUTOCLOSE.get(tag)
             if closes:
@@ -478,36 +506,7 @@ def extract_links(data: bytes) -> list:
     A second linear scan, independent of the main-content pass — link
     extraction wants EVERY anchor (nav and footer links are exactly what a
     crawl frontier needs), not just content-block ones."""
-    html_text = decode_html(data)
-    out = []
-    pos = 0
-    n = len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
-        tag = m.group(2)
-        if tag is None:
-            continue
-        low = tag.lower()
-        if low == "a":
-            hm = _HREF_RE.search(m.group(3))
-            if hm:
-                href = hm.group(2) or hm.group(3) or hm.group(4) or ""
-                href = unescape(href).strip()
-                if href:
-                    out.append(href)
-        elif low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
-    return out
+    return [h for h, _ in extract_links_with_text(data)]
 
 
 def extract_tables(data: bytes) -> list:
@@ -520,8 +519,6 @@ def extract_tables(data: bytes) -> list:
     whitespace-normalised like content blocks."""
     html_text = decode_html(data)
     out = []
-    pos = 0
-    n = len(html_text)
     table_stack: list[int] = []  # table ids, innermost last
     next_table = 0
     row_of: dict[int, int] = {}
@@ -538,12 +535,8 @@ def extract_tables(data: bytes) -> list:
         cell_parts = []
         in_cell = False
 
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         end_tag, start_tag = m.group(1), m.group(2)
         if start_tag is not None:
             low = start_tag.lower()
@@ -566,13 +559,7 @@ def extract_tables(data: bytes) -> list:
                 col_of[t] += 1
                 in_cell = True
             elif low in _RAWTEXT:
-                close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-                cm = close.search(html_text, pos)
-                if cm is None:
-                    pos = n
-                else:
-                    gt = html_text.find(">", cm.start())
-                    pos = n if gt == -1 else gt + 1
+                toks.skip_raw(low)
         elif end_tag is not None:
             low = end_tag.lower()
             if low in ("td", "th", "tr"):
@@ -610,6 +597,22 @@ def _parse_attrs(raw: str) -> dict:
     return out
 
 
+def scan_tags(html_text: str, name: str):
+    """Yield the attribute dict of every ``<name>`` start tag in document
+    order; raw-text bodies are skipped, so a tag spelled inside a
+    ``<script>`` string never counts."""
+    toks = HtmlTokens(html_text)
+    for m in toks:
+        tag = m.group(2)
+        if tag is None:
+            continue
+        low = tag.lower()
+        if low == name:
+            yield _parse_attrs(m.group(3))
+        elif low in _RAWTEXT:
+            toks.skip_raw(low)
+
+
 def extract_html_meta(data: bytes) -> dict:
     """Head metadata: {title, description, og_title, og_description,
     canonical, lang, robots, base} — str or None each.
@@ -627,16 +630,10 @@ def extract_html_meta(data: bytes) -> dict:
         "robots": None, "base": None,
     }
     robots_parts: list[str] = []
-    pos = 0
-    n = len(html_text)
     in_title = False
     title_parts: list[str] = []
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         end_tag, start_tag = m.group(1), m.group(2)
         if start_tag is not None:
             low = start_tag.lower()
@@ -677,13 +674,7 @@ def extract_html_meta(data: bytes) -> dict:
                 if href:
                     out["base"] = href
             elif low in _RAWTEXT:
-                close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-                cm = close.search(html_text, pos)
-                if cm is None:
-                    pos = n
-                else:
-                    gt = html_text.find(">", cm.start())
-                    pos = n if gt == -1 else gt + 1
+                toks.skip_raw(low)
         elif end_tag is not None:
             if end_tag.lower() == "title" and in_title:
                 in_title = False
@@ -709,33 +700,20 @@ def extract_jsonld(data: bytes) -> list:
     with a 1 MB JSON-LD blob costs Python only the substring copy."""
     html_text = decode_html(data)
     out = []
-    pos = 0
-    n = len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         tag = m.group(2)
         if tag is None:
             continue
         low = tag.lower()
         if low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            end = cm.start() if cm else n
+            body = toks.skip_raw(low)
             if low == "script":
                 kind = _parse_attrs(m.group(3)).get("type", "").lower()
                 if kind.split(";")[0].strip() == "application/ld+json":
-                    body = html_text[pos:end].strip()
+                    body = body.strip()
                     if body:
                         out.append(body)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
     return out
 
 
@@ -767,14 +745,8 @@ def extract_link_relations(data: bytes) -> list:
     rest of the HTML tier."""
     html_text = decode_html(data)
     out: list = []
-    pos = 0
-    n = len(html_text)
-    while pos < n and len(out) < LINK_REL_CAP:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         tag = m.group(2)
         if tag is None:
             continue
@@ -791,14 +763,10 @@ def extract_link_relations(data: bytes) -> list:
                     out.append(
                         (rel, hreflang if rel == "alternate" else None, href)
                     )
+            if len(out) >= LINK_REL_CAP:
+                break
         elif low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
+            toks.skip_raw(low)
     return out
 
 
@@ -810,16 +778,10 @@ def extract_headings(data: bytes) -> list:
     contribute; nested markup inside a heading contributes its text."""
     html_text = decode_html(data)
     out = []
-    pos = 0
-    n = len(html_text)
     level = 0
     parts: list = []
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         end_tag, start_tag = m.group(1), m.group(2)
         if start_tag is not None:
             low = start_tag.lower()
@@ -831,13 +793,7 @@ def extract_headings(data: bytes) -> list:
                 level = int(low[1])
                 parts = []
             elif low in _RAWTEXT:
-                close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-                cm = close.search(html_text, pos)
-                if cm is None:
-                    pos = n
-                else:
-                    gt = html_text.find(">", cm.start())
-                    pos = n if gt == -1 else gt + 1
+                toks.skip_raw(low)
         elif end_tag is not None:
             low = end_tag.lower()
             if level and len(low) == 2 and low[0] == "h" and low[1] in "123456":
@@ -863,8 +819,6 @@ def extract_links_with_text(data: bytes) -> list:
     the next <a> or EOF, matching browser recovery)."""
     html_text = decode_html(data)
     out = []
-    pos = 0
-    n = len(html_text)
     href = None
     parts: list = []
 
@@ -875,12 +829,8 @@ def extract_links_with_text(data: bytes) -> list:
         href = None
         parts = []
 
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
+    toks = HtmlTokens(html_text)
+    for m in toks:
         end_tag, start_tag = m.group(1), m.group(2)
         if start_tag is not None:
             low = start_tag.lower()
@@ -892,13 +842,7 @@ def extract_links_with_text(data: bytes) -> list:
                     h = unescape(h).strip()
                     href = h if h else None
             elif low in _RAWTEXT:
-                close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-                cm = close.search(html_text, pos)
-                if cm is None:
-                    pos = n
-                else:
-                    gt = html_text.find(">", cm.start())
-                    pos = n if gt == -1 else gt + 1
+                toks.skip_raw(low)
         elif end_tag is not None:
             if end_tag.lower() == "a":
                 flush()
@@ -916,31 +860,10 @@ def extract_image_alts(data: bytes) -> list:
     inside a script string never counts. Images with an empty/missing
     ``src`` are dropped; a missing ``alt`` yields ``""`` (present-but-
     uncaptioned is a real, countable class downstream)."""
-    html_text = decode_html(data)
     out = []
-    pos = 0
-    n = len(html_text)
-    while pos < n:
-        m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # pragma: no cover
-            pos += 1
-            continue
-        pos = m.end()
-        tag = m.group(2)
-        if tag is None:
-            continue
-        low = tag.lower()
-        if low == "img":
-            attrs = _parse_attrs(m.group(3))
-            src = (attrs.get("src") or "").strip()
-            if src:
-                out.append((src, attrs.get("alt", "")))
-        elif low in _RAWTEXT:
-            close = re.compile(r"</\s*%s[\s>]" % re.escape(low), re.I)
-            cm = close.search(html_text, pos)
-            if cm is None:
-                pos = n
-            else:
-                gt = html_text.find(">", cm.start())
-                pos = n if gt == -1 else gt + 1
+    for attrs in scan_tags(decode_html(data), "img"):
+        src = (attrs.get("src") or "").strip()
+        if src:
+            out.append((src, attrs.get("alt", "")))
     return out
+

@@ -212,11 +212,6 @@ class Interpreter:
 
     # -- execution --
 
-    def run(self, content: bytes, base_ctm: Mat = IDENTITY) -> list[Span]:
-        ops = parse_content_stream(content)
-        self._exec_checked(ops, base_ctm)
-        return self.spans
-
     def _exec_checked(self, ops, base_ctm: Mat) -> None:
         """Execute with operand-mismatch taxonomy: a truncated stream can
         emit an op with too-few/wrong-typed operands (e.g. a bare ``Tf``),
@@ -522,60 +517,40 @@ class Interpreter:
                         + len(el) * tc
                     ) * th
                 )
-                if _SURROGATE_RE.search(text):
-                    text = _fix_surrogates(text)
-                if actual is not None:
-                    # suppressed: the scope's ActualText replaces glyph
-                    # text, emitted once at the first show's position
-                    text = actual[0] if not actual[1] else ""
-                    actual[1] = True
-                if text and not self._hidden:
-                    sp = Span(
-                        self.page,
-                        dev[4],
-                        dev[5],
-                        self.glyph_order,
-                        text,
-                        font.base_font or ts.font_name,
-                        fs,
-                    )
-                    if self._mcid >= 0:
-                        sp.mcid = self._mcid
-                    self.spans.append(sp)
-                    self.glyph_order += len(text)
-                tm = _x_shift(adv, tm)
-                continue
-            # Type0: fixed 2-byte (struct-unpack tuple) or codespace-driven
-            # mixed 1/2-byte split (render/font.c:46; legacy CJK CMaps are
-            # mixed-width), then C-level map over the lazy decode tables.
-            # tx = (w0/1000·Tfs + Tc)·Th ; Tw never applied (parity)
-            tmap, wmap = tables
-            codes = font.split_codes(el)
-            ncodes = len(codes)
-            text = "".join(map(tmap.__getitem__, codes))
-            if vert:
-                # vertical displacement per glyph: W2 per-CID w1, else the
-                # DW2 default (-1000, downward), glyph space; Th never
-                # applies (§9.4.4)
-                if font.cid_vwidths:
-                    adv = (
-                        sum(font.vert_width(c) for c in codes) / 1000.0 * fs
-                        + ncodes * tc
-                    )
-                else:
-                    adv = ncodes * (font.w1_default / 1000.0 * fs + tc)
-            elif per_glyph is not None:
-                adv = ncodes * per_glyph
             else:
-                adv = (
-                    sum(map(wmap.__getitem__, codes)) / 1000.0 * fs
-                    + ncodes * tc
-                ) * th
+                # Type0: fixed 2-byte (struct-unpack tuple) or codespace-
+                # driven mixed 1/2-byte split (render/font.c:46; legacy CJK
+                # CMaps are mixed-width), then C-level map over the lazy
+                # decode tables.
+                # tx = (w0/1000·Tfs + Tc)·Th ; Tw never applied (parity)
+                tmap, wmap = tables
+                codes = font.split_codes(el)
+                ncodes = len(codes)
+                text = "".join(map(tmap.__getitem__, codes))
+                if vert:
+                    # vertical displacement per glyph: W2 per-CID w1, else
+                    # the DW2 default (-1000, downward), glyph space; Th
+                    # never applies (§9.4.4)
+                    if font.cid_vwidths:
+                        adv = (
+                            sum(font.vert_width(c) for c in codes) / 1000.0 * fs
+                            + ncodes * tc
+                        )
+                    else:
+                        adv = ncodes * (font.w1_default / 1000.0 * fs + tc)
+                elif per_glyph is not None:
+                    adv = ncodes * per_glyph
+                else:
+                    adv = (
+                        sum(map(wmap.__getitem__, codes)) / 1000.0 * fs
+                        + ncodes * tc
+                    ) * th
             if _SURROGATE_RE.search(text):
                 text = _fix_surrogates(text)
             if actual is not None:
-                # /ActualText suppression applies to Type0 shows exactly as
-                # to simple-font shows (§14.9.4 is font-agnostic)
+                # suppressed: the scope's ActualText replaces glyph text,
+                # emitted once at the first show's position (§14.9.4 is
+                # font-agnostic)
                 text = actual[0] if not actual[1] else ""
                 actual[1] = True
             if text and not self._hidden:

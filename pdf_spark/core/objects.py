@@ -53,18 +53,11 @@ _WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
 _WS_OR_PCT = frozenset(b"\x00\t\n\x0c\r %")
 _NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
 _INT_RE = re.compile(rb"\d+")
-# `id gen R` in one shot (the R must be its own token); used for the
-# backtracking indirect-ref probe so a failed probe costs one C-level match
-_REF_RE = re.compile(
-    rb"(\d+)(?:[\x00\t\n\x0c\r ]|%[^\r\n]*[\r\n])+(\d+)"
-    rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*[\r\n])+R"
-    rb"(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
-)
 # digit-start body token in ONE probe: `id gen R` ref, else the number
 # itself (entered only when buf[pos] is a digit, so no sign/.-prefix
 # alternative needed — those dispatch straight to parse_number). Fuses
-# the old _try_parse_ref + parse_number pair (two C matches + two Python
-# calls per numeric token) into a single C-level match.
+# a ref probe and a number parse (two C matches + two Python calls per
+# numeric token) into a single C-level match.
 _REF_OR_NUM_RE = re.compile(
     rb"(\d+)(?:[\x00\t\n\x0c\r ]|%[^\r\n]*[\r\n])+(\d+)"
     rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*[\r\n])+R"
@@ -269,10 +262,6 @@ class ObjectParser:
         if pos < len(buf) and buf[pos] in _WS_OR_PCT:
             self.pos = _WS_RE.match(buf, pos).end()
 
-    def at_end(self) -> bool:
-        self.skip_ws()
-        return self.pos >= len(self.buf)
-
     def peek(self) -> int:
         if self.pos >= len(self.buf):
             raise PdfError(INVALID_OBJECT, "unexpected EOF")
@@ -359,17 +348,6 @@ class ObjectParser:
         if not (-2147483648 <= v <= 2147483647):
             raise PdfError(INVALID_OBJECT, f"integer out of i32 range: {v}")
         return v
-
-    # -- indirect ref backtrack (object.c:94-114, 851-926) --
-
-    def _try_parse_ref(self) -> Optional[Ref]:
-        """Try ``id gen R``; on failure restore position (bounded backtrack).
-        One compiled regex replaces the int/ws/int/ws/R probe chain."""
-        m = _REF_RE.match(self.buf, self.pos)
-        if m is None:
-            return None
-        self.pos = m.end()
-        return Ref(int(m.group(1)), int(m.group(2)))
 
     def parse_indirect_object(self) -> IndirectObject:
         """``id gen obj <value> [stream] endobj`` at the current offset."""
@@ -549,8 +527,3 @@ class ObjectParser:
         self.skip_ws()
         self.expect_keyword(b"endstream")
         return Stream(d, raw)
-
-
-def parse_object_at(buf: bytes, pos: int, resolver=None) -> IndirectObject:
-    """Parse the indirect object at a byte offset (xref-entry target)."""
-    return ObjectParser(buf, pos, resolver).parse_indirect_object()

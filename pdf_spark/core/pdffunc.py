@@ -161,6 +161,13 @@ def _bool_or_int2(stack: List[Any]) -> tuple:
         raise PdfError(INCORRECT_TYPE, "and/or/xor need two bools or two ints")
     return a, b
 
+def _ps_int(x: Number) -> Number:
+    # PLRM: an integer result outside the 32-bit range becomes a real, so
+    # `dup mul` chains cannot grow unbounded Python ints
+    if isinstance(x, int) and not -0x80000000 <= x <= 0x7FFFFFFF:
+        return float(x)
+    return x
+
 def _ps_round(x: Number) -> Number:
     # PLRM round: nearest integer; ties go to the GREATER value.
     if isinstance(x, int):
@@ -263,13 +270,13 @@ def eval_calculator(prog: PSProgram, inputs: Sequence[Number]) -> List[Any]:
             # -- arithmetic --------------------------------------------------
             elif op == "add":
                 a, b = _num2(stack)
-                stack.append(a + b)
+                stack.append(_ps_int(a + b))
             elif op == "sub":
                 a, b = _num2(stack)
-                stack.append(a - b)
+                stack.append(_ps_int(a - b))
             elif op == "mul":
                 a, b = _num2(stack)
-                stack.append(a * b)
+                stack.append(_ps_int(a * b))
             elif op == "div":
                 a, b = _num2(stack)
                 if b == 0:
@@ -288,11 +295,9 @@ def eval_calculator(prog: PSProgram, inputs: Sequence[Number]) -> List[Any]:
                     raise PdfError(INCORRECT_TYPE, "mod by zero")
                 stack.append(int(math.fmod(a, b)))  # sign follows dividend
             elif op == "neg":
-                a = _num1(stack)
-                stack.append(-a)
+                stack.append(_ps_int(-_num1(stack)))
             elif op == "abs":
-                a = _num1(stack)
-                stack.append(abs(a))
+                stack.append(_ps_int(abs(_num1(stack))))
             elif op == "ceiling":
                 a = _num1(stack)
                 stack.append(a if isinstance(a, int) else float(math.ceil(a)))

@@ -354,7 +354,7 @@ def parse_inline_image(data: bytes, pos: int) -> tuple:
     ID and the standalone EI (the same terminator discipline as
     skip_inline_image — an embedded non-delimited 'EI' byte pair cannot
     end the image early)."""
-    from pdf_spark.core.content import _DELIM_SET, _WS_ONLY
+    from pdf_spark.core.content import _WS_ONLY, find_standalone_ei
     from pdf_spark.core.objects import ObjectParser
 
     p = ObjectParser(data, pos, content=True)
@@ -388,17 +388,10 @@ def parse_inline_image(data: bytes, pos: int) -> tuple:
             val = _inline_translate_cs(val)
         d[full] = val
     start = p.pos + 1  # the single post-ID whitespace byte
-    q = start
-    while True:
-        j = data.find(b"EI", q)
-        if j < 0:
-            raise ValueError("inline image: no EI terminator")
-        nxt = data[j + 2] if j + 2 < n else None
-        if (j == 0 or data[j - 1] in _WS_ONLY) and (
-            nxt is None or nxt in _WS_ONLY or nxt in _DELIM_SET
-        ):
-            return Stream(d, data[start:j]), j + 2
-        q = j + 1
+    j = find_standalone_ei(data, start)
+    if j < 0:
+        raise ValueError("inline image: no EI terminator")
+    return Stream(d, data[start:j]), j + 2
 
 
 def iter_inline_images(data: bytes):

@@ -1,5 +1,7 @@
 """HTML tier unit tests: sniffing, decoding, tokenizing, classification."""
 
+import pytest
+
 from pdf_spark.core.extract import assemble_text, extract_document
 from pdf_spark.core.htmltext import (
     decode_html,
@@ -980,3 +982,71 @@ def test_paywall_audit_channels():
     assert m["has_access_flag"] == 0 and m["is_paywalled"] is None
     # class-only channel
     assert paywall_audit(b'<div class="regwall">x</div>')["is_paywalled"] == 1
+
+
+# --- raw-text decoys, across every tag scanner -------------------------------
+
+_RAW_TAGS = ("script", "style", "template", "textarea", "noscript", "xmp")
+
+# (module, function, fragment that the function counts when it is real
+# markup); no fragment holds a raw-text close tag, so each stays whole
+# inside the element under test
+_DECOY_SCANNERS = [
+    ("htmltext", "extract_main_text", "<h1>Decoy heading words</h1>"),
+    ("htmltext", "extract_markdown", "<h1>Decoy heading words</h1>"),
+    ("htmltext", "extract_links", '<a href="/decoy">d</a>'),
+    ("htmltext", "extract_links_with_text", '<a href="/decoy">d</a>'),
+    ("htmltext", "extract_tables", "<table><tr><td>decoy</td></tr></table>"),
+    ("htmltext", "extract_html_meta", '<meta name="description" content="decoy">'),
+    ("htmltext", "extract_jsonld", '<script type="application/ld+json">{"d":1}'),
+    ("htmltext", "extract_link_relations", '<link rel="canonical" href="/decoy">'),
+    ("htmltext", "extract_headings", "<h2>Decoy</h2>"),
+    ("htmltext", "extract_image_alts", '<img src="/decoy.png" alt="d">'),
+    ("htmlaudit", "ai_optout", '<meta name="robots" content="noai">'),
+    ("htmlaudit", "hidden_audit", '<div style="display:none">cloaked words</div>'),
+    ("htmlaudit", "soft_redirects", '<meta http-equiv="refresh" content="0">'),
+    ("htmlaudit", "hreflang_audit", '<link rel="alternate" hreflang="zz" href="/zz">'),
+    ("htmlaudit", "spa_shell_audit", '<div id="root"></div>'),
+    ("htmlaudit", "data_uri_inventory", '<img src="data:image/gif;base64,R0lGOD">'),
+    ("htmlaudit", "srcset_audit", '<img src="a.png" srcset="b.png 999w">'),
+    ("htmlaudit", "pubdate_election", '<time datetime="2021-05-06">'),
+    ("htmlaudit", "third_party_audit", '<img src="https://cdn.tracker.com/p.png">'),
+]
+
+
+@pytest.mark.parametrize("raw", _RAW_TAGS)
+@pytest.mark.parametrize(
+    "module,fn,frag", _DECOY_SCANNERS, ids=[s[1] for s in _DECOY_SCANNERS]
+)
+def test_rawtext_decoy_never_counts(module, fn, frag, raw):
+    import importlib
+
+    f = getattr(importlib.import_module(f"pdf_spark.core.{module}"), fn)
+
+    def page(x: str) -> bytes:
+        return _page("<p>Plain visible paragraph text, long enough to keep.</p>" + x)
+
+    filler = "x" * len(frag)  # same body length: spa_shell_audit counts it
+    blank = f(page(f"<{raw}>{filler}</{raw}>"))
+    assert f(page(frag)) != blank  # the fragment counts as real markup
+    assert f(page(f"<{raw}>{frag}</{raw}>")) == blank
+
+
+def test_self_closing_script_split():
+    """Pins today's split: the block segmenter and hidden_audit treat
+    ``<script/>`` as void, the other scanners skip a raw body that, with
+    no close tag, runs to EOF."""
+    from pdf_spark.core.htmlaudit import hidden_audit, spa_shell_audit
+    from pdf_spark.core.htmltext import extract_image_alts, extract_links
+
+    tail = '<a href="/after">after link</a><img src="/i.png"><p>Tail text here.</p>'
+    page = _page("<p>Intro paragraph.</p><script/>" + tail)
+    assert "Tail text here." in extract_main_text(page)
+    assert hidden_audit(page)["visible_chars"] == len(
+        "Introparagraph." "afterlink" "Tailtexthere."
+    )
+    assert extract_links(page) == []
+    assert extract_image_alts(page) == []
+    spa = spa_shell_audit(page)
+    assert spa["n_scripts"] == 1
+    assert spa["script_bytes"] == len(tail + "</body></html>")

@@ -105,6 +105,22 @@ class TestCalculator:
         with pytest.raises(PdfError):
             run_ps(src)
 
+    def test_int_overflow_becomes_real(self):
+        # PLRM: integer results outside the 32-bit range become reals
+        r = run_ps("{ 2147483647 1 add }")
+        assert r == [2147483648.0] and isinstance(r[0], float)
+        r = run_ps("{ 3 dup mul dup mul dup mul dup mul dup mul dup mul }")
+        assert r == [float(3 ** 64)] and isinstance(r[0], float)
+        r = run_ps("{ -2147483648 1 sub }")
+        assert r == [-2147483649.0] and isinstance(r[0], float)
+        for src in ("{ -2147483648 neg }", "{ -2147483648 abs }"):
+            r = run_ps(src)
+            assert r == [2147483648.0] and isinstance(r[0], float)
+        # in range: integers stay integers
+        assert run_ps("{ 2147483646 1 add }") == [2147483647]
+        assert isinstance(run_ps("{ -2147483647 neg }")[0], int)
+        assert isinstance(run_ps("{ 46340 dup mul }")[0], int)
+
     def test_bitshift_bounded(self):
         assert run_ps("{ 1 64 bitshift }") == [1 << 64]
         assert run_ps("{ 1 -64 bitshift }") == [0]
