@@ -8,6 +8,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, LongType, StructType
 
+from pdf_spark.session import task_prologue
+
 TABLES = (
     "region",
     "nation",
@@ -47,6 +49,7 @@ def map_rows(
     ]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task_prologue()
         for batch in batches:
             rows = [
                 out

@@ -40,6 +40,7 @@ from pdf_spark.core.extract import (
     assemble_text,
     extract_document,
 )
+from pdf_spark.session import task_prologue
 
 DOCS_TEXT_SCHEMA = StructType(
     [
@@ -101,6 +102,7 @@ def extract_docs_text(
     )
 
     def run(batches):
+        task_prologue()
         import pyarrow as pa
 
         for batch in batches:
@@ -123,15 +125,14 @@ def extract_docs_text(
                     for c in passthrough
                 ]
             )
-            payloads = batch.column(names.index("html"))
             texts: list = []
             stats: list = []
             codes: list = []
             npg: list = []
             nsp: list = []
             mds: list = []
-            for data in payloads:
-                r = extract_document(data.as_py(), max_bytes)
+            for data in batch.column(names.index("html")).to_pylist():
+                r = extract_document(data, max_bytes)
                 texts.append(assemble_text(r.spans) if r.ok else None)
                 stats.append(r.status)
                 codes.append(r.error_code)
@@ -163,6 +164,7 @@ def extract_spans(pages: DataFrame, max_bytes: int = DEFAULT_MAX_BYTES) -> DataF
     """
 
     def run(batches):
+        task_prologue()
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -172,9 +174,9 @@ def extract_spans(pages: DataFrame, max_bytes: int = DEFAULT_MAX_BYTES) -> DataF
             rows: list[tuple] = []
             for url, data in zip(
                 batch.column(names.index("url")).to_pylist(),
-                batch.column(names.index("html")),
+                batch.column(names.index("html")).to_pylist(),
             ):
-                r = extract_document(data.as_py(), max_bytes)
+                r = extract_document(data, max_bytes)
                 spans = r.spans if r.ok else []
                 rows.extend(
                     (url, s.page, s.col, s.y, s.x, s.glyph_order, s.text,
