@@ -9,12 +9,19 @@ into a one-element ``TJ`` (operation.c:706-715).
 
 Two implementations with identical results (cross-checked in tests):
 
-- ``parse_content_stream`` — a single-pass regex scanner: one compiled
-  alternation recognizes whitespace/comments, numbers, names, simple
-  strings, hex strings, array brackets and operator runs at C speed, with
-  array nesting handled by a list stack. Anything the fast alternation
-  cannot express (strings with escapes or nested parens, ``<<`` dicts)
-  falls back to the recursive-descent ``ObjectParser`` at that position.
+- ``parse_content_stream`` — loops over the tuples of the shared token
+  table (``objects.TOKEN_RE``, the one the COS object scanner uses): one
+  ``findall`` per window, cut just after a whitespace byte outside a
+  comment, so the token list stays bounded on a multi-MB stream. Operands
+  go onto a list stack (arrays nest), operators through one table lookup.
+  Where the table cannot settle a token — an escaped, nested or empty
+  string, a string the window cut, bad hex, an empty name, a ``<<`` dict —
+  the recursive-descent ``ObjectParser`` reads that one operand from its
+  offset, and the next window starts after it. ``BI`` hands over to
+  ``skip_inline_image`` the same way. No handover rescans the rest of the
+  stream: a window ends just before a ``<<``, so a dict is the next
+  window's first token; a ``bad`` token is the last of its window; and
+  after a handover the next window starts at 256 B instead of 4 KB.
 - ``parse_content_stream_slow`` — the original per-token loop over
   ``ObjectParser``; kept as the behavioral oracle.
 
@@ -51,11 +58,14 @@ from pdf_spark.core.errors import (
     PdfError,
 )
 from pdf_spark.core.objects import (
-    PDF_NULL,
-    Name,
+    KEYWORDS,
+    NUM_CACHE,
+    TOKEN_RE,
+    WS_ATOM as _WS_ATOM,  # noqa: F401 — the table's whitespace atom
     ObjectParser,
     decode_name_bytes,
     hex_body_to_bytes,
+    number_token,
 )
 
 # full 73-operator token set (operator.h:3-306)
@@ -99,25 +109,25 @@ def skip_inline_image(data: bytes, pos: int) -> int:
     literal-string value — ``BI /Name (x ID y) ... ID`` — cannot terminate
     the dict early and desynchronize the EI search.
     """
-    n = len(data)
     fallback: ObjectParser | None = None
     while True:
-        m = _TOK_RE.match(data, pos)
-        if m is None:
-            pos = _WS_SKIP_RE.match(data, pos).end()
-            if pos < n and data[pos] in b"(<":
-                # escaped/nested string or << dict value: full parser
-                if fallback is None:
-                    fallback = ObjectParser(data, content=True)
-                fallback.pos = pos
-                fallback.parse_object()
-                pos = fallback.pos
-                continue
-            raise PdfError(INVALID_OBJECT, "inline image: no ID token")
-        if m.lastgroup == "ws":  # trailing ws at EOF: dict never closed
+        m = TOKEN_RE.match(data, pos)
+        kind = m.lastgroup
+        if kind == "bad" or (kind == "punct" and m.group("punct") == b"<<"):
+            start = m.start(kind)
+            if data[start] not in b"(</":
+                raise PdfError(INVALID_OBJECT, "inline image: no ID token")
+            # escaped/nested/empty string, << dict or empty name: full parser
+            if fallback is None:
+                fallback = ObjectParser(data, content=True)
+            fallback.pos = start
+            fallback.parse_object()
+            pos = fallback.pos
+            continue
+        if kind is None or m.group(kind) == b">>":  # no token left, or stray >>
             raise PdfError(INVALID_OBJECT, "inline image: no ID token")
         pos = m.end()
-        if m.lastgroup == "op" and m.group("op") == b"ID":
+        if kind == "op" and m.group("op") == b"ID":
             break
         # any other token is part of the image dict; keep scanning
     # pos + 1: consume the single post-ID whitespace byte
@@ -144,59 +154,67 @@ def find_standalone_ei(data: bytes, start: int) -> int:
             return j
         start = j + 1
 
-# one alternation, ordered: number, name, simple string (no escapes/
-# nesting), hex string, array brackets, quote singletons, operator run.
-# Quote chars lead only as singletons (matching the slow path, which
-# checks them before the regular-char run); mid-run quotes stay part of
-# the run. Whitespace/comments are folded into a prefix so every match
-# yields a REAL token (standalone-ws matches used to be ~40% of all
-# match calls); the terminal (?P<ws>\Z) alternative fires for trailing
-# ws at EOF. The prefix MUST be atomic: a backtrackable prefix lets the
-# engine shorten a %-comment when the following token needs the
-# fallback parser, re-interpreting comment text as tokens
-# (`1 % c\n (ne(st)ed)` dropped the 1 and emitted a phantom `c`
-# operator before the fix). Possessive quantifiers (*+) need
-# Python >= 3.11; older interpreters get the equivalent
-# lookahead-capture + backreference idiom (a satisfied lookahead is
-# never re-entered on backtrack, so the consumed prefix is fixed).
 
+# A findall window is at least _WINDOW bytes, so a multi-MB stream never
+# builds one huge token list. After a handover the next window starts at
+# _WINDOW_MIN and doubles on each window that runs clean. Cutting a window
+# scans its bytes (a few C searches), and a ``BI`` or a ``<<`` inside a
+# window throws its later tuples away and matches its earlier ones again,
+# so a handover costs at most one small window of extra work.
+_WINDOW = 4096
+_WINDOW_MIN = 256
+_WS_BYTE = re.compile(rb"[\x00\t\n\x0c\r ]")
+_EOL_BYTE = re.compile(rb"[\r\n]")
 
-def _atomic_star(atom: bytes, tag: bytes) -> bytes:
-    try:
-        re.compile(b"(?:" + atom + b")*+")
-        return b"(?:" + atom + b")*+"
-    except re.error:  # pragma: no cover — Python < 3.11
-        g = b"(?P<" + tag + b">(?:" + atom + b")*)"
-        return b"(?=" + g + b")(?P=" + tag + b")"
-
-
-_WS_ATOM = rb"[\x00\t\n\x0c\r\x20]+|%[^\r\n]*"
-_TOK_RE = re.compile(
-    _atomic_star(_WS_ATOM, b"wsat")
-    + rb"""
-    (?:
-      (?P<num>[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+))
-    | (?P<name>/[^\x00\t\n\x0c\r\x20()<>\[\]{}/%]*)
-    | \((?P<sstr>[^()\\]*)\)
-    | <(?P<hstr>[0-9a-fA-F\x00\t\n\x0c\r\x20]*)>
-    | (?P<arr>[\[\]])
-    | (?P<q>['"])
-    | (?P<op>[^\x00\t\n\x0c\r\x20()<>\[\]{}/%]+)
-    | (?P<ws>\Z)
-    )""",
-    re.X,
-)
-
-# ws/comment-only skipper for the fallback path: when the alternation
-# fails (escaped string, << dict), the leading ws the prefix would have
-# eaten is still at ``pos`` and must be stepped over before dispatch.
-_WS_SKIP_RE = re.compile(rb"(?:[\x00\t\n\x0c\r\x20]+|%[^\r\n]*)*")
-
-# pre-decoded operator-token interning: the same few dozen operator
-# byte-tokens recur in every stream; avoids a per-token str allocation
-_OP_STR = {s.encode("ascii"): s for s in OPERATORS}
+# operator tokens emitted as they are, pre-decoded (no per-token str
+# allocation); Tj, BX, EX and BI are handled inline, the rest by set
+_EMIT_AS = {
+    s.encode("ascii"): s
+    for s in OPERATORS - IGNORED - ERROR_OPS - {"Tj", "BX", "EX", "BI"}
+}
+_IGNORED_B = frozenset(s.encode("ascii") for s in IGNORED)
+_ERROR_B = frozenset(s.encode("ascii") for s in ERROR_OPS)
 
 _WS_ONLY = frozenset(b"\x00\t\n\x0c\r ")
+
+
+def _window_end(data: bytes, pos: int, size: int) -> int:
+    """End of the window that starts at ``pos``: just before the first
+    ``<<`` in it, so a dict hands over as the next window's first token
+    with no tuple thrown away, else just past the first whitespace byte at
+    or after ``pos + size``. No token but a string or a comment runs on
+    across either cut. A string cut there lexes as ``bad`` and goes whole
+    to ObjectParser, and an ``id gen R`` cut there is the same two
+    operands and operator it is uncut. A cut comment would lex its tail as
+    tokens, so when a ``%`` has no EOL after it in the window, the window
+    ends just before that ``%`` (a comment split at a ``%`` is two
+    comments), or after the EOL that ends the comment."""
+    n = len(data)
+    end = n
+    if pos + size < n:
+        m = _WS_BYTE.search(data, pos + size)
+        if m is not None:
+            end = m.end()
+    q = data.find(b"<<", pos, end)
+    if q >= 0:
+        end = q
+    elif end == n:
+        return n
+    pct = data.rfind(b"%", pos, end)
+    if pct < 0 or _EOL_BYTE.search(data, pct, end) is not None:
+        return end
+    if pct > pos:
+        return pct
+    m = _EOL_BYTE.search(data, end)
+    return n if m is None else m.end()
+
+
+def _token_end(data: bytes, pos: int, end: int, k: int) -> int:
+    """Offset just past the first ``k`` tokens of ``data[pos:end]``."""
+    match = TOKEN_RE.match
+    for _ in range(k):
+        pos = match(data, pos, end).end()
+    return pos
 
 
 def parse_content_stream(data: bytes) -> List[Op]:
@@ -209,108 +227,112 @@ def parse_content_stream(data: bytes) -> List[Op]:
     fallback: ObjectParser | None = None
     pos = 0
     n = len(data)
-    match = _TOK_RE.match
+    findall = TOKEN_RE.findall
+    emit_as = _EMIT_AS.get
+    numbers = NUM_CACHE.get
+    size = _WINDOW
     while pos < n:
-        m = match(data, pos)
-        if m is None:
-            pos = _WS_SKIP_RE.match(data, pos).end()
-            c = data[pos]
-            if c in b"(<":
-                # escaped/nested string or << dict: recursive-descent parse
-                if fallback is None:
-                    fallback = ObjectParser(data, content=True)
-                fallback.pos = pos
-                cur.append(fallback.parse_object())
-                pos = fallback.pos
-                continue
-            raise PdfError(
-                UNSUPPORTED_OPERATOR, f"stray byte {c:#x} in content stream"
-            )
-        pos = m.end()
-        g = m.lastgroup
-        if g == "ws":  # trailing ws/comments at EOF
-            break
-        if g == "num":
-            tok = m.group("num")
-            if b"." in tok:
-                cur.append(float(tok))
-            else:
-                v = int(tok)
-                # i32 clamp with overflow error (object.c:288-294)
-                if not (-2147483648 <= v <= 2147483647):
-                    raise PdfError(
-                        INVALID_OBJECT, f"integer out of i32 range: {v}"
+        if data.startswith(b"<<", pos):
+            # a window cut just before a dict: hand it over at once
+            if fallback is None:
+                fallback = ObjectParser(data, content=True)
+            fallback.pos = pos
+            cur.append(fallback.parse_object())
+            pos = fallback.pos
+            continue
+        end = _window_end(data, pos, size)
+        toks = findall(data, pos, end)
+        resume = end
+        size = min(2 * size, _WINDOW)
+        for tok in toks:
+            rid, rgen, num, name, punct, sstr, hstr, kw, op, bad = tok
+            if num:
+                v = numbers(num)
+                cur.append(number_token(num) if v is None else v)
+            elif sstr:
+                cur.append(sstr)
+            elif op or rid:
+                if rid:
+                    # content operands never form refs: two integers, then R
+                    cur.append(number_token(rid))
+                    cur.append(number_token(rgen))
+                    op = b"R"
+                if arr_stack:
+                    raise PdfError(INVALID_OBJECT, f"operator {op!r} inside array")
+                emitted = emit_as(op)
+                if emitted is not None:
+                    ops.append((emitted, operands))
+                elif op == b"Tj":
+                    # canonicalize Tj -> one-element TJ (operation.c:706-715)
+                    ops.append(("TJ", [[operands[-1] if operands else b""]]))
+                elif op in _IGNORED_B:
+                    pass
+                elif op == b"BX":
+                    in_compat += 1
+                elif op == b"EX":
+                    in_compat = max(0, in_compat - 1)
+                elif op == b"BI":
+                    # (index: an equal tuple earlier in toks would have
+                    # broken out of this window already)
+                    operands = cur = []
+                    resume = skip_inline_image(
+                        data, _token_end(data, pos, end, toks.index(tok) + 1)
                     )
-                cur.append(v)
-            continue
-        if g == "sstr":
-            cur.append(m.group("sstr"))
-            continue
-        if g == "name":
-            cur.append(decode_name_bytes(m.group("name")[1:]))
-            continue
-        if g == "hstr":
-            try:
-                cur.append(hex_body_to_bytes(m.group("hstr")))
-            except (ValueError, UnicodeDecodeError) as exc:  # pragma: no cover
-                raise PdfError(INVALID_OBJECT, f"bad hex string: {exc}") from None
-            continue
-        if g == "arr":
-            if m.group("arr") == b"[":
+                    size = _WINDOW_MIN
+                    break
+                elif op in _ERROR_B:
+                    raise PdfError(
+                        UNSUPPORTED_OPERATOR, f"inline image op {op.decode()!r}"
+                    )
+                elif not in_compat:
+                    raise PdfError(
+                        UNSUPPORTED_OPERATOR,
+                        f"unknown operator {op.decode('latin-1')!r}",
+                    )
+                # else: an unknown operator swallowed inside BX/EX (stream.c:79-97)
+                operands = cur = []
+            elif name:
+                cur.append(decode_name_bytes(name))
+            elif punct == b"[":
                 new: List[Any] = []
                 cur.append(new)
                 arr_stack.append(cur)
                 cur = new
-            else:
+            elif punct == b"]":
                 if not arr_stack:
                     raise PdfError(
                         UNSUPPORTED_OPERATOR, "stray byte 0x5d in content stream"
                     )
                 cur = arr_stack.pop()
-            continue
-        # operator token (or keyword operand)
-        tok_b = m.group("q") if g == "q" else m.group("op")
-        if g == "op":
-            if tok_b == b"true":
-                cur.append(True)
-                continue
-            if tok_b == b"false":
-                cur.append(False)
-                continue
-            if tok_b == b"null":
-                cur.append(PDF_NULL)
-                continue
-        if arr_stack:
-            raise PdfError(INVALID_OBJECT, f"operator {tok_b!r} inside array")
-        tok = _OP_STR.get(tok_b) or tok_b.decode("latin-1")
-        if tok == "BX":
-            in_compat += 1
-            operands = cur = []
-            continue
-        if tok == "EX":
-            in_compat = max(0, in_compat - 1)
-            operands = cur = []
-            continue
-        if tok == "BI":
-            pos = skip_inline_image(data, pos)
-            operands = cur = []
-            continue
-        if tok not in OPERATORS:
-            if in_compat:
-                operands = cur = []  # swallowed inside BX/EX (stream.c:79-97)
-                continue
-            raise PdfError(UNSUPPORTED_OPERATOR, f"unknown operator {tok!r}")
-        if tok in ERROR_OPS:
-            raise PdfError(UNSUPPORTED_OPERATOR, f"inline image op {tok!r}")
-        if tok in IGNORED:
-            operands = cur = []
-            continue
-        # canonicalize Tj -> one-element TJ (operation.c:706-715)
-        if tok == "Tj":
-            ops.append(("TJ", [[operands[-1] if operands else b""]]))
-        else:
-            ops.append((tok, operands))
-        operands = cur = []
+            elif hstr:
+                cur.append(hex_body_to_bytes(hstr))
+            elif kw:
+                cur.append(KEYWORDS[kw])
+            elif punct or bad:
+                if punct == b">>":
+                    raise PdfError(
+                        UNSUPPORTED_OPERATOR, "stray byte 0x3e in content stream"
+                    )
+                if bad:
+                    start = end - len(bad)
+                    c = data[start]
+                    if c not in b"(</":
+                        raise PdfError(
+                            UNSUPPORTED_OPERATOR, f"stray byte {c:#x} in content stream"
+                        )
+                else:  # <<: ObjectParser skips the whitespace before it
+                    start = _token_end(data, pos, end, toks.index(tok))
+                # escaped/nested/empty string, a string cut by the window,
+                # bad hex, << dict or empty name: recursive-descent parse
+                if fallback is None:
+                    fallback = ObjectParser(data, content=True)
+                fallback.pos = start
+                cur.append(fallback.parse_object())
+                resume = fallback.pos
+                size = _WINDOW_MIN
+                break
+            # else: the end-of-window match
+        pos = resume
     if arr_stack:
         # EOF with an open [ — the slow path (ObjectParser.parse_array hits
         # end-of-buffer) and the reference raise; the scanner must too, or a

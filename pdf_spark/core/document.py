@@ -24,6 +24,7 @@ Reference semantics reimplemented (not copied):
 from __future__ import annotations
 
 import re
+from bisect import bisect_right
 from typing import Any, Iterator, Optional
 
 from pdf_spark.core.errors import (
@@ -43,6 +44,8 @@ from pdf_spark.core.objects import (
     ObjectParser,
     Ref,
     Stream,
+    parse_direct_at,
+    parse_indirect_at,
 )
 
 _HEADER_RE = re.compile(rb"%PDF-1\.([0-7])")
@@ -149,7 +152,7 @@ def parse_xref_section(buf: bytes, start: int) -> tuple[dict, dict, Optional[int
                     int(gen_b),
                 )
         p.pos = base + 20 * count
-    trailer = p.parse_object()
+    trailer = parse_direct_at(buf, p.pos, buf.find(b"startxref", p.pos))
     if not isinstance(trailer, dict):
         raise PdfError(INVALID_TRAILER, "trailer is not a dict")
     prev = trailer.get("Prev")
@@ -173,8 +176,7 @@ def parse_xref_stream(buf: bytes, start: int) -> tuple[dict, dict, Optional[int]
     :func:`parse_xref_section`, with compressed entries as
     ``("s", objstm_num, idx)``.
     """
-    ind = ObjectParser(buf, start).parse_indirect_object()
-    stream = ind.value
+    stream = parse_indirect_at(buf, start)[0].value
     if not isinstance(stream, Stream):
         raise PdfError(INVALID_XREF, "startxref object is not a stream")
     d = stream.dict
@@ -312,7 +314,7 @@ class Resolver:
         self.version = parse_header(buf)
         self._hidden_ocgs = None
         self._cache: dict[tuple[int, int], Any] = {}
-        self._objstm_cache: dict[int, tuple[bytes, list[tuple[int, int]]]] = {}
+        self._objstm_cache: dict[int, tuple[bytes, list[tuple[int, int, int]]]] = {}
         self._scavenged = False
         self._decryptor = None
         self._encrypt_oid = -1
@@ -440,7 +442,9 @@ class Resolver:
                 break
             pos = idx
             try:
-                t = ObjectParser(buf, idx + len(b"trailer")).parse_object()
+                t = parse_direct_at(
+                    buf, idx + len(b"trailer"), buf.find(b"startxref", idx)
+                )
             except PdfError:
                 continue
             if isinstance(t, dict) and t.get("Root") is not None:
@@ -507,7 +511,7 @@ class Resolver:
         offset, gen = a, b
         if gen != ref.gen:
             raise PdfError(INVALID_XREF, f"generation mismatch for {ref.obj_id}")
-        ind = ObjectParser(self.buf, offset, resolver=self).parse_indirect_object()
+        ind = parse_indirect_at(self.buf, offset, self)[0]
         if ind.obj_id != ref.obj_id:
             raise PdfError(INVALID_XREF, f"xref offset points at {ind.obj_id}")
         value = ind.value
@@ -547,21 +551,29 @@ class Resolver:
                 if not isinstance(onum, int) or not isinstance(ooff, int):
                     raise PdfError(INVALID_XREF, "ObjStm header pair not ints")
                 pairs.append((onum, first + ooff))
-            cached = (data, pairs)
+            # each member's scan stops at the next member's offset (-1: the
+            # offset is out of range, left to ObjectParser)
+            offs = sorted({off for _, off in pairs}) + [len(data)]
+            members = [
+                (onum, off, -1 if not 0 <= off < len(data)
+                 else offs[bisect_right(offs, off)])
+                for onum, off in pairs
+            ]
+            cached = (data, members)
             self._objstm_cache[stm_num] = cached
-        data, pairs = cached
-        if not (0 <= idx < len(pairs)) or pairs[idx][0] != want_id:
+        data, members = cached
+        if not (0 <= idx < len(members)) or members[idx][0] != want_id:
             # tolerate writers whose xref index is stale: find by object id
-            hits = [p for p in pairs if p[0] == want_id]
+            hits = [m for m in members if m[0] == want_id]
             if not hits:
                 raise PdfError(
                     INVALID_XREF, f"object {want_id} not in ObjStm {stm_num}"
                 )
-            pairs_entry = hits[0]
+            member = hits[0]
         else:
-            pairs_entry = pairs[idx]
+            member = members[idx]
         # objects inside an ObjStm are DIRECT (no `obj ... endobj` wrapper)
-        return ObjectParser(data, pairs_entry[1], resolver=self).parse_object()
+        return parse_direct_at(data, member[1], member[2], self)
 
     def resolve(self, obj: Any) -> Any:
         """Recursively unwrap Ref / IndirectObject (pdf_resolve_object).

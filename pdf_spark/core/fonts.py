@@ -471,7 +471,7 @@ def _load_descriptor(f: Font, fd, resolver) -> None:
                 f.sfnt = None
 
 
-_FONT_CACHE: dict[bytes, Font] = {}
+_FONT_CACHE: dict[bytes | tuple, Font] = {}
 
 
 def _canon_key(obj, resolver, out: list, seen: frozenset, depth: int) -> bool:
@@ -537,6 +537,9 @@ def _canon_key(obj, resolver, out: list, seen: frozenset, depth: int) -> bool:
     return False
 
 
+_FLAT_TYPES = frozenset((Name, int, float, bool))
+
+
 def load_font(font_obj, resolver) -> Font:
     """Deserialize a font dict (font.c:193-259 dispatch).
 
@@ -544,25 +547,30 @@ def load_font(font_obj, resolver) -> Font:
     across millions of documents, and a loaded ``Font`` is immutable apart
     from its lazily-filled decode tables — sharing one instance across
     documents keeps those tables warm (the per-(doc, font) rebuild was
-    ~15% of per-doc CPU on 1 KB docs). The key is a canonical
-    serialization of the fully-RESOLVED tree the loader consumes, so two
-    documents share an entry only when every byte the loader would read is
-    identical; anything unserializable (cycles, depth) skips the cache."""
-    parts: list = []
+    ~15% of per-doc CPU on 1 KB docs). Two keys, each naming everything
+    the loader reads:
+
+    - a FLAT dict (every value a direct name, number or boolean — the
+      plain base-14 font) is its own key, ``(key, type, value)`` per
+      entry, so ``1`` and ``1.0`` never share;
+    - a dict with an expensive part (ToUnicode CMap, CID descendant,
+      FontDescriptor program) keys on a canonical serialization of the
+      fully-RESOLVED tree; anything unserializable (cycles, depth) skips
+      the cache.
+
+    Any other dict (an indirect or array /Widths, an /Encoding dict) is
+    cheaper to rebuild than to key."""
     key = None
     d = resolver.get_dict(font_obj, "font")
-    # Cheap-font fast path: the cache exists to amortize the EXPENSIVE
-    # loads (ToUnicode CMap parse, CID descendant walk, FontFile2 sfnt
-    # parse — all behind these three keys). A plain simple font rebuilds
-    # faster than the canonical key walk itself (~15% of per-doc CPU on
-    # 1 KB docs was the keying, not the loading), so skip the cache
-    # entirely when none of the expensive keys is present.
-    if (
-        "ToUnicode" in d
-        or "DescendantFonts" in d
-        or "FontDescriptor" in d
-    ) and _canon_key(font_obj, resolver, parts, frozenset(), 0):
-        key = _digest(b"".join(parts))
+    if all(type(v) in _FLAT_TYPES for v in d.values()):
+        key = tuple([(k, type(v), v) for k, v in d.items()])
+    else:
+        parts: list = []
+        if (
+            "ToUnicode" in d or "DescendantFonts" in d or "FontDescriptor" in d
+        ) and _canon_key(font_obj, resolver, parts, frozenset(), 0):
+            key = _digest(b"".join(parts))
+    if key is not None:
         f = _FONT_CACHE.get(key)
         if f is not None:
             return f

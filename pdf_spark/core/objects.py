@@ -1,7 +1,30 @@
-"""COS object model + recursive-descent parser.
+"""COS object model, the one PDF token table, and the object parsers.
 
-Reimplements (from public PDF-spec knowledge + observed behavior of the
-reference) the object layer of ``/root/reference/libs/pdf/src/object.c``:
+**The token table.** ``TOKEN_RE`` is one compiled alternation with one
+capture group per token kind (``id gen R``, number, name, ``<< >> [ ]``,
+simple string, hex string, ``true/false/null``, operator run, and a
+catch-all ``bad``); see its comment for the grammar. Both lexers use it:
+
+- ``parse_indirect_at`` / ``parse_direct_at`` (indirect objects, ObjStm
+  members, trailers): one ``findall`` per object body, bounded by its
+  ``endobj``/``stream`` keyword (or the trailer's ``startxref``, the next
+  ObjStm member), and ``_settle`` builds the value with an explicit
+  container stack. A stream is read when the top-level dict closes.
+- ``content.parse_content_stream``: one ``findall`` per window of a
+  content stream.
+
+**Two oracles.** Whatever the table cannot settle (a ``bad`` token, an
+escaped or nested string, an empty name or string, i32 overflow, a
+missing ``endobj``, a ``%`` in the range) is re-parsed from its start by
+the recursive-descent ``ObjectParser`` below, so values and error codes
+match it by construction; ``tests/test_cos_scanner.py`` holds the
+scanner to it (value, error code, end offset).
+``content.parse_content_stream_slow`` is the content scanner's oracle in
+the same way.
+
+``ObjectParser`` reimplements (from public PDF-spec knowledge + observed
+behavior of the reference) the object layer of the reference's
+``libs/pdf/src/object.c``:
 
 - dispatch on first byte(s): ``t/f``→bool, digit→indirect-or-number with
   bounded backtrack, ``(``→string, ``<``→hex string, ``<<``→dict, ``/``→name,
@@ -49,21 +72,11 @@ WHITESPACE = b"\x00\t\n\x0c\r "
 DELIMITERS = b"()<>[]{}/%"
 
 # whitespace run, optionally interleaved with %-comments
-_WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
+WS_ATOM = rb"[\x00\t\n\x0c\r\x20]+|%[^\r\n]*"
+_WS_RE = re.compile(b"(?:" + WS_ATOM + b")+")
 _WS_OR_PCT = frozenset(b"\x00\t\n\x0c\r %")
 _NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
 _INT_RE = re.compile(rb"\d+")
-# digit-start body token in ONE probe: `id gen R` ref, else the number
-# itself (entered only when buf[pos] is a digit, so no sign/.-prefix
-# alternative needed — those dispatch straight to parse_number). Fuses
-# a ref probe and a number parse (two C matches + two Python calls per
-# numeric token) into a single C-level match.
-_REF_OR_NUM_RE = re.compile(
-    rb"(\d+)(?:[\x00\t\n\x0c\r ]|%[^\r\n]*[\r\n])+(\d+)"
-    rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*[\r\n])+R"
-    rb"(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
-    rb"|\d+\.?\d*"
-)
 # `id gen obj` header in one shot
 _INDOBJ_RE = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*[\r\n])*(\d+)"
@@ -73,28 +86,53 @@ _INDOBJ_RE = re.compile(
 )
 # run of regular characters (not whitespace, not delimiter)
 _REG_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
-# dict-body step: ws/comments, then either the ``>>`` close or a ``/key``.
-# The prefix must be ATOMIC (possessive on 3.11+, lookahead+backref
-# otherwise): backtracking could shorten a %-comment and extract a
-# phantom key/close from inside the comment text when the next real
-# token matches neither alternative.
-
-
-def _atomic_ws_prefix() -> bytes:
-    atom = rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)"
-    try:
-        re.compile(atom + b"*+")
-        return atom + b"*+"
-    except re.error:  # pragma: no cover — Python < 3.11
-        return b"(?=(?P<dws>" + atom + b"*))(?P=dws)"
-
-
-_DICT_KEY_RE = re.compile(
-    _atomic_ws_prefix()
-    + rb"(?:(?P<close>>>)|/(?P<key>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*))"
-)
 _HEX_RE = re.compile(rb"[0-9a-fA-F]")
 _EOL_RE = re.compile(rb"\r\n|\n|\r")
+
+# -- the token table ------------------------------------------------------------
+
+# `id gen R` separator: whitespace, or a comment that ends at an EOL
+_REF_SEP = rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*[\r\n])+"
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+
+# The one token table of the COS and content-stream lexers. Every match is
+# ONE token with exactly one kind group set, and every capture a token can
+# make is non-empty, so a ``findall`` tuple names its kind by which field
+# is truthy. Ordered alternatives:
+#   rid/rgen  ``id gen R``; a number never swallows a ref's first integer
+#   num       sign, digits, optional fraction; int vs real by the ``.``
+#   name      ``/`` + regular chars (``#xx`` undecoded); an empty name is bad
+#   punct     ``<<`` ``>>`` ``[`` ``]``
+#   sstr      a literal string with no escape, no nested paren, non-empty
+#   hstr      a hex string body (hex digits and whitespace), non-empty
+#   kw        ``true`` ``false`` ``null``, delimited
+#   op        a ``'``/``"`` singleton, else a run of regular chars
+#   bad       anything else: the REST of the searched range, so a
+#             findall stops there and ``endpos - len(bad)`` is its offset
+# The ``id gen R`` runs are possessive only for speed (no run could give
+# back a byte the next part accepts). The whitespace/comment prefix MUST
+# be possessive: a backtrackable one could shorten a %-comment and lex
+# phantom tokens out of the comment text when the next real token matches
+# no alternative. A last empty alternative matches at the end of the
+# range: trailing whitespace yields one all-empty tuple, never a rescan
+# per byte.
+TOKEN_RE = re.compile(
+    rb"[\x00\t\n\x0c\r\x20]*+(?:%[^\r\n]*[\x00\t\n\x0c\r\x20]*+)*+"
+    + rb"(?:(?P<rid>\d++)" + _REF_SEP + rb"+(?P<rgen>\d++)" + _REF_SEP
+    + b"+R(?!" + _REGULAR + b")"
+    + rb"""
+    | (?P<num>[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+))
+    | /(?P<name>[^\x00\t\n\x0c\r\x20()<>\[\]{}/%]+)
+    | (?P<punct><<|>>|\[|\])
+    | \((?P<sstr>[^()\\]+)\)
+    | <(?P<hstr>[0-9a-fA-F\x00\t\n\x0c\r\x20]+)>
+    | (?P<kw>true|false|null)(?![^\x00\t\n\x0c\r\x20()<>\[\]{}/%])
+    | (?P<op>['"]|[^\x00\t\n\x0c\r\x20()<>\[\]{}/%]+)
+    | (?P<bad>(?s:.+))
+    | \Z
+    )""",
+    re.X,
+)
 
 _STR_ESCAPES = {
     ord("n"): b"\n",
@@ -297,18 +335,12 @@ class ObjectParser:
         if 0x30 <= c <= 0x39:  # digit
             if self.content:
                 return self.parse_number()
-            m = _REF_OR_NUM_RE.match(buf, pos)
+            # the token table's ``id gen R``, else its number
+            m = TOKEN_RE.match(buf, pos)
             self.pos = m.end()
-            if m.group(1) is not None:
-                return Ref(int(m.group(1)), int(m.group(2)))
-            tok = m.group()
-            if b"." in tok:
-                return float(tok)
-            v = int(tok)
-            # reference clamps to i32 with overflow error (object.c:288-294)
-            if not (-2147483648 <= v <= 2147483647):
-                raise PdfError(INVALID_OBJECT, f"integer out of i32 range: {v}")
-            return v
+            if m.group("rid") is None:
+                return number_token(m.group("num"))
+            return Ref(int(m.group("rid")), int(m.group("rgen")))
         if c == 0x2F:  # /
             return self.parse_name()
         if c == 0x3C:  # <
@@ -340,14 +372,7 @@ class ObjectParser:
         if not m:
             raise PdfError(INVALID_OBJECT, "malformed number")
         self.pos = m.end()
-        tok = m.group()
-        if b"." in tok:
-            return float(tok)
-        v = int(tok)
-        # reference clamps to i32 with overflow error (object.c:288-294)
-        if not (-2147483648 <= v <= 2147483647):
-            raise PdfError(INVALID_OBJECT, f"integer out of i32 range: {v}")
-        return v
+        return number_token(m.group())
 
     def parse_indirect_object(self) -> IndirectObject:
         """``id gen obj <value> [stream] endobj`` at the current offset."""
@@ -360,15 +385,17 @@ class ObjectParser:
             raise PdfError(INVALID_OBJECT, "indirect object: malformed header")
         self.pos = m.end()
         value = self.parse_object()
-        self.skip_ws()
-        # endobj is optional-lenient in many real files; the reference expects
-        # it (object.c:905-916) — we require it too, but only when present the
-        # next token must be exactly `endobj`.
-        if self.buf.startswith(b"endobj", self.pos):
-            self.expect_keyword(b"endobj")
-        else:
-            raise PdfError(INVALID_OBJECT, "indirect object: missing endobj")
+        self.expect_endobj()
         return IndirectObject(int(m.group(1)), int(m.group(2)), value)
+
+    def expect_endobj(self) -> None:
+        """The ``endobj`` that closes an indirect object. Optional-lenient in
+        many real files; the reference expects it (object.c:905-916), and so
+        do we."""
+        self.skip_ws()
+        if not self.buf.startswith(b"endobj", self.pos):
+            raise PdfError(INVALID_OBJECT, "indirect object: missing endobj")
+        self.expect_keyword(b"endobj")
 
     # -- strings (object.c:348-467) --
 
@@ -481,20 +508,17 @@ class ObjectParser:
         self.expect(b"<<")
         out: dict = {}
         buf = self.buf
-        key_match = _DICT_KEY_RE.match
         while True:
-            # one match consumes ws/comments plus either the >> close or
-            # the next /key name (was skip_ws + startswith + peek + expect)
-            m = key_match(buf, self.pos)
-            if m is None:
-                self.skip_ws()
-                if self.pos >= len(buf):
-                    raise PdfError(INVALID_OBJECT, "unexpected EOF")
-                raise PdfError(INVALID_OBJECT, "dict key must be a name")
-            self.pos = m.end()
-            if m.group("close") is not None:
+            self.skip_ws()
+            pos = self.pos
+            if buf.startswith(b">>", pos):
+                self.pos = pos + 2
                 return out
-            key = decode_name_bytes(m.group("key"))
+            if pos >= len(buf):
+                raise PdfError(INVALID_OBJECT, "unexpected EOF")
+            if buf[pos] != 0x2F:  # /
+                raise PdfError(INVALID_OBJECT, "dict key must be a name")
+            key = self.parse_name()
             value = self.parse_object()
             # duplicate keys: FIRST wins (linear-scan lookup, object.c:929-945)
             if key not in out:
@@ -527,3 +551,173 @@ class ObjectParser:
         self.skip_ws()
         self.expect_keyword(b"endstream")
         return Stream(d, raw)
+
+
+# -- the table-driven scanner ---------------------------------------------------
+
+_UNSETTLED = object()
+KEYWORDS = {b"true": True, b"false": False, b"null": PDF_NULL}
+_NON_REGULAR = frozenset(WHITESPACE + DELIMITERS)
+# containers deeper than this go to ObjectParser, whose recursion decides
+# (a Python RecursionError past ~490 levels) exactly as before
+_SETTLE_DEPTH_MAX = 64
+# parsed number tokens by their bytes, for the scanners' hot loops
+NUM_CACHE: dict[bytes, Any] = {}
+
+
+def number_token(tok: bytes) -> Any:
+    """The int or float a ``num`` token spells, cached in ``NUM_CACHE``; an
+    int outside i32 raises, as the reference clamps (object.c:288-294)."""
+    if b"." in tok:
+        v = float(tok)
+    else:
+        v = int(tok)
+        if not -2147483648 <= v <= 2147483647:
+            raise PdfError(INVALID_OBJECT, f"integer out of i32 range: {v}")
+    if len(NUM_CACHE) < 4096:
+        NUM_CACHE[tok] = v
+    return v
+
+
+# interned refs, as names are: the same few ``id gen`` pairs recur in every
+# document of a batch (a Ref is never mutated); a hit skips two int()
+# parses and a Ref construction
+_REF_CACHE: dict[tuple, Ref] = {}
+
+
+def _settle(toks: list) -> Any:
+    """The one object that ``toks`` (``TOKEN_RE.findall`` tuples) spell,
+    built with an explicit container stack, or ``_UNSETTLED`` when they do
+    not spell exactly one object or hold a token only ``ObjectParser`` can
+    read (``op``/``bad``, i32 overflow, a non-name dict key, a stray
+    closer, deep nesting)."""
+    stack: list = []  # enclosing containers of ``cur`` (None = top level)
+    cur: Any = None  # innermost open container
+    in_dict = False  # ``cur`` is a dict
+    key = None  # its pending key
+    top: Any = _UNSETTLED
+    refs = _REF_CACHE.get
+    numbers = NUM_CACHE.get
+    for rid, rgen, num, name, punct, sstr, hstr, kw, op, bad in toks:
+        if name:
+            v = decode_name_bytes(name)
+            if in_dict and key is None:
+                key = v
+                continue
+        elif punct:
+            if punct == b"<<" or punct == b"[":
+                if len(stack) >= _SETTLE_DEPTH_MAX:
+                    return _UNSETTLED
+                v = {} if punct == b"<<" else []
+            else:  # a closer must match the innermost container
+                if punct == b">>":
+                    closes = in_dict and key is None
+                else:
+                    closes = type(cur) is list
+                if not closes:
+                    return _UNSETTLED
+                cur = stack.pop()
+                in_dict = type(cur) is dict
+                continue
+        elif rid:
+            v = refs((rid, rgen))
+            if v is None:
+                v = Ref(int(rid), int(rgen))
+                if len(_REF_CACHE) < 4096:
+                    _REF_CACHE[rid, rgen] = v
+        elif num:
+            v = numbers(num)
+            if v is None:
+                v = number_token(num)  # i32 overflow raises: unsettled
+        elif sstr:
+            v = sstr
+        elif hstr:
+            v = hex_body_to_bytes(hstr)
+        elif kw:
+            v = KEYWORDS[kw]
+        elif op or bad:
+            return _UNSETTLED
+        else:
+            continue  # the end-of-range match
+        if in_dict:
+            if key is None:
+                return _UNSETTLED  # dict key that is not a name
+            # duplicate keys: FIRST wins, as in ObjectParser.parse_dict
+            if key not in cur:
+                cur[key] = v
+            key = None
+        elif cur is not None:
+            cur.append(v)
+        elif top is _UNSETTLED:
+            top = v
+        else:
+            return _UNSETTLED  # a second top-level object
+        if punct:  # an opened container becomes the innermost
+            stack.append(cur)
+            cur = v
+            in_dict = punct == b"<<"
+    return _UNSETTLED if cur is not None else top
+
+
+def _scan(buf: bytes, start: int, stop: int) -> Any:
+    """The one object alone (but for whitespace) in ``buf[start:stop]``,
+    tokenized by one ``findall``, or ``_UNSETTLED``. A range holding a
+    ``%`` is left to ``ObjectParser`` (the stop keyword may sit in a
+    comment), as is a range whose last byte is regular (its token may run
+    on past ``stop``: ``/Fooendobj``)."""
+    if buf.find(b"%", start, stop) >= 0 or (
+        stop < len(buf) and buf[stop - 1] not in _NON_REGULAR
+    ):
+        return _UNSETTLED
+    try:
+        return _settle(TOKEN_RE.findall(buf, start, stop))
+    except PdfError:  # bad #xx escape, i32 overflow: ObjectParser raises it
+        return _UNSETTLED
+
+
+def parse_indirect_at(buf: bytes, offset: int, resolver=None) -> tuple:
+    """``(IndirectObject, end offset)`` for the ``id gen obj … endobj`` at
+    ``offset``, the same as ``ObjectParser.parse_indirect_object``.
+
+    The body is tokenized by one ``findall`` up to its ``endobj`` keyword,
+    or up to ``stream`` when a dict opens a stream; the stream itself (its
+    ``/Length`` may be an indirect ref) and the closing ``endobj`` are read
+    by ``ObjectParser``'s own code. Anything the table cannot settle
+    re-parses the object from ``offset`` with ``ObjectParser``."""
+    m = _INDOBJ_RE.match(buf, offset)
+    end = buf.find(b"endobj", m.end()) if m is not None else -1
+    if end >= 0:
+        kw = buf.find(b"stream", m.end(), end)
+        value = _scan(buf, m.end(), end if kw < 0 else kw)
+        if value is not _UNSETTLED:
+            ind = IndirectObject(int(m.group(1)), int(m.group(2)), value)
+            if kw < 0:
+                end += 6  # past ``endobj``, which must be delimited
+                if end == len(buf) or buf[end] in _NON_REGULAR:
+                    return ind, end
+            elif type(value) is dict:
+                p = ObjectParser(buf, kw, resolver)
+                ind.value = p._maybe_stream(value)
+                p.expect_endobj()
+                return ind, p.pos
+    p = ObjectParser(buf, offset, resolver)
+    return p.parse_indirect_object(), p.pos
+
+
+def parse_direct_at(buf: bytes, start: int, stop: int, resolver=None) -> Any:
+    """The direct object at ``start`` (an ObjStm member, a trailer dict),
+    the same as ``ObjectParser.parse_object``. ``stop`` bounds the one
+    ``findall`` (-1: unknown); only whitespace may follow the object
+    there, else ``ObjectParser`` re-parses from ``start``."""
+    if stop >= 0:
+        value = _scan(buf, start, stop)
+        if value is not _UNSETTLED:
+            if type(value) is not dict:
+                return value
+            # ObjectParser would read a ``stream`` after a dict
+            q = stop
+            if q < len(buf) and buf[q] in _WS_OR_PCT:
+                q = _WS_RE.match(buf, q).end()
+            if not buf.startswith(b"stream", q):
+                return value
+    return ObjectParser(buf, start, resolver).parse_object()

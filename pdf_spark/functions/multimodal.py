@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_spark.functions.tables import load, map_rows, register_views
+from pdf_spark.session import task_prologue
 
 QUERIES = {}
 ORACLE = {}
@@ -116,6 +117,7 @@ def _qm02(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task_prologue()
         pil, imaging._PIL = imaging._PIL, None
         try:
             for batch in batches:
@@ -423,6 +425,7 @@ def _qm05(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id", "text")
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task_prologue()
         pil, imaging._PIL = imaging._PIL, None
         try:
             for batch in batches:
@@ -1009,6 +1012,7 @@ def _qm15(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task_prologue()
         # force the pure decoder so the oracle pins OUR bit math even
         # where a PIL backend exists
         pil, imaging._PIL = imaging._PIL, None
@@ -1171,6 +1175,7 @@ def _qm17(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task_prologue()
         import hashlib
 
         pil, imaging._PIL = imaging._PIL, None
@@ -1264,6 +1269,7 @@ def _qm18(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task_prologue()
         pil, imaging._PIL = imaging._PIL, None
         try:
             for batch in batches:
@@ -1351,6 +1357,7 @@ def _qm19(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task_prologue()
         pil, imaging._PIL = imaging._PIL, None
         try:
             for batch in batches:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pdf_spark.functions.tables import load, register_views
+from pdf_spark.session import task_prologue
 
 QUERIES = {}
 ORACLE = {}
@@ -1346,6 +1347,7 @@ def _qr38(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     def add_rank(it):
+        task_prologue()
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()

@@ -114,6 +114,8 @@ def pages_from_documents(documents_df, id_col: str = "doc_id", text_col: str = "
         TimestampType,
     )
 
+    from pdf_spark.session import task_prologue
+
     schema = StructType(
         [
             StructField("url", StringType()),
@@ -125,6 +127,7 @@ def pages_from_documents(documents_df, id_col: str = "doc_id", text_col: str = "
     )
 
     def gen_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        task_prologue()
         for pdf_batch in batches:
             rows = [
                 make_row(int(i), t if isinstance(t, str) else "")

@@ -71,6 +71,10 @@ def spark_session(
     return builder.getOrCreate()
 
 
+# the task attempt whose prologue ran last in this worker process
+_prologue_attempt: int | None = None
+
+
 def task_prologue() -> None:
     """Run as the first statement of a Python UDF body (``extract_docs_text``,
     ``extract_spans`` and ``map_rows`` do).
@@ -87,10 +91,21 @@ def task_prologue() -> None:
     daemon collects after every task, so the heap at task start holds no
     garbage, and the executor-lifetime caches only grow, up to their caps.
 
-    A no-op outside a Spark task, so the driver's heap is never frozen.
+    Runs once per task attempt: a body Spark calls once per group
+    (``applyInPandasWithState``) returns at once on its later calls, since a
+    freeze there would move the earlier groups' garbage out of the
+    collector's reach for good. A no-op outside a Spark task, so the
+    driver's heap is never frozen.
     """
-    if TaskContext.get() is None:
+    global _prologue_attempt
+    ctx = TaskContext.get()
+    if ctx is None:
         return
+    # None: a context without an attempt id (not set by a worker); run
+    attempt = getattr(ctx, "_taskAttemptId", None)
+    if attempt is not None and attempt == _prologue_attempt:
+        return
+    _prologue_attempt = attempt
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             sys.path_importer_cache.pop(path, None)

@@ -278,7 +278,10 @@ def _flatten(files, max_record_bytes: int):
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from pdf_spark.session import task_prologue
+
     def parse(batches):
+        task_prologue()
         for batch in batches:
             rows = {k: [] for k in ("url", "warc_date", "html",
                                     "http_status", "mime")}

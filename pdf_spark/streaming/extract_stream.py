@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_spark.operators.extract import extract_docs_text
+from pdf_spark.session import task_prologue
 
 PAGES_SCHEMA = StructType(
     [
@@ -162,6 +163,7 @@ def stream_lang_running_stats(spark: SparkSession, pages_dir: str) -> DataFrame:
     def update(
         key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        task_prologue()
         n_docs, total_bytes = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n_docs += len(pdf)
@@ -252,6 +254,7 @@ def stream_neardup_minhash(
     def update(
         key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        task_prologue()
         if state.hasTimedOut:
             state.remove()
             return
@@ -456,6 +459,7 @@ def stream_host_budget(
     def admit(
         key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        task_prologue()
         (used,) = state.get if state.exists else (0,)
         for pdf in pdfs:
             room = cap - used

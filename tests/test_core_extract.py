@@ -829,16 +829,41 @@ class TestFontCache:
         fa, fb = self._font_of(a), self._font_of(b)
         assert fa is fb
 
-    def test_cheap_fonts_skip_cache(self):
-        # plain simple fonts rebuild faster than the canonical key walk,
-        # so they deliberately bypass the cache (fresh instance per doc)
+    def test_equal_flat_fonts_share_instance(self):
+        # a font dict of direct names/numbers/booleans is its own cache
+        # key: equal dicts across documents share one instance
         from pdf_spark.gen.pdfgen import generate_doc
 
         a = generate_doc("alpha one", 0)[0]
         b = generate_doc("beta two three", 0)[0]
-        fa, fb = self._font_of(a), self._font_of(b)
-        assert fa is not fb
-        assert fa.base_font == fb.base_font
+        assert self._font_of(a) is self._font_of(b)
+
+    def test_flat_font_key_is_exact(self):
+        # an int and an equal real, or another /BaseFont, never share
+        from pdf_spark.core.fonts import load_font
+        from pdf_spark.core.objects import Name
+
+        class Direct:
+            def get_dict(self, obj, what):
+                return obj
+
+            def resolve(self, obj):
+                return obj
+
+        def font(**extra):
+            d = {
+                Name("Type"): Name("Font"),
+                Name("Subtype"): Name("Type1"),
+                Name("BaseFont"): Name("Helvetica"),
+            }
+            d.update({Name(k): v for k, v in extra.items()})
+            return load_font(d, Direct())
+
+        assert font(FirstChar=1) is font(FirstChar=1)
+        assert font(FirstChar=1) is not font(FirstChar=1.0)
+        assert font(FirstChar=1) is not font(FirstChar=True)
+        assert font(FirstChar=1) is not font(FirstChar=1, BaseFont=Name("Courier"))
+        assert font(FirstChar=1, BaseFont=Name("Courier")).base_font == "Courier"
 
     def test_different_variant_fonts_do_not_collide(self):
         from pdf_spark.gen.pdfgen import N_VARIANTS, generate_doc

@@ -105,6 +105,67 @@ def test_freeze_count_plateaus_over_simulated_tasks():
     assert counts[1:] == [counts[1]] * 49, counts[:5]
 
 
+class _Node:
+    """A weak-referenceable object to build cyclic garbage from."""
+
+
+def test_prologue_runs_once_per_task_attempt(monkeypatch):
+    """A body Spark calls once per group (``applyInPandasWithState``) runs
+    the prologue on every call; only the first call of an attempt may
+    freeze, or the garbage of earlier groups would be frozen for good."""
+    import weakref
+
+    ctx = object.__new__(TaskContext)
+    ctx._taskAttemptId = 7
+    monkeypatch.setattr(TaskContext, "_taskContext", ctx)
+    task_prologue()
+    frozen = gc.get_freeze_count()
+    assert frozen > 0
+    node = _Node()
+    node.cycle = [node]
+    probe = weakref.ref(node)
+    del node
+    task_prologue()  # the next group of the same task attempt
+    assert gc.get_freeze_count() == frozen
+    gc.collect()
+    assert probe() is None
+    ctx._taskAttemptId = 8  # the worker's next task
+    task_prologue()
+    assert gc.get_freeze_count() >= frozen
+
+
+_SIMULATED_GROUPED_TASKS = """
+import gc, json
+from pyspark import TaskContext
+from pdf_spark.session import task_prologue
+counts = []
+for attempt in range(30):
+    ctx = object.__new__(TaskContext)
+    ctx._taskAttemptId = attempt
+    TaskContext._setTaskContext(ctx)
+    for _ in range(4):  # four groups of one grouped-state task
+        task_prologue()
+        node = {}
+        node["self"] = [node, {"peer": node}]
+        del node
+    TaskContext._setTaskContext(None)
+    gc.collect()  # the daemon's reuse loop, after every task
+    counts.append(gc.get_freeze_count())
+print(json.dumps(counts))
+"""
+
+
+def test_freeze_count_plateaus_over_grouped_tasks():
+    out = subprocess.run(
+        [sys.executable, "-c", _SIMULATED_GROUPED_TASKS],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=120, check=True,
+    )
+    counts = json.loads(out.stdout.splitlines()[-1])
+    assert counts[0] > 0
+    assert counts[1:] == [counts[1]] * 29, counts[:5]
+
+
 def test_prologue_outside_task_is_noop(zip_on_path):
     assert TaskContext.get() is None
     before = gc.get_freeze_count()
@@ -145,3 +206,58 @@ def test_map_rows_body_runs_prologue_in_worker(spark):
         out = map_rows(df, probe, schema).collect()
         assert len(out) == 8
         assert all(r["frozen"] > 0 and r["zips"] == 0 for r in out)
+
+
+_UDF_METHODS = ("mapInPandas", "mapInArrow")
+
+
+def _udf_bodies():
+    """(file, line, FunctionDef) of every function a module under
+    ``pdf_spark/`` passes to ``mapInPandas``/``mapInArrow``/
+    ``applyInPandas*``, resolved in the scope of the call (None when it
+    is not defined there)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdf_spark"
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        scopes = [tree] + [
+            n for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for scope in scopes:
+            defs = {
+                n.name: n for n in scope.body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            }
+            calls = [
+                n for stmt in scope.body for n in ast.walk(stmt)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and (n.func.attr in _UDF_METHODS or n.func.attr.startswith("applyInPandas"))
+            ]
+            for call in calls:
+                if not call.args:
+                    continue
+                fn = call.args[0]
+                assert isinstance(fn, ast.Name), (path.name, call.lineno)
+                yield path.name, call.lineno, defs.get(fn.id)
+
+
+def test_every_udf_body_opens_with_prologue():
+    import ast
+
+    bodies = {(f, line): d for f, line, d in _udf_bodies()}
+    files = {f for f, _ in bodies}
+    assert {"extract.py", "tables.py", "multimodal.py", "relational.py",
+            "corpus.py", "warc.py", "extract_stream.py"} <= files, files
+    for (f, line), fn in bodies.items():
+        assert fn is not None, f"{f}:{line}: UDF body not defined in the calling scope"
+        first = fn.body[0]
+        assert (
+            isinstance(first, ast.Expr)
+            and isinstance(first.value, ast.Call)
+            and isinstance(first.value.func, ast.Name)
+            and first.value.func.id == "task_prologue"
+        ), f"{f}:{line} passes {fn.name}, which does not open with task_prologue()"
