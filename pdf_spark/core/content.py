@@ -61,7 +61,6 @@ from pdf_spark.core.objects import (
     KEYWORDS,
     NUM_CACHE,
     TOKEN_RE,
-    WS_ATOM as _WS_ATOM,  # noqa: F401 — the table's whitespace atom
     ObjectParser,
     decode_name_bytes,
     hex_body_to_bytes,

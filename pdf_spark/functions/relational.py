@@ -447,8 +447,6 @@ def qr21(spark: SparkSession, sf: str) -> DataFrame:
        FROM events GROUP BY 1, 2""",
 )
 def qr22(spark: SparkSession, sf: str) -> DataFrame:
-    # batch twin of the structured-streaming aggregation
-    # (pdf_spark.streaming runs the same groupBy over readStream)
     return (
         load(spark, sf, "events")
         .groupBy(

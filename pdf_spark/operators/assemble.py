@@ -31,7 +31,7 @@ def assemble_docs_text(spans: DataFrame) -> DataFrame:
     PRECONDITION: ``url`` uniquely keys the pages table (the same contract
     resume/anti-join relies on). Duplicate urls would interleave two
     documents' spans into one garbled row here, while the fused path would
-    emit two rows — dedup upstream (qt01 / stream_dedup_exact) first."""
+    emit two rows — dedup upstream (qt01) first."""
     order = [
         F.col("page").asc(),
         F.col("col").asc(),

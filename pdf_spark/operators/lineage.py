@@ -1,10 +1,11 @@
 """Per-partition lineage/metrics + snapshot resume (north rule).
 
-- ``docs_text_with_lineage``: tags each extraction output row with its
+- ``tag_lineage_cols`` tags each input row at scan time with its
   ``spark_partition_id`` and the input file it came from
-  (``input_file_name``), then a JVM-side groupBy produces one lineage row
-  per (partition, input_file): doc counts, ok/err split, per-error-code
-  counts, min/max url as the offset-range analogue.
+  (``input_file_name``); both ride the extraction UDF as passthrough
+  columns. ``lineage_rows`` then groups the extracted rows into one
+  lineage row per (partition, input_file): doc counts, ok/err split,
+  per-error-code counts, min/max url as the offset-range analogue.
 
 - Resume: the sink is an append-only parquet directory keyed by ``url``.
   ``remaining_pages`` anti-joins the input against already-committed urls
@@ -34,13 +35,8 @@ def tag_lineage_cols(pages: DataFrame) -> DataFrame:
 def lineage_rows(docs_text: DataFrame, run_id: str) -> DataFrame:
     """docs_text (+ partition_id, input_file) -> lineage table rows
     (FIXTURES.md §7)."""
-    df = docs_text
-    if "partition_id" not in df.columns:
-        df = df.withColumn("partition_id", F.spark_partition_id())
-    if "input_file" not in df.columns:
-        df = df.withColumn("input_file", F.lit(""))
     per_code = (
-        df.where(F.col("status") == "error")
+        docs_text.where(F.col("status") == "error")
         .groupBy("partition_id", "input_file", "error_code")
         .count()
     )
@@ -49,7 +45,7 @@ def lineage_rows(docs_text: DataFrame, run_id: str) -> DataFrame:
             F.collect_list(F.struct("error_code", "count"))
         ).alias("error_codes")
     )
-    base = df.groupBy("partition_id", "input_file").agg(
+    base = docs_text.groupBy("partition_id", "input_file").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
         F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("n_err"),

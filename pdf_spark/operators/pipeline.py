@@ -7,7 +7,8 @@ Composition (SURVEY.md §2.5):
       -> mapInArrow extract (fused)         # narrow, no shuffle
       -> append parquet sink (docs_text/run_id=...)
       -> lineage aggregation over this run's partition only
-         -> parquet append (lineage)
+         -> parquet append (lineage); the summary counts are observed
+            over the lineage rows in that same write
 
 Resume: ``run_extraction`` anti-joins the input against already-committed
 urls before extracting, so a rerun after a partial failure only processes
@@ -18,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -116,16 +117,21 @@ def run_extraction(
         .where(F.col("run_id") == run_id)
         .drop("run_id")
     )
-    lin = lineage_rows(written, run_id)
+    # the summary counts are sums over the lineage rows, observed inside
+    # the lineage write: no second pass over this run's sink
+    summary = Observation()
+    lin = lineage_rows(written, run_id).observe(
+        summary,
+        F.coalesce(F.sum("n_ok"), F.lit(0)).alias("n_ok"),
+        F.coalesce(F.sum("n_err"), F.lit(0)).alias("n_err"),
+    )
     lin_path = os.path.join(out_dir, "lineage")
     lin.write.mode("append").parquet(lin_path)
-
-    agg = written.groupBy("status").count().collect()
-    counts = {r["status"]: r["count"] for r in agg}
+    counts = summary.get
     return {
         "run_id": run_id,
-        "n_ok": counts.get("ok", 0),
-        "n_err": counts.get("error", 0),
+        "n_ok": counts["n_ok"],
+        "n_err": counts["n_err"],
         "docs_path": docs_path,
         "lineage_path": lin_path,
     }

@@ -273,8 +273,15 @@ def _raw_schema():
     )
 
 
-def _flatten(files, max_record_bytes: int):
-    """content-column DataFrame (batch or streaming) -> pages columns."""
+def read_warc(spark, path: str, max_record_bytes: int = DEFAULT_MAX_RECORD):
+    """WARC files -> DataFrame(url, warc_ts timestamp, html binary,
+    http_status int, mime string).
+
+    One ``binaryFile`` row (= one archive) per task — gzip members are not
+    splittable, so the file is the parallelism unit exactly as in real
+    Common-Crawl consumption; record flattening happens task-side with no
+    shuffle. Column pruning applies upstream (binaryFile reads only
+    ``content``); everything downstream is the standard narrow pipeline."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -296,6 +303,7 @@ def _flatten(files, max_record_bytes: int):
                     rows["mime"].append(mime)
             yield pd.DataFrame(rows)
 
+    files = spark.read.format("binaryFile").load(path).select("content")
     out = files.mapInPandas(parse, _raw_schema())
     return out.select(
         "url",
@@ -304,52 +312,6 @@ def _flatten(files, max_record_bytes: int):
         "http_status",
         "mime",
     )
-
-
-def read_warc(spark, path: str, max_record_bytes: int = DEFAULT_MAX_RECORD):
-    """WARC files -> DataFrame(url, warc_ts timestamp, html binary,
-    http_status int, mime string).
-
-    One ``binaryFile`` row (= one archive) per task — gzip members are not
-    splittable, so the file is the parallelism unit exactly as in real
-    Common-Crawl consumption; record flattening happens task-side with no
-    shuffle. Column pruning applies upstream (binaryFile reads only
-    ``content``); everything downstream is the standard narrow pipeline."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-    return _flatten(files, max_record_bytes)
-
-
-def read_warc_stream(
-    spark, path: str, max_record_bytes: int = DEFAULT_MAX_RECORD
-):
-    """Streaming twin of ``read_warc``: new archive files landing under
-    ``path`` become pages micro-batches (Structured Streaming file
-    source; checkpointed file tracking gives exactly-once per archive —
-    the continuous-ingest shape of a live crawl)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    bf_schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(bf_schema)
-        .load(path)
-        .select("content")
-    )
-    return _flatten(files, max_record_bytes)
 
 
 # --- writer (tests / synthesis) -------------------------------------------------

@@ -154,7 +154,7 @@ def test_atomic_prefix_fallback_equivalent():
     is exercised here by building both patterns explicitly)."""
     import re
 
-    from pdf_spark.core.content import _WS_ATOM
+    from pdf_spark.core.objects import WS_ATOM as _WS_ATOM
 
     possessive = re.compile(
         b"(?:" + _WS_ATOM + b")*+" + rb"(?:(?P<num>\d+)|\((?P<s>[^()\\\\]*)\))"

@@ -68,259 +68,6 @@ def test_observed_metrics_match_batch_counts(spark, tmp_out):
     }
 
 
-def test_watermarked_window_plan(spark, tmp_out):
-    """The watermark + tumbling-window agg builds a valid streaming plan."""
-    import pandas as pd
-
-    from pdf_spark.streaming.extract_stream import stream_event_counts
-
-    pages_dir = os.path.join(tmp_out, "pages")
-    pdf = pd.DataFrame(rows_for_texts([f"doc {i}" for i in range(20)]))
-    spark.createDataFrame(pdf).write.parquet(pages_dir)
-    df = stream_event_counts(spark, pages_dir)
-    assert df.isStreaming
-    q = (
-        df.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # watermark append-mode emits only closed windows; plan ran without error
-    assert spark.table("win_counts").columns == ["start", "end", "lang", "n_docs"]
-
-
-def test_stateful_running_lang_stats_matches_batch(spark, tmp_path):
-    """applyInPandasWithState running totals must equal the batch groupBy
-    after the stream drains (availableNow)."""
-    from pyspark.sql import functions as F
-
-    from pdf_spark.gen.corpus import pages_from_documents
-    from pdf_spark.streaming.extract_stream import stream_lang_running_stats
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pages = pages_from_documents(docs)
-    pages_dir = str(tmp_path / "pages")
-    pages.repartition(6).write.mode("overwrite").parquet(pages_dir)
-
-    q = (
-        stream_lang_running_stats(spark, pages_dir)
-        .writeStream.format("memory")
-        .queryName("langstats_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        r["lang"]: (r["n_docs"], r["total_bytes"])
-        for r in spark.sql(
-            "select lang, max(n_docs) n_docs, max(total_bytes) total_bytes "
-            "from langstats_test group by lang"
-        ).collect()
-    }
-    exp = {
-        r["lang"]: (r["n"], r["b"])
-        for r in pages.groupBy("lang")
-        .agg(F.count("*").alias("n"), F.sum(F.length("html")).alias("b"))
-        .collect()
-    }
-    assert got == exp
-
-
-def test_stream_dedup_exact_drops_duplicates(spark, tmp_path):
-    """dropDuplicatesWithinWatermark on the content fingerprint: duplicate
-    payloads inside the horizon are emitted once; distinct payloads all
-    survive."""
-    import os
-
-    from pdf_spark.streaming.extract_stream import stream_dedup_exact
-
-    pages_dir = str(tmp_path / "pages")
-    # same text at different indexes yields different PDFs (variant
-    # differs), so build true duplicates by repeating whole rows 4x
-    base = rows_for_texts([f"dedup stream doc {i}" for i in range(10)])
-    dup_rows = []
-    for r in base:
-        for k in range(4):
-            r2 = dict(r)
-            r2["url"] = r["url"] + f"#{k}"  # distinct urls, same payload
-            dup_rows.append(r2)
-    spark.createDataFrame(pd.DataFrame(dup_rows)).write.parquet(pages_dir)
-
-    out = stream_dedup_exact(spark, pages_dir)
-    sink = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(sink)
-    assert got.count() == 10  # one survivor per distinct payload
-    assert got.select("fingerprint").distinct().count() == 10
-
-
-def test_stream_neardup_minhash(spark, tmp_path):
-    """Planted exact + near duplicates are flagged inside their LSH bucket;
-    distinct docs are not. The near pair (last word swapped) was verified
-    offline to share the band slice and 7/7 remaining slices >= threshold."""
-    import datetime as dt
-
-    from pdf_spark.streaming.extract_stream import stream_neardup_minhash
-
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    near = base.replace("upsilon", "phi")
-    distinct = [
-        f"wholly different document number {i} talking about substance {i * 7}"
-        for i in range(6)
-    ]
-    texts = [base, near, base] + distinct  # exact dup of base too
-    ts = dt.datetime(2026, 1, 1)
-    rows = [
-        dict(
-            url=f"https://x.org/{k}",
-            warc_ts=ts,
-            html=b"",
-            text=t,
-            lang="en",
-        )
-        for k, t in enumerate(texts)
-    ]
-    pages_dir = os.path.join(str(tmp_path), "pages")
-    spark.createDataFrame(pd.DataFrame(rows)).repartition(1).write.parquet(pages_dir)
-
-    df = stream_neardup_minhash(spark, pages_dir)
-    q = (
-        df.writeStream.format("memory")
-        .queryName("neardup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["url"]: r["is_dup"] for r in spark.table("neardup").collect()}
-    assert len(got) == len(texts)  # every doc emitted exactly once
-    family = [got[f"https://x.org/{k}"] for k in (0, 1, 2)]
-    assert sum(family) == 2, family  # first arrival clean, both dups flagged
-    for k in range(3, len(texts)):
-        assert got[f"https://x.org/{k}"] is False
-
-
-def test_stream_sessionize_gap_windows(spark, tmp_path):
-    """session_window sessionization: two bursts per lang separated by a
-    >30-min quiet gap must emit as separate sessions once the watermark
-    passes them (append mode emits closed sessions exactly once)."""
-    import datetime as dt
-
-    from pdf_spark.streaming.extract_stream import stream_sessionize
-
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = rows_for_texts([f"session doc {i}" for i in range(10)])
-    # lang alternates en/de per make_row; rebuild warc_ts into two bursts
-    # (0-4: minutes 0,2,4,6,8; 5-9: minutes 60,62,...) + a far sentinel
-    # row per lang that advances the watermark past burst 2 but stays
-    # open (and unemitted) itself.
-    for i, r in enumerate(rows):
-        burst, k = divmod(i, 5)
-        r["warc_ts"] = base + dt.timedelta(minutes=burst * 60 + 2 * k)
-    langs = {r["lang"] for r in rows}
-    sentinels = rows_for_texts(["sentinel"] * len(langs), start_index=100)
-    for r, lang in zip(sentinels, sorted(langs)):
-        r["lang"] = lang
-        r["warc_ts"] = base + dt.timedelta(days=2)
-    pages_dir = str(tmp_path / "pages")
-    pdf = pd.DataFrame(rows + sentinels)
-    spark.createDataFrame(pdf).write.parquet(pages_dir)
-
-    q = (
-        stream_sessionize(spark, pages_dir)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["lang"], r["start"], r["n_docs"])
-        for r in spark.table("sessions").collect()
-    }
-    # expected: per lang, the two bursts as separate sessions
-    expected = set()
-    by_lang = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append(r["warc_ts"])
-    for lang, tss in by_lang.items():
-        tss.sort()
-        sess = [[tss[0]]]
-        for ts in tss[1:]:
-            if (ts - sess[-1][-1]).total_seconds() > 1800:
-                sess.append([])
-            sess[-1].append(ts)
-        assert len(sess) == 2  # the fixture really does form two bursts
-        for s in sess:
-            expected.add((lang, s[0], len(s)))
-    assert got == expected
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """The stream-stream interval join must emit exactly the pairs the
-    equivalent batch join produces on the same data."""
-    import shutil
-
-    from pdf_spark.streaming.extract_stream import stream_interval_join
-
-    events_dir = str(tmp_path / "events")
-    shutil.copytree("/root/testdata/sf0.001", tmp_path / "src")
-    spark.read.parquet(str(tmp_path / "src" / "events.parquet")).repartition(
-        3
-    ).write.parquet(events_dir)
-
-    q = (
-        stream_interval_join(spark, events_dir)
-        .writeStream.format("memory")
-        .queryName("ssj")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["purchase_id"], r["user_id"], r["view_id"])
-        for r in spark.table("ssj").collect()
-    }
-
-    e = spark.read.parquet(events_dir)
-    v = e.where("event_type = 'view'").selectExpr(
-        "event_id AS view_id", "user_id AS v_user", "ts AS v_ts"
-    )
-    p = e.where("event_type = 'purchase'").selectExpr(
-        "event_id AS purchase_id", "user_id AS p_user", "ts AS p_ts"
-    )
-    batch = p.join(
-        v,
-        (p["p_user"] == v["v_user"])
-        & (v["v_ts"] <= p["p_ts"])
-        & (p["p_ts"] < v["v_ts"] + F.expr("INTERVAL 1 HOUR")),
-    )
-    expected = {
-        (r["purchase_id"], r["p_user"], r["view_id"])
-        for r in batch.collect()
-    }
-    assert got == expected and len(expected) > 0
-
-
 def test_foreachbatch_upsert_exactly_once(spark, tmp_path):
     """foreachBatch upsert sink: replayed batches are no-ops, restart
     from checkpoint adds nothing, totals match the batch pipeline."""
@@ -357,261 +104,3 @@ def test_foreachbatch_upsert_exactly_once(spark, tmp_path):
     q2 = stream_extract_upsert(spark, pages_dir, out_dir, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(*glob.glob(data_glob)).count() == len(texts)
-
-
-def test_stream_static_enrich_matches_batch(spark, tmp_path):
-    """Stream-static broadcast enrichment: drained stream output equals
-    the same join run in batch; unmatched langs fall to the defaults."""
-    from pdf_spark.streaming.extract_stream import stream_enrich_static
-
-    texts = [f"enrich doc {i} with content words" for i in range(30)]
-    pages_dir = os.path.join(str(tmp_path), "pages")
-    spark.createDataFrame(pd.DataFrame(rows_for_texts(texts))).repartition(
-        3
-    ).write.parquet(pages_dir)
-
-    dim = spark.createDataFrame(
-        [("en", 1.5, 10), ("de", 0.5, 5)],
-        "lang string, sample_weight double, min_chars int",
-    )
-    out = stream_enrich_static(spark, pages_dir, dim)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    streamed = spark.table("enriched")
-    batch = (
-        extract_docs_text(spark.read.parquet(pages_dir), passthrough=("lang",))
-        .join(F.broadcast(dim), "lang", "left")
-        .select(
-            "url",
-            "lang",
-            "status",
-            F.coalesce("sample_weight", F.lit(1.0)).alias("sample_weight"),
-            F.coalesce("min_chars", F.lit(0)).alias("min_chars"),
-            (F.length(F.coalesce("text", F.lit("")))
-             >= F.coalesce("min_chars", F.lit(0))).alias("passes_floor"),
-        )
-    )
-    diff = streamed.exceptAll(batch).count() + batch.exceptAll(streamed).count()
-    assert diff == 0
-    assert streamed.count() == len(texts)
-    # default branch actually exercised: some lang outside the dim table
-    assert streamed.filter("sample_weight = 1.0 AND min_chars = 0").count() > 0
-
-
-def test_stream_host_budget_lifetime_cap(spark, tmp_path):
-    """Per-host budget admits at most CAP docs per host across ALL
-    micro-batches, deterministically (url order), with audit ranks."""
-    from pdf_spark.gen.corpus import pages_from_documents
-    from pdf_spark.streaming.extract_stream import stream_host_budget
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pages = pages_from_documents(docs)
-    pages_dir = str(tmp_path / "pages")
-    pages.repartition(6).write.mode("overwrite").parquet(pages_dir)
-
-    cap = 3
-    q = (
-        stream_host_budget(spark, pages_dir, cap=cap)
-        .writeStream.format("memory")
-        .queryName("budget_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    rows = spark.sql("select * from budget_test").collect()
-    by_host: dict = {}
-    for r in rows:
-        by_host.setdefault(r["host"], []).append((r["budget_rank"], r["url"]))
-    from pyspark.sql import functions as F
-
-    totals = {
-        r["host"]: r["n"]
-        for r in pages.select(
-            F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host")
-        )
-        .groupBy("host")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert by_host, "stream produced no rows"
-    for host, pairs in by_host.items():
-        # never exceeds budget; ranks are exactly 1..k
-        assert len(pairs) == min(cap, totals[host])
-        assert sorted(p[0] for p in pairs) == list(range(1, len(pairs) + 1))
-
-
-def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
-    """End-to-end late-data contract: the window closes once (with the
-    pre-watermark state) and rows arriving after the watermark passed
-    are dropped — no re-emission, no count inflation."""
-    import os as _os
-    import shutil
-    from datetime import datetime
-
-    import pandas as pd
-
-    from pdf_spark.streaming.extract_stream import stream_late_counts
-
-    pages_dir = str(tmp_path / "pages")
-    _os.makedirs(pages_dir)
-
-    def _write_file(name: str, stamps: list, mtime: float) -> None:
-        pdf = pd.DataFrame(
-            {
-                "url": [f"https://ex.com/{name}/{i}" for i in range(len(stamps))],
-                "warc_ts": stamps,
-                "html": [b"<html>x</html>"] * len(stamps),
-                "text": ["x"] * len(stamps),
-                "lang": ["en"] * len(stamps),
-            }
-        )
-        staging = str(tmp_path / ("st_" + name))
-        spark.createDataFrame(pdf).repartition(1).write.parquet(staging)
-        part = [f for f in _os.listdir(staging) if f.endswith(".parquet")][0]
-        dst = _os.path.join(pages_dir, name + ".parquet")
-        shutil.copyfile(_os.path.join(staging, part), dst)
-        _os.utime(dst, (mtime, mtime))
-
-    base = 1700000000.0  # file mod-times order the micro-batches
-    d = datetime
-    # batch 1: three on-time rows in the 10:00 window
-    _write_file(
-        "b1",
-        [d(2024, 1, 1, 10, 5), d(2024, 1, 1, 10, 10), d(2024, 1, 1, 10, 15)],
-        base,
-    )
-    # batch 2: one row at 13:00 advances the eviction watermark to 12:50
-    _write_file("b2", [d(2024, 1, 1, 13, 0)], base + 100)
-    # batch 3: 13:05 row — by now the FILTER watermark has also passed
-    # 12:50 (this Spark's late-row filter applies the watermark one
-    # batch after eviction does), and the 10:00 window closes
-    _write_file("b3", [d(2024, 1, 1, 13, 5)], base + 200)
-    # batch 4: two LATE rows back in the 10:00 window -> must be dropped
-    _write_file(
-        "b4", [d(2024, 1, 1, 10, 20), d(2024, 1, 1, 10, 25)], base + 300
-    )
-
-    df = stream_late_counts(spark, pages_dir)
-    q = (
-        df.writeStream.format("memory")
-        .queryName("late_audit")
-        .outputMode("append")
-        .option(
-            "checkpointLocation", str(tmp_path / "ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.table("late_audit").collect()
-    # exactly ONE emission: the 10:00 window with the 3 on-time rows;
-    # the 13:00 window never closes (watermark never passes it) and the
-    # late rows neither re-open nor re-emit the closed window
-    assert len(rows) == 1, rows
-    assert rows[0]["start"] == d(2024, 1, 1, 10, 0)
-    assert rows[0]["n_docs"] == 3
-    # and the drop was an explicit watermark drop, not a lucky loss
-    # (the two late rows map-side partial-aggregate into ONE row for
-    # the 10:00 window before the stateful operator filters it, so the
-    # metric counts partials, not input rows)
-    dropped = sum(
-        op.get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-        for op in p["stateOperators"]
-    )
-    assert dropped >= 1, dropped
-
-
-def test_stream_interval_join_outer_unmatched_emission(spark, tmp_path):
-    """Left-outer stream-stream join: matched pairs emit on join; an
-    unmatched view emits exactly once, null-padded, only after the
-    GLOBAL watermark (min of both sides) closes its join window."""
-    import os as _os
-    import shutil
-    from datetime import datetime
-
-    import pandas as pd
-
-    from pdf_spark.streaming.extract_stream import stream_interval_join_outer
-
-    events_dir = str(tmp_path / "events")
-    _os.makedirs(events_dir)
-
-    def _write_file(name: str, rows: list, mtime: float) -> None:
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type"]
-        )
-        pdf["value"] = 1.0
-        pdf["props"] = "{}"
-        staging = str(tmp_path / ("st_" + name))
-        spark.createDataFrame(pdf).repartition(1).write.parquet(staging)
-        part = [f for f in _os.listdir(staging) if f.endswith(".parquet")][0]
-        dst = _os.path.join(events_dir, name + ".parquet")
-        shutil.copyfile(_os.path.join(staging, part), dst)
-        _os.utime(dst, (mtime, mtime))
-
-    d = datetime
-    base = 1700000000.0
-    # batch 1: two views — user 1 will convert, user 2 never will
-    _write_file(
-        "e1",
-        [
-            (100, d(2024, 1, 1, 10, 0), 1, "view"),
-            (101, d(2024, 1, 1, 10, 0), 2, "view"),
-        ],
-        base,
-    )
-    # batch 2: user 1 purchases inside the hour -> matched pair emits
-    _write_file("e2", [(200, d(2024, 1, 1, 10, 30), 1, "purchase")], base + 100)
-    # batch 3: advance BOTH side watermarks past 11:00 -> view 101's
-    # window closes -> null-padded emission
-    _write_file(
-        "e3",
-        [
-            (300, d(2024, 1, 1, 14, 0), 9, "view"),
-            (301, d(2024, 1, 1, 14, 0), 99, "purchase"),
-        ],
-        base + 200,
-    )
-    # batch 4: push the watermark past 15:00 so view 300 closes too
-    _write_file(
-        "e4",
-        [
-            (400, d(2024, 1, 1, 17, 0), 98, "view"),
-            (401, d(2024, 1, 1, 17, 0), 97, "purchase"),
-        ],
-        base + 300,
-    )
-
-    q = (
-        stream_interval_join_outer(spark, events_dir)
-        .writeStream.format("memory")
-        .queryName("ssj_outer")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    rows = {
-        r["view_id"]: (r["purchase_id"], r["unconverted"])
-        for r in spark.table("ssj_outer").collect()
-    }
-    # matched pair: exactly once, with the purchase id
-    assert rows.get(100) == (200, False), rows
-    # unmatched views: exactly once each, null-padded
-    assert rows.get(101) == (None, True), rows
-    assert rows.get(300) == (None, True), rows
-    # view 400's window never closes -> must NOT be emitted
-    assert 400 not in rows, rows
-    assert len(spark.table("ssj_outer").collect()) == 3

@@ -154,30 +154,6 @@ def test_fuzz_random_junk_never_raises():
         list(records_to_rows(b"\x1f\x8b" + data))
 
 
-def test_read_warc_stream(spark, tmp_path):
-    from pdf_spark.sources.warc import read_warc_stream
-
-    d = tmp_path / "stream_in"
-    d.mkdir()
-    (d / "a.warc.gz").write_bytes(write_warc(_recs()[:2]))
-    (d / "b.warc.gz").write_bytes(write_warc(_recs()[2:]))
-    stream = read_warc_stream(spark, str(d))
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("warc_stream_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM warc_stream_sink").collect()
-    assert sorted(r["url"] for r in rows) == [
-        f"https://a.example/{i}" for i in (1, 2, 3, 4)
-    ]
-    assert all(r["http_status"] == 200 for r in rows)
-
-
 def test_run_job_over_warc_archives(spark, tmp_path):
     """Deployment path end to end: raw WARC archives -> read_warc ->
     the full salted/resumable extraction pipeline -> docs_text sink."""
