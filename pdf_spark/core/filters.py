@@ -11,16 +11,15 @@ EarlyChange. Anything else (DCTDecode, …) raises UNSUPPORTED_FILTER (the
 reference panic class; we record the error-code row instead).
 
 EXTENSION beyond the reference: PNG predictors (DecodeParms /Predictor >= 10)
-are implemented vectorized with numpy — common in real-world Common-Crawl
-PDFs, absent from the parity corpus.
+are implemented — common in real-world Common-Crawl PDFs, absent from the
+parity corpus. ``png_unfilter`` is the one PNG row un-filter; the image
+tier's PNG decoder uses it too.
 """
 
 from __future__ import annotations
 
 import zlib
 from typing import Optional
-
-import numpy as np
 
 from pdf_spark.core.errors import (
     FILTER_ERROR,
@@ -279,50 +278,60 @@ def lzw_encode(data: bytes, early_change: int = 1) -> bytes:
     return bytes(out)
 
 
-def _png_unpredict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
-    """Reverse PNG row filters (predictor >= 10). Vectorized per-row."""
-    bpp = max(1, (colors * bpc) // 8)
-    rowlen = (columns * colors * bpc + 7) // 8
-    stride = rowlen + 1
-    nrows = len(data) // stride
-    if nrows == 0:
-        return data
-    raw = np.frombuffer(data[: nrows * stride], dtype=np.uint8).reshape(
-        nrows, stride
-    )
-    out = np.zeros((nrows, rowlen), dtype=np.uint8)
-    prior = np.zeros(rowlen, dtype=np.uint8)
-    for r in range(nrows):
-        ftype = raw[r, 0]
-        row = raw[r, 1:].astype(np.int32)
-        if ftype == 0:
-            cur = row
+def paeth(a: int, b: int, c: int) -> int:
+    p = a + b - c
+    pa = abs(p - a)
+    pb = abs(p - b)
+    pc = abs(p - c)
+    if pa <= pb and pa <= pc:
+        return a
+    if pb <= pc:
+        return b
+    return c
+
+
+def png_unfilter(raw: bytes, off: int, ph: int, stride: int,
+                 bpp: int) -> bytearray:
+    """Undo the five standard PNG row filters over ``ph`` rows of
+    ``stride`` bytes each (one leading filter-type byte per row) starting
+    at ``raw[off]``. ``bpp`` is the filter's byte distance to the left
+    neighbor (whole bytes; sub-byte depths use 1 per spec). Raises
+    ValueError on an unknown filter type."""
+    out = bytearray(stride * ph)
+    prev_start = -1
+    for y in range(ph):
+        src = off + (stride + 1) * y
+        ftype = raw[src]
+        row_src = src + 1
+        dst = stride * y
+        line = raw[row_src : row_src + stride]
+        if ftype == 0:  # None
+            out[dst : dst + stride] = line
         elif ftype == 1:  # Sub
-            cur = row.copy()
-            for i in range(bpp, rowlen):
-                cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
+            for i in range(stride):
+                left = out[dst + i - bpp] if i >= bpp else 0
+                out[dst + i] = (line[i] + left) & 0xFF
         elif ftype == 2:  # Up
-            cur = (row + prior) & 0xFF
+            if prev_start < 0:
+                out[dst : dst + stride] = line
+            else:
+                for i in range(stride):
+                    out[dst + i] = (line[i] + out[prev_start + i]) & 0xFF
         elif ftype == 3:  # Average
-            cur = row.copy()
-            for i in range(rowlen):
-                left = cur[i - bpp] if i >= bpp else 0
-                cur[i] = (cur[i] + ((left + int(prior[i])) >> 1)) & 0xFF
+            for i in range(stride):
+                left = out[dst + i - bpp] if i >= bpp else 0
+                up = out[prev_start + i] if prev_start >= 0 else 0
+                out[dst + i] = (line[i] + ((left + up) >> 1)) & 0xFF
         elif ftype == 4:  # Paeth
-            cur = row.copy()
-            for i in range(rowlen):
-                a = int(cur[i - bpp]) if i >= bpp else 0
-                b = int(prior[i])
-                c = int(prior[i - bpp]) if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                cur[i] = (cur[i] + pred) & 0xFF
+            for i in range(stride):
+                left = out[dst + i - bpp] if i >= bpp else 0
+                up = out[prev_start + i] if prev_start >= 0 else 0
+                ul = out[prev_start + i - bpp] if (prev_start >= 0 and i >= bpp) else 0
+                out[dst + i] = (line[i] + paeth(left, up, ul)) & 0xFF
         else:
-            raise PdfError(FILTER_ERROR, f"bad PNG row filter {ftype}")
-        out[r] = cur.astype(np.uint8)
-        prior = out[r]
-    return out.tobytes()
+            raise ValueError(f"filter type {ftype}")
+        prev_start = dst
+    return out
 
 
 def _apply_predictor(data: bytes, parms: Optional[dict]) -> bytes:
@@ -336,7 +345,19 @@ def _apply_predictor(data: bytes, parms: Optional[dict]) -> bytes:
     colors = parms.get("Colors", 1) or 1
     bpc = parms.get("BitsPerComponent", 8) or 8
     columns = parms.get("Columns", 1) or 1
-    return _png_unpredict(data, colors, bpc, columns)
+    rowlen = (columns * colors * bpc + 7) // 8
+    if rowlen < 0:
+        raise PdfError(FILTER_ERROR, f"PNG predictor row length {rowlen}")
+    # whole rows only: a partial trailing row is dropped
+    nrows = len(data) // (rowlen + 1)
+    if nrows == 0:
+        return data
+    try:
+        return bytes(
+            png_unfilter(data, 0, nrows, rowlen, max(1, (colors * bpc) // 8))
+        )
+    except ValueError as exc:
+        raise PdfError(FILTER_ERROR, f"bad PNG row {exc}") from None
 
 
 def decode_stream(stream_dict: dict, raw: bytes, resolver=None) -> bytes:

@@ -39,7 +39,7 @@ from pdf_spark.core.encodings import (
 )
 from pdf_spark.core.errors import INCORRECT_TYPE, UNSUPPORTED_FONT, PdfError
 from pdf_spark.core.cff import parse_cff_names
-from pdf_spark.core.objects import Name, Ref, Stream
+from pdf_spark.core.objects import Name, Stream
 from pdf_spark.core.sfnt import parse_sfnt_cmaps
 from pdf_spark.core.type1 import parse_type1_encoding
 
@@ -90,12 +90,11 @@ SIMPLE_SUBTYPES = ("Type1", "TrueType", "MMType1", "Type3")
 _ASCII_CID_ORDERINGS = frozenset({"Japan1", "GB1", "CNS1", "Korea1", "KR"})
 
 
-# Cached Fonts live for the executor process's lifetime (_FONT_CACHE), so
-# their lazily-filled tables need a bound: a shared CJK Type0 font hit by
-# millions of documents would otherwise accumulate the full 65,536-code
-# space (~tens of MB) per font, times up to _ASSET_CACHE_MAX fonts. Past
-# the cap, lookups still return correct values — they are just recomputed
-# instead of memoized (real text uses far fewer distinct codes).
+# A Font's lazily-filled tables need a bound: one long CJK document can
+# touch most of a Type0 font's 65,536-code space (~tens of MB per font,
+# and a document may carry many such fonts). Past the cap, lookups still
+# return correct values — they are just recomputed instead of memoized
+# (real text uses far fewer distinct codes).
 _LAZY_TABLE_MAX = 8192
 
 
@@ -471,71 +470,13 @@ def _load_descriptor(f: Font, fd, resolver) -> None:
                 f.sfnt = None
 
 
-_FONT_CACHE: dict[bytes | tuple, Font] = {}
-
-
-def _canon_key(obj, resolver, out: list, seen: frozenset, depth: int) -> bool:
-    """Serialize the RESOLVED value tree reachable from a font dict into a
-    canonical byte sequence, resolving indirect refs exactly as
-    ``load_font`` would. Returns False (no caching) on ref cycles, depth
-    caps, or unknown node types — the key must capture everything the
-    loader consumes, so anything unserializable disables the cache rather
-    than risking a false hit. Streams contribute their resolved dict plus
-    a digest of the raw bytes (raw + params determine the decoded form).
-
-    Every variable-length atom is LENGTH-PREFIXED so the serialization is
-    injective — sibling scalars must never be able to re-segment into a
-    different tree ([500,300,250] vs [50,0,300,250], or two names vs one
-    name containing a separator byte)."""
-    if depth > 12 or len(out) > 8192:
-        return False
-    if isinstance(obj, Ref):
-        rid = (obj.obj_id, obj.gen)
-        if rid in seen:
-            return False  # cycle: bail rather than embed doc-local ids
-        return _canon_key(
-            resolver.resolve(obj), resolver, out, seen | {rid}, depth + 1
-        )
-    if obj is None or isinstance(obj, bool):
-        out.append(b"n" if obj is None else (b"T" if obj else b"F"))
-        return True
-    if isinstance(obj, Name):  # before str/num: Name is a str subclass
-        enc = obj.encode("utf-8", "surrogateescape")
-        out.append(b"/%d:%s" % (len(enc), enc))
-        return True
-    if isinstance(obj, (int, float)):
-        r = repr(obj).encode("ascii")
-        out.append(b"#%d:%s" % (len(r), r))
-        return True
-    if isinstance(obj, bytes):
-        body = obj if len(obj) <= 64 else _digest(obj)
-        out.append(b"b%d,%d:%s" % (len(obj), len(body), body))
-        return True
-    if isinstance(obj, str):
-        enc = obj.encode("utf-8", "surrogateescape")
-        out.append(b"s%d:%s" % (len(enc), enc))
-        return True
-    if isinstance(obj, list):
-        out.append(b"[")
-        for v in obj:
-            if not _canon_key(v, resolver, out, seen, depth + 1):
-                return False
-        out.append(b"]")
-        return True
-    if isinstance(obj, Stream):
-        out.append(b"S%d:%s" % (len(obj.raw), _digest(obj.raw)))
-        obj = obj.dict  # fall through to dict canon of the params
-    if isinstance(obj, dict):
-        out.append(b"<")
-        for k in sorted(obj):
-            ke = str(k).encode("utf-8", "surrogateescape")
-            out.append(b"k%d:%s" % (len(ke), ke))
-            if not _canon_key(obj[k], resolver, out, seen, depth + 1):
-                return False
-        out.append(b">")
-        return True
-    return False
-
+# Executor-lifetime cache of the plain base-14 font: a FLAT font dict
+# (every value a direct name, number or boolean) is its own key, so equal
+# dicts across documents share one Font and its warm decode tables. Any
+# other font loads once per document (the interpreter's per-document
+# cache); its expensive parts (ToUnicode CMap, font program) are already
+# memoised on their bytes' digest.
+_FONT_CACHE: dict[tuple, Font] = {}
 
 _FLAT_TYPES = frozenset((Name, int, float, bool))
 
@@ -543,40 +484,19 @@ _FLAT_TYPES = frozenset((Name, int, float, bool))
 def load_font(font_obj, resolver) -> Font:
     """Deserialize a font dict (font.c:193-259 dispatch).
 
-    Executor-level cache: real corpora repeat identical font definitions
-    across millions of documents, and a loaded ``Font`` is immutable apart
-    from its lazily-filled decode tables — sharing one instance across
-    documents keeps those tables warm (the per-(doc, font) rebuild was
-    ~15% of per-doc CPU on 1 KB docs). Two keys, each naming everything
-    the loader reads:
-
-    - a FLAT dict (every value a direct name, number or boolean — the
-      plain base-14 font) is its own key, ``(key, type, value)`` per
-      entry, so ``1`` and ``1.0`` never share;
-    - a dict with an expensive part (ToUnicode CMap, CID descendant,
-      FontDescriptor program) keys on a canonical serialization of the
-      fully-RESOLVED tree; anything unserializable (cycles, depth) skips
-      the cache.
-
-    Any other dict (an indirect or array /Widths, an /Encoding dict) is
-    cheaper to rebuild than to key."""
-    key = None
+    A flat dict is served from ``_FONT_CACHE``, keyed by its exact
+    ``(key, type, value)`` entries so ``1`` and ``1.0`` never share; a
+    dict with any indirect or compound value is loaded fresh, and only
+    the objects the loader reads are resolved."""
     d = resolver.get_dict(font_obj, "font")
-    if all(type(v) in _FLAT_TYPES for v in d.values()):
-        key = tuple([(k, type(v), v) for k, v in d.items()])
-    else:
-        parts: list = []
-        if (
-            "ToUnicode" in d or "DescendantFonts" in d or "FontDescriptor" in d
-        ) and _canon_key(font_obj, resolver, parts, frozenset(), 0):
-            key = _digest(b"".join(parts))
-    if key is not None:
-        f = _FONT_CACHE.get(key)
-        if f is not None:
-            return f
-    f = _load_font_uncached(font_obj, resolver)
-    if key is not None and len(_FONT_CACHE) < _ASSET_CACHE_MAX:
-        _FONT_CACHE[key] = f
+    if not all(type(v) in _FLAT_TYPES for v in d.values()):
+        return _load_font_uncached(font_obj, resolver)
+    key = tuple([(k, type(v), v) for k, v in d.items()])
+    f = _FONT_CACHE.get(key)
+    if f is None:
+        f = _load_font_uncached(font_obj, resolver)
+        if len(_FONT_CACHE) < _ASSET_CACHE_MAX:
+            _FONT_CACHE[key] = f
     return f
 
 

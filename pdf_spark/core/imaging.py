@@ -1,16 +1,10 @@
 """Real image decode for the multimodal tier: PNG codec + feature math.
 
-Two pixel sources behind one interface (the E17 crypto pattern — native
-backend preferred, pure-Python fallback, shared math after the pixels):
-
-- **PIL**, when importable (not in this container): any format PIL reads.
-  PIL is used ONLY to reach raw RGB/L samples — every derived number
-  (luma, means, aHash) is computed by the shared integer arithmetic below,
-  so the two backends are parity-identical by construction.
-- **Pure-Python PNG** (stdlib zlib): 8-bit gray / gray+alpha / RGB / RGBA,
-  all five standard row filters, non-interlaced. Covers the PNG subset a
-  training-data pipeline synthesizes and most web PNGs; indexed-palette
-  and 16-bit depths raise ValueError (callers surface an error row).
+One pixel source: pure-stdlib decoders (PNG, GIF, JPEG, WebP-lossless,
+BMP, TIFF) feeding shared integer feature math (luma, means, aHash), so
+every derived number is pinned by this module's own arithmetic on any
+host. The PNG decoder (stdlib zlib) covers all five color types, bit
+depths 1-16, all five row filters and Adam7 interlacing.
 
 The synthetic ``IMG!`` fake from functions/multimodal.py stays as the
 SQL-oracle-checkable path; this module adds the real decode the round-3
@@ -27,6 +21,8 @@ import struct
 import zlib
 from typing import Optional
 
+from pdf_spark.core.filters import paeth, png_unfilter
+
 MAX_PIXELS = 64 * 1024 * 1024  # decoded samples cap (bytes, 8-bit)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -37,67 +33,6 @@ _PNG_DEPTHS = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
 # Adam7 pass grid: (x0, y0, dx, dy) per pass, spec order
 _ADAM7 = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
           (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-try:  # pragma: no cover — PIL absent in this container
-    import PIL.Image as _PIL  # type: ignore
-except ImportError:
-    _PIL = None
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa = abs(p - a)
-    pb = abs(p - b)
-    pc = abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
-def _png_unfilter(raw: bytes, off: int, ph: int, stride: int,
-                  bpp: int) -> bytearray:
-    """Undo the five standard row filters over ``ph`` rows of ``stride``
-    bytes each (one leading filter-type byte per row) starting at
-    ``raw[off]``. ``bpp`` is the filter's byte distance to the left
-    neighbor (whole bytes; sub-byte depths use 1 per spec)."""
-    out = bytearray(stride * ph)
-    prev_start = -1
-    for y in range(ph):
-        src = off + (stride + 1) * y
-        ftype = raw[src]
-        row_src = src + 1
-        dst = stride * y
-        line = raw[row_src : row_src + stride]
-        if ftype == 0:  # None
-            out[dst : dst + stride] = line
-        elif ftype == 1:  # Sub
-            for i in range(stride):
-                left = out[dst + i - bpp] if i >= bpp else 0
-                out[dst + i] = (line[i] + left) & 0xFF
-        elif ftype == 2:  # Up
-            if prev_start < 0:
-                out[dst : dst + stride] = line
-            else:
-                for i in range(stride):
-                    out[dst + i] = (line[i] + out[prev_start + i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = out[dst + i - bpp] if i >= bpp else 0
-                up = out[prev_start + i] if prev_start >= 0 else 0
-                out[dst + i] = (line[i] + ((left + up) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                left = out[dst + i - bpp] if i >= bpp else 0
-                up = out[prev_start + i] if prev_start >= 0 else 0
-                ul = out[prev_start + i - bpp] if (prev_start >= 0 and i >= bpp) else 0
-                out[dst + i] = (line[i] + _paeth(left, up, ul)) & 0xFF
-        else:
-            raise ValueError(f"filter type {ftype}")
-        prev_start = dst
-    return out
-
 
 def _png_row_samples(plane: bytearray, row: int, stride: int, count: int,
                      depth: int, scale: bool) -> list[int]:
@@ -196,7 +131,7 @@ def decode_png(blob: bytes) -> tuple[int, int, int, bytearray]:
     for (x0, y0, dx, dy), (pw, ph, stride) in zip(passes, dims):
         if not pw or not ph:
             continue
-        plane = _png_unfilter(raw, off, ph, stride, bpp)
+        plane = png_unfilter(raw, off, ph, stride, bpp)
         off += (stride + 1) * ph
         for py in range(ph):
             samples = _png_row_samples(
@@ -264,7 +199,7 @@ def encode_png(
             raw += bytes(
                 (
                     row[i]
-                    - _paeth(
+                    - paeth(
                         row[i - bpp] if i >= bpp else 0,
                         prev[i] if prev else 0,
                         (prev[i - bpp] if (prev and i >= bpp) else 0),
@@ -809,79 +744,11 @@ def _gif_lzw_decode(min_code: int, data: bytes, max_out: int) -> bytearray:
 
 
 def decode_gif(blob: bytes) -> tuple[int, int, int, bytearray]:
-    """GIF87a/89a first frame -> ``(width, height, 3, rgb_samples)``.
-
-    Global and local color tables, interlaced and sequential row order,
-    extension blocks skipped; animation frames past the first ignored
-    (feature extraction wants the poster frame). Transparency is not
-    composited — the palette RGB is emitted as-is."""
-    if blob[:4] != b"GIF8" or len(blob) < 13:
-        raise ValueError("not a GIF")
-    flags = blob[10]
-    pos = 13
-    global_pal = b""
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        global_pal = blob[pos : pos + 3 * n]
-        pos += 3 * n
-    n_blob = len(blob)
-    while pos < n_blob:
-        b0 = blob[pos]
-        if b0 == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < n_blob and blob[pos] != 0:
-                pos += 1 + blob[pos]
-            pos += 1
-        elif b0 == 0x2C:  # image descriptor
-            if pos + 10 > n_blob:
-                raise ValueError("truncated image descriptor")
-            w, h = struct.unpack_from("<HH", blob, pos + 5)
-            iflags = blob[pos + 9]
-            pos += 10
-            pal = global_pal
-            if iflags & 0x80:
-                n = 2 << (iflags & 0x07)
-                pal = blob[pos : pos + 3 * n]
-                pos += 3 * n
-            if w == 0 or h == 0 or w * h * 3 > MAX_PIXELS:
-                raise ValueError("image too large")
-            if not pal:
-                raise ValueError("no color table")
-            min_code = blob[pos]
-            pos += 1
-            lzw = bytearray()
-            while pos < n_blob and blob[pos] != 0:
-                ln = blob[pos]
-                lzw += blob[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            indices = _gif_lzw_decode(min_code, bytes(lzw), w * h)
-            if len(indices) < w * h:
-                raise ValueError("LZW underflow")
-            if iflags & 0x40:  # de-interlace: map stored order -> rows
-                order = [
-                    y
-                    for start, step in _GIF_INTERLACE_PASSES
-                    for y in range(start, h, step)
-                ]
-            else:
-                order = list(range(h))
-            npal = len(pal) // 3
-            out = bytearray(w * h * 3)
-            for stored, y in enumerate(order):
-                dst = y * w * 3
-                src = stored * w
-                for x in range(w):
-                    i = indices[src + x]
-                    if i >= npal:
-                        raise ValueError("palette index out of range")
-                    p = 3 * i
-                    out[dst : dst + 3] = pal[p : p + 3]
-                    dst += 3
-            return w, h, 3, out
-        elif b0 == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block {b0:#x}")
+    """GIF87a/89a first frame -> ``(width, height, 3, rgb_samples)``:
+    the poster frame of :func:`gif_frames` (feature extraction wants only
+    that one; blocks past it are never read)."""
+    for frame in gif_frames(blob):
+        return frame
     raise ValueError("no image data")
 
 
@@ -889,12 +756,11 @@ def gif_frames(blob: bytes):
     """Every frame of a GIF87a/89a -> yields ``(width, height, 3,
     rgb_samples)`` in stream order.
 
-    The multi-frame sibling of :func:`decode_gif` (which stops at the
-    poster frame): same LZW decode, local/global color tables and
-    de-interlacing per frame, extensions skipped. Frames are emitted
-    as standalone images (no disposal-method compositing — each
-    descriptor here is full-canvas, which is what the animation
-    writer emits)."""
+    Global and local color tables, interlaced and sequential row order,
+    extension blocks skipped. Transparency is not composited (the palette
+    RGB is emitted as-is) and frames are emitted as standalone images (no
+    disposal-method compositing: each descriptor here is full-canvas,
+    which is what the animation writer emits)."""
     if blob[:4] != b"GIF8" or len(blob) < 13:
         raise ValueError("not a GIF")
     flags = blob[10]
@@ -2877,22 +2743,9 @@ def encode_webp_lossless(
 
 
 def _pixels(blob: bytes) -> tuple[int, int, int, bytearray]:
-    """Raw samples via the preferred backend: PIL when importable, the
-    pure PNG/GIF/JPEG/WebP decoders otherwise. Raises ValueError when
-    none apply."""
-    if _PIL is not None:  # pragma: no cover — exercised where PIL exists
-        import io
-
-        with _PIL.open(io.BytesIO(blob)) as im:
-            mode = im.mode
-            if mode not in ("L", "LA", "RGB", "RGBA"):
-                im = im.convert("RGBA" if "A" in mode or "P" in mode else "RGB")
-                mode = im.mode
-            ch = {"L": 1, "LA": 2, "RGB": 3, "RGBA": 4}[mode]
-            w, h = im.size
-            if w * h * ch > MAX_PIXELS:
-                raise ValueError("image too large")
-            return w, h, ch, bytearray(im.tobytes())
+    """Raw samples from the pure PNG/GIF/JPEG/WebP/BMP/TIFF decoders,
+    picked by magic bytes (PNG otherwise). Raises ValueError when none
+    apply."""
     if blob[:4] == b"GIF8":
         return decode_gif(blob)
     if blob[:2] == b"\xff\xd8":

@@ -220,19 +220,12 @@ class Interpreter:
         (the typecheck the reference does in operation.c:515-806).
 
         The reclassification names the failing op so a genuine interpreter
-        bug is distinguishable from a document defect in the error detail,
-        and ``PDF_SPARK_DEBUG=1`` re-raises the original exception so test
-        runs surface real regressions instead of folding them into
-        INCORRECT_TYPE rows."""
+        bug is distinguishable from a document defect in the error detail."""
         try:
             self._exec_ops(ops, base_ctm, self.resources, depth=0)
         except PdfError:
             raise
         except (IndexError, ValueError, TypeError) as exc:
-            import os
-
-            if os.environ.get("PDF_SPARK_DEBUG"):
-                raise
             raise PdfError(
                 INCORRECT_TYPE,
                 f"operand mismatch at op {self._cur_op!r}: "

@@ -23,9 +23,6 @@ but the bytes each executor decodes are genuine container formats.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,7 +34,6 @@ from pyspark.sql.types import (
 )
 
 from pdf_spark.functions.tables import load, map_rows, register_views
-from pdf_spark.session import task_prologue
 
 QUERIES = {}
 ORACLE = {}
@@ -112,28 +108,13 @@ def _qm02_make_blob(doc_id: int) -> bytes:
 
 
 def _qm02(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
+    from pdf_spark.core.imaging import image_features
 
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_prologue()
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                yield pd.DataFrame(
-                    [
-                        _features_row(
-                            d, imaging.image_features(_qm02_make_blob(d))
-                        )
-                        for d in batch["doc_id"].tolist()
-                    ],
-                    columns=_FEATURES_SCHEMA.names,
-                )
-        finally:
-            imaging._PIL = pil
-
-    return docs.mapInPandas(featurize, _FEATURES_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_features_row(d, image_features(_qm02_make_blob(d)))],
+        _FEATURES_SCHEMA,
+    )
 
 
 QUERIES["qm02_image_features"] = _qm02
@@ -420,28 +401,11 @@ _QM05_BITS = " + ".join(
 
 
 def _qm05(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
-    docs = load(spark, sf, "documents").select("doc_id", "text")
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_prologue()
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": [int(d) for d in batch["doc_id"]],
-                        "phash": [
-                            _qm05_ahash(_qm05_make_png(t))
-                            for t in batch["text"]
-                        ],
-                    }
-                )
-        finally:
-            imaging._PIL = pil
-
-    hashes = docs.mapInPandas(hash_batches, _PHASH_SCHEMA)
+    hashes = map_rows(
+        load(spark, sf, "documents").select("doc_id", "text"),
+        lambda d, t: [{"doc_id": d, "phash": _qm05_ahash(_qm05_make_png(t))}],
+        _PHASH_SCHEMA,
+    )
     hashes.createOrReplaceTempView("qm05_hashes")
     return spark.sql(
         _QM05_MAIN.replace("{HASHES}", "qm05_hashes")
@@ -463,27 +427,16 @@ ORACLE["qm05_phash_neardup"] = (
 #
 # Upgrades the multimodal tier from "deterministic stand-in" to real decode:
 # each doc synthesizes a REAL PNG (inside the same mapInPandas loop a
-# production job would run its decoder in), and the pure-Python PNG codec —
-# or PIL, when importable; both feed identical integer math — decodes it
-# back. The PNG content is a pure function of doc_id, so DuckDB can state
+# production job would run its decoder in), and the pure-Python PNG codec
+# decodes it back. The PNG content is a pure function of doc_id, so DuckDB can state
 # the expected features arithmetically: the oracle checks the ENTIRE
 # encode->decode->featurize pipeline, filters included (the encoder cycles
 # all five PNG row filters).
 
-_PNG_FEATURES_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_channels", IntegerType()),
-        StructField("mean_luma", IntegerType()),
-    ]
-)
-
 
 def _features_row(doc_id: int, feats: tuple) -> dict:
     """(width, height, n_channels, mean_luma) from ``image_features``."""
-    return dict(zip(_PNG_FEATURES_SCHEMA.names, (doc_id, *feats)))
+    return dict(zip(_FEATURES_SCHEMA.names, (doc_id, *feats)))
 
 
 def _ahash_row(doc_id: int, blob: bytes) -> dict:
@@ -522,7 +475,7 @@ def _qm06(spark: SparkSession, sf: str) -> DataFrame:
     return map_rows(
         load(spark, sf, "documents").select("doc_id"),
         lambda d: [_features_row(d, image_features(_qm06_make_png(d)))],
-        _PNG_FEATURES_SCHEMA,
+        _FEATURES_SCHEMA,
     )
 
 
@@ -612,7 +565,7 @@ def _qm08(spark: SparkSession, sf: str) -> DataFrame:
     return map_rows(
         load(spark, sf, "documents").select("doc_id"),
         lambda d: [_features_row(d, image_features(_qm08_make_gif(d)))],
-        _PNG_FEATURES_SCHEMA,
+        _FEATURES_SCHEMA,
     )
 
 
@@ -782,7 +735,7 @@ def _qm11(spark: SparkSession, sf: str) -> DataFrame:
     return map_rows(
         load(spark, sf, "documents").select("doc_id"),
         lambda d: [_features_row(d, image_features(_qm11_make_jpeg(d)))],
-        _PNG_FEATURES_SCHEMA,
+        _FEATURES_SCHEMA,
     )
 
 
@@ -1007,28 +960,11 @@ def _qm15_make_webp(doc_id: int) -> bytes:
 
 
 def _qm15(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_prologue()
-        # force the pure decoder so the oracle pins OUR bit math even
-        # where a PIL backend exists
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                yield pd.DataFrame(
-                    [
-                        _palette_row(d, _qm15_make_webp(d))
-                        for d in batch["doc_id"].tolist()
-                    ],
-                    columns=_PALETTE_SCHEMA.names,
-                )
-        finally:
-            imaging._PIL = pil
-
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_palette_row(d, _qm15_make_webp(d))],
+        _PALETTE_SCHEMA,
+    )
 
 
 QUERIES["qm15_webp_lossless_features"] = _qm15
@@ -1161,6 +1097,8 @@ def _qm17_make_blob(doc_id: int) -> bytes:
 
 
 def _qm17(spark: SparkSession, sf: str) -> DataFrame:
+    import hashlib
+
     from pyspark.sql.window import Window
 
     from pdf_spark.core import imaging
@@ -1174,31 +1112,13 @@ def _qm17(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_prologue()
-        import hashlib
+    def luma_md5(d: int) -> list:
+        w, h, ch, s = imaging._pixels(_qm17_make_blob(d))
+        rows = imaging._luma_rows(w, h, ch, s)
+        digest = hashlib.md5(b"".join(bytes(r) for r in rows)).hexdigest()
+        return [{"doc_id": d, "luma_md5": digest, "fmt": d % 2}]
 
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                ids = [int(d) for d in batch["doc_id"]]
-                digests = []
-                for i in ids:
-                    w, h, ch, s = imaging._pixels(_qm17_make_blob(i))
-                    rows = imaging._luma_rows(w, h, ch, s)
-                    digests.append(
-                        hashlib.md5(
-                            b"".join(bytes(r) for r in rows)
-                        ).hexdigest()
-                    )
-                yield pd.DataFrame(
-                    {"doc_id": ids, "luma_md5": digests,
-                     "fmt": [i % 2 for i in ids]}
-                )
-        finally:
-            imaging._PIL = pil
-
-    lifted = docs.mapInPandas(run, schema)
+    lifted = map_rows(docs, luma_md5, schema)
     win = Window.partitionBy("luma_md5")
     return lifted.select(
         "doc_id",
@@ -1264,26 +1184,11 @@ def _qm18_make_bmp(doc_id: int) -> bytes:
 
 
 def _qm18(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_prologue()
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                yield pd.DataFrame(
-                    [
-                        _palette_row(d, _qm18_make_bmp(d))
-                        for d in batch["doc_id"].tolist()
-                    ],
-                    columns=_PALETTE_SCHEMA.names,
-                )
-        finally:
-            imaging._PIL = pil
-
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_palette_row(d, _qm18_make_bmp(d))],
+        _PALETTE_SCHEMA,
+    )
 
 
 QUERIES["qm18_bmp_features"] = _qm18
@@ -1352,26 +1257,11 @@ def _qm19_make_tiff(doc_id: int) -> bytes:
 
 
 def _qm19(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        task_prologue()
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                yield pd.DataFrame(
-                    [
-                        _palette_row(d, _qm19_make_tiff(d))
-                        for d in batch["doc_id"].tolist()
-                    ],
-                    columns=_PALETTE_SCHEMA.names,
-                )
-        finally:
-            imaging._PIL = pil
-
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_rows(
+        load(spark, sf, "documents").select("doc_id"),
+        lambda d: [_palette_row(d, _qm19_make_tiff(d))],
+        _PALETTE_SCHEMA,
+    )
 
 
 QUERIES["qm19_tiff_features"] = _qm19

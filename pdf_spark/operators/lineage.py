@@ -72,7 +72,14 @@ def lineage_rows(docs_text: DataFrame, run_id: str) -> DataFrame:
 
 
 def committed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The sink's committed urls, or None before its first commit. The
+    path is checked through the session's Hadoop FileSystem first, so a
+    first run does not log a PATH_NOT_FOUND stack trace; the ``except``
+    covers a sink directory that holds no parquet files yet."""
     path = os.path.join(out_dir, "docs_text")
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
+        return None
     try:
         return spark.read.parquet(path).select("url")
     except Exception:

@@ -33,24 +33,6 @@ from pdf_spark.operators.lineage import (
 from pdf_spark.operators.partitioning import prepare_pages
 
 
-def _migrate_legacy_sink(docs_path: str) -> None:
-    """A sink written before the run_id partitioning holds flat parquet
-    files at the base path; mixing those with run_id=... subdirectories
-    makes Spark reject the whole directory ('conflicting directory
-    structures'). Move legacy files under run_id=legacy once — their rows
-    then read back with run_id='legacy' (the partition column is derived
-    from the directory, so the old schema needs no rewrite)."""
-    import glob
-
-    legacy = glob.glob(os.path.join(docs_path, "*.parquet"))
-    if not legacy:
-        return
-    legacy_dir = os.path.join(docs_path, "run_id=legacy")
-    os.makedirs(legacy_dir, exist_ok=True)
-    for f in legacy:
-        os.replace(f, os.path.join(legacy_dir, os.path.basename(f)))
-
-
 def run_extraction(
     spark: SparkSession,
     pages: DataFrame,
@@ -76,9 +58,6 @@ def run_extraction(
     """
     run_id = run_id or new_run_id()
     docs_path = os.path.join(out_dir, "docs_text")
-    # migrate BEFORE the resume anti-join plans its scan — the lazy read
-    # would otherwise list the flat files and lose them mid-execution
-    _migrate_legacy_sink(docs_path)
     # lineage columns are captured AT SCAN TIME, before the anti-join or
     # the salted repartition: input_file_name() only resolves over a
     # single file source (a resume plan joins two parquet relations —

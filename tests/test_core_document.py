@@ -152,6 +152,60 @@ class TestFilters:
         )
         assert not _has_identity_crypt_filter({})
 
+    @staticmethod
+    def _png_unfilter_ref(data: bytes, rowlen: int, bpp: int) -> bytes:
+        """Textbook PNG row un-filter (RFC 2083 §6), whole rows only."""
+        out, prev = bytearray(), bytes(rowlen)
+        for r in range(len(data) // (rowlen + 1)):
+            ft, *row = data[r * (rowlen + 1) : (r + 1) * (rowlen + 1)]
+            cur = bytearray()
+            for i, x in enumerate(row):
+                a, b = cur[i - bpp] if i >= bpp else 0, prev[i]
+                c = prev[i - bpp] if i >= bpp else 0
+                p = a + b - c
+                paeth = min((abs(p - a), 0, a), (abs(p - b), 1, b), (abs(p - c), 2, c))
+                cur.append((x + (0, a, b, (a + b) // 2, paeth[2])[ft]) & 0xFF)
+            out += cur
+            prev = cur
+        return bytes(out)
+
+    @pytest.mark.parametrize("ftype", range(5))
+    @pytest.mark.parametrize("bpc", [1, 8, 16])
+    @pytest.mark.parametrize("nrows,partial", [(6, False), (6, True), (0, True)])
+    def test_png_predictor_matches_reference(self, ftype, bpc, nrows, partial):
+        import random
+
+        colors, columns = 3, 5
+        rowlen = (colors * bpc * columns + 7) // 8
+        rng = random.Random(ftype * 100 + bpc)
+        # rows cycle through all five filter types, starting at ``ftype``;
+        # a partial trailing row is one byte short of a whole row. Small
+        # sample values make Paeth ties common.
+        def row(n: int) -> bytes:
+            return bytes(rng.randrange(3) for _ in range(n))
+
+        data = b"".join(
+            bytes([(ftype + r) % 5]) + row(rowlen) for r in range(nrows)
+        ) + row(rowlen if partial else 0)
+        parms = {"Predictor": 12, "Colors": colors,
+                 "BitsPerComponent": bpc, "Columns": columns}
+        got = decode_stream(
+            {"Filter": "FlateDecode", "DecodeParms": parms}, zlib.compress(data)
+        )
+        bpp = max(1, colors * bpc // 8)
+        assert got == (self._png_unfilter_ref(data, rowlen, bpp) if nrows else data)
+
+    @pytest.mark.parametrize("columns", [2, -16])
+    def test_png_predictor_bad_row_filter_or_columns(self, columns):
+        # an unknown row filter byte (5), or a negative row length
+        parms = {"Predictor": 12, "Columns": columns}
+        with pytest.raises(PdfError) as e:
+            decode_stream(
+                {"Filter": "FlateDecode", "DecodeParms": parms},
+                zlib.compress(b"\x00ab\x05cd"),
+            )
+        assert e.value.code == "FILTER_ERROR"
+
 
 class TestResolverOnFixture:
     def test_resolver_walks_test_pdf(self):

@@ -1,6 +1,6 @@
 """Real image decode (core/imaging.py): PNG codec roundtrip, feature/aHash
-integer math, bomb guards, and PIL backend parity (skipped when PIL is
-absent — the pure decoder is the fallback backend either way)."""
+integer math, bomb guards, and PNG sample parity with Pillow (skipped
+when Pillow is absent)."""
 
 import random
 
@@ -131,26 +131,26 @@ class TestFeatures:
 
 @pytest.mark.skipif(
     pytest.importorskip("importlib").util.find_spec("PIL") is None,
-    reason="PIL not installed (pure-Python PNG backend is the fallback)",
+    reason="Pillow not installed",
 )
 class TestPilParity:
-    def test_backend_parity_on_png(self):
-        """When PIL is importable it becomes the pixel source; every
-        derived number must match the pure decoder bit-for-bit (shared
-        integer math after the pixels)."""
-        from pdf_spark.core import imaging
+    def test_decode_png_matches_pillow(self):
+        """The pure PNG decoder's samples equal Pillow's, byte for byte,
+        under every row filter (gray and RGB)."""
+        import io
 
-        samples = bytearray(
-            ((x * 3 + y * 5) % 256) for y in range(16) for x in range(16)
-        )
-        png = encode_png(16, 16, 1, samples, "cycle")
-        via_pil = imaging.image_features(png)
-        pil_backend, imaging._PIL = imaging._PIL, None
-        try:
-            via_pure = imaging.image_features(png)
-        finally:
-            imaging._PIL = pil_backend
-        assert via_pil == via_pure
+        from PIL import Image
+
+        for ch, mode in ((1, "L"), (3, "RGB")):
+            samples = bytearray(
+                ((x * 3 + y * 5 + c * 7) % 256)
+                for y in range(16) for x in range(16) for c in range(ch)
+            )
+            png = encode_png(16, 16, ch, samples, "cycle")
+            with Image.open(io.BytesIO(png)) as im:
+                assert im.mode == mode
+                want = im.tobytes()
+            assert decode_png(png) == (16, 16, ch, bytearray(want))
 
 
 class TestGif:
@@ -743,12 +743,8 @@ class TestWebpLossless:
             16, 16, 1,
             [200 if x < 8 else 10 for _y in range(16) for x in range(16)],
         )
-        pil_backend, imaging._PIL = imaging._PIL, None
-        try:
-            assert imaging.image_features(blob) == (16, 16, 3, 105)
-            assert imaging.average_hash(blob) == 0xF0F0F0F0F0F0F0F0
-        finally:
-            imaging._PIL = pil_backend
+        assert imaging.image_features(blob) == (16, 16, 3, 105)
+        assert imaging.average_hash(blob) == 0xF0F0F0F0F0F0F0F0
 
 
 class TestBmp:
@@ -913,14 +909,10 @@ class TestTiff:
         px = bytes([10] * 32 + [250] * 32)  # 8x8 two-tone top/bottom
         blob = imaging.encode_tiff(8, 8, 1, px, compression="lzw",
                                    predictor=True)
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            w, h, ch, out = imaging._pixels(blob)
-            assert (w, h, ch) == (8, 8, 1) and bytes(out) == px
-            assert imaging.features_from_samples(w, h, ch, out) == 130
-            assert imaging.average_hash(blob) == 0x00000000FFFFFFFF
-        finally:
-            imaging._PIL = pil
+        w, h, ch, out = imaging._pixels(blob)
+        assert (w, h, ch) == (8, 8, 1) and bytes(out) == px
+        assert imaging.features_from_samples(w, h, ch, out) == 130
+        assert imaging.average_hash(blob) == 0x00000000FFFFFFFF
 
 
 class TestExif:

@@ -82,11 +82,7 @@ def _decode(kind: str, blob: bytes) -> None:
         if kind == "wav":
             decode_wav(blob)
         else:
-            pil, imaging._PIL = imaging._PIL, None
-            try:
-                imaging._pixels(blob)
-            finally:
-                imaging._PIL = pil
+            imaging._pixels(blob)
     finally:
         signal.alarm(0)
         signal.signal(signal.SIGALRM, old)

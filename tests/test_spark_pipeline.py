@@ -118,25 +118,14 @@ def test_fixture_rows_ride_along(pages):
     assert all(r["text"] == "Hello World!" for r in got)
 
 
-def test_legacy_flat_sink_migrates(spark, pages, tmp_path):
-    """A docs_text sink written before run_id partitioning (flat parquet
-    files at the base path) must keep working: files are moved under
-    run_id=legacy and resume sees their urls as committed."""
-    import os
+def test_committed_urls_before_first_commit(spark, tmp_path):
+    """No sink directory, or one without parquet files: nothing is
+    committed yet."""
+    from pdf_spark.operators.lineage import committed_urls
 
-    out = str(tmp_path / "legacy_out")
-    docs_path = os.path.join(out, "docs_text")
-    # simulate the old layout: flat write of extraction output
-    extract_docs_text(pages).write.parquet(docs_path)
-    n = spark.read.parquet(docs_path).count()
-
-    m = run_extraction(spark, pages, out)
-    # every url was already committed -> the resumed run extracts nothing
-    assert m["n_ok"] + m["n_err"] == 0
-    merged = spark.read.parquet(docs_path)
-    assert merged.count() == n
-    assert "run_id" in merged.columns
-    assert merged.where(F.col("run_id") == "legacy").count() == n
+    assert committed_urls(spark, str(tmp_path / "fresh")) is None
+    (tmp_path / "empty" / "docs_text").mkdir(parents=True)
+    assert committed_urls(spark, str(tmp_path / "empty")) is None
 
 
 def test_resume_with_parquet_pages(spark, pages, tmp_path):

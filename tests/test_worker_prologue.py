@@ -250,8 +250,8 @@ def test_every_udf_body_opens_with_prologue():
 
     bodies = {(f, line): d for f, line, d in _udf_bodies()}
     files = {f for f, _ in bodies}
-    assert {"extract.py", "tables.py", "multimodal.py", "relational.py",
-            "corpus.py", "warc.py"} <= files, files
+    assert {"extract.py", "tables.py", "relational.py", "corpus.py",
+            "warc.py"} <= files, files
     for (f, line), fn in bodies.items():
         assert fn is not None, f"{f}:{line}: UDF body not defined in the calling scope"
         first = fn.body[0]
