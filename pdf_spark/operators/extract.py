@@ -40,6 +40,7 @@ from pdf_spark.core.extract import (
     assemble_text,
     extract_document,
 )
+from pdf_spark.operators.lineage import batch_tally
 from pdf_spark.session import task_prologue
 
 DOCS_TEXT_SCHEMA = StructType(
@@ -75,11 +76,18 @@ def extract_docs_text(
     max_bytes: int = DEFAULT_MAX_BYTES,
     passthrough: tuple[str, ...] = (),
     markdown: bool = False,
+    *,
+    tally=None,
 ) -> DataFrame:
     """pages(url, html, ...) -> docs_text — fused, shuffle-free.
 
     ``passthrough`` names string columns copied verbatim from input to
     output (e.g. ``input_file`` for lineage) without a post-UDF join.
+
+    ``tally`` is ``run_extraction``'s internal lineage accumulator (a
+    ``lineage.Tally``); ``passthrough`` must then carry
+    ``partition_id`` and ``input_file``. Each batch adds its
+    ``lineage.batch_tally``.
 
     ``markdown=True`` adds an ``md`` column (``assemble_markdown`` over
     the same spans — assembly-only cost, the parse is not repeated):
@@ -140,6 +148,12 @@ def extract_docs_text(
                 nsp.append(len(r.spans))
                 if markdown:
                     mds.append(assemble_markdown(r.spans) if r.ok else None)
+            if tally is not None:
+                tally.add(batch_tally(
+                    batch.column(names.index("partition_id")).to_pylist(),
+                    batch.column(names.index("input_file")).to_pylist(),
+                    urls.to_pylist(), stats, codes,
+                ))
             arrays = [
                 urls,
                 pa.array(texts, pa.string()),

@@ -3,9 +3,16 @@
 - ``tag_lineage_cols`` tags each input row at scan time with its
   ``spark_partition_id`` and the input file it came from
   (``input_file_name``); both ride the extraction UDF as passthrough
-  columns. ``lineage_rows`` then groups the extracted rows into one
-  lineage row per (partition, input_file): doc counts, ok/err split,
-  per-error-code counts, min/max url as the offset-range analogue.
+  columns.
+
+- Lineage is tallied by the writer, as it writes: the extraction UDF adds
+  one ``batch_tally`` per Arrow batch to a ``Tally`` accumulator, keyed
+  ``(partition_id, input_file, status, error_code)`` and holding
+  ``[count, min url, max url]``. ``lineage_table`` folds that tally on
+  the driver into one lineage row per (partition, input_file) (FIXTURES.md
+  §7): doc counts, ok/err split, per-error-code counts and min..max url as
+  the offset-range analogue. There are O(files) rows, so the fold needs no
+  join and nothing re-reads the sink.
 
 - Resume: the sink is an append-only parquet directory keyed by ``url``.
   ``remaining_pages`` anti-joins the input against already-committed urls
@@ -21,8 +28,25 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+LINEAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType()),
+        T.StructField("partition_id", T.StringType()),
+        T.StructField("input_file", T.StringType()),
+        T.StructField("offset_range", T.StringType()),
+        T.StructField("n_docs", T.LongType()),
+        T.StructField("n_ok", T.LongType()),
+        T.StructField("n_err", T.LongType()),
+        T.StructField("error_codes", T.MapType(T.StringType(), T.LongType())),
+    ]
+)
 
 
 def tag_lineage_cols(pages: DataFrame) -> DataFrame:
@@ -32,43 +56,71 @@ def tag_lineage_cols(pages: DataFrame) -> DataFrame:
     )
 
 
-def lineage_rows(docs_text: DataFrame, run_id: str) -> DataFrame:
-    """docs_text (+ partition_id, input_file) -> lineage table rows
-    (FIXTURES.md §7)."""
-    per_code = (
-        docs_text.where(F.col("status") == "error")
-        .groupBy("partition_id", "input_file", "error_code")
-        .count()
-    )
-    codes_map = per_code.groupBy("partition_id", "input_file").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("error_code", "count"))
-        ).alias("error_codes")
-    )
-    base = docs_text.groupBy("partition_id", "input_file").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
-        F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("n_err"),
-        F.min("url").alias("first_url"),
-        F.max("url").alias("last_url"),
-    )
-    return (
-        base.join(codes_map, ["partition_id", "input_file"], "left")
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn(
-            "offset_range", F.concat_ws("..", "first_url", "last_url")
-        )
-        .select(
-            "run_id",
-            "partition_id",
-            "input_file",
-            "offset_range",
-            "n_docs",
-            "n_ok",
-            "n_err",
-            "error_codes",
-        )
-    )
+def _merge(tally: dict, key, n: int, lo, hi) -> None:
+    """Add ``n`` docs whose urls span ``lo..hi`` to ``tally[key]``; a null
+    url is counted but never a bound, as Spark's ``min``/``max`` skip
+    nulls."""
+    cur = tally.get(key)
+    if cur is None:
+        tally[key] = [n, lo, hi]
+        return
+    cur[0] += n
+    if lo is not None and (cur[1] is None or lo < cur[1]):
+        cur[1] = lo
+    if hi is not None and (cur[2] is None or hi > cur[2]):
+        cur[2] = hi
+
+
+class Tally(AccumulatorParam):
+    """``{(partition_id, input_file, status, error_code): [n, min url,
+    max url]}``, merged by ``_merge``."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        for key, (n, lo, hi) in b.items():
+            _merge(a, key, n, lo, hi)
+        return a
+
+
+def batch_tally(partition_ids, input_files, urls, statuses, codes) -> dict:
+    """One Arrow batch's rows -> its ``Tally`` term."""
+    out: dict = {}
+    for pid, f, url, status, code in zip(partition_ids, input_files, urls, statuses, codes):
+        _merge(out, (pid, f, status, code), 1, url, url)
+    return out
+
+
+def lineage_table(tally: dict, run_id: str) -> pa.Table:
+    """A run's tally -> its lineage rows, as a pyarrow Table in
+    ``LINEAGE_SCHEMA``: per (partition_id, input_file), ``offset_range``
+    is ``min..max`` url (``''`` when every url is null, as ``concat_ws``)
+    and ``error_codes`` counts error rows per code (NULL without errors)."""
+    docs: dict = {}
+    splits: dict = {}
+    for (pid, f, status, code), (n, lo, hi) in tally.items():
+        _merge(docs, (pid, f), n, lo, hi)
+        split = splits.setdefault((pid, f), [0, 0, {}])
+        if status == "ok":
+            split[0] += n
+        elif status == "error":
+            split[1] += n
+            split[2][code] = split[2].get(code, 0) + n
+    rows = []
+    for (pid, f), (n, lo, hi) in docs.items():
+        n_ok, n_err, codes = splits[(pid, f)]
+        rows.append({
+            "run_id": run_id,
+            "partition_id": pid,
+            "input_file": f,
+            "offset_range": "" if lo is None else f"{lo}..{hi}",
+            "n_docs": n,
+            "n_ok": n_ok,
+            "n_err": n_err,
+            "error_codes": list(codes.items()) or None,
+        })
+    return pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE_SCHEMA))
 
 
 def committed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:

@@ -5,10 +5,14 @@ Composition (SURVEY.md §2.5):
     scan (column-pruned: url, html)
       -> [optional] salted repartition (skew)
       -> mapInArrow extract (fused)         # narrow, no shuffle
+           + lineage tally (accumulator, one term per Arrow batch)
       -> append parquet sink (docs_text/run_id=...)
-      -> lineage aggregation over this run's partition only
-         -> parquet append (lineage); the summary counts are observed
-            over the lineage rows in that same write
+    driver: fold the tally into per-(partition, input_file) lineage rows
+      -> one small parquet append (lineage); the summary counts are the
+         fold's sums
+
+One Spark job extracts, writes and counts: nothing re-reads the sink, as
+a Delta Lake writer records per-file statistics while it writes.
 
 Resume: ``run_extraction`` anti-joins the input against already-committed
 urls before extracting, so a rerun after a partial failure only processes
@@ -19,13 +23,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pdf_spark.operators.extract import extract_docs_text
 from pdf_spark.operators.lineage import (
-    lineage_rows,
+    LINEAGE_SCHEMA,
+    Tally,
+    lineage_table,
     new_run_id,
     remaining_pages,
     tag_lineage_cols,
@@ -50,8 +55,8 @@ def run_extraction(
     AFTER run_id — downstream per-language/per-crawl consumers then read
     with partition pruning (an Iceberg identity-partition spec at 100 TB:
     a reader of one language scans that directory only, never the corpus).
-    run_id stays the leading partition so lineage/resume still prune to
-    one run regardless. Use the SAME partition_cols for the life of a
+    run_id stays the leading partition so one run's output stays one
+    directory regardless. Use the SAME partition_cols for the life of a
     sink: parquet partition discovery rejects a directory whose runs
     disagree on layout (Iceberg would carry this as the table's
     partition spec and evolve it per-snapshot instead).
@@ -69,48 +74,33 @@ def run_extraction(
         todo = remaining_pages(todo, spark, out_dir)
     todo = prepare_pages(todo, salt_partitions)
 
+    tally = spark.sparkContext.accumulator({}, Tally())
     docs = extract_docs_text(
         todo,
         passthrough=("input_file", "partition_id", *partition_cols),
         markdown=markdown,
+        tally=tally,
     )
-    # Sink is partitioned by run_id so lineage + summary can be derived from
-    # THIS run's output only (partition-pruned read — O(this run), never a
-    # rescan of the whole committed corpus; on Iceberg this is the snapshot
-    # the append created). A resumed run that extracts 0 new docs therefore
-    # reports 0 docs in its lineage instead of re-claiming the corpus.
+    # Exactly-once lineage: the tallying UDF runs only inside the sink
+    # write's result stage, and Spark merges a result task's accumulator
+    # updates once per partition, dropping those of failed attempts. So
+    # ``docs`` must never feed a second action — no cache(), no count()
+    # before the write — or its documents would be tallied twice.
     docs.withColumn("run_id", F.lit(run_id)).write.mode("append").partitionBy(
         "run_id", *partition_cols
     ).parquet(docs_path)
 
-    # schema passed explicitly: a first run over an empty/fully-filtered
-    # input writes only _SUCCESS, and schema inference on a file-less
-    # directory raises instead of returning the benign 0-row frame
-    # fresh StructType: StructType.add mutates in place, and DataFrame.schema
-    # returns the cached object — docs.schema must not grow a phantom run_id
-    sink_schema = T.StructType(
-        list(docs.schema.fields) + [T.StructField("run_id", T.StringType())]
-    )
-    written = (
-        spark.read.schema(sink_schema).parquet(docs_path)
-        .where(F.col("run_id") == run_id)
-        .drop("run_id")
-    )
-    # the summary counts are sums over the lineage rows, observed inside
-    # the lineage write: no second pass over this run's sink
-    summary = Observation()
-    lin = lineage_rows(written, run_id).observe(
-        summary,
-        F.coalesce(F.sum("n_ok"), F.lit(0)).alias("n_ok"),
-        F.coalesce(F.sum("n_err"), F.lit(0)).alias("n_err"),
-    )
+    # O(files) rows from a pyarrow Table: built in the JVM from Arrow
+    # batches, with no Python worker
+    lin = lineage_table(tally.value, run_id)
     lin_path = os.path.join(out_dir, "lineage")
-    lin.write.mode("append").parquet(lin_path)
-    counts = summary.get
+    spark.createDataFrame(lin, LINEAGE_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(lin_path)
     return {
         "run_id": run_id,
-        "n_ok": counts["n_ok"],
-        "n_err": counts["n_err"],
+        "n_ok": sum(lin.column("n_ok").to_pylist()),
+        "n_err": sum(lin.column("n_err").to_pylist()),
         "docs_path": docs_path,
         "lineage_path": lin_path,
     }

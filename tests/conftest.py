@@ -9,9 +9,14 @@ import pytest
 def spark():
     from pdf_spark.session import spark_session
 
+    from pyspark import SparkContext
+
     s = spark_session(app="pdf-spark-tests", cores=4, shuffle_partitions=8)
     yield s
-    s.stop()
+    # perfbench's tests end the JVM themselves (run.stop_jvm) when both
+    # suites run in one process; there is nothing left to stop then
+    if SparkContext._gateway is not None:
+        s.stop()
 
 
 @pytest.fixture()

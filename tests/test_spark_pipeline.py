@@ -108,6 +108,177 @@ def test_pipeline_lineage_and_resume(spark, pages, tmp_out):
     assert lin1.agg(F.sum("n_docs")).collect()[0][0] == len(TEXTS)
 
 
+LINEAGE_SCHEMA = (
+    "struct<run_id:string,partition_id:string,input_file:string,"
+    "offset_range:string,n_docs:bigint,n_ok:bigint,n_err:bigint,"
+    "error_codes:map<string,bigint>>"
+)
+
+
+def _lineage_by_groupby(docs_text, run_id):
+    """The declarative lineage of a run: docs_text rows (+ partition_id,
+    input_file) -> one row per (partition_id, input_file), by two groupBys
+    and a join over the sink."""
+    per_code = (
+        docs_text.where(F.col("status") == "error")
+        .groupBy("partition_id", "input_file", "error_code")
+        .count()
+    )
+    codes_map = per_code.groupBy("partition_id", "input_file").agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("error_code", "count"))
+        ).alias("error_codes")
+    )
+    base = docs_text.groupBy("partition_id", "input_file").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
+        F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("n_err"),
+        F.min("url").alias("first_url"),
+        F.max("url").alias("last_url"),
+    )
+    return base.join(codes_map, ["partition_id", "input_file"], "left").select(
+        F.lit(run_id).alias("run_id"),
+        "partition_id",
+        "input_file",
+        F.concat_ws("..", "first_url", "last_url").alias("offset_range"),
+        "n_docs",
+        "n_ok",
+        "n_err",
+        "error_codes",
+    )
+
+
+def _lineage_set(df):
+    return sorted(
+        tuple(sorted(v.items()) if isinstance(v, dict) else v for v in r)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("partition_cols", [(), ("lang",)])
+def test_lineage_equals_groupby_over_sink(spark, pages, tmp_path, partition_cols):
+    """Over a multi-file parquet input holding corrupt rows, a run's
+    lineage rows equal a groupBy over that run's sink rows, in the pinned
+    schema; files without errors carry NULL error_codes; the summary
+    counts are the lineage sums; a resumed run that extracts nothing
+    claims 0 docs."""
+    pages_dir = str(tmp_path / "pages_pq")
+    pages.write.parquet(pages_dir)
+    pq = spark.read.parquet(pages_dir)
+    out = str(tmp_path / "out")
+
+    m = run_extraction(spark, pq, out, partition_cols=partition_cols)
+    lin = spark.read.parquet(m["lineage_path"]).where(F.col("run_id") == m["run_id"])
+    assert lin.schema.simpleString() == LINEAGE_SCHEMA
+    sink = (
+        spark.read.parquet(m["docs_path"])
+        .where(F.col("run_id") == m["run_id"])
+        .drop("run_id")
+    )
+    got = _lineage_set(lin)
+    assert got == _lineage_set(_lineage_by_groupby(sink, m["run_id"]))
+
+    assert len({r[2] for r in got}) >= 2  # several input files
+    assert sum(r[4] for r in got) == pages.count()
+    assert (m["n_ok"], m["n_err"]) == (sum(r[5] for r in got), sum(r[6] for r in got))
+    assert m["n_err"] > 0
+    clean = [r for r in got if r[6] == 0]
+    assert clean and all(r[7] is None for r in clean)
+    assert all(r[7] and sum(n for _, n in r[7]) == r[6] for r in got if r[6])
+
+    m2 = run_extraction(spark, pq, out, partition_cols=partition_cols)
+    assert m2["n_ok"] + m2["n_err"] == 0
+    lin2 = spark.read.parquet(m2["lineage_path"]).where(
+        F.col("run_id") == m2["run_id"]
+    )
+    assert lin2.count() == 0
+
+
+_RETRY_SCRIPT = r"""
+import json, tempfile
+
+import pandas as pd
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+
+from pdf_spark.gen.corpus import rows_for_texts
+from pdf_spark.operators import pipeline
+
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "1g")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("OFF")
+texts = [f"retry doc {i} with a few words of body text" for i in range(96)]
+d = tempfile.mkdtemp()
+spark.createDataFrame(pd.DataFrame(rows_for_texts(texts))).repartition(2).write.parquet(d + "/pages")
+
+
+def fail_first_attempt(batches):
+    # runs after the sort below has drained the extraction of this task
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        raise RuntimeError("injected failure after extraction")
+    yield from batches
+
+
+extract = pipeline.extract_docs_text
+
+
+def extract_then_fail(*a, **k):
+    docs = extract(*a, **k)
+    return docs.sortWithinPartitions("url").mapInArrow(fail_first_attempt, docs.schema)
+
+
+pipeline.extract_docs_text = extract_then_fail
+sc = spark.sparkContext
+sc.setJobGroup("retry", "retry")
+m = pipeline.run_extraction(spark, spark.read.parquet(d + "/pages"), d + "/out")
+tracker = sc.statusTracker()
+failed = sum(
+    tracker.getStageInfo(s).numFailedTasks
+    for j in tracker.getJobIdsForGroup("retry")
+    for s in tracker.getJobInfo(j).stageIds
+    if tracker.getStageInfo(s) is not None
+)
+lin = spark.read.parquet(m["lineage_path"]).groupBy().sum("n_docs").collect()[0][0]
+sink = spark.read.parquet(m["docs_path"]).count()
+print(json.dumps({"n": len(texts), "n_ok": m["n_ok"], "n_err": m["n_err"],
+                  "lineage_docs": lin, "sink_rows": sink, "failed_tasks": failed}))
+spark.stop()
+"""
+
+
+def test_lineage_counts_a_retried_task_once(tmp_path):
+    """A sink-write task attempt that fails after its extraction finished
+    is retried (``local[2,2]`` allows one retry per task): the summary and
+    the lineage count each input doc once, not once per attempt."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT],
+        env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["failed_tasks"] >= 1, got
+    assert got["n_ok"] + got["n_err"] == got["n"], got
+    assert got["lineage_docs"] == got["n"], got
+    assert got["sink_rows"] == got["n"], got
+
+
 def test_fixture_rows_ride_along(pages):
     """Reference fixtures injected at the fixture cadence extract to
     'Hello World!' through the full Spark path."""
