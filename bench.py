@@ -8,7 +8,7 @@ representative slice of the operator matrix.
 
 Environment:
   SPARK_GRAFT_SF_DIR   input tables dir   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] cores     (default 32)
+  SPARK_GRAFT_CPUS     local[N] cores     (default: the host's, session.py)
   BENCH_TARGET_DOCS    corpus size        (default 200_000)
   BENCH_SKIP_QUERIES   "1" -> extraction only
 
@@ -26,7 +26,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 TARGET_DOCS = int(os.environ.get("BENCH_TARGET_DOCS", "200000"))
 REPO = os.path.dirname(os.path.abspath(__file__))
 
@@ -60,6 +59,7 @@ def build_corpus(spark, sf_dir: str, target_docs: int) -> str:
     marker = os.path.join(out, "_SUCCESS")
     if os.path.exists(marker):
         return out
+    cores = spark.sparkContext.defaultParallelism
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n = docs.count()
     # Drive replication from spark.range(target): the range source is
@@ -70,7 +70,7 @@ def build_corpus(spark, sf_dir: str, target_docs: int) -> str:
     # serialized the whole generation on one task.)
     src = F.broadcast(docs.select(F.col("doc_id").alias("src_id"), "text"))
     replicated = (
-        spark.range(0, target_docs, 1, max(256, CPUS * 8))
+        spark.range(0, target_docs, 1, max(256, cores * 8))
         .withColumnRenamed("id", "doc_id")
         .join(src, F.col("doc_id") % n == F.col("src_id"))
         .select("doc_id", "text")
@@ -85,9 +85,6 @@ def build_corpus(spark, sf_dir: str, target_docs: int) -> str:
     return out
 
 
-TARGET_BATCH_BYTES = 32 * 1024 * 1024  # one Arrow batch's payload budget
-
-
 def main() -> None:
     t_setup = time.time()
     from pyspark.sql import functions as F
@@ -95,7 +92,7 @@ def main() -> None:
     from pdf_spark.operators.extract import extract_docs_text
     from pdf_spark.session import spark_session
 
-    spark = spark_session("pdf-spark-bench", cores=CPUS)
+    spark = spark_session("pdf-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     corpus = build_corpus(spark, SF_DIR, TARGET_DOCS)
@@ -104,12 +101,6 @@ def main() -> None:
         F.count("*").alias("n"), F.avg(F.length("html")).alias("avg_bytes")
     ).collect()[0]
     n_docs, avg_bytes = stats["n"], stats["avg_bytes"] or 1.0
-
-    # size-aware Arrow batching: batch memory ~= rows x avg doc bytes, so
-    # pick rows from the corpus' measured size distribution instead of a
-    # one-size cap (the session default of 64 rows assumes MB-class docs)
-    batch_rows = max(16, min(4096, int(TARGET_BATCH_BYTES / avg_bytes)))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
 
     # warm the Python workers (fork + imports are one-time per executor and
     # amortize to zero on a long-running corpus job; excluded from steady
@@ -203,9 +194,11 @@ def main() -> None:
         "n_err": counts.get("error", 0),
         "docs_per_sec": round(n_docs / extract_s, 1),
         "cold_wall_sec": round(cold_s, 3),
-        "arrow_batch_rows": batch_rows,
+        "arrow_batch_rows": int(
+            spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        ),
         "avg_doc_bytes": int(avg_bytes),
-        "cores": CPUS,
+        "cores": spark.sparkContext.defaultParallelism,
         "setup_sec": round(setup_s, 3),
         "query_repeats": repeats,
         "fused_warm_passes": n_warm,

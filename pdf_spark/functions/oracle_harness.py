@@ -4,7 +4,7 @@ Runs a Spark query and its oracle SQL side-by-side, then compares
 row count + column names + an order-insensitive multiset of rows
 (floats canonicalized through ``repr(round(x, 9))``-level equality via
 math.isclose fallback; timestamps via isoformat). Used by pytest and by
-``python -m pdf_spark.functions.oracle_harness`` for ad-hoc runs.
+``scripts/oracle_sweep.py``.
 """
 
 from __future__ import annotations
@@ -55,22 +55,31 @@ def duck_run(sql: str, sf_dir: str):
     return cols, rows
 
 
+def _row_bags(s_cols, s_rows, d_cols, d_rows):
+    """Both sides' rows as multisets of canonical tuples, columns aligned
+    by name; None when the column names differ."""
+    if sorted(map(str.lower, s_cols)) != sorted(map(str.lower, d_cols)):
+        return None
+
+    def bag(cols, rows):
+        order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
+        return Counter(tuple(_canon(r[i]) for i in order) for r in rows)
+
+    return bag(s_cols, s_rows), bag(d_cols, d_rows)
+
+
 def compare(name: str, spark_df, oracle_sql: str, sf_dir: str) -> list[str]:
     """Returns a list of problems; empty = match."""
-    problems = []
     s_cols = spark_df.columns
     s_rows = [tuple(r) for r in spark_df.collect()]
     d_cols, d_rows = duck_run(oracle_sql, sf_dir)
-    if sorted(map(str.lower, s_cols)) != sorted(map(str.lower, d_cols)):
-        problems.append(f"{name}: columns {s_cols} vs {d_cols}")
-        return problems
+    bags = _row_bags(s_cols, s_rows, d_cols, d_rows)
+    if bags is None:
+        return [f"{name}: columns {s_cols} vs {d_cols}"]
+    problems = []
     if len(s_rows) != len(d_rows):
         problems.append(f"{name}: row count {len(s_rows)} vs {len(d_rows)}")
-    # align column order by name
-    s_order = sorted(range(len(s_cols)), key=lambda i: s_cols[i].lower())
-    d_order = sorted(range(len(d_cols)), key=lambda i: d_cols[i].lower())
-    s_set = Counter(tuple(_canon(r[i]) for i in s_order) for r in s_rows)
-    d_set = Counter(tuple(_canon(r[i]) for i in d_order) for r in d_rows)
+    s_set, d_set = bags
     if s_set != d_set:
         missing = list((d_set - s_set).items())[:3]
         extra = list((s_set - d_set).items())[:3]
@@ -78,48 +87,6 @@ def compare(name: str, spark_df, oracle_sql: str, sf_dir: str) -> list[str]:
             f"{name}: value mismatch; oracle-only={missing} spark-only={extra}"
         )
     return problems
-
-
-def main():  # pragma: no cover
-    import argparse
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
-
-    from pdf_spark.functions.registry import all_oracles, all_queries
-    from pdf_spark.session import spark_session
-
-    spark = spark_session("oracle-harness")
-    queries = all_queries()
-    oracles = all_oracles()
-    names = args.names or list(queries)
-    n_bad = 0
-    for name in names:
-        try:
-            df = queries[name](spark, args.sf)
-            if name not in oracles:
-                print(f"{name}: NO-ORACLE rows={df.count()}")
-                continue
-            probs = compare(name, df, oracles[name], args.sf)
-            if probs:
-                n_bad += 1
-                for p in probs:
-                    print("FAIL", p)
-            else:
-                print(f"{name}: OK")
-        except Exception as exc:  # noqa: BLE001
-            n_bad += 1
-            print(f"FAIL {name}: {type(exc).__name__}: {exc}")
-    print(f"done, {n_bad} failures")
-    sys.exit(1 if n_bad else 0)
-
-
-if __name__ == "__main__":  # pragma: no cover
-    main()
 
 
 def compare_detail(name: str, spark_df, oracle_sql: str | None,
@@ -147,25 +114,9 @@ def compare_detail(name: str, spark_df, oracle_sql: str | None,
         d_cols, d_rows = duck_run(oracle_sql, sf_dir)
         out["oracle_rows"] = len(d_rows)
         out["rows_match"] = len(s_rows) == len(d_rows)
-        out["schema_match"] = sorted(map(str.lower, s_cols)) == sorted(
-            map(str.lower, d_cols)
-        )
-        if out["schema_match"]:
-            s_order = sorted(
-                range(len(s_cols)), key=lambda i: s_cols[i].lower()
-            )
-            d_order = sorted(
-                range(len(d_cols)), key=lambda i: d_cols[i].lower()
-            )
-            s_set = Counter(
-                tuple(_canon(r[i]) for i in s_order) for r in s_rows
-            )
-            d_set = Counter(
-                tuple(_canon(r[i]) for i in d_order) for r in d_rows
-            )
-            out["hash_match"] = s_set == d_set
-        else:
-            out["hash_match"] = False
+        bags = _row_bags(s_cols, s_rows, d_cols, d_rows)
+        out["schema_match"] = bags is not None
+        out["hash_match"] = bags is not None and bags[0] == bags[1]
     except Exception as exc:  # noqa: BLE001 — a sweep must report, not die
         out["err"] = repr(exc)[:300]
     return out

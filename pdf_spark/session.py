@@ -1,16 +1,24 @@
-"""SparkSession factory tuned for the extraction workload.
+"""The extraction job's Spark settings, in one place.
 
-Sandbox runs on ``local[N]`` (single JVM); the same config block is what we
-would ship to a 1000-executor cluster via ``spark-submit --py-files`` — all
-knobs are per-executor-safe:
+``job_conf()`` is the job's table of SQL settings. Every way the job
+starts reads it: ``spark_session`` (tests, benchmarks, local runs) and
+``scripts/run_job.py`` (``spark-submit --py-files``, the deployment
+shape). Every key is per-executor-safe at any cluster width:
 
-- Arrow enabled end-to-end (the only Python<->JVM traffic is columnar);
+- Arrow on end to end (the only Python<->JVM traffic is columnar);
 - ``maxRecordsPerBatch`` kept small (64): one Arrow batch must never hold
   two oversized PDFs (SURVEY.md §7.3 hard part #3) — batch memory is
   bounded by ``batch_rows × max_doc_bytes``;
-- AQE on (runtime coalescing + skew-join splitting for the relational ops);
-- shuffle partitions default to cores (local) — on a real cluster this is
-  set to 2-3× total cores by the submitter.
+- ``maxPartitionBytes`` 64m, read from ``SPARK_GRAFT_MAX_PARTITION_BYTES``
+  when the session is built;
+- session time zone UTC;
+- broadcast threshold 64 MB: a resume's url-only committed side is
+  broadcast below it (``lineage.remaining_pages``).
+
+Master, executor sizing and shuffle partitions belong to whoever starts
+the job: ``spark_session`` sets them for a ``local[cores]`` run, and on a
+cluster the submitter does. For the table's own keys the table wins over
+a submitter's ``--conf``, since they are the job's contract.
 """
 
 from __future__ import annotations
@@ -23,30 +31,14 @@ import zipimport
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
-ARROW_BATCH_ROWS = 64
 
-
-def spark_session(
-    app: str = "pdf-spark",
-    cores: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    if shuffle_partitions is None:
-        shuffle_partitions = max(8, cores)
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
-        )
+def job_conf() -> dict[str, str]:
+    """The job's SQL settings; the environment is read on each call, so a
+    session built after ``SPARK_GRAFT_MAX_PARTITION_BYTES`` changes sees
+    the new value."""
+    return {
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
         # split sizing, re-measured after the round-3 parse speedups
         # (~2.5 MB/s/core): 64 MB splits are ~25 s tasks — granular enough
         # for wave balancing at any cluster width. A reused Python worker
@@ -59,16 +51,29 @@ def spark_session(
         # impossible: spark.sql.files.minPartitionNum (defaults to
         # spark.default.parallelism) floors the split count at the
         # cluster's core count regardless of this cap.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "64m"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.sql.files.maxPartitionBytes": os.environ.get(
+            "SPARK_GRAFT_MAX_PARTITION_BYTES", "64m"
+        ),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    }
+
+
+def spark_session(app: str = "pdf-spark", cores: int | None = None) -> SparkSession:
+    """A ``local[cores]`` session running the job's settings; ``cores``
+    defaults to ``SPARK_GRAFT_CPUS``, else the host's core count."""
+    if cores is None:
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    return (
+        SparkSession.builder.master(f"local[{cores}]")
+        .appName(app)
+        .config(map=job_conf())
+        .config("spark.default.parallelism", str(cores))
+        .config("spark.sql.shuffle.partitions", str(max(8, cores)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .getOrCreate()
     )
-    return builder.getOrCreate()
 
 
 # the task attempt whose prologue ran last in this worker process

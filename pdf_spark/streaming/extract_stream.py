@@ -97,21 +97,19 @@ def upsert_batch(docs_batch: DataFrame, batch_id: int, out_dir: str) -> bool:
     prefix, so replaying a HALF-written batch overwrites the partial
     output instead of appending next to it; (3) the marker is created
     only after the write returns — write-then-commit order is what makes
-    the pair exactly-once. Returns True if the batch was written, False
-    if it was a replay skip."""
-    import os
-
-    marker_dir = os.path.join(out_dir, "_committed")
-    os.makedirs(marker_dir, exist_ok=True)
-    marker = os.path.join(marker_dir, str(batch_id))
-    if os.path.exists(marker):  # replayed, already fully committed
-        return False
-    (
-        docs_batch.write.mode("overwrite")
-        .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
+    the pair exactly-once. Markers are read and written through the
+    session's Hadoop FileSystem, so they sit beside the data on any
+    ``out_dir`` URI. Returns True if the batch was written, False if it
+    was a replay skip."""
+    spark = docs_batch.sparkSession
+    marker = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{out_dir}/_committed/{batch_id}"
     )
-    with open(marker, "w") as f:
-        f.write("ok")
+    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(marker):  # replayed, already fully committed
+        return False
+    docs_batch.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+    fs.create(marker).close()
     return True
 
 

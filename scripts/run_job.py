@@ -51,11 +51,17 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    # spark-submit provides the session config; getOrCreate attaches to it
+    # the submitter sets master and sizing; the job's own settings come
+    # from session.py and win over any --conf for the same keys
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("pdf-spark-extract").getOrCreate()
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    from pdf_spark.session import job_conf
+
+    spark = (
+        SparkSession.builder.appName("pdf-spark-extract")
+        .config(map=job_conf())
+        .getOrCreate()
+    )
 
     from pdf_spark.operators.pipeline import run_extraction
 

@@ -36,16 +36,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKER_SNIPPET = r"""
 import sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[{cores}]")
-    .appName("scaling-measure-{cores}")
-    .config("spark.sql.shuffle.partitions", "{cores}")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "{batch}")
-    .config("spark.sql.files.maxPartitionBytes", "64m")
-    .config("spark.driver.memory", "8g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate())
+from pdf_spark.session import spark_session
+spark = spark_session("scaling-measure-{cores}", cores={cores})
 spark.sparkContext.setLogLevel("ERROR")
 from pdf_spark.operators.extract import extract_docs_text
 pages = spark.read.parquet({corpus!r})
@@ -111,9 +103,9 @@ class Worker:
     ``pass`` command — lets lo/hi passes alternate seconds apart so host
     speed drift cancels in the per-pair ratio."""
 
-    def __init__(self, cores: int, corpus: str, batch: int = 4096, mode: str = "spark"):
+    def __init__(self, cores: int, corpus: str, mode: str = "spark"):
         snippet = WORKER_SNIPPET if mode == "spark" else MP_SNIPPET
-        code = snippet.format(repo=REPO, cores=cores, corpus=corpus, batch=batch)
+        code = snippet.format(repo=REPO, cores=cores, corpus=corpus)
         self.proc = subprocess.Popen(
             [sys.executable, "-c", code],
             stdin=subprocess.PIPE, stdout=subprocess.PIPE,

@@ -8,7 +8,9 @@ set -euo pipefail
 
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 MASTER="${MASTER:-local[*]}"
-ZIP="$(mktemp -d)/pdf_spark.zip"
+ZIPDIR="$(mktemp -d)"
+trap 'rm -rf "$ZIPDIR"' EXIT
+ZIP="$ZIPDIR/pdf_spark.zip"
 
 (cd "$REPO" && python - "$ZIP" <<'EOF'
 import sys, zipfile, pathlib
@@ -19,10 +21,7 @@ with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
 EOF
 )
 
-exec spark-submit \
+spark-submit \
     --master "$MASTER" \
-    --conf spark.sql.adaptive.enabled=true \
-    --conf spark.sql.execution.arrow.pyspark.enabled=true \
-    --conf spark.sql.files.maxPartitionBytes=64m \
     --py-files "$ZIP" \
     "$REPO/scripts/run_job.py" "$@"

@@ -11,7 +11,7 @@ def spark():
 
     from pyspark import SparkContext
 
-    s = spark_session(app="pdf-spark-tests", cores=4, shuffle_partitions=8)
+    s = spark_session(app="pdf-spark-tests", cores=4)
     yield s
     # perfbench's tests end the JVM themselves (run.stop_jvm) when both
     # suites run in one process; there is nothing left to stop then

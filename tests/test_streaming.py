@@ -68,7 +68,7 @@ def test_observed_metrics_match_batch_counts(spark, tmp_out):
     }
 
 
-def test_foreachbatch_upsert_exactly_once(spark, tmp_path):
+def test_foreachbatch_upsert_exactly_once(spark, tmp_path, monkeypatch):
     """foreachBatch upsert sink: replayed batches are no-ops, restart
     from checkpoint adds nothing, totals match the batch pipeline."""
     import glob
@@ -104,3 +104,13 @@ def test_foreachbatch_upsert_exactly_once(spark, tmp_path):
     q2 = stream_extract_upsert(spark, pages_dir, out_dir, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(*glob.glob(data_glob)).count() == len(texts)
+
+    # a file:// URI out_dir: the markers sit beside the data, not under a
+    # cwd-relative ./file: directory
+    monkeypatch.chdir(tmp_path)
+    uri_dir = (tmp_path / "sink_uri").as_uri()
+    assert upsert_batch(_edt(some), 0, uri_dir) is True
+    assert upsert_batch(_edt(some), 0, uri_dir) is False
+    assert (tmp_path / "sink_uri" / "_committed" / "0").is_file()
+    assert not (tmp_path / "file:").exists()
+    assert spark.read.parquet(f"{uri_dir}/batch_id=0").count() == 5
