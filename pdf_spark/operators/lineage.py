@@ -1,4 +1,4 @@
-"""Per-partition lineage/metrics + snapshot resume (north rule).
+"""Per-partition lineage/metrics + resume from the lineage commit log (north rule).
 
 - ``tag_lineage_cols`` tags each input row at scan time with its
   ``spark_partition_id`` and the input file it came from
@@ -14,22 +14,30 @@
   the offset-range analogue. There are O(files) rows, so the fold needs no
   join and nothing re-reads the sink.
 
-- Resume: the sink is an append-only parquet directory keyed by ``url``.
-  ``remaining_pages`` anti-joins the input against already-committed urls
-  — rerunning after a partial failure processes only the tail. On Iceberg
-  this would be a snapshot-scoped MERGE; parquet-dir + anti-join gives the
-  same at-least-once-input / exactly-once-output semantics in the sandbox
-  (idempotent by url).
+- Commit log: a run is committed when its lineage file lands.
+  ``write_lineage`` writes the run's rows after its sink write, as one
+  parquet file ``lineage/<run_id>.parquet`` put down on the driver under a
+  hidden name and renamed, the way a Delta Lake writer commits by adding
+  one log record. ``remaining_pages`` resumes from that log with no join:
+  it deletes the ``docs_text/run_id=…`` directories that no lineage file
+  names (a run that died between its write and its commit) and prunes
+  every input file that a committed run read. Resume is therefore by input
+  file: a rerun after a partial failure reads only the files that no
+  committed run read. An input with no file behind it (an in-memory frame)
+  counts as one file, ``''``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import time
 import uuid
+from urllib.parse import unquote
 
 import pyarrow as pa
 from pyspark.accumulators import AccumulatorParam
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -123,30 +131,108 @@ def lineage_table(tally: dict, run_id: str) -> pa.Table:
     return pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE_SCHEMA))
 
 
-def committed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The sink's committed urls, or None before its first commit. The
-    path is checked through the session's Hadoop FileSystem first, so a
-    first run does not log a PATH_NOT_FOUND stack trace; the ``except``
-    covers a sink directory that holds no parquet files yet."""
-    path = os.path.join(out_dir, "docs_text")
+def _fs(spark: SparkSession, path: str):
+    """``path`` as a Hadoop ``Path``, with the session's ``FileSystem``
+    for it."""
     hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
-        return None
-    try:
-        return spark.read.parquet(path).select("url")
-    except Exception:
-        return None
+    return hpath, hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def _listing(fs, hpath) -> list:
+    """The visible entries of directory ``hpath`` (none if it is absent):
+    Spark's hidden names (``_SUCCESS``, ``.crc`` files, a lineage file
+    not yet renamed) are skipped, as a parquet read skips them."""
+    if not fs.exists(hpath):
+        return []
+    return [
+        st for st in fs.listStatus(hpath)
+        if not st.getPath().getName().startswith(("_", "."))
+    ]
+
+
+def commit_log(spark: SparkSession, out_dir: str) -> tuple[set, set]:
+    """The sink's commit log: the input files and the run_ids that its
+    lineage files name, read on the driver through the session's Hadoop
+    FileSystem (O(files) rows, no Spark job). A lineage file written by
+    ``write_lineage`` or by an older Spark append reads the same."""
+    # imported here, not at the top: workers import this module for
+    # batch_tally, and pyarrow.parquet adds ~3 MB to each of them
+    import pyarrow.parquet as pq
+
+    hpath, fs = _fs(spark, os.path.join(out_dir, "lineage"))
+    read_all = spark._jvm.org.apache.commons.io.IOUtils.toByteArray
+    files: set = set()
+    run_ids: set = set()
+    for st in _listing(fs, hpath):
+        stream = fs.open(st.getPath())
+        try:
+            data = read_all(stream)
+        finally:
+            stream.close()
+        rows = pq.read_table(pa.BufferReader(data), columns=["run_id", "input_file"])
+        run_ids.update(rows.column("run_id").to_pylist())
+        files.update(rows.column("input_file").to_pylist())
+    return files, run_ids
+
+
+def drop_uncommitted_runs(spark: SparkSession, out_dir: str, run_ids: set) -> None:
+    """Delete every ``docs_text/run_id=…`` directory whose run has no
+    lineage file: a run that died after its sink write and before its
+    commit left it, and a resume extracts its files again."""
+    hpath, fs = _fs(spark, os.path.join(out_dir, "docs_text"))
+    for st in _listing(fs, hpath):
+        key, _, value = st.getPath().getName().partition("=")
+        if key == "run_id" and unquote(value) not in run_ids:
+            fs.delete(st.getPath(), True)
+
+
+def _scan_spelling(path: str) -> str:
+    """An ``input_file_name()`` path as ``_metadata.file_path`` spells it:
+    both are URL-encoded, but the first writes an empty authority as
+    ``file:///p`` and the second as ``file:/p``."""
+    return re.sub(r"^([A-Za-z][\w+.-]*):///", r"\1:/", path)
 
 
 def remaining_pages(pages: DataFrame, spark: SparkSession, out_dir: str) -> DataFrame:
-    """Anti-join input against committed output -> resume from checkpoint.
-    The join strategy is the planner's: the url-only committed side is
-    broadcast while its size estimate is under the session's
-    ``autoBroadcastJoinThreshold`` and shuffled (AQE) above it."""
-    done = committed_urls(spark, out_dir)
-    if done is None:
-        return pages
-    return pages.join(done, "url", "left_anti")
+    """Resume from the commit log: ``pages`` without every input file that
+    a committed run read, tagged by ``tag_lineage_cols``. A file source is
+    pruned by a filter on ``_metadata.file_path`` straight over its scan,
+    so committed files drop out at planning and are never read; a source
+    with no ``_metadata`` (an in-memory frame, ``read_warc``) is filtered
+    by row on the tagged ``input_file``, where all rows with no file
+    (``''``) form one input. Uncommitted run directories are deleted
+    first."""
+    files, run_ids = commit_log(spark, out_dir)
+    drop_uncommitted_runs(spark, out_dir, run_ids)
+    if not files:
+        return tag_lineage_cols(pages)
+    scanned = sorted({_scan_spelling(f) for f in files})
+    try:
+        pruned = pages.where(~F.col("_metadata.file_path").isin(scanned))
+    except AnalysisException:
+        return tag_lineage_cols(pages).where(~F.col("input_file").isin(sorted(files)))
+    return tag_lineage_cols(pruned)
+
+
+def write_lineage(spark: SparkSession, out_dir: str, table: pa.Table, run_id: str) -> None:
+    """Commit a run: its lineage rows become ``lineage/<run_id>.parquet``,
+    one parquet file written on the driver through the session's Hadoop
+    FileSystem under a hidden name and then renamed, so the file appears
+    whole or not at all."""
+    import pyarrow.parquet as pq  # imported here for the reason in commit_log
+
+    lin, fs = _fs(spark, os.path.join(out_dir, "lineage"))
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp, final = Path(lin, f".{run_id}.parquet.tmp"), Path(lin, f"{run_id}.parquet")
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    out = fs.create(tmp, True)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise RuntimeError(f"could not commit lineage file {final.toString()}")
 
 
 def new_run_id() -> str:

@@ -2,38 +2,45 @@
 
 Composition (SURVEY.md §2.5):
 
-    scan (column-pruned: url, html)
+    driver: read the lineage commit log; drop uncommitted run directories
+    scan (column-pruned: url, html; committed input files pruned)
       -> [optional] salted repartition (skew)
       -> mapInArrow extract (fused)         # narrow, no shuffle
            + lineage tally (accumulator, one term per Arrow batch)
       -> append parquet sink (docs_text/run_id=...)
     driver: fold the tally into per-(partition, input_file) lineage rows
-      -> one small parquet append (lineage); the summary counts are the
+      -> commit: one parquet file in lineage/, written and renamed through
+         the session's Hadoop FileSystem; the summary counts are the
          fold's sums
 
-One Spark job extracts, writes and counts: nothing re-reads the sink, as
-a Delta Lake writer records per-file statistics while it writes.
+A run is one Spark job, the sink write, which extracts, writes and
+counts; nothing re-reads the sink. The run then commits with one
+driver-side file write. A Delta Lake writer works the same way: it
+records per-file statistics while it writes and commits by adding one log
+record.
 
-Resume: ``run_extraction`` anti-joins the input against already-committed
-urls before extracting, so a rerun after a partial failure only processes
-the remainder (north rule: resumable from checkpoint with lineage).
+Resume: ``run_extraction`` skips every input file that a committed run
+read (``lineage.remaining_pages``), so a rerun after a partial failure
+only reads the files that are left (north rule: resumable from checkpoint
+with lineage).
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.accumulators import _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_spark.operators.extract import extract_docs_text
 from pdf_spark.operators.lineage import (
-    LINEAGE_SCHEMA,
     Tally,
     lineage_table,
     new_run_id,
     remaining_pages,
     tag_lineage_cols,
+    write_lineage,
 )
 from pdf_spark.operators.partitioning import prepare_pages
 
@@ -60,18 +67,17 @@ def run_extraction(
     sink: parquet partition discovery rejects a directory whose runs
     disagree on layout (Iceberg would carry this as the table's
     partition spec and evolve it per-snapshot instead).
+
+    ``resume`` skips every input file that a committed run read;
+    ``resume=False`` extracts all of ``pages`` again.
     """
     run_id = run_id or new_run_id()
     docs_path = os.path.join(out_dir, "docs_text")
-    # lineage columns are captured AT SCAN TIME, before the anti-join or
-    # the salted repartition: input_file_name() only resolves over a
-    # single file source (a resume plan joins two parquet relations —
-    # MULTI_SOURCES_UNSUPPORTED otherwise) and would return '' if
-    # projected after a shuffle; captured early, provenance rides along
-    # as ordinary data columns.
-    todo = tag_lineage_cols(pages)
-    if resume:
-        todo = remaining_pages(todo, spark, out_dir)
+    # lineage columns are captured AT SCAN TIME, after the committed files
+    # are pruned and before the salted repartition: input_file_name()
+    # returns '' once projected after a shuffle; captured early,
+    # provenance rides along as ordinary data columns.
+    todo = remaining_pages(pages, spark, out_dir) if resume else tag_lineage_cols(pages)
     todo = prepare_pages(todo, salt_partitions)
 
     tally = spark.sparkContext.accumulator({}, Tally())
@@ -90,17 +96,18 @@ def run_extraction(
         "run_id", *partition_cols
     ).parquet(docs_path)
 
-    # O(files) rows from a pyarrow Table: built in the JVM from Arrow
-    # batches, with no Python worker
-    lin = lineage_table(tally.value, run_id)
-    lin_path = os.path.join(out_dir, "lineage")
-    spark.createDataFrame(lin, LINEAGE_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(lin_path)
+    # the write has returned, so every task's update is merged: fold the
+    # tally, then drop it from PySpark's registry, which would otherwise
+    # hold it for the life of the driver
+    folded = tally.value
+    _accumulatorRegistry.pop(tally.aid, None)
+    lin = lineage_table(folded, run_id)
+    if lin.num_rows:
+        write_lineage(spark, out_dir, lin, run_id)
     return {
         "run_id": run_id,
         "n_ok": sum(lin.column("n_ok").to_pylist()),
         "n_err": sum(lin.column("n_err").to_pylist()),
         "docs_path": docs_path,
-        "lineage_path": lin_path,
+        "lineage_path": os.path.join(out_dir, "lineage"),
     }

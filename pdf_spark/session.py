@@ -12,8 +12,10 @@ shape). Every key is per-executor-safe at any cluster width:
 - ``maxPartitionBytes`` 64m, read from ``SPARK_GRAFT_MAX_PARTITION_BYTES``
   when the session is built;
 - session time zone UTC;
-- broadcast threshold 64 MB: a resume's url-only committed side is
-  broadcast below it (``lineage.remaining_pages``).
+- broadcast threshold 64 MB: a join whose smaller side is under it is
+  broadcast. The job itself plans no join (a resume prunes committed
+  input files instead), so the value only serves joins that callers
+  add; query plans and ``tests/test_submit.py`` pin it.
 
 Master, executor sizing and shuffle partitions belong to whoever starts
 the job: ``spark_session`` sets them for a ``local[cores]`` run, and on a

@@ -9,10 +9,11 @@ wall time, and the label histogram head. Usage:
     python scripts/cc_convergence.py [n_nodes]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -14,13 +14,12 @@ hash_match/spark_rows/oracle_rows/err), so builder-vs-driver results
 diff mechanically on their overlap (VERDICT r4 task 4).
 """
 
-import os
-
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf_spark.functions.oracle_harness import (  # noqa: E402
     compare,

@@ -11,8 +11,8 @@ Reads the Common-Crawl-style pages table (parquet, or raw WARC archives
 via the sources.warc connector), runs the fused extraction with
 skew salting, writes docs_text (run_id-partitioned) + lineage, and prints
 the run summary as one JSON line. Re-running with the same --out resumes:
-already-committed urls are anti-joined away and the new run's lineage
-reports only what it actually processed.
+the input files that a committed run read are skipped, and the new run's
+lineage reports only what it actually processed.
 """
 
 from __future__ import annotations

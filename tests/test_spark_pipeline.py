@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_spark.gen.corpus import rows_for_texts
+from pdf_spark.operators import pipeline
 from pdf_spark.operators.assemble import assemble_docs_text
 from pdf_spark.operators.extract import extract_docs_text, extract_spans
 from pdf_spark.operators.partitioning import prepare_pages
@@ -289,14 +290,117 @@ def test_fixture_rows_ride_along(pages):
     assert all(r["text"] == "Hello World!" for r in got)
 
 
-def test_committed_urls_before_first_commit(spark, tmp_path):
-    """No sink directory, or one without parquet files: nothing is
-    committed yet."""
-    from pdf_spark.operators.lineage import committed_urls
+def test_commit_log_before_first_commit(spark, tmp_path):
+    """No sink directory, or one whose lineage directory holds no parquet
+    files: nothing is committed yet."""
+    from pdf_spark.operators.lineage import commit_log
 
-    assert committed_urls(spark, str(tmp_path / "fresh")) is None
-    (tmp_path / "empty" / "docs_text").mkdir(parents=True)
-    assert committed_urls(spark, str(tmp_path / "empty")) is None
+    assert commit_log(spark, str(tmp_path / "fresh")) == (set(), set())
+    (tmp_path / "empty" / "lineage").mkdir(parents=True)
+    (tmp_path / "empty" / "lineage" / "_SUCCESS").touch()
+    assert commit_log(spark, str(tmp_path / "empty")) == (set(), set())
+
+
+def _input_files(pages, tmp_path, dirname="pages_pq"):
+    """``pages`` written as a multi-file parquet table under ``dirname``;
+    returns the directory and its data files."""
+    import os
+
+    pages_dir = str(tmp_path / dirname)
+    pages.write.parquet(pages_dir)
+    files = sorted(
+        os.path.join(pages_dir, f) for f in os.listdir(pages_dir) if f.endswith(".parquet")
+    )
+    assert len(files) >= 4
+    return pages_dir, files
+
+
+def test_rerun_after_a_crash_before_commit(spark, pages, tmp_path, monkeypatch):
+    """A run that dies after its sink write and before its lineage file is
+    not committed: the rerun drops its rows and extracts its files again,
+    so every url is in docs_text exactly once and the lineage counts
+    equal the sink's rows."""
+    pages_dir, files = _input_files(pages, tmp_path)
+    out = str(tmp_path / "out")
+    run_extraction(spark, spark.read.parquet(*files[: len(files) // 2]), out)
+
+    def die(*a, **k):
+        raise RuntimeError("driver died before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "lineage_table", die)
+        with pytest.raises(RuntimeError, match="before the commit"):
+            run_extraction(spark, spark.read.parquet(pages_dir), out)
+
+    run_extraction(spark, spark.read.parquet(pages_dir), out)
+    sink = spark.read.parquet(out + "/docs_text")
+    assert sink.count() == sink.select("url").distinct().count() == pages.count()
+    lin = spark.read.parquet(out + "/lineage")
+    assert lin.agg(F.sum("n_docs")).collect()[0][0] == pages.count()
+
+
+def test_resume_prunes_committed_files_in_one_job(spark, pages, tmp_path, monkeypatch):
+    """A resume over a half-committed multi-file parquet input plans no
+    join and no exchange, reads only the uncommitted files' rows and runs
+    one Spark job, the sink write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pages_dir, files = _input_files(pages, tmp_path)
+    out = str(tmp_path / "out")
+    first = run_extraction(spark, spark.read.parquet(*files[: len(files) // 2]), out)
+    rest = spark.read.parquet(*files[len(files) // 2 :]).count()
+    assert rest == pages.count() - first["n_ok"] - first["n_err"]
+    pq = spark.read.parquet(pages_dir)
+
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        plans.append((path, self._df._jdf.queryExecution().executedPlan().toString()))
+        return write(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-plan-pin", "resume-plan-pin")
+    m = run_extraction(spark, pq, out)
+    assert m["n_ok"] + m["n_err"] == rest
+
+    sink_plans = [plan for path, plan in plans if path.endswith("docs_text")]
+    assert len(sink_plans) == 1
+    assert "Join" not in sink_plans[0] and "Exchange" not in sink_plans[0], sink_plans[0]
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("resume-plan-pin")
+    assert len(jobs) == 1, jobs
+    store = sc._jsc.sc().statusStore()
+    read = sum(
+        store.lastStageAttempt(s).inputRecords() for s in tracker.getJobInfo(jobs[0]).stageIds
+    )
+    assert read == rest
+
+
+def test_resume_skips_files_with_a_space_in_their_path(spark, pages, tmp_path):
+    """``input_file_name()`` and ``_metadata.file_path`` spell a local path
+    differently; a committed file whose path holds a space is skipped all
+    the same."""
+    pages_dir, _ = _input_files(pages, tmp_path, "pages with spaces")
+    out = str(tmp_path / "out dir")
+    m1 = run_extraction(spark, spark.read.parquet(pages_dir), out)
+    assert m1["n_ok"] + m1["n_err"] == pages.count()
+    m2 = run_extraction(spark, spark.read.parquet(pages_dir), out)
+    assert m2["n_ok"] + m2["n_err"] == 0
+    assert spark.read.parquet(out + "/docs_text").count() == pages.count()
+
+
+def test_run_extraction_releases_its_tally(spark, tmp_path):
+    """PySpark's driver-side accumulator registry holds no run's lineage
+    tally after ``run_extraction`` returns."""
+    from pyspark import accumulators
+
+    small = spark.createDataFrame(pd.DataFrame(rows_for_texts(TEXTS[:12])))
+    before = len(accumulators._accumulatorRegistry)
+    for i in range(3):
+        run_extraction(spark, small, str(tmp_path / f"out{i}"))
+    assert len(accumulators._accumulatorRegistry) == before
 
 
 def test_resume_with_parquet_pages(spark, pages, tmp_path):
