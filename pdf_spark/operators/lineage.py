@@ -2,8 +2,9 @@
 
 - ``tag_lineage_cols`` tags each input row at scan time with its
   ``spark_partition_id`` and the input file it came from
-  (``input_file_name``); both ride the extraction UDF as passthrough
-  columns.
+  (``input_file_name``, unless the source already carries an
+  ``input_file`` column, as ``read_warc`` does); both ride the extraction
+  UDF as passthrough columns.
 
 - Lineage is tallied by the writer, as it writes: the extraction UDF adds
   one ``batch_tally`` per Arrow batch to a ``Tally`` accumulator, keyed
@@ -24,7 +25,8 @@
   every input file that a committed run read. Resume is therefore by input
   file: a rerun after a partial failure reads only the files that no
   committed run read. An input with no file behind it (an in-memory frame)
-  counts as one file, ``''``.
+  counts as one file, ``''``. A run named by its caller commits once
+  (``committed_lineage``, ``drop_run``).
 """
 
 from __future__ import annotations
@@ -58,10 +60,12 @@ LINEAGE_SCHEMA = T.StructType(
 
 
 def tag_lineage_cols(pages: DataFrame) -> DataFrame:
+    # read_warc brings its own: input_file_name() above its flattening
+    # UDF names whichever archive the task read last
+    if "input_file" not in pages.columns:
+        pages = pages.withColumn("input_file", F.input_file_name())
     # partition_id as string so it can ride the UDF passthrough unchanged
-    return pages.withColumn("input_file", F.input_file_name()).withColumn(
-        "partition_id", F.spark_partition_id().cast("string")
-    )
+    return pages.withColumn("partition_id", F.spark_partition_id().cast("string"))
 
 
 def _merge(tally: dict, key, n: int, lo, hi) -> None:
@@ -150,29 +154,40 @@ def _listing(fs, hpath) -> list:
     ]
 
 
-def commit_log(spark: SparkSession, out_dir: str) -> tuple[set, set]:
-    """The sink's commit log: the input files and the run_ids that its
-    lineage files name, read on the driver through the session's Hadoop
-    FileSystem (O(files) rows, no Spark job). A lineage file written by
-    ``write_lineage`` or by an older Spark append reads the same."""
+def _read_lineage(spark: SparkSession, fs, hpath, columns=None) -> pa.Table:
+    """Lineage file ``hpath``, read on the driver through the session's
+    Hadoop FileSystem (no Spark job)."""
     # imported here, not at the top: workers import this module for
     # batch_tally, and pyarrow.parquet adds ~3 MB to each of them
     import pyarrow.parquet as pq
 
+    stream = fs.open(hpath)
+    try:
+        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return pq.read_table(pa.BufferReader(data), columns=columns)
+
+
+def commit_log(spark: SparkSession, out_dir: str) -> tuple[set, set]:
+    """The sink's commit log: the input files and the run_ids that its
+    lineage files name (O(files) rows). A lineage file written by
+    ``write_lineage`` or by an older Spark append reads the same."""
     hpath, fs = _fs(spark, os.path.join(out_dir, "lineage"))
-    read_all = spark._jvm.org.apache.commons.io.IOUtils.toByteArray
     files: set = set()
     run_ids: set = set()
     for st in _listing(fs, hpath):
-        stream = fs.open(st.getPath())
-        try:
-            data = read_all(stream)
-        finally:
-            stream.close()
-        rows = pq.read_table(pa.BufferReader(data), columns=["run_id", "input_file"])
+        rows = _read_lineage(spark, fs, st.getPath(), ["run_id", "input_file"])
         run_ids.update(rows.column("run_id").to_pylist())
         files.update(rows.column("input_file").to_pylist())
     return files, run_ids
+
+
+def committed_lineage(spark: SparkSession, out_dir: str, run_id: str) -> pa.Table | None:
+    """Run ``run_id``'s lineage rows if its lineage file has landed, else
+    None: one file is read, whatever the size of the log."""
+    hpath, fs = _fs(spark, os.path.join(out_dir, "lineage", f"{run_id}.parquet"))
+    return _read_lineage(spark, fs, hpath) if fs.exists(hpath) else None
 
 
 def drop_uncommitted_runs(spark: SparkSession, out_dir: str, run_ids: set) -> None:
@@ -184,6 +199,14 @@ def drop_uncommitted_runs(spark: SparkSession, out_dir: str, run_ids: set) -> No
         key, _, value = st.getPath().getName().partition("=")
         if key == "run_id" and unquote(value) not in run_ids:
             fs.delete(st.getPath(), True)
+
+
+def drop_run(spark: SparkSession, out_dir: str, run_id: str) -> None:
+    """Delete run ``run_id``'s ``docs_text`` directory, if a try of the run
+    that died before its commit left one."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    hpath, fs = _fs(spark, os.path.join(out_dir, "docs_text", f"run_id={escape(run_id)}"))
+    fs.delete(hpath, True)
 
 
 def _scan_spelling(path: str) -> str:
@@ -198,20 +221,23 @@ def remaining_pages(pages: DataFrame, spark: SparkSession, out_dir: str) -> Data
     a committed run read, tagged by ``tag_lineage_cols``. A file source is
     pruned by a filter on ``_metadata.file_path`` straight over its scan,
     so committed files drop out at planning and are never read; a source
-    with no ``_metadata`` (an in-memory frame, ``read_warc``) is filtered
-    by row on the tagged ``input_file``, where all rows with no file
-    (``''``) form one input. Uncommitted run directories are deleted
-    first."""
+    with no ``_metadata`` (an in-memory frame) or with its own
+    ``input_file`` (``read_warc``) is filtered by row on ``input_file``,
+    where all rows with no file (``''``) form one input. Uncommitted run
+    directories are deleted first."""
     files, run_ids = commit_log(spark, out_dir)
     drop_uncommitted_runs(spark, out_dir, run_ids)
     if not files:
         return tag_lineage_cols(pages)
-    scanned = sorted({_scan_spelling(f) for f in files})
-    try:
-        pruned = pages.where(~F.col("_metadata.file_path").isin(scanned))
-    except AnalysisException:
-        return tag_lineage_cols(pages).where(~F.col("input_file").isin(sorted(files)))
-    return tag_lineage_cols(pruned)
+    if "input_file" not in pages.columns:  # else a source named its own files
+        scanned = sorted({_scan_spelling(f) for f in files})
+        try:  # metadataColumn raises without logging; a failed F.col logs an ERROR
+            pruned = pages.where(~pages.metadataColumn("_metadata")["file_path"].isin(scanned))
+        except AnalysisException:
+            pass
+        else:
+            return tag_lineage_cols(pruned)
+    return tag_lineage_cols(pages).where(~F.col("input_file").isin(sorted(files)))
 
 
 def write_lineage(spark: SparkSession, out_dir: str, table: pa.Table, run_id: str) -> None:

@@ -23,6 +23,11 @@ Resume: ``run_extraction`` skips every input file that a committed run
 read (``lineage.remaining_pages``), so a rerun after a partial failure
 only reads the files that are left (north rule: resumable from checkpoint
 with lineage).
+
+A run named by its caller (a streaming micro-batch) is idempotent: if
+``lineage/<run_id>.parquet`` exists, it starts no Spark job and returns
+that file's counts; else it first deletes ``docs_text/run_id=<run_id>``,
+left by a try that died before its commit.
 """
 
 from __future__ import annotations
@@ -36,6 +41,8 @@ from pyspark.sql import functions as F
 from pdf_spark.operators.extract import extract_docs_text
 from pdf_spark.operators.lineage import (
     Tally,
+    committed_lineage,
+    drop_run,
     lineage_table,
     new_run_id,
     remaining_pages,
@@ -71,8 +78,13 @@ def run_extraction(
     ``resume`` skips every input file that a committed run read;
     ``resume=False`` extracts all of ``pages`` again.
     """
-    run_id = run_id or new_run_id()
-    docs_path = os.path.join(out_dir, "docs_text")
+    if run_id is None:
+        run_id = new_run_id()
+    else:
+        lin = committed_lineage(spark, out_dir, run_id)
+        if lin is not None:
+            return _summary(out_dir, run_id, lin)
+        drop_run(spark, out_dir, run_id)
     # lineage columns are captured AT SCAN TIME, after the committed files
     # are pruned and before the salted repartition: input_file_name()
     # returns '' once projected after a shuffle; captured early,
@@ -94,7 +106,7 @@ def run_extraction(
     # before the write — or its documents would be tallied twice.
     docs.withColumn("run_id", F.lit(run_id)).write.mode("append").partitionBy(
         "run_id", *partition_cols
-    ).parquet(docs_path)
+    ).parquet(os.path.join(out_dir, "docs_text"))
 
     # the write has returned, so every task's update is merged: fold the
     # tally, then drop it from PySpark's registry, which would otherwise
@@ -104,10 +116,15 @@ def run_extraction(
     lin = lineage_table(folded, run_id)
     if lin.num_rows:
         write_lineage(spark, out_dir, lin, run_id)
+    return _summary(out_dir, run_id, lin)
+
+
+def _summary(out_dir: str, run_id: str, lin) -> dict:
+    """The run summary; its counts are the sums of the lineage rows ``lin``."""
     return {
         "run_id": run_id,
         "n_ok": sum(lin.column("n_ok").to_pylist()),
         "n_err": sum(lin.column("n_err").to_pylist()),
-        "docs_path": docs_path,
+        "docs_path": os.path.join(out_dir, "docs_text"),
         "lineage_path": os.path.join(out_dir, "lineage"),
     }

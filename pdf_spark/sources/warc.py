@@ -269,13 +269,16 @@ def _raw_schema():
             StructField("html", BinaryType()),
             StructField("http_status", IntegerType()),
             StructField("mime", StringType()),
+            StructField("input_file", StringType()),
         ]
     )
 
 
 def read_warc(spark, path: str, max_record_bytes: int = DEFAULT_MAX_RECORD):
     """WARC files -> DataFrame(url, warc_ts timestamp, html binary,
-    http_status int, mime string).
+    http_status int, mime string, input_file string).
+
+    ``input_file`` names each record's archive, for lineage and resume.
 
     One ``binaryFile`` row (= one archive) per task — gzip members are not
     splittable, so the file is the parallelism unit exactly as in real
@@ -287,30 +290,32 @@ def read_warc(spark, path: str, max_record_bytes: int = DEFAULT_MAX_RECORD):
 
     from pdf_spark.session import task_prologue
 
+    schema = _raw_schema()
+
     def parse(batches):
         task_prologue()
         for batch in batches:
-            rows = {k: [] for k in ("url", "warc_date", "html",
-                                    "http_status", "mime")}
-            for content in batch["content"]:
-                for url, date, payload, status, mime in records_to_rows(
-                    bytes(content), max_record_bytes
-                ):
-                    rows["url"].append(url)
-                    rows["warc_date"].append(date)
-                    rows["html"].append(payload)
-                    rows["http_status"].append(status)
-                    rows["mime"].append(mime)
-            yield pd.DataFrame(rows)
+            rows = [
+                (*row, archive)
+                for content, archive in zip(batch["content"], batch["input_file"])
+                for row in records_to_rows(bytes(content), max_record_bytes)
+            ]
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
 
-    files = spark.read.format("binaryFile").load(path).select("content")
-    out = files.mapInPandas(parse, _raw_schema())
+    # the archive is named in the scan's own projection, row by row (above
+    # the UDF, input_file_name() names the task's last archive), and spelt
+    # as every other source's lineage spells a file
+    files = spark.read.format("binaryFile").load(path).select(
+        "content", F.input_file_name().alias("input_file")
+    )
+    out = files.mapInPandas(parse, schema)
     return out.select(
         "url",
         F.to_timestamp("warc_date").alias("warc_ts"),
         "html",
         "http_status",
         "mime",
+        "input_file",
     )
 
 

@@ -68,7 +68,7 @@ def main() -> None:
     if args.format == "warc":
         from pdf_spark.sources.warc import read_warc
 
-        pages = read_warc(spark, args.pages).select("url", "warc_ts", "html")
+        pages = read_warc(spark, args.pages).select("url", "warc_ts", "html", "input_file")
     else:
         pages = spark.read.parquet(args.pages)
     summary = run_extraction(

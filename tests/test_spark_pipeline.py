@@ -403,6 +403,45 @@ def test_run_extraction_releases_its_tally(spark, tmp_path):
     assert len(accumulators._accumulatorRegistry) == before
 
 
+def test_rerun_of_a_committed_run_id_is_a_no_op(spark, pages, tmp_path):
+    """A second run under a run_id that has committed adds no rows,
+    launches no Spark job and returns the committed counts."""
+    out = str(tmp_path / "out")
+    first = run_extraction(spark, pages, out, run_id="run-x", resume=False)
+    sc = spark.sparkContext
+    sc.setJobGroup("committed-rerun", "committed-rerun")
+    try:
+        again = run_extraction(spark, pages, out, run_id="run-x", resume=False)
+        assert sc.statusTracker().getJobIdsForGroup("committed-rerun") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again == first
+    assert spark.read.parquet(out + "/docs_text").count() == pages.count()
+
+
+def test_resume_of_an_in_memory_frame_logs_no_error(spark, tmp_path):
+    """A resume over a frame with no ``_metadata`` column filters by row
+    and logs no ERROR record on the way."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    small = spark.createDataFrame(pd.DataFrame(rows_for_texts(TEXTS[:12])))
+    out = str(tmp_path / "out")
+    run_extraction(spark, small, out)
+    records = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger = PySparkLogger.getLogger("DataFrameQueryContextLogger")
+    logger.addHandler(handler)
+    try:
+        m = run_extraction(spark, small, out)
+    finally:
+        logger.removeHandler(handler)
+    assert m["n_ok"] + m["n_err"] == 0
+    assert [r.getMessage() for r in records if r.levelno >= logging.ERROR] == []
+
+
 def test_resume_with_parquet_pages(spark, pages, tmp_path):
     """Resume over PARQUET-backed pages (the spark-submit shape): the
     anti-join plan contains two file sources, which input_file_name() must

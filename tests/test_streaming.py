@@ -1,116 +1,137 @@
-"""Structured Streaming extraction: availableNow drain over a pages
-directory must produce exactly the batch pipeline's output."""
+"""Structured Streaming extraction: each micro-batch is a ``run_extraction``
+run named ``<queryId>-<batchId>`` into the batch sink layout, committed by
+its lineage file. An availableNow drain over a pages directory must
+produce exactly the batch pipeline's output."""
 
 import os
 
 import pandas as pd
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from pdf_spark.gen.corpus import rows_for_texts
+from pdf_spark.operators import pipeline
 from pdf_spark.operators.extract import extract_docs_text
 from pdf_spark.streaming.extract_stream import stream_extract
 
+TEXTS = [f"streaming doc {i} with some words to extract" for i in range(40)]
 
-def test_stream_matches_batch(spark, tmp_out):
-    texts = [f"streaming doc {i} with some words to extract" for i in range(40)]
-    pages_dir = os.path.join(tmp_out, "pages")
-    pdf = pd.DataFrame(rows_for_texts(texts))
-    spark.createDataFrame(pdf).repartition(4).write.parquet(pages_dir)
 
-    out_dir = os.path.join(tmp_out, "stream_out")
-    ckpt = os.path.join(tmp_out, "ckpt")
-    q = stream_extract(spark, pages_dir, out_dir, ckpt, available_now=True)
+def _pages_dir(spark, tmp_path):
+    """TEXTS as 8 parquet files: two micro-batches of 4 files each."""
+    pages_dir = str(tmp_path / "pages")
+    pdf = pd.DataFrame(rows_for_texts(TEXTS))
+    spark.createDataFrame(pdf).repartition(8).write.parquet(pages_dir)
+    return pages_dir
+
+
+def _drain(spark, pages_dir, out_dir, ckpt):
+    q = stream_extract(spark, pages_dir, out_dir, ckpt)
     q.awaitTermination(120)
+    return q
 
-    streamed = spark.read.parquet(out_dir).select("url", "text", "status")
-    batch = extract_docs_text(spark.read.parquet(pages_dir)).select(
-        "url", "text", "status"
-    )
+
+def _sums(df, *cols):
+    return tuple(df.agg(*[F.sum(c) for c in cols]).collect()[0])
+
+
+def test_stream_matches_batch(spark, tmp_path):
+    """Stream output and counts equal the batch pipeline's; a restart from
+    the same checkpoint adds nothing; a replay of a committed micro-batch
+    is a no-op that returns that batch's counts."""
+    pages_dir = _pages_dir(spark, tmp_path)
+    out_dir = str(tmp_path / "stream_out")
+    ckpt = str(tmp_path / "ckpt")
+    q = _drain(spark, pages_dir, out_dir, ckpt)
+
+    sink = spark.read.parquet(out_dir + "/docs_text")
+    streamed = sink.select("url", "text", "status")
+    batch_docs = extract_docs_text(spark.read.parquet(pages_dir))
+    batch = batch_docs.select("url", "text", "status")
     diff = streamed.exceptAll(batch).count() + batch.exceptAll(streamed).count()
     assert diff == 0
-    assert streamed.count() == len(texts)
+    assert streamed.count() == len(TEXTS)
 
-    # restart with same checkpoint: no duplicates (exactly-once sink)
-    q2 = stream_extract(spark, pages_dir, out_dir, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == len(texts)
+    # one committed run per micro-batch; their lineage sums to the batch counts
+    lin = spark.read.parquet(out_dir + "/lineage")
+    runs = {r["run_id"] for r in lin.select("run_id").distinct().collect()}
+    assert runs == {f"{q.id}-0", f"{q.id}-1"}
+    n_ok = batch_docs.where(F.col("status") == "ok").count()
+    assert _sums(lin, "n_docs", "n_ok", "n_err") == (len(TEXTS), n_ok, len(TEXTS) - n_ok)
 
-
-def test_observed_metrics_match_batch_counts(spark, tmp_out):
-    """observe() metrics (n_docs/n_ok/n_err per micro-batch) must sum to
-    the batch pipeline's counts — the zero-extra-pass monitoring surface:
-    the accumulators ride the extraction pass that already runs, no
-    second count() job over the Arrow UDF."""
-    texts = [f"observed doc {i} body text" for i in range(30)]
-    pages_dir = os.path.join(tmp_out, "pages_obs")
-    pdf = pd.DataFrame(rows_for_texts(texts))
-    spark.createDataFrame(pdf).repartition(3).write.parquet(pages_dir)
-
-    out_dir = os.path.join(tmp_out, "stream_obs_out")
-    ckpt = os.path.join(tmp_out, "ckpt_obs")
-    q = stream_extract(
-        spark, pages_dir, out_dir, ckpt, available_now=True, observe=True
-    )
-    q.awaitTermination(120)
-
-    totals = {"n_docs": 0, "n_ok": 0, "n_err": 0}
-    for prog in q.recentProgress:
-        m = prog["observedMetrics"].get("extract_metrics")
-        if m:
-            for k in totals:
-                totals[k] += m[k]
-    batch = extract_docs_text(spark.read.parquet(pages_dir))
-    n_ok = batch.filter(F.col("status") == "ok").count()
-    assert totals == {
-        "n_docs": len(texts),
-        "n_ok": n_ok,
-        "n_err": len(texts) - n_ok,
-    }
-
-
-def test_foreachbatch_upsert_exactly_once(spark, tmp_path, monkeypatch):
-    """foreachBatch upsert sink: replayed batches are no-ops, restart
-    from checkpoint adds nothing, totals match the batch pipeline."""
-    import glob
-
-    from pdf_spark.streaming.extract_stream import (
-        stream_extract_upsert,
-        upsert_batch,
+    # restart with the same checkpoint: no duplicates, no new run
+    _drain(spark, pages_dir, out_dir, ckpt)
+    assert spark.read.parquet(out_dir + "/docs_text").count() == len(TEXTS)
+    assert sorted(os.listdir(out_dir + "/lineage")) == sorted(
+        name for r in runs for name in (f"{r}.parquet", f".{r}.parquet.crc")
     )
 
-    texts = [f"upsert doc {i} body words" for i in range(30)]
-    pages_dir = str(tmp_path / "pages")
-    pdf = pd.DataFrame(rows_for_texts(texts))
-    spark.createDataFrame(pdf).repartition(4).write.parquet(pages_dir)
-
-    out_dir = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_extract_upsert(spark, pages_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-
-    data_glob = os.path.join(out_dir, "batch_id=*")
-    total = spark.read.parquet(*glob.glob(data_glob))
-    assert total.count() == len(texts)
-    assert total.select("url").distinct().count() == len(texts)
-
-    # manual replay of an already-committed batch id: skipped, no growth
+    # manual replay of an already-committed micro-batch: no job, no growth
     some = spark.read.parquet(pages_dir).limit(5)
-    from pdf_spark.operators.extract import extract_docs_text as _edt
+    sc = spark.sparkContext
+    sc.setJobGroup("replay-committed", "replay-committed")
+    try:
+        m = pipeline.run_extraction(spark, some, out_dir, run_id=f"{q.id}-0", resume=False)
+        assert sc.statusTracker().getJobIdsForGroup("replay-committed") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (m["n_ok"], m["n_err"]) == _sums(
+        lin.where(F.col("run_id") == f"{q.id}-0"), "n_ok", "n_err"
+    )
+    assert spark.read.parquet(out_dir + "/docs_text").count() == len(TEXTS)
 
-    assert upsert_batch(_edt(some), 0, out_dir) is False
-    assert spark.read.parquet(*glob.glob(data_glob)).count() == len(texts)
 
-    # restart from the same checkpoint: availableNow re-run adds nothing
-    q2 = stream_extract_upsert(spark, pages_dir, out_dir, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(*glob.glob(data_glob)).count() == len(texts)
-
-    # a file:// URI out_dir: the markers sit beside the data, not under a
-    # cwd-relative ./file: directory
+def test_stream_to_a_file_uri(spark, tmp_path, monkeypatch):
+    """A ``file://`` URI ``out_dir``: docs_text and the lineage log sit at
+    the real path, not under a cwd-relative ./file: directory, and a replay
+    of a committed micro-batch still finds its lineage file."""
+    pages_dir = _pages_dir(spark, tmp_path)
     monkeypatch.chdir(tmp_path)
     uri_dir = (tmp_path / "sink_uri").as_uri()
-    assert upsert_batch(_edt(some), 0, uri_dir) is True
-    assert upsert_batch(_edt(some), 0, uri_dir) is False
-    assert (tmp_path / "sink_uri" / "_committed" / "0").is_file()
+    q = _drain(spark, pages_dir, uri_dir, str(tmp_path / "ckpt"))
+
+    assert (tmp_path / "sink_uri" / "docs_text").is_dir()
+    assert (tmp_path / "sink_uri" / "lineage" / f"{q.id}-0.parquet").is_file()
     assert not (tmp_path / "file:").exists()
-    assert spark.read.parquet(f"{uri_dir}/batch_id=0").count() == 5
+    pipeline.run_extraction(
+        spark, spark.read.parquet(pages_dir), uri_dir, run_id=f"{q.id}-0", resume=False
+    )
+    assert spark.read.parquet(f"{uri_dir}/docs_text").count() == len(TEXTS)
+
+
+def test_restart_after_a_crash_before_commit(spark, tmp_path, monkeypatch):
+    """A micro-batch that dies after its sink write and before its lineage
+    file is not committed: the restart replays it, drops the rows the dead
+    try left, and leaves each url once, with every run's lineage equal to
+    a count over its sink rows."""
+    pages_dir = _pages_dir(spark, tmp_path)
+    out_dir = str(tmp_path / "stream_out")
+    ckpt = str(tmp_path / "ckpt")
+    fold = pipeline.lineage_table
+    runs = []
+
+    def die_on_second_batch(tally, run_id):
+        runs.append(run_id)
+        if len(runs) == 2:
+            raise RuntimeError("driver died before the commit")
+        return fold(tally, run_id)
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "lineage_table", die_on_second_batch)
+        q = stream_extract(spark, pages_dir, out_dir, ckpt)
+        with pytest.raises(StreamingQueryException, match="before the commit"):
+            q.awaitTermination(120)
+    dead = runs[1]
+    assert os.path.isdir(os.path.join(out_dir, "docs_text", f"run_id={dead}"))
+    assert not os.path.exists(os.path.join(out_dir, "lineage", f"{dead}.parquet"))
+
+    _drain(spark, pages_dir, out_dir, ckpt)
+    sink = spark.read.parquet(out_dir + "/docs_text")
+    assert sink.count() == sink.select("url").distinct().count() == len(TEXTS)
+    lin = spark.read.parquet(out_dir + "/lineage")
+    per_run = {
+        r["run_id"]: r["n"] for r in lin.groupBy("run_id").agg(F.sum("n_docs").alias("n")).collect()
+    }
+    assert per_run == {r["run_id"]: r["count"] for r in sink.groupBy("run_id").count().collect()}
+    assert set(per_run) == {f"{q.id}-0", f"{q.id}-1"} and dead == f"{q.id}-1"

@@ -185,6 +185,45 @@ def test_run_job_over_warc_archives(spark, tmp_path):
     assert all("actual content paragraph" in r["text"] for r in rows)
 
 
+def test_warc_lineage_names_each_records_archive(spark, tmp_path):
+    """With fewer tasks than archives, every extracted row's input_file,
+    and so every lineage row, names the archive its record came from; a
+    resume over the same archives then extracts nothing."""
+    from pdf_spark.operators.pipeline import run_extraction
+
+    d = tmp_path / "archives"
+    d.mkdir()
+    n_files, n_recs = 6, 100
+    for f in range(n_files):
+        recs = [
+            build_response_record(
+                f"https://w.example/{f}/{i}", "2024-02-01T00:00:00Z",
+                f"<html><body><p>record {i} of archive {f}</p></body></html>".encode())
+            for i in range(n_recs)
+        ]
+        (d / f"crawl-{f}.warc.gz").write_bytes(write_warc(recs))
+
+    out = str(tmp_path / "sink")
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        tasks = spark.read.format("binaryFile").load(str(d)).rdd.getNumPartitions()
+        assert tasks < n_files
+        run_extraction(spark, read_warc(spark, str(d)), out)
+        again = run_extraction(spark, read_warc(spark, str(d)), out)
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    rows = spark.read.parquet(out + "/docs_text").select("url", "input_file").collect()
+    assert len(rows) == n_files * n_recs
+    wrong = [
+        r for r in rows
+        if not r["input_file"].endswith(f"/crawl-{r['url'].split('/')[3]}.warc.gz")
+    ]
+    assert wrong == []
+    lin = spark.read.parquet(out + "/lineage")
+    assert lin.select("input_file").distinct().count() == n_files
+    assert again["n_ok"] + again["n_err"] == 0
+
+
 def test_wet_roundtrip(spark, tmp_path):
     """extract -> write_wet -> re-parse: every ok row's text comes back
     byte-identical as a conversion record; error rows are absent."""
