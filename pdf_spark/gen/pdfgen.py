@@ -8,6 +8,13 @@ generation time from the *placed strings and positions* — the generator
 lays out spans with its own arithmetic and runs the published ordering rule
 (page asc, y desc, x asc), it does not call the extractor.
 
+Every one-page document (here and in the query fixtures of
+``functions/extraction_queries.py``) is written by ``PdfBuilder.one_page()``
++ ``PdfBuilder.page_tree``: objects 1-3 are catalog -> one-kid /Pages ->
+/Page. Only multi-page, nested-Pages and object-stream layouts write their
+tree by hand; incremental updates and corrupt variants patch a built
+document.
+
 Layout constants shared with the engine by specification (not by code):
 - default glyph width for metric-less simple fonts = 500/1000 em
   (pdf_spark.core.fonts.DEFAULT_WIDTH, a documented rule of the engine)
@@ -18,6 +25,7 @@ from __future__ import annotations
 
 import re
 import zlib
+from collections.abc import Sequence
 
 DEFAULT_WIDTH = 500.0  # layout constant (see module docstring)
 FONT_SIZE = 12.0
@@ -87,10 +95,55 @@ def _encode_chain(data: bytes, names: list[str]) -> bytes:
 
 
 class PdfBuilder:
-    """Serialize numbered objects into a classic-xref PDF."""
+    """Serialize numbered objects into a classic-xref PDF.
+
+    A one-page document starts from ``PdfBuilder.one_page()`` (objects 1-3
+    held for the catalog, the Pages node and the Page), adds its own
+    objects, and ends with ``b.build(b.page_tree(font, contents))``."""
+
+    CATALOG, PAGES, PAGE = 1, 2, 3  # the one-page tree's object ids
 
     def __init__(self) -> None:
         self.objects: list[bytes] = []  # body of object i+1
+
+    @classmethod
+    def one_page(cls) -> PdfBuilder:
+        b = cls()
+        b.objects += [b""] * 3
+        return b
+
+    def page_tree(
+        self,
+        font: int | None,
+        contents: int | list[int],
+        *,
+        resources: bytes = b"",
+        catalog: bytes = b"",
+        rotate: int = 0,
+        annots: Sequence[int] = (),
+    ) -> int:
+        """Set objects 1-3 of a ``one_page()`` builder to catalog -> one-kid
+        /Pages -> a 612x792 /Page, and return the catalog id.
+
+        ``font`` is the page's /F1 (None: no /Font entry); ``resources``
+        adds raw /Resources entries after it, and a page with neither has
+        no /Resources. ``contents`` is one stream id or a list of them;
+        ``catalog`` adds raw catalog keys after /Pages."""
+        refs = lambda ids: b" ".join(b"%d 0 R" % i for i in ids)
+        res = (b"/Font<</F1 %d 0 R>>" % font if font is not None else b"") + resources
+        self.set(self.CATALOG, b"<</Type/Catalog/Pages %d 0 R%s>>" % (self.PAGES, catalog))
+        self.set(self.PAGES, b"<</Type/Pages/Kids[%d 0 R]/Count 1>>" % self.PAGE)
+        self.set(
+            self.PAGE,
+            b"<</Type/Page/Parent %d 0 R/MediaBox[0 0 612 792]" % self.PAGES
+            + (b"/Rotate %d" % rotate if rotate else b"")
+            + (b"/Resources<<%s>>" % res if res else b"")
+            + (b"/Contents %d 0 R" % contents if isinstance(contents, int)
+               else b"/Contents[%s]" % refs(contents))
+            + (b"/Annots[%s]" % refs(annots) if annots else b"")
+            + b">>",
+        )
+        return self.CATALOG
 
     def add(self, body: bytes) -> int:
         self.objects.append(body)
@@ -129,12 +182,18 @@ class PdfBuilder:
         )
         return self.add(body)
 
-    def build(self, root_id: int, trailer_extra: bytes = b"") -> bytes:
+    def body(self) -> tuple[bytearray, list[int]]:
+        """Header plus every ``obj … endobj``, and each object's offset
+        (index = object id; 0 for the free entry)."""
         out = bytearray(b"%PDF-1.7\n%\xb5\xb6\n\n")
         offsets = [0] * (len(self.objects) + 1)
-        for i, body in enumerate(self.objects, start=1):
+        for i, obj in enumerate(self.objects, start=1):
             offsets[i] = len(out)
-            out += str(i).encode() + b" 0 obj\n" + body + b"\nendobj\n\n"
+            out += str(i).encode() + b" 0 obj\n" + obj + b"\nendobj\n\n"
+        return out, offsets
+
+    def build(self, root_id: int, trailer_extra: bytes = b"") -> bytes:
+        out, offsets = self.body()
         xref_off = len(out)
         n = len(self.objects) + 1
         out += b"xref\n0 " + str(n).encode() + b"\n"
@@ -350,10 +409,7 @@ def _type0_font(
 
 def _simple_doc(lines: list[str], content_fn, filters: str = "",
                 font_body: bytes = F_HELV, indirect_length: bool = False) -> bytes:
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(font_body)
     content = content_fn(lines)
     if indirect_length:
@@ -374,16 +430,7 @@ def _simple_doc(lines: list[str], content_fn, filters: str = "",
         )
     else:
         cont = b.stream(content, filters=filters)
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _multipage_doc(lines: list[str]) -> bytes:
@@ -424,10 +471,7 @@ def _multipage_doc(lines: list[str]) -> bytes:
 def _multistream_doc(lines: list[str]) -> bytes:
     """Contents as an array of 2 streams; ops split mid-text-object
     (render.c:1175-1199 executes them sequentially)."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     half = max(1, len(lines) // 2)
     c1 = _content_td_tj(lines[:half])
@@ -441,25 +485,13 @@ def _multistream_doc(lines: list[str]) -> bytes:
     c2 = b"\n".join(ops) + b"\nET"
     s1 = b.stream(c1, filters="FlateDecode")
     s2 = b.stream(c2, filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents[" + str(s1).encode() + b" 0 R " + str(s2).encode() + b" 0 R]>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, [s1, s2]))
 
 
 def _form_xobject_doc(lines: list[str]) -> bytes:
     """Text inside a Form XObject invoked by Do with a translate Matrix
     (render.c:979-1066)."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     # form places text at origin-relative coords; Matrix translates into page
     ops = [b"BT", b"/F1 " + _n(FONT_SIZE) + b" Tf"]
@@ -477,16 +509,7 @@ def _form_xobject_doc(lines: list[str]) -> bytes:
         filters="FlateDecode",
     )
     cont = b.stream(b"q /Fm1 Do Q")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</XObject<</Fm1 " + str(form).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(None, cont, resources=b"/XObject<</Fm1 %d 0 R>>" % form))
 
 
 def _type0_vertical_doc(lines: list[str]) -> bytes:
@@ -497,10 +520,7 @@ def _type0_vertical_doc(lines: list[str]) -> bytes:
     interpreter applying the DW2 vertical advance (w1 = -1000 downward)
     and the vertical TJ-number displacement correctly; a wrong advance
     reorders or merges the halves."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     charset = sorted(set("".join(lines)))
     font, code_of = _type0_font(
         b, charset, encoding=b"/Identity-V", desc_extra=b"/DW2[880 -1000]"
@@ -518,16 +538,7 @@ def _type0_vertical_doc(lines: list[str]) -> bytes:
             ops.append(b"[40 <" + h2.encode() + b">] TJ")
     ops.append(b"ET")
     cont = b.stream(b"\n".join(ops), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _tagged_pdf_doc(lines: list[str]) -> bytes:
@@ -537,10 +548,7 @@ def _tagged_pdf_doc(lines: list[str]) -> bytes:
     ``BDC /P <</MCID i>> .. EMC``; the /StructTreeRoot's kids list the
     MCIDs in logical order 0..n-1. The extractor must follow the
     structure tree — expected text is the ORIGINAL line order."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     struct_root = b.reserve()
     n = len(lines)
     ops = [b"BT", b"/F1 " + _n(FONT_SIZE) + b" Tf"]
@@ -560,7 +568,7 @@ def _tagged_pdf_doc(lines: list[str]) -> bytes:
         elems.append(
             b.add(
                 b"<</Type/StructElem/S/P/P " + str(struct_root).encode()
-                + b" 0 R/Pg " + str(page).encode() + b" 0 R/K "
+                + b" 0 R/Pg " + str(b.PAGE).encode() + b" 0 R/K "
                 + str(i).encode() + b">>"
             )
         )
@@ -569,28 +577,12 @@ def _tagged_pdf_doc(lines: list[str]) -> bytes:
         b"<</Type/StructTreeRoot/K["
         + b" ".join(str(e).encode() + b" 0 R" for e in elems) + b"]>>",
     )
-    b.set(
-        cat,
-        b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R"
-        b"/MarkInfo<</Marked true>>"
-        b"/StructTreeRoot " + str(struct_root).encode() + b" 0 R>>",
-    )
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    catalog = b"/MarkInfo<</Marked true>>/StructTreeRoot %d 0 R" % struct_root
+    return b.build(b.page_tree(font, cont, catalog=catalog))
 
 
 def _type0_doc(lines: list[str]) -> bytes:
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     charset = sorted(set("".join(lines)))
     font, code_of = _type0_font(b, charset)
     ops = [b"BT", b"/F1 " + _n(FONT_SIZE) + b" Tf"]
@@ -601,16 +593,7 @@ def _type0_doc(lines: list[str]) -> bytes:
         ops.append(b"<" + hexcodes.encode() + b"> Tj")
     ops.append(b"ET")
     cont = b.stream(b"\n".join(ops), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _incremental_doc(lines: list[str]) -> bytes:
@@ -682,10 +665,7 @@ def _actualtext_doc(lines: list[str]) -> bytes:
       i%4==3  inline dict with a UTF-16BE (BOM) hex-string ActualText;
               the scope spans TWO show ops (replacement emitted once)
     Expected text is exactly the input lines (default ``_expected_text``)."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     props = []
     ops = [b"BT", b"/F1 " + _n(FONT_SIZE) + b" Tf"]
@@ -717,26 +697,14 @@ def _actualtext_doc(lines: list[str]) -> bytes:
             ops.append(b"EMC")
     ops.append(b"ET")
     cont = b.stream(b"\n".join(ops), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>"
-        b"/Properties<<" + b"".join(props) + b">>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    properties = b"/Properties<<" + b"".join(props) + b">>"
+    return b.build(b.page_tree(font, cont, resources=properties))
 
 
 def _extgstate_doc(lines: list[str]) -> bytes:
     """Font set via ``/GS1 gs`` (ExtGState /Font pair) instead of Tf — the
     page has no Tf at all, so extraction only works if gs is applied."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     g = b.add(
         b"<</Type/ExtGState/LW 2/Font["
@@ -746,17 +714,7 @@ def _extgstate_doc(lines: list[str]) -> bytes:
         b"/F1 " + _n(FONT_SIZE) + b" Tf", b"/GS1 gs", 1
     )
     cont = b.stream(content, filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>"
-        b"/ExtGState<</GS1 " + str(g).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont, resources=b"/ExtGState<</GS1 %d 0 R>>" % g))
 
 
 def _ocg_layers_doc(lines: list[str]) -> bytes:
@@ -775,10 +733,7 @@ def _ocg_layers_doc(lines: list[str]) -> bytes:
       junk (dropped whole at ``Do``).
 
     Expected text = exactly ``lines``."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     ocg_on = b.add(b"<</Type/OCG/Name(Body)>>")
     ocg_off = b.add(b"<</Type/OCG/Name(Watermark)>>")
@@ -816,27 +771,15 @@ def _ocg_layers_doc(lines: list[str]) -> bytes:
         ),
     )
     cont = b.stream(b"\n".join(ops) + b"\nq /Fm1 Do Q", filters="FlateDecode")
-    b.set(
-        cat,
-        b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R"
-        b"/OCProperties<</OCGs["
-        + str(ocg_on).encode() + b" 0 R " + str(ocg_off).encode() + b" 0 R]"
-        b"/D<</ON[" + str(ocg_on).encode() + b" 0 R]"
-        b"/OFF[" + str(ocg_off).encode() + b" 0 R]>>>>>>",
+    catalog = (
+        b"/OCProperties<</OCGs[%d 0 R %d 0 R]/D<</ON[%d 0 R]/OFF[%d 0 R]>>>>"
+        % (ocg_on, ocg_off, ocg_on, ocg_off)
     )
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>"
-        b"/XObject<</Fm1 " + str(form).encode() + b" 0 R>>"
-        b"/Properties<</P1 " + str(ocg_on).encode() + b" 0 R"
-        b"/P2 " + str(ocg_off).encode() + b" 0 R"
-        b"/P3 " + str(ocmd).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
+    resources = (
+        b"/XObject<</Fm1 %d 0 R>>/Properties<</P1 %d 0 R/P2 %d 0 R/P3 %d 0 R>>"
+        % (form, ocg_on, ocg_off, ocmd)
     )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont, resources=resources, catalog=catalog))
 
 
 def _content_hex_byte_lines(lines_bytes: list[bytes]) -> bytes:
@@ -919,10 +862,7 @@ def _type1c_symbolic_doc(lines: list[str]) -> bytes:
     'Q' resolves through a CUSTOM String-INDEX name (SID 391 'uni0051').
     The reference parses CFF charsets for rendering (libs/cff/src/
     charsets.c) but never maps names to text."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     # gid k (1..95) = chr(0x7E-(k-1)); standard SID = ord-31, except 'Q'
     # which routes through the String INDEX (custom SID 391)
     sids = []
@@ -945,16 +885,7 @@ def _type1c_symbolic_doc(lines: list[str]) -> bytes:
     )
     shifted = [bytes(_type1c_code(c) for c in line) for line in lines]
     cont = b.stream(_content_hex_byte_lines(shifted), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _mini_type1(encoding: dict[int, str], pfb: bool = False) -> bytes:
@@ -993,10 +924,7 @@ def _type1_builtin_doc(lines: list[str]) -> bytes:
     (font_descriptor.c FontFile todo)."""
     from pdf_spark.core.encodings import STANDARD_ENCODING
 
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     charset = sorted(set("".join(lines)))
     enc = {ord(c) + 1: STANDARD_ENCODING[ord(c)] for c in charset}
     prog = _mini_type1(enc, pfb=True)
@@ -1015,16 +943,7 @@ def _type1_builtin_doc(lines: list[str]) -> bytes:
     )
     shifted = [bytes((ord(c) + 1) for c in line) for line in lines]
     cont = b.stream(_content_hex_byte_lines(shifted), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _mini_sfnt(
@@ -1077,10 +996,7 @@ def _truetype_symbolic_doc(lines: list[str]) -> bytes:
     """Symbolic TrueType with NO ToUnicode/Encoding: string codes are
     shifted (+1) so only the embedded program's (1,0) cmap -> inverse (3,1)
     Unicode cmap chain decodes them correctly."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     # (1,0): code 0x21+k -> gid k+1 (char 0x20+k); (3,1): U+0020..7E -> gid
     sfnt = _mini_sfnt(0x21, [k + 1 for k in range(95)], (0x20, 0x7E, -0x1F))
     ff2 = b.add(
@@ -1097,16 +1013,7 @@ def _truetype_symbolic_doc(lines: list[str]) -> bytes:
     )
     shifted = [bytes((ord(c) + 1) for c in line) for line in lines]
     cont = b.stream(_content_hex_byte_lines(shifted), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 # truetype_nonbmp: ASCII letters/digits render as MATHEMATICAL BOLD
@@ -1143,10 +1050,7 @@ def _truetype_nonbmp_doc(lines: list[str]) -> bytes:
     stops at formats 0/4/6 (sfnt/src/cmap.c:30-91) — this variant pins
     the format-12 extension AND astral-char survival through the Arrow
     UTF-8 boundary."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     # (1,0): code 0x21+k -> gid k+1 (char 0x20+k), same shift scheme as
     # _truetype_symbolic_doc
     sfnt = _mini_sfnt(
@@ -1166,16 +1070,7 @@ def _truetype_nonbmp_doc(lines: list[str]) -> bytes:
     )
     shifted = [bytes((ord(c) + 1) for c in line) for line in lines]
     cont = b.stream(_content_hex_byte_lines(shifted), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _mini_sfnt_post(
@@ -1215,10 +1110,7 @@ def _truetype_post_doc(lines: list[str]) -> bytes:
     3+k (the printable-ASCII block of the 258-name order) except '~'
     (gid 95), which uses custom index 258 into the Pascal-string pool —
     both index classes pinned in one font. Reference has no post path."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     # (1,0): code 0x21+k -> gid k+1 (char 0x20+k); post names gid k+1
     indices = [0] + [3 + k for k in range(95)]   # gid 0 = .notdef
     indices[95] = 258                            # '~' via the custom pool
@@ -1239,26 +1131,14 @@ def _truetype_post_doc(lines: list[str]) -> bytes:
     )
     shifted = [bytes((ord(c) + 1) for c in line) for line in lines]
     cont = b.stream(_content_hex_byte_lines(shifted), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _cidfont2_sfnt_doc(lines: list[str]) -> bytes:
     """Type0/Identity-H over CIDFontType2 with NO ToUnicode: CIDs are
     shifted (+2), so decode must go CID -> GID (CIDToGIDMap stream) ->
     inverse sfnt Unicode cmap."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     # cid = ord+2; gid = ord-0x1F; unicode (3,1): U+0020..7E -> gid
     sfnt = _mini_sfnt(0xFFFE, [], (0x20, 0x7E, -0x1F))
     max_cid = 0x7E + 2
@@ -1292,26 +1172,14 @@ def _cidfont2_sfnt_doc(lines: list[str]) -> bytes:
         b"".join((ord(c) + 2).to_bytes(2, "big") for c in line) for line in lines
     ]
     cont = b.stream(_content_hex_byte_lines(coded), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _type0_predefined_doc(lines: list[str]) -> bytes:
     """Type0 with the predefined /UniJIS-UCS2-H CMap and NO ToUnicode:
     2-byte codes ARE the Unicode code points (decode must use the CMap's
     unicode-identity property; widths come from the ASCII CID run 1..95)."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     cid_font = b.add(
         b"<</Type/Font/Subtype/CIDFontType0/BaseFont/FakeMincho"
         b"/CIDSystemInfo<</Registry(Adobe)/Ordering(Japan1)/Supplement 7>>"
@@ -1326,16 +1194,7 @@ def _type0_predefined_doc(lines: list[str]) -> bytes:
         b"".join(ord(c).to_bytes(2, "big") for c in line) for line in lines
     ]
     cont = b.stream(_content_hex_byte_lines(coded), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _type0_cid_ascii_doc(lines: list[str]) -> bytes:
@@ -1345,10 +1204,7 @@ def _type0_cid_ascii_doc(lines: list[str]) -> bytes:
     printable ASCII characters, identical across the Adobe-Japan1/GB1/
     CNS1/Korea1/KR collection specs) — the common shape of subset-embedded
     CJK fonts whose ToUnicode was stripped by an optimizer."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     cid_font = b.add(
         b"<</Type/Font/Subtype/CIDFontType0/BaseFont/FakeMincho"
         b"/CIDSystemInfo<</Registry(Adobe)/Ordering(Japan1)/Supplement 7>>"
@@ -1364,16 +1220,7 @@ def _type0_cid_ascii_doc(lines: list[str]) -> bytes:
         for line in lines
     ]
     cont = b.stream(_content_hex_byte_lines(coded), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _ascii_cid(c: str) -> int:
@@ -1398,10 +1245,7 @@ def _type0_legacy_cmap_doc(lines: list[str]) -> bytes:
     """Type0 with the predefined byte-oriented /90ms-RKSJ-H CMap and NO
     ToUnicode: string bytes are Shift-JIS (cp932) — decode requires the
     legacy-CMap codespace split (mixed 1/2-byte) + charset decode."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     cid_font = b.add(
         b"<</Type/Font/Subtype/CIDFontType0/BaseFont/FakeGothic"
         b"/CIDSystemInfo<</Registry(Adobe)/Ordering(Japan1)/Supplement 7>>"
@@ -1416,16 +1260,7 @@ def _type0_legacy_cmap_doc(lines: list[str]) -> bytes:
         "".join(_jp_char(c) for c in line).encode("cp932") for line in lines
     ]
     cont = b.stream(_content_hex_byte_lines(coded), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _cyr_char(base: int, yo: int, k: int) -> str:
@@ -1454,10 +1289,7 @@ def _differences_nonlatin_doc(lines: list[str]) -> bytes:
     """Simple font whose /Differences names Cyrillic afii* and Greek glyphs:
     decode requires the non-Latin AGL blocks (reference: full glyphlist.txt
     via fonts/agl.c; we embed the afii/Greek runs)."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     upper = b" ".join(
         b"/afii" + str(10017 + k).encode() for k in range(26)
     )
@@ -1477,26 +1309,14 @@ def _differences_nonlatin_doc(lines: list[str]) -> bytes:
         bytes(_nonlatin_map(c)[0] for c in line) for line in lines
     ]
     cont = b.stream(_content_hex_byte_lines(coded), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _macexpert_doc(lines: list[str]) -> bytes:
     """Simple font with /Encoding /MacExpertEncoding: letters arrive as the
     small-caps codes (0x61..0x7A read as Asmall..Zsmall -> lowercase text),
     digits as oldstyle figures."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(
         b"<</Type/Font/Subtype/Type1/BaseFont/FakeExpert"
         b"/Encoding/MacExpertEncoding>>"
@@ -1505,16 +1325,7 @@ def _macexpert_doc(lines: list[str]) -> bytes:
         bytes(_macexpert_code(c) for c in line) for line in lines
     ]
     cont = b.stream(_content_hex_byte_lines(coded), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 def _macexpert_code(c: str) -> int:
@@ -1551,10 +1362,7 @@ def _macroman_doc(lines: list[str]) -> bytes:
     """Simple font with /MacRomanEncoding: 'a'/'e' are written as the
     high-range codes 0x87 (aacute) / 0x8E (eacute) — decode requires the
     full MacRoman 128-255 table + AGL."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(
         b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica"
         b"/Encoding/MacRomanEncoding>>"
@@ -1567,16 +1375,7 @@ def _macroman_doc(lines: list[str]) -> bytes:
         for line in lines
     ]
     cont = b.stream(_content_hex_byte_lines(coded), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 # -- Symbol / ZapfDingbats built-in encodings (Annex D.5/D.6) -----------------
@@ -1607,10 +1406,7 @@ def _symbol_doc(lines: list[str]) -> bytes:
     built-in-encoding lookup, §9.6.4), /F2 ZapfDingbats. Decode requires
     the fonts' built-in encoding tables — StandardEncoding would read the
     Greek back as Latin letters."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     f1 = b.add(b"<</Type/Font/Subtype/Type1/BaseFont/ABCDEF+Symbol>>")
     f2 = b.add(b"<</Type/Font/Subtype/Type1/BaseFont/ZapfDingbats>>")
     coded = [
@@ -1635,17 +1431,8 @@ def _symbol_doc(lines: list[str]) -> bytes:
         b"ET",
     ]
     cont = b.stream(b"\n".join(ops), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(f1).encode() + b" 0 R"
-        b"/F2 " + str(f2).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    fonts = b"/Font<</F1 %d 0 R/F2 %d 0 R>>" % (f1, f2)
+    return b.build(b.page_tree(None, cont, resources=fonts))
 
 
 def _xref_stream_rows(entries: list[tuple[int, int, int]]) -> bytes:
@@ -1712,33 +1499,18 @@ def _xref_stream_doc(lines: list[str], predictor: bool = False) -> bytes:
     """PDF 1.5 layout: body objects are classic, but the cross-reference is
     a ``/Type/XRef`` stream (engine extension; reference supports classic
     tables only, xref.c:144-228)."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    out = bytearray(b"%PDF-1.7\n%\xb5\xb6\n\n")
-    offsets = [0] * (len(b.objects) + 1)
-    for i, body in enumerate(b.objects, start=1):
-        offsets[i] = len(out)
-        out += str(i).encode() + b" 0 obj\n" + body + b"\nendobj\n\n"
+    root = b.page_tree(font, cont)
+    out, offsets = b.body()
     xref_id = len(b.objects) + 1
     rows = (
         [(0, 0, 65535)]
         + [(1, offsets[i], 0) for i in range(1, xref_id)]
         + [(1, len(out), 0)]  # the xref stream indexes itself
     )
-    _emit_xref_stream(out, xref_id, rows, cat, predictor)
+    _emit_xref_stream(out, xref_id, rows, root, predictor)
     return bytes(out)
 
 
@@ -1903,10 +1675,7 @@ def _info_annots_doc(lines: list[str]) -> bytes:
     non-Latin chars, PDFDocEncoding author, both date forms) and two URI
     Link annotations plus one non-link annotation. The text roundtrip must
     be unaffected; core/meta.py reads the side channel."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
     a1 = b.add(
@@ -1924,18 +1693,8 @@ def _info_annots_doc(lines: list[str]) -> bytes:
         b"/Author(J. Author \x93\x94)"  # PDFDoc fi/fl ligature bytes
         b"/CreationDate(D:20240115103000Z)/ModDate(D:20240116)>>"
     )
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R"
-        b"/Annots[" + b" ".join(str(a).encode() + b" 0 R" for a in (a1, a2, a3))
-        + b"]>>",
-    )
-    return b.build(cat, trailer_extra=b"/Info " + str(info).encode() + b" 0 R")
+    root = b.page_tree(font, cont, annots=[a1, a2, a3])
+    return b.build(root, trailer_extra=b"/Info " + str(info).encode() + b" 0 R")
 
 
 def _acroform_doc(lines: list[str]) -> bytes:
@@ -1945,10 +1704,7 @@ def _acroform_doc(lines: list[str]) -> bytes:
     two /T kids produce qualified names (one inheriting the parent /V).
     The page-text roundtrip must be unaffected; core/meta.py reads the
     field tree."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
     f1 = b.reserve()
@@ -1968,17 +1724,7 @@ def _acroform_doc(lines: list[str]) -> bytes:
                   + str(k1).encode() + b" 0 R " + str(k2).encode() + b" 0 R]>>")
     acro = b.add(b"<</Fields[" + b" ".join(
         str(f).encode() + b" 0 R" for f in (f1, f2, f3, parent)) + b"]>>")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode()
-               + b" 0 R/AcroForm " + str(acro).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont, catalog=b"/AcroForm %d 0 R" % acro))
 
 
 # two-column layout geometry: narrow re-wrapped lines so the estimated
@@ -2021,22 +1767,10 @@ def _rotated_doc(lines: list[str], rot: int) -> bytes:
         ops.append(b"(" + esc(line) + b") Tj")
     ops.append(b"ET")
     content = b"\n".join(ops)
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     cont = b.stream(content, filters="FlateDecode")
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]/Rotate " + str(rot).encode() +
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont, rotate=rot))
 
 
 def _twocolumn_doc(lines: list[str]) -> bytes:
@@ -2096,26 +1830,14 @@ def _dct_doc(lines: list[str]) -> bytes:
     fail with UNSUPPORTED_FILTER (the reference panics on any filter beyond
     ASCIIHex/Flate, filters.c:54; we additionally implement LZW, so the
     unsupported representative is DCT)."""
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     content = _content_td_tj(lines)
     cont = b.add(
         b"<</Length " + str(len(content)).encode()
         + b"/Filter/DCTDecode>>\nstream\n" + content + b"\nendstream"
     )
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
-    return b.build(cat)
+    return b.build(b.page_tree(font, cont))
 
 
 _ENC_SETUP_CACHE: dict[str, tuple] = {}
@@ -2201,10 +1923,7 @@ def _encrypted_doc(lines: list[str], mode: str) -> bytes:
     import hashlib
 
     id0, enc_dict, dec = _enc_setup(mode)
-    b = PdfBuilder()
-    cat = b.reserve()
-    pages = b.reserve()
-    page = b.reserve()
+    b = PdfBuilder.one_page()
     font = b.add(F_HELV)
     content = _content_td_tj(lines)
     cont_id = len(b.objects) + 1
@@ -2216,20 +1935,11 @@ def _encrypted_doc(lines: list[str], mode: str) -> bytes:
     )
     assert cont == cont_id
     enc_id = b.add(enc_dict)
-    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-    b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-    b.set(
-        page,
-        b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-        b"/MediaBox[0 0 612 792]"
-        b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-        b"/Contents " + str(cont).encode() + b" 0 R>>",
-    )
     trailer_extra = (
         b"/Encrypt " + str(enc_id).encode() + b" 0 R"
         b"/ID[<" + id0.hex().encode() + b"> <" + id0.hex().encode() + b">]"
     )
-    return b.build(cat, trailer_extra=trailer_extra)
+    return b.build(b.page_tree(font, cont), trailer_extra=trailer_extra)
 
 
 def _truncate_body(pdf: bytes) -> bytes:
@@ -2320,22 +2030,10 @@ def generate_doc(text: str, variant: int) -> tuple[bytes, str, str, str]:
         if name in ("multipage_inherit", "multistream") and len(lines) < 2:
             lines = lines + ["..."]
         if name == "truetype_widths":
-            b = PdfBuilder()
-            cat = b.reserve()
-            pages = b.reserve()
-            page = b.reserve()
+            b = PdfBuilder.one_page()
             font = _truetype_font(b)
             cont = b.stream(_content_td_tj(lines), filters="FlateDecode")
-            b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode() + b" 0 R>>")
-            b.set(pages, b"<</Type/Pages/Kids[" + str(page).encode() + b" 0 R]/Count 1>>")
-            b.set(
-                page,
-                b"<</Type/Page/Parent " + str(pages).encode() + b" 0 R"
-                b"/MediaBox[0 0 612 792]"
-                b"/Resources<</Font<</F1 " + str(font).encode() + b" 0 R>>>>"
-                b"/Contents " + str(cont).encode() + b" 0 R>>",
-            )
-            pdf = b.build(cat)
+            pdf = b.build(b.page_tree(font, cont))
         else:
             pdf = fn(lines)
         return pdf, _expected_text(lines, name), name, ""

@@ -3,8 +3,8 @@
 - ``tag_lineage_cols`` tags each input row at scan time with its
   ``spark_partition_id`` and the input file it came from
   (``input_file_name``, unless the source already carries an
-  ``input_file`` column, as ``read_warc`` does); both ride the extraction
-  UDF as passthrough columns.
+  ``input_file`` column, as ``read_warc`` does; a frame that dropped it
+  raises); both ride the extraction UDF as passthrough columns.
 
 - Lineage is tallied by the writer, as it writes: the extraction UDF adds
   one ``batch_tally`` per Arrow batch to a ``Tally`` accumulator, keyed
@@ -59,9 +59,40 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def _scan_file_path(pages: DataFrame):
+    """``pages``' ``_metadata.file_path`` column, or None for a frame with
+    no ``_metadata`` (in-memory, ``foreachBatch``), where
+    ``input_file_name()`` still names the right file or ``''``.
+
+    Spark passes a scan's metadata columns through a Python UDF, so above
+    ``read_warc``'s flattening ``_metadata`` resolves but its
+    ``file_path`` fails analysis. Such a frame must keep the
+    ``input_file`` its source wrote: ``input_file_name()`` there names
+    whichever file the task read last, and a frame that dropped it raises
+    ``ValueError`` rather than write wrong lineage."""
+    try:  # metadataColumn raises without logging; a failed F.col logs an ERROR
+        path = pages.metadataColumn("_metadata")["file_path"]
+    except AnalysisException:
+        return None
+    try:
+        pages.select(path)
+    except AnalysisException as e:
+        raise ValueError(
+            "this frame's source names each row's input file in an input_file"
+            " column, and the frame dropped it: keep the source's input_file"
+        ) from e
+    return path
+
+
 def tag_lineage_cols(pages: DataFrame) -> DataFrame:
-    # read_warc brings its own: input_file_name() above its flattening
-    # UDF names whichever archive the task read last
+    if "input_file" not in pages.columns:
+        _scan_file_path(pages)
+    return _tag(pages)
+
+
+def _tag(pages: DataFrame) -> DataFrame:
+    """``tag_lineage_cols`` once ``pages`` has been probed."""
+    # read_warc brings its own input_file (see _scan_file_path)
     if "input_file" not in pages.columns:
         pages = pages.withColumn("input_file", F.input_file_name())
     # partition_id as string so it can ride the UDF passthrough unchanged
@@ -201,11 +232,17 @@ def drop_uncommitted_runs(spark: SparkSession, out_dir: str, run_ids: set) -> No
             fs.delete(st.getPath(), True)
 
 
+def run_dir(spark: SparkSession, out_dir: str, run_id: str) -> str:
+    """Run ``run_id``'s ``docs_text/run_id=…`` directory, its value escaped
+    as the sink's writer escapes it."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    return os.path.join(out_dir, "docs_text", f"run_id={escape(run_id)}")
+
+
 def drop_run(spark: SparkSession, out_dir: str, run_id: str) -> None:
     """Delete run ``run_id``'s ``docs_text`` directory, if a try of the run
     that died before its commit left one."""
-    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    hpath, fs = _fs(spark, os.path.join(out_dir, "docs_text", f"run_id={escape(run_id)}"))
+    hpath, fs = _fs(spark, run_dir(spark, out_dir, run_id))
     fs.delete(hpath, True)
 
 
@@ -227,17 +264,14 @@ def remaining_pages(pages: DataFrame, spark: SparkSession, out_dir: str) -> Data
     directories are deleted first."""
     files, run_ids = commit_log(spark, out_dir)
     drop_uncommitted_runs(spark, out_dir, run_ids)
+    # a source that named its own files is not probed
+    path = None if "input_file" in pages.columns else _scan_file_path(pages)
     if not files:
-        return tag_lineage_cols(pages)
-    if "input_file" not in pages.columns:  # else a source named its own files
+        return _tag(pages)
+    if path is not None:
         scanned = sorted({_scan_spelling(f) for f in files})
-        try:  # metadataColumn raises without logging; a failed F.col logs an ERROR
-            pruned = pages.where(~pages.metadataColumn("_metadata")["file_path"].isin(scanned))
-        except AnalysisException:
-            pass
-        else:
-            return tag_lineage_cols(pruned)
-    return tag_lineage_cols(pages).where(~F.col("input_file").isin(sorted(files)))
+        return _tag(pages.where(~path.isin(scanned)))
+    return _tag(pages).where(~F.col("input_file").isin(sorted(files)))
 
 
 def write_lineage(spark: SparkSession, out_dir: str, table: pa.Table, run_id: str) -> None:

@@ -6,9 +6,9 @@ starts reads it: ``spark_session`` (tests, benchmarks, local runs) and
 shape). Every key is per-executor-safe at any cluster width:
 
 - Arrow on end to end (the only Python<->JVM traffic is columnar);
-- ``maxRecordsPerBatch`` kept small (64): one Arrow batch must never hold
-  two oversized PDFs (SURVEY.md §7.3 hard part #3) — batch memory is
-  bounded by ``batch_rows × max_doc_bytes``;
+- ``maxRecordsPerBatch`` kept small (``BATCH_ROWS``, 64): one Arrow batch
+  must never hold two oversized PDFs (SURVEY.md §7.3 hard part #3) — batch
+  memory is bounded by ``batch_rows × max_doc_bytes``;
 - ``maxPartitionBytes`` 64m, read from ``SPARK_GRAFT_MAX_PARTITION_BYTES``
   when the session is built;
 - session time zone UTC;
@@ -33,6 +33,10 @@ import zipimport
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
+# rows per Arrow batch into a Python UDF, and at most per frame a source
+# UDF yields (``sources/warc.read_warc``)
+BATCH_ROWS = 64
+
 
 def job_conf() -> dict[str, str]:
     """The job's SQL settings; the environment is read on each call, so a
@@ -40,7 +44,7 @@ def job_conf() -> dict[str, str]:
     the new value."""
     return {
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(BATCH_ROWS),
         # split sizing, re-measured after the round-3 parse speedups
         # (~2.5 MB/s/core): 64 MB splits are ~25 s tasks — granular enough
         # for wave balancing at any cluster width. A reused Python worker
@@ -72,7 +76,7 @@ def spark_session(app: str = "pdf-spark", cores: int | None = None) -> SparkSess
         .config(map=job_conf())
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.shuffle.partitions", str(max(8, cores)))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -274,6 +274,28 @@ def _raw_schema():
     )
 
 
+def _record_frames(batches, max_record_bytes: int):
+    """``read_warc``'s flattening: binaryFile batches (``content``,
+    ``input_file``) -> frames of the raw schema, at most ``BATCH_ROWS``
+    records each, so a task holds one frame of an archive's decoded
+    records at a time, never the whole archive's."""
+    from itertools import islice
+
+    import pandas as pd
+
+    from pdf_spark.session import BATCH_ROWS
+
+    columns = _raw_schema().fieldNames()
+    for batch in batches:
+        rows = (
+            (*row, archive)
+            for content, archive in zip(batch["content"], batch["input_file"])
+            for row in records_to_rows(bytes(content), max_record_bytes)
+        )
+        while chunk := list(islice(rows, BATCH_ROWS)):
+            yield pd.DataFrame(chunk, columns=columns)
+
+
 def read_warc(spark, path: str, max_record_bytes: int = DEFAULT_MAX_RECORD):
     """WARC files -> DataFrame(url, warc_ts timestamp, html binary,
     http_status int, mime string, input_file string).
@@ -285,22 +307,13 @@ def read_warc(spark, path: str, max_record_bytes: int = DEFAULT_MAX_RECORD):
     Common-Crawl consumption; record flattening happens task-side with no
     shuffle. Column pruning applies upstream (binaryFile reads only
     ``content``); everything downstream is the standard narrow pipeline."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from pdf_spark.session import task_prologue
 
-    schema = _raw_schema()
-
     def parse(batches):
         task_prologue()
-        for batch in batches:
-            rows = [
-                (*row, archive)
-                for content, archive in zip(batch["content"], batch["input_file"])
-                for row in records_to_rows(bytes(content), max_record_bytes)
-            ]
-            yield pd.DataFrame(rows, columns=schema.fieldNames())
+        yield from _record_frames(batches, max_record_bytes)
 
     # the archive is named in the scan's own projection, row by row (above
     # the UDF, input_file_name() names the task's last archive), and spelt
@@ -308,7 +321,7 @@ def read_warc(spark, path: str, max_record_bytes: int = DEFAULT_MAX_RECORD):
     files = spark.read.format("binaryFile").load(path).select(
         "content", F.input_file_name().alias("input_file")
     )
-    out = files.mapInPandas(parse, schema)
+    out = files.mapInPandas(parse, _raw_schema())
     return out.select(
         "url",
         F.to_timestamp("warc_date").alias("warc_ts"),

@@ -79,32 +79,27 @@ def main() -> None:
         resume=not args.no_resume,
         markdown=args.markdown,
     )
-    if args.wet_out:
-        from pyspark.sql import functions as F
+    # this run's directory only; a run that extracted nothing has none
+    if (args.wet_out or args.jsonl_out) and summary["n_ok"] + summary["n_err"]:
+        from pdf_spark.operators.lineage import run_dir
 
-        from pdf_spark.sources.warc import write_wet
+        run_docs = spark.read.parquet(run_dir(spark, args.out, summary["run_id"]))
+        if args.wet_out:
+            from pdf_spark.sources.warc import write_wet
 
-        run_docs = (
-            spark.read.parquet(summary["docs_path"])
-            .where(F.col("run_id") == summary["run_id"])
-        )
-        parts = write_wet(run_docs, args.wet_out)
-        summary["wet_files"] = len(parts)
-        summary["wet_records"] = sum(n for _, n in parts)
-    if args.jsonl_out:
-        from pyspark.sql import functions as F
+            parts = write_wet(run_docs, args.wet_out)
+            summary["wet_files"] = len(parts)
+            summary["wet_records"] = sum(n for _, n in parts)
+        if args.jsonl_out:
+            from pdf_spark.sources.jsonl import write_jsonl
 
-        from pdf_spark.sources.jsonl import write_jsonl
-
-        run_docs = (
-            spark.read.parquet(summary["docs_path"])
-            .where(F.col("run_id") == summary["run_id"])
-            .where(F.col("text").isNotNull())
-            .select("url", "text")
-        )
-        parts = write_jsonl(run_docs, args.jsonl_out, sort_cols=["url"])
-        summary["jsonl_files"] = len(parts)
-        summary["jsonl_records"] = sum(n for _, n in parts)
+            parts = write_jsonl(
+                run_docs.where("text IS NOT NULL").select("url", "text"),
+                args.jsonl_out,
+                sort_cols=["url"],
+            )
+            summary["jsonl_files"] = len(parts)
+            summary["jsonl_records"] = sum(n for _, n in parts)
     print(json.dumps(summary))
     spark.stop()
 

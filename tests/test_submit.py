@@ -21,10 +21,10 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _submit(pages: str, out: str, env: dict) -> dict:
+def _submit(pages: str, out: str, env: dict, *args: str) -> dict:
     proc = subprocess.run(
         ["bash", os.path.join(REPO, "scripts", "submit.sh"),
-         "--pages", pages, "--out", out],
+         "--pages", pages, "--out", out, *args],
         env=env, cwd=os.path.dirname(out), capture_output=True, text=True,
         timeout=600,
     )
@@ -69,16 +69,21 @@ def test_submit_runs_the_job_settings_and_resumes(spark, tmp_path):
     env.pop("PYSPARK_SUBMIT_ARGS", None)
     env.pop("SPARK_GRAFT_MAX_PARTITION_BYTES", None)
     out = str(tmp_path / "sink")
+    # the text sinks read only this run's docs_text directory
+    sinks = ("--wet-out", str(tmp_path / "wet"), "--jsonl-out", str(tmp_path / "jsonl"))
 
-    first = _submit(pages, out, env)
+    first = _submit(pages, out, env, *sinks)
     want = extract_docs_text(spark.read.parquet(pages)).select("url", "text", "status")
     got = spark.read.parquet(first["docs_path"]).select("url", "text", "status")
     assert first["n_ok"] + first["n_err"] == len(texts)
     assert first["n_err"] == want.where("status = 'error'").count() > 0
     assert sorted(got.collect()) == sorted(want.collect())
+    assert first["wet_records"] == first["jsonl_records"] == first["n_ok"]
 
-    second = _submit(pages, out, env)
+    # a resumed run extracts nothing, so it has no run directory to read
+    second = _submit(pages, out, env, *sinks)
     assert second["n_ok"] + second["n_err"] == 0
+    assert "wet_records" not in second and "jsonl_records" not in second
 
     logs = sorted(events.iterdir())
     assert len(logs) == 2

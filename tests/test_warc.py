@@ -121,6 +121,60 @@ def test_read_warc_spark(spark, tmp_path):
     assert dict(df.dtypes)["warc_ts"] == "timestamp"
 
 
+def test_read_warc_yields_bounded_frames():
+    """One archive's records leave the flattening UDF in frames of at
+    most BATCH_ROWS rows, in archive order, never as one frame."""
+    import pandas as pd
+
+    from pdf_spark.session import BATCH_ROWS
+    from pdf_spark.sources.warc import DEFAULT_MAX_RECORD, _raw_schema, _record_frames
+
+    recs = [
+        build_response_record(
+            f"https://b.example/{i}", "2024-03-01T00:00:00Z",
+            f"<html><body>record {i}</body></html>".encode(), chunked=(i % 3 == 0))
+        for i in range(200)
+    ]
+    archives = [write_warc(recs), write_warc(recs[:5])]
+    names = ["file:///w/big.warc.gz", "file:///w/small.warc.gz"]
+    batch = pd.DataFrame({"content": archives, "input_file": names})
+    frames = list(_record_frames(iter([batch]), DEFAULT_MAX_RECORD))
+    assert BATCH_ROWS == 64
+    assert [len(f) for f in frames] == [64, 64, 64, 13]
+    want = pd.DataFrame(
+        [(*row, name) for arc, name in zip(archives, names) for row in records_to_rows(arc)],
+        columns=_raw_schema().fieldNames(),
+    )
+    pd.testing.assert_frame_equal(pd.concat(frames, ignore_index=True), want)
+
+
+def test_warc_frame_without_input_file_raises(spark, tmp_path):
+    """Above read_warc's UDF, input_file_name() names whichever archive
+    the task read last: a frame that dropped the source's input_file is
+    refused, not tagged with the wrong archives."""
+    from pdf_spark.operators.lineage import tag_lineage_cols
+    from pdf_spark.operators.pipeline import run_extraction
+
+    d = tmp_path / "archives"
+    d.mkdir()
+    for f in range(2):
+        recs = [
+            build_response_record(
+                f"https://x.example/{f}/{i}", "2024-02-01T00:00:00Z",
+                f"<html><body><p>record {i}</p></body></html>".encode())
+            for i in range(3)
+        ]
+        (d / f"crawl-{f}.warc.gz").write_bytes(write_warc(recs))
+    dropped = read_warc(spark, str(d)).select("url", "warc_ts", "html")
+    with pytest.raises(ValueError, match="input_file"):
+        tag_lineage_cols(dropped)
+    with pytest.raises(ValueError, match="input_file"):
+        run_extraction(spark, dropped, str(tmp_path / "sink"))
+    kept = tag_lineage_cols(read_warc(spark, str(d)).select("url", "html", "input_file"))
+    assert {r["input_file"].rsplit("/", 1)[1] for r in kept.collect()} == {
+        "crawl-0.warc.gz", "crawl-1.warc.gz"}
+
+
 def test_fuzz_mutations_never_raise_and_deterministic():
     import random
 
@@ -175,7 +229,7 @@ def test_run_job_over_warc_archives(spark, tmp_path):
         ]
         (d / f"crawl-{f}.warc.gz").write_bytes(write_warc(recs))
 
-    pages = read_warc(spark, str(d)).select("url", "warc_ts", "html")
+    pages = read_warc(spark, str(d)).select("url", "warc_ts", "html", "input_file")
     out = str(tmp_path / "sink")
     summary = run_extraction(spark, pages, out, resume=False)
     assert summary["n_ok"] == 8 and summary["n_err"] == 0
