@@ -2990,6 +2990,35 @@ def _exif_read_ifd(t: bytes, endo: str, off: int) -> dict:
     return out
 
 
+_EXIF_HDR = b"Exif\x00\x00"
+
+
+def _jpeg_app1(blob: bytes, prefix: bytes):
+    """Byte span ``(start, end)`` of the first APP1 segment whose payload
+    leads ``prefix`` (``_EXIF_HDR`` or ``_XMP_NS``), or None. Walks JPEG
+    segments by their big-endian lengths exactly like image_meta, up to
+    the first SOS/EOI."""
+    if blob[:2] != b"\xff\xd8":
+        return None
+    pos, n = 2, len(blob)
+    while pos + 4 <= n:
+        if blob[pos] != 0xFF:
+            break
+        marker = blob[pos + 1]
+        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
+            pos += 2
+            continue
+        if marker in (0xD9, 0xDA):
+            break
+        seg_len = int.from_bytes(blob[pos + 2 : pos + 4], "big")
+        if seg_len < 2:
+            break
+        if marker == 0xE1 and blob[pos + 4 : pos + 4 + len(prefix)] == prefix:
+            return pos, pos + 2 + seg_len
+        pos += 2 + seg_len
+    return None
+
+
 _EXIF_NONE = {
     "has_exif": 0,
     "endian": None,
@@ -3011,27 +3040,11 @@ def exif_meta(blob: bytes) -> dict:
     routing decision, not an error (the image itself still decodes).
     Walks JPEG segments by their big-endian lengths exactly like
     image_meta; only an APP1 whose payload leads ``Exif\\0\\0`` is read."""
-    if blob[:2] != b"\xff\xd8":
+    span = _jpeg_app1(blob, _EXIF_HDR)
+    if span is None:
         return dict(_EXIF_NONE)
-    pos, n = 2, len(blob)
-    tiff = None
-    while pos + 4 <= n:
-        if blob[pos] != 0xFF:
-            break
-        marker = blob[pos + 1]
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker in (0xD9, 0xDA):
-            break
-        seg_len = int.from_bytes(blob[pos + 2 : pos + 4], "big")
-        if seg_len < 2:
-            break
-        if marker == 0xE1 and blob[pos + 4 : pos + 10] == b"Exif\x00\x00":
-            tiff = blob[pos + 10 : pos + 2 + seg_len]
-            break
-        pos += 2 + seg_len
-    if tiff is None or tiff[:4] not in (b"II*\x00", b"MM\x00*"):
+    tiff = blob[span[0] + 4 + len(_EXIF_HDR) : span[1]]
+    if tiff[:4] not in (b"II*\x00", b"MM\x00*"):
         return dict(_EXIF_NONE)
     endo = "little" if tiff[0] == 0x49 else "big"
     try:
@@ -3157,7 +3170,7 @@ def encode_exif_app1(
         tiff += ifd_bytes(sub, sub_off, {})
     if gps_ifd:
         tiff += ifd_bytes(gps_ifd, gps_off, {})
-    payload = b"Exif\x00\x00" + tiff
+    payload = _EXIF_HDR + tiff
     return b"\xff\xe1" + (len(payload) + 2).to_bytes(2, "big") + payload
 
 
@@ -3400,30 +3413,6 @@ def encode_apng(
 # pointer: an unlinked IFD's latitude bytes would still sit in the file.
 
 
-def _exif_app1_span(blob: bytes):
-    """Byte span ``(start, end)`` of the first APP1/Exif segment, or
-    None — the same segment walk exif_meta does."""
-    if blob[:2] != b"\xff\xd8":
-        return None
-    pos, n = 2, len(blob)
-    while pos + 4 <= n:
-        if blob[pos] != 0xFF:
-            break
-        marker = blob[pos + 1]
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker in (0xD9, 0xDA):
-            break
-        seg_len = int.from_bytes(blob[pos + 2 : pos + 4], "big")
-        if seg_len < 2:
-            break
-        if marker == 0xE1 and blob[pos + 4 : pos + 10] == b"Exif\x00\x00":
-            return (pos, pos + 2 + seg_len)
-        pos += 2 + seg_len
-    return None
-
-
 _GPS_NONE = {"has_gps": 0, "lat_microdeg": None, "lon_microdeg": None}
 
 
@@ -3432,10 +3421,10 @@ def exif_gps(blob: bytes) -> dict:
     micro-degrees (negative for S/W); ``has_gps=0`` when absent or
     malformed — a routing decision, not an error."""
     blob = bytes(blob)
-    span = _exif_app1_span(blob)
+    span = _jpeg_app1(blob, _EXIF_HDR)
     if span is None:
         return dict(_GPS_NONE)
-    tiff = blob[span[0] + 10 : span[1]]
+    tiff = blob[span[0] + 4 + len(_EXIF_HDR) : span[1]]
     if tiff[:4] not in (b"II*\x00", b"MM\x00*"):
         return dict(_GPS_NONE)
     endo = "little" if tiff[0] == 0x49 else "big"
@@ -3477,7 +3466,7 @@ def strip_exif_gps(jpeg: bytes) -> bytes:
     jpeg = bytes(jpeg)
     if exif_gps(jpeg)["has_gps"] == 0:
         return jpeg
-    span = _exif_app1_span(jpeg)
+    span = _jpeg_app1(jpeg, _EXIF_HDR)
     m = exif_meta(jpeg)
     rebuilt = b""
     if m["has_exif"]:
@@ -3540,28 +3529,10 @@ def jpeg_xmp_meta(blob: bytes) -> dict:
     none = {"has_xmp": 0, "creator_tool": None, "create_date": None,
             "creator": None, "digital_source_type": None,
             "is_ai_generated": 0}
-    if blob[:2] != b"\xff\xd8":
+    span = _jpeg_app1(blob, _XMP_NS)
+    if span is None:
         return dict(none)
-    pos, n = 2, len(blob)
-    xml = None
-    while pos + 4 <= n:
-        if blob[pos] != 0xFF:
-            break
-        marker = blob[pos + 1]
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker in (0xD9, 0xDA):
-            break
-        seg_len = int.from_bytes(blob[pos + 2 : pos + 4], "big")
-        if seg_len < 2:
-            break
-        if marker == 0xE1 and blob[pos + 4 : pos + 4 + len(_XMP_NS)] == _XMP_NS:
-            xml = blob[pos + 4 + len(_XMP_NS) : pos + 2 + seg_len]
-            break
-        pos += 2 + seg_len
-    if xml is None:
-        return dict(none)
+    xml = blob[span[0] + 4 + len(_XMP_NS) : span[1]]
     creator = None
     m = _re.search(
         rb"<dc:creator>.*?<rdf:li[^>]*>([^<]*)</rdf:li>", xml, _re.DOTALL
@@ -3986,7 +3957,7 @@ def jpeg_integrity(data: bytes) -> dict:
             break
         payload = data[pos + 2 : pos + length]
         n_seg += 1
-        if marker == 0xE1 and payload.startswith(b"Exif\x00\x00"):
+        if marker == 0xE1 and payload.startswith(_EXIF_HDR):
             has_exif = 1
         elif marker == 0xE2 and payload.startswith(b"ICC_PROFILE\x00"):
             has_icc = 1

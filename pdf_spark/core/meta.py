@@ -219,61 +219,40 @@ def _xmp_packet(resolver) -> bytes:
     return b""
 
 
-# --- link annotations (the PDF twin of the HTML link graph) ------------------
+# --- shared structure walks ---------------------------------------------------
+# One lazy generator per PDF structure the extractors below read. None of
+# them carries a cap: each caller breaks out at its own.
 
 
-def extract_pdf_links(resolver) -> list:
-    """Every URI a Link annotation targets, in (page, annot) order.
-
-    §12.5.6.5 Link annotations + §12.6.4.7 URI actions: page ``/Annots``
-    array -> dicts with ``/Subtype /Link`` -> ``/A`` action with
-    ``/S /URI`` -> the ``/URI`` byte string (7-bit ASCII per spec; decoded
-    permissively). Malformed entries are skipped, never fatal."""
-    out: list[str] = []
+def _pages(resolver) -> list:
+    """Every page dict in document order; [] when the page tree is broken."""
     try:
-        pages = list(resolver.iter_pages())
+        return list(resolver.iter_pages())
     except Exception:
-        return out
-    for page in pages:
-        try:
-            annots = resolver.resolve(page.get("Annots"))
-        except Exception:
-            continue
-        if not isinstance(annots, list):
-            continue
-        for entry in annots:
-            try:
-                a = resolver.resolve(entry)
-                if not isinstance(a, dict) or a.get("Subtype") != Name("Link"):
-                    continue
-                action = resolver.resolve(a.get("A"))
-                if not isinstance(action, dict) or action.get("S") != Name("URI"):
-                    continue
-                uri = resolver.resolve(action.get("URI"))
-                if isinstance(uri, (bytes, bytearray)) and uri:
-                    out.append(bytes(uri).decode("utf-8", "replace"))
-            except Exception:
-                continue
-    return out
+        return []
 
 
-def extract_annotation_texts(resolver) -> list:
-    """Markup-annotation text (§12.5.6.2 Table 170: ``/Contents``) as
-    (page_no, subtype, text) in (page, annot) order — the sticky-note /
-    FreeText / Highlight-comment side channel. This text lives OUTSIDE
-    content streams (like AcroForm values) and never perturbs the page
-    text; reviewers' comments are a real corpus signal.
+def visit_once(resolver, seen: set, ref) -> Optional[dict]:
+    """``ref`` resolved, if it is a dict met for the first time; else None.
 
-    Skipped: ``/Link`` (its payload is the URI, extract_pdf_links),
-    ``/Popup`` (a popup carries no content of its own — when a producer
-    writes one anyway it duplicates the parent markup annotation's
-    ``/Contents``, §12.5.6.14), and entries with an absent/empty
-    ``/Contents``. Malformed entries are skipped, never fatal."""
-    out: list = []
+    An indirect ref is keyed by itself (``Ref`` hashes as ``(obj_id,
+    gen)``), a direct object by ``id()``; the key is recorded before the
+    resolve, so a cycle through a broken object also ends."""
+    key = ref if isinstance(ref, Ref) else id(ref)
+    if key in seen:
+        return None
+    seen.add(key)
     try:
-        pages = list(resolver.iter_pages())
+        node = resolver.resolve(ref)
     except Exception:
-        return out
+        return None
+    return node if isinstance(node, dict) else None
+
+
+def page_annots(resolver, pages: list):
+    """Yield ``(page_no, annot_dict)`` for every page ``/Annots`` entry, in
+    (page, annot) order. A non-array ``/Annots`` and entries that do not
+    resolve to a dict are skipped."""
     for page_no, page in enumerate(pages):
         try:
             annots = resolver.resolve(page.get("Annots"))
@@ -284,140 +263,35 @@ def extract_annotation_texts(resolver) -> list:
         for entry in annots:
             try:
                 a = resolver.resolve(entry)
-                if not isinstance(a, dict):
-                    continue
-                subtype = a.get("Subtype")
-                if not isinstance(subtype, Name) or subtype in (
-                    Name("Link"),
-                    Name("Popup"),
-                ):
-                    continue
-                text = pdf_text_string(resolver.resolve(a.get("Contents")))
-                if text:
-                    out.append((page_no, str(subtype), text))
             except Exception:
                 continue
-    return out
+            if isinstance(a, dict):
+                yield page_no, a
 
 
-# --- outline (bookmarks, §12.3.3) ---------------------------------------------
+def acro_fields(resolver):
+    """Yield ``(name, node, ft, v)`` per terminal AcroForm field (§12.7.3),
+    depth-first in ``/Fields`` array order.
 
-OUTLINE_CAP = 4096  # total items (adversarial /Next cycles + bombs)
-
-
-def extract_pdf_outline(resolver) -> list:
-    """Document outline ("bookmarks", §12.3.3) as (level, title) tuples
-    in display order.
-
-    Catalog /Outlines -> /First chain of items; each item: /Title text
-    string, /First child subtree, /Next sibling. Cycles and bombs are
-    bounded by OUTLINE_CAP and a visited set (real-world PDFs contain
-    both). Malformed items are skipped; never raises."""
-    out = []
+    A kid carrying ``/T`` is a child FIELD (its partial name joins the
+    parent's with ``.``, §12.7.4.2); a kid without ``/T`` is a widget
+    annotation of the same field and is not descended into. ``ft`` and
+    ``v`` are the inherited ``/FT`` and ``/V`` (§12.7.4.1), resolved.
+    Each node is visited once (``visit_once``), so ``/Kids`` cycles end."""
     try:
-        cat = resolver.catalog()
-        root = resolver.resolve(cat.get("Outlines"))
+        acro = resolver.resolve(resolver.catalog().get("AcroForm"))
+        roots = resolver.resolve(acro.get("Fields")) if isinstance(acro, dict) else None
     except Exception:
-        return out
-    if not isinstance(root, dict):
-        return out
-    seen = set()
-    stack = [(root.get("First"), 0)]
-    while stack and len(out) < OUTLINE_CAP:
-        node_ref, level = stack.pop()
-        if node_ref is None:
-            continue
-        key = (
-            (node_ref.obj_id, node_ref.gen)
-            if isinstance(node_ref, Ref)
-            else id(node_ref)
-        )
-        if key in seen:
-            continue
-        seen.add(key)
-        try:
-            node = resolver.resolve(node_ref)
-        except Exception:
-            continue
-        if not isinstance(node, dict):
-            continue
-        title = None
-        try:
-            title = pdf_text_string(resolver.resolve(node.get("Title")))
-        except Exception:
-            pass
-        if title is not None:
-            out.append((level, title))
-        # siblings first on the stack so children pop (and emit) first
-        stack.append((node.get("Next"), level))
-        stack.append((node.get("First"), level + 1))
-    return out
-
-
-# --- interactive form fields (AcroForm, §12.7) ----------------------------------
-
-FORM_FIELD_CAP = 2048  # terminal fields (adversarial /Kids cycles + bombs)
-
-
-def extract_form_fields(resolver) -> list:
-    """AcroForm field values as (name, ftype, value) tuples in field-tree
-    order (PDF 32000-1 §12.7.2-4). EXTENSION: the reference never reads
-    ``/AcroForm`` — but filled-in form values are document text that lives
-    OUTSIDE content streams, so a web-corpus extractor that skips them
-    drops the payload of every filled form.
-
-    Walk: catalog ``/AcroForm`` -> ``/Fields`` array, depth-first in array
-    order. A kid carrying ``/T`` is a child FIELD (its partial name joins
-    the parent's with ``.`` — §12.7.4.2); a kid without ``/T`` is a widget
-    annotation of the same field and is not descended into. ``/FT`` and
-    ``/V`` are inheritable (§12.7.4.1). Values: text strings decode per
-    §7.9.2.2 (``pdf_text_string``), ``/Btn`` name values decode to the
-    name token, choice arrays join with ``'; '``. Cycles and kid bombs
-    are bounded; malformed entries are skipped, never fatal."""
-    out: list = []
-    try:
-        cat = resolver.catalog()
-        acro = resolver.resolve(cat.get("AcroForm"))
-    except Exception:
-        return out
-    if not isinstance(acro, dict):
-        return out
-    try:
-        roots = resolver.resolve(acro.get("Fields"))
-    except Exception:
-        return out
+        return
     if not isinstance(roots, list):
-        return out
-
-    def _decode_value(v) -> Optional[str]:
-        if isinstance(v, (bytes, bytearray)):
-            return pdf_text_string(bytes(v))
-        if isinstance(v, str):  # Name is a str subclass: the name token
-            return str(v)
-        if isinstance(v, list):
-            parts = [_decode_value(x) for x in v]
-            return "; ".join(p for p in parts if p is not None)
-        return None
-
+        return
     seen: set = set()
-    # stack of (node_ref, name_prefix, inherited_ft, inherited_v); seeded
-    # in reverse so array order pops first
+    # seeded in reverse so array order pops first
     stack = [(r, "", None, None) for r in reversed(roots)]
-    while stack and len(out) < FORM_FIELD_CAP:
+    while stack:
         node_ref, prefix, ft, v = stack.pop()
-        key = (
-            (node_ref.obj_id, node_ref.gen)
-            if isinstance(node_ref, Ref)
-            else id(node_ref)
-        )
-        if key in seen:
-            continue
-        seen.add(key)
-        try:
-            node = resolver.resolve(node_ref)
-        except Exception:
-            continue
-        if not isinstance(node, dict):
+        node = visit_once(resolver, seen, node_ref)
+        if node is None:
             continue
         t = None
         try:
@@ -455,9 +329,175 @@ def extract_form_fields(resolver) -> list:
             for k in reversed(child_fields):
                 stack.append((k, name, ft, v))
             continue
+        yield name, node, ft, v
+
+
+def page_images(resolver, pages: list):
+    """Yield ``(page_no, name, stream)`` for every ``/Subtype /Image``
+    XObject reachable from the pages' ``/Resources``, through form
+    XObjects (§8.10) up to two levels deep. Each XObject is yielded once:
+    deduplicated by ref, a direct one by (page, name)."""
+    seen: set = set()
+
+    def visit(res, page_no: int, depth: int):
+        if depth > 2:
+            return
+        try:
+            res = resolver.resolve(res)
+            xobjs = resolver.resolve(res.get("XObject")) if isinstance(res, dict) else None
+        except Exception:
+            return
+        if not isinstance(xobjs, dict):
+            return
+        for name, ref in xobjs.items():
+            key = ref if isinstance(ref, Ref) else (page_no, str(name))
+            if key in seen:
+                continue
+            seen.add(key)
+            try:
+                xo = resolver.resolve(ref)
+                if not isinstance(xo, Stream):
+                    continue
+                sub = resolver.resolve(xo.dict.get("Subtype"))
+            except Exception:
+                continue
+            if sub == Name("Form"):
+                yield from visit(xo.dict.get("Resources"), page_no, depth + 1)
+            elif sub == Name("Image"):
+                yield page_no, str(name), xo
+
+    for page_no, page in enumerate(pages):
+        yield from visit(page.get("Resources"), page_no, 0)
+
+
+# --- link annotations (the PDF twin of the HTML link graph) ------------------
+
+
+def extract_pdf_links(resolver) -> list:
+    """Every URI a Link annotation targets, in (page, annot) order.
+
+    §12.5.6.5 Link annotations + §12.6.4.7 URI actions: page ``/Annots``
+    array -> dicts with ``/Subtype /Link`` -> ``/A`` action with
+    ``/S /URI`` -> the ``/URI`` byte string (7-bit ASCII per spec; decoded
+    permissively). Malformed entries are skipped, never fatal."""
+    out: list[str] = []
+    for _, a in page_annots(resolver, _pages(resolver)):
+        if a.get("Subtype") != Name("Link"):
+            continue
+        try:
+            action = resolver.resolve(a.get("A"))
+            if not isinstance(action, dict) or action.get("S") != Name("URI"):
+                continue
+            uri = resolver.resolve(action.get("URI"))
+            if isinstance(uri, (bytes, bytearray)) and uri:
+                out.append(bytes(uri).decode("utf-8", "replace"))
+        except Exception:
+            continue
+    return out
+
+
+def extract_annotation_texts(resolver) -> list:
+    """Markup-annotation text (§12.5.6.2 Table 170: ``/Contents``) as
+    (page_no, subtype, text) in (page, annot) order — the sticky-note /
+    FreeText / Highlight-comment side channel. This text lives OUTSIDE
+    content streams (like AcroForm values) and never perturbs the page
+    text; reviewers' comments are a real corpus signal.
+
+    Skipped: ``/Link`` (its payload is the URI, extract_pdf_links),
+    ``/Popup`` (a popup carries no content of its own — when a producer
+    writes one anyway it duplicates the parent markup annotation's
+    ``/Contents``, §12.5.6.14), and entries with an absent/empty
+    ``/Contents``. Malformed entries are skipped, never fatal."""
+    out: list = []
+    for page_no, a in page_annots(resolver, _pages(resolver)):
+        subtype = a.get("Subtype")
+        if not isinstance(subtype, Name) or subtype in (Name("Link"), Name("Popup")):
+            continue
+        try:
+            text = pdf_text_string(resolver.resolve(a.get("Contents")))
+        except Exception:
+            continue
+        if text:
+            out.append((page_no, str(subtype), text))
+    return out
+
+
+# --- outline (bookmarks, §12.3.3) ---------------------------------------------
+
+OUTLINE_CAP = 4096  # total items (adversarial /Next cycles + bombs)
+
+
+def extract_pdf_outline(resolver) -> list:
+    """Document outline ("bookmarks", §12.3.3) as (level, title) tuples
+    in display order.
+
+    Catalog /Outlines -> /First chain of items; each item: /Title text
+    string, /First child subtree, /Next sibling. Cycles and bombs are
+    bounded by OUTLINE_CAP and a visited set (real-world PDFs contain
+    both). Malformed items are skipped; never raises."""
+    out = []
+    try:
+        cat = resolver.catalog()
+        root = resolver.resolve(cat.get("Outlines"))
+    except Exception:
+        return out
+    if not isinstance(root, dict):
+        return out
+    seen: set = set()
+    stack = [(root.get("First"), 0)]
+    while stack and len(out) < OUTLINE_CAP:
+        node_ref, level = stack.pop()
+        node = visit_once(resolver, seen, node_ref)
+        if node is None:
+            continue
+        title = None
+        try:
+            title = pdf_text_string(resolver.resolve(node.get("Title")))
+        except Exception:
+            pass
+        if title is not None:
+            out.append((level, title))
+        # siblings first on the stack so children pop (and emit) first
+        stack.append((node.get("Next"), level))
+        stack.append((node.get("First"), level + 1))
+    return out
+
+
+# --- interactive form fields (AcroForm, §12.7) ----------------------------------
+
+FORM_FIELD_CAP = 2048  # terminal fields (adversarial /Kids cycles + bombs)
+
+
+def extract_form_fields(resolver) -> list:
+    """AcroForm field values as (name, ftype, value) tuples in field-tree
+    order (PDF 32000-1 §12.7.2-4). EXTENSION: the reference never reads
+    ``/AcroForm`` — but filled-in form values are document text that lives
+    OUTSIDE content streams, so a web-corpus extractor that skips them
+    drops the payload of every filled form.
+
+    Walk: ``acro_fields`` (catalog ``/AcroForm`` -> ``/Fields``, dotted
+    names, inherited ``/FT`` and ``/V``). Values: text strings decode per
+    §7.9.2.2 (``pdf_text_string``), ``/Btn`` name values decode to the
+    name token, choice arrays join with ``'; '``. Cycles and kid bombs
+    are bounded; malformed entries are skipped, never fatal."""
+
+    def _decode_value(v) -> Optional[str]:
+        if isinstance(v, (bytes, bytearray)):
+            return pdf_text_string(bytes(v))
+        if isinstance(v, str):  # Name is a str subclass: the name token
+            return str(v)
+        if isinstance(v, list):
+            parts = [_decode_value(x) for x in v]
+            return "; ".join(p for p in parts if p is not None)
+        return None
+
+    out: list = []
+    for name, _, ft, v in acro_fields(resolver):
         ftype = str(ft) if isinstance(ft, Name) else None
         if name and ftype:
             out.append((name, ftype, _decode_value(v)))
+            if len(out) >= FORM_FIELD_CAP:
+                break
     return out
 
 
@@ -472,71 +512,36 @@ def extract_image_inventory(resolver) -> list:
     §8.9.5 image dictionaries: page ``/Resources /XObject`` entries with
     ``/Subtype /Image`` report their geometry WITHOUT decoding the pixel
     stream (the dims live in the stream dict — a 100 TB inventory pass
-    never touches pixels). Form XObjects (§8.10) are descended one
-    resource level deep with a visited set: images referenced only from a
-    form's own resources are a common real-PDF shape. The reference
+    never touches pixels). The images are those ``page_images`` yields:
+    form XObjects (§8.10) are descended too, since images referenced only
+    from a form's own resources are a common real-PDF shape. The reference
     rasterizes images but has no inventory surface; this is the
     multimodal-corpus mining op (find docs with N images ≥ some size).
     Malformed entries are skipped, never fatal."""
     out: list = []
-    seen: set = set()
-
-    def visit(res, page_no: int, depth: int) -> None:
-        if len(out) >= IMAGE_CAP or depth > 2:
-            return
+    for page_no, name, xo in page_images(resolver, _pages(resolver)):
+        d = xo.dict
         try:
-            res = resolver.resolve(res)
-            xobjs = resolver.resolve(res.get("XObject")) if isinstance(res, dict) else None
-        except Exception:
-            return
-        if not isinstance(xobjs, dict):
-            return
-        for name, ref in xobjs.items():
-            if len(out) >= IMAGE_CAP:
-                return
-            key = (
-                (ref.obj_id, ref.gen) if isinstance(ref, Ref) else (page_no, str(name))
+            w = resolver.resolve(d.get("Width"))
+            h = resolver.resolve(d.get("Height"))
+            bpc = resolver.resolve(d.get("BitsPerComponent"))
+            filt = resolver.resolve(d.get("Filter"))
+            if isinstance(filt, list) and filt:
+                filt = resolver.resolve(filt[-1])
+            out.append(
+                (
+                    page_no,
+                    name,
+                    int(w) if isinstance(w, (int, float)) else 0,
+                    int(h) if isinstance(h, (int, float)) else 0,
+                    int(bpc) if isinstance(bpc, (int, float)) else 0,
+                    str(filt) if isinstance(filt, Name) else None,
+                )
             )
-            if key in seen:
-                continue
-            seen.add(key)
-            try:
-                xo = resolver.resolve(ref)
-            except Exception:
-                continue
-            if not isinstance(xo, Stream):
-                continue
-            d = xo.dict
-            try:
-                sub = resolver.resolve(d.get("Subtype"))
-                if sub == Name("Image"):
-                    w = resolver.resolve(d.get("Width"))
-                    h = resolver.resolve(d.get("Height"))
-                    bpc = resolver.resolve(d.get("BitsPerComponent"))
-                    filt = resolver.resolve(d.get("Filter"))
-                    if isinstance(filt, list) and filt:
-                        filt = resolver.resolve(filt[-1])
-                    out.append(
-                        (
-                            page_no,
-                            str(name),
-                            int(w) if isinstance(w, (int, float)) else 0,
-                            int(h) if isinstance(h, (int, float)) else 0,
-                            int(bpc) if isinstance(bpc, (int, float)) else 0,
-                            str(filt) if isinstance(filt, Name) else None,
-                        )
-                    )
-                elif sub == Name("Form"):
-                    visit(d.get("Resources"), page_no, depth + 1)
-            except Exception:
-                continue
-
-    try:
-        pages = list(resolver.iter_pages())
-    except Exception:
-        return out
-    for page_no, page in enumerate(pages):
-        visit(page.get("Resources"), page_no, 0)
+        except Exception:
+            continue
+        if len(out) >= IMAGE_CAP:
+            break
     return out
 
 
@@ -635,18 +640,10 @@ def extract_embedded_files(resolver) -> list:
     def emit(spec_ref, source: str) -> None:
         if len(out) >= ATTACH_CAP:
             return
+        spec = visit_once(resolver, seen_specs, spec_ref)
+        if spec is None:
+            return
         try:
-            key = (
-                (spec_ref.obj_id, spec_ref.gen)
-                if isinstance(spec_ref, Ref)
-                else id(spec_ref)
-            )
-            if key in seen_specs:
-                return
-            seen_specs.add(key)
-            spec = resolver.resolve(spec_ref)
-            if not isinstance(spec, dict):
-                return
             ef = resolver.resolve(spec.get("EF"))
             if not isinstance(ef, dict):
                 return  # external reference, nothing embedded
@@ -699,26 +696,9 @@ def extract_embedded_files(resolver) -> list:
             )
     except Exception:
         pass
-    try:
-        pages = list(resolver.iter_pages())
-    except Exception:
-        pages = []
-    for page in pages:
-        try:
-            annots = resolver.resolve(page.get("Annots"))
-        except Exception:
-            continue
-        if not isinstance(annots, list):
-            continue
-        for entry in annots:
-            try:
-                a = resolver.resolve(entry)
-                if isinstance(a, dict) and a.get("Subtype") == Name(
-                    "FileAttachment"
-                ):
-                    emit(a.get("FS"), "annot")
-            except Exception:
-                continue
+    for _, a in page_annots(resolver, _pages(resolver)):
+        if a.get("Subtype") == Name("FileAttachment"):
+            emit(a.get("FS"), "annot")
     return out
 
 
@@ -779,13 +759,8 @@ def extract_internal_links(resolver) -> list:
     except Exception:
         pass
 
-    try:
-        pages = list(resolver.iter_pages())
-    except Exception:
-        return out
-    page_index = {
-        p.get("_node_id"): i for i, p in enumerate(pages)
-    }
+    pages = _pages(resolver)
+    page_index = {p.get("_node_id"): i for i, p in enumerate(pages)}
 
     def dest_row(page_from: int, via: str, raw) -> None:
         if len(out) >= LINK_CAP:
@@ -820,29 +795,18 @@ def extract_internal_links(resolver) -> list:
         except Exception:
             return
 
-    for page_from, page in enumerate(pages):
+    for page_from, a in page_annots(resolver, pages):
+        if a.get("Subtype") != Name("Link"):
+            continue
+        if "Dest" in a:
+            dest_row(page_from, "Dest", a.get("Dest"))
+            continue
         try:
-            annots = resolver.resolve(page.get("Annots"))
+            action = resolver.resolve(a.get("A"))
         except Exception:
             continue
-        if not isinstance(annots, list):
-            continue
-        for entry in annots:
-            try:
-                a = resolver.resolve(entry)
-                if not isinstance(a, dict) or a.get("Subtype") != Name("Link"):
-                    continue
-                if "Dest" in a:
-                    dest_row(page_from, "Dest", a.get("Dest"))
-                    continue
-                action = resolver.resolve(a.get("A"))
-                if (
-                    isinstance(action, dict)
-                    and action.get("S") == Name("GoTo")
-                ):
-                    dest_row(page_from, "GoTo", action.get("D"))
-            except Exception:
-                continue
+        if isinstance(action, dict) and action.get("S") == Name("GoTo"):
+            dest_row(page_from, "GoTo", action.get("D"))
     return out
 
 
@@ -904,11 +868,7 @@ def extract_page_labels(resolver) -> list:
     the viewer fallback. At corpus scale labels align extracted text
     with citations ("see p. iv") and reveal front-matter/body structure
     without any content inspection. The reference never reads them."""
-    try:
-        pages = list(resolver.iter_pages())
-    except Exception:
-        return []
-    n_pages = len(pages)
+    n_pages = len(_pages(resolver))
     ranges: list = []
 
     def remember(key, value_ref) -> None:
@@ -1102,19 +1062,12 @@ def extract_signatures(resolver) -> list:
       signature ``whole_file`` False) from "malformed range".
 
     Unsigned fields (``/V`` absent) are skipped — an empty signature
-    field is a placeholder, not a signature. Field-tree walk (``/Kids``,
-    dotted names) and caps shared with :func:`extract_form_fields`'s
-    rules. Never raises.
+    field is a placeholder, not a signature. The field-tree walk
+    (``/Kids``, dotted names, visited set) is :func:`acro_fields`, shared
+    with :func:`extract_form_fields`; a field counts when its own ``/FT``
+    is ``/Sig``. At most ``SIG_FIELD_CAP`` rows. Never raises.
     """
     out: list = []
-    try:
-        cat = resolver.catalog()
-        acro = resolver.resolve(cat.get("AcroForm"))
-        roots = resolver.resolve(acro.get("Fields")) if isinstance(acro, dict) else None
-    except Exception:
-        return out
-    if not isinstance(roots, list):
-        return out
     buf_len = len(resolver.buf)
     revisions = count_revisions(resolver.buf)
 
@@ -1123,55 +1076,11 @@ def extract_signatures(resolver) -> list:
             return pdf_text_string(bytes(v))
         return None
 
-    seen: set = set()
-    stack = [(r, "") for r in reversed(roots)]
-    while stack and len(out) < SIG_FIELD_CAP:
-        node_ref, prefix = stack.pop()
-        key = (
-            (node_ref.obj_id, node_ref.gen)
-            if isinstance(node_ref, Ref)
-            else id(node_ref)
-        )
-        if key in seen:
-            continue
-        seen.add(key)
+    for name, node, _, _ in acro_fields(resolver):
         try:
-            node = resolver.resolve(node_ref)
-        except Exception:
-            continue
-        if not isinstance(node, dict):
-            continue
-        t = None
-        try:
-            t = _text(resolver.resolve(node.get("T")))
-        except Exception:
-            pass
-        name = f"{prefix}.{t}" if (prefix and t) else (t or prefix)
-        kids = None
-        try:
-            kids = resolver.resolve(node.get("Kids"))
-        except Exception:
-            pass
-        if isinstance(kids, list):
-            child_fields = []
-            for k in kids:
-                try:
-                    kd = resolver.resolve(k)
-                except Exception:
-                    continue
-                if isinstance(kd, dict) and "T" in kd:
-                    child_fields.append(k)
-            if child_fields:
-                for k in reversed(child_fields):
-                    stack.append((k, name))
+            ft = resolver.resolve(node.get("FT"))  # the field's own /FT
+            if not (isinstance(ft, Name) and str(ft) == "Sig"):
                 continue
-        try:
-            ft = resolver.resolve(node.get("FT"))
-        except Exception:
-            continue
-        if not (isinstance(ft, Name) and str(ft) == "Sig"):
-            continue
-        try:
             sig = resolver.resolve(node.get("V"))
         except Exception:
             continue
@@ -1212,6 +1121,8 @@ def extract_signatures(resolver) -> list:
             (name or None, subfilter, signer, sign_time, reason,
              whole_file, revisions)
         )
+        if len(out) >= SIG_FIELD_CAP:
+            break
     return out
 
 

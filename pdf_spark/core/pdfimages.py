@@ -48,7 +48,8 @@ from pdf_spark.core.imaging import (
     decode_jpeg,
     features_from_samples,
 )
-from pdf_spark.core.objects import Name, Ref, Stream
+from pdf_spark.core.meta import _pages, page_images
+from pdf_spark.core.objects import Name, Stream
 
 DECODE_CAP = 256  # decoded images per doc (decode is the expensive tier)
 _DCT_NAMES = ("DCTDecode", "DCT")
@@ -245,70 +246,32 @@ def extract_embedded_images(resolver) -> list:
     pages: ``(page, name, width, height, channels, mean_luma,
     ahash_hex, pixel_md5, error)``.
 
-    Same reachability as the inventory walk (page resources + one form
-    level, ref-identity dedup, cap) — but this one touches pixels, so
-    the cap is tighter and every failure is a per-image error code
+    The images are those ``core/meta.py::page_images`` yields, the walk
+    the inventory also uses — but this one touches pixels, so the cap is
+    tighter and every failure is a per-image error code
     (``colorspace shape``, ``too large``, ...) rather than a dropped
     row: at corpus scale the error histogram IS a deliverable (which
     codec features are missing and why).
     """
     out: list = []
-    seen: set = set()
-
-    def visit(res, page_no: int, depth: int) -> None:
-        if len(out) >= DECODE_CAP or depth > 2:
-            return
+    for page_no, name, xo in page_images(resolver, _pages(resolver)):
         try:
-            res = resolver.resolve(res)
-            xobjs = resolver.resolve(res.get("XObject")) if isinstance(res, dict) else None
-        except Exception:
-            return
-        if not isinstance(xobjs, dict):
-            return
-        for name, ref in xobjs.items():
-            if len(out) >= DECODE_CAP:
-                return
-            key = (ref.obj_id, ref.gen) if isinstance(ref, Ref) else (page_no, str(name))
-            if key in seen:
-                continue
-            seen.add(key)
+            w, h, ch, samples = decode_image_xobject(resolver, xo)
+            luma = features_from_samples(w, h, ch, samples)
+            ahash = format(ahash_from_samples(w, h, ch, samples), "016x")
+            md5 = hashlib.md5(samples).hexdigest()
+            out.append((page_no, name, w, h, ch, luma, ahash, md5, None))
+        except Exception as exc:
+            dd = xo.dict
             try:
-                xo = resolver.resolve(ref)
+                gw = int(resolver.resolve(dd.get("Width")) or 0)
+                gh = int(resolver.resolve(dd.get("Height")) or 0)
             except Exception:
-                continue
-            if not isinstance(xo, Stream):
-                continue
-            try:
-                sub = resolver.resolve(xo.dict.get("Subtype"))
-            except Exception:
-                continue
-            if sub == Name("Form"):
-                visit(xo.dict.get("Resources"), page_no, depth + 1)
-                continue
-            if sub != Name("Image"):
-                continue
-            try:
-                w, h, ch, samples = decode_image_xobject(resolver, xo)
-                luma = features_from_samples(w, h, ch, samples)
-                ahash = format(ahash_from_samples(w, h, ch, samples), "016x")
-                md5 = hashlib.md5(samples).hexdigest()
-                out.append((page_no, str(name), w, h, ch, luma, ahash, md5, None))
-            except Exception as exc:
-                dd = xo.dict
-                try:
-                    gw = int(resolver.resolve(dd.get("Width")) or 0)
-                    gh = int(resolver.resolve(dd.get("Height")) or 0)
-                except Exception:
-                    gw = gh = 0
-                out.append((page_no, str(name), gw, gh, 0, None, None, None,
-                            str(exc)[:80] or "decode"))
-
-    try:
-        pages = list(resolver.iter_pages())
-    except Exception:
-        return out
-    for page_no, page in enumerate(pages):
-        visit(page.get("Resources"), page_no, 0)
+                gw = gh = 0
+            out.append((page_no, name, gw, gh, 0, None, None, None,
+                        str(exc)[:80] or "decode"))
+        if len(out) >= DECODE_CAP:
+            break
     return out
 
 
@@ -442,11 +405,7 @@ def extract_inline_images(resolver) -> list:
     decodes become error rows, never dropped rows (the corpus error
     histogram is a deliverable)."""
     out: list = []
-    try:
-        pages = list(resolver.iter_pages())
-    except Exception:
-        return out
-    for page_no, page in enumerate(pages):
+    for page_no, page in enumerate(_pages(resolver)):
         try:
             content = b"\n".join(resolver.content_streams(page))
         except Exception:

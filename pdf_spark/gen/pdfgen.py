@@ -156,15 +156,21 @@ class PdfBuilder:
     def set(self, obj_id: int, body: bytes) -> None:
         self.objects[obj_id - 1] = body
 
-    def stream(self, data: bytes, extra_dict: bytes = b"", filters: str = "") -> int:
+    def stream(self, data: bytes, extra_dict: bytes = b"", filters: str = "",
+               indirect_length: bool = False) -> int:
         """Add a stream object, applying the named encode chain.
 
         ``filters`` is a space-separated *decode* chain (left-to-right as it
         appears in /Filter), e.g. ``"ASCIIHexDecode FlateDecode"`` means the
         reader hex-decodes then inflates — so we deflate then hex-encode.
+        ``indirect_length`` writes /Length as a reference to an integer
+        object added just before the stream (object.c:787-800 resolve path).
         """
         names = filters.split()
         enc = _encode_chain(data, names)
+        length = str(len(enc)).encode()
+        if indirect_length:
+            length = str(self.add(length)).encode() + b" 0 R"
         if not names:
             fpart = b""
         elif len(names) == 1:
@@ -173,7 +179,7 @@ class PdfBuilder:
             fpart = b"/Filter[" + b"".join(b"/" + n.encode() for n in names) + b"]"
         body = (
             b"<</Length "
-            + str(len(enc)).encode()
+            + length
             + fpart
             + extra_dict
             + b">>\nstream\n"
@@ -411,25 +417,7 @@ def _simple_doc(lines: list[str], content_fn, filters: str = "",
                 font_body: bytes = F_HELV, indirect_length: bool = False) -> bytes:
     b = PdfBuilder.one_page()
     font = b.add(font_body)
-    content = content_fn(lines)
-    if indirect_length:
-        # /Length as an indirect ref (object.c:787-800 resolve path);
-        # encode chain shared with PdfBuilder.stream so every filter name
-        # (incl. LZW) encodes correctly or raises
-        names = filters.split()
-        enc = _encode_chain(content, names)
-        length_id = b.add(str(len(enc)).encode())
-        fpart = b""
-        if len(names) == 1:
-            fpart = b"/Filter/" + names[0].encode()
-        elif names:
-            fpart = b"/Filter[" + b"".join(b"/" + n.encode() for n in names) + b"]"
-        cont = b.add(
-            b"<</Length " + str(length_id).encode() + b" 0 R" + fpart
-            + b">>\nstream\n" + enc + b"\nendstream"
-        )
-    else:
-        cont = b.stream(content, filters=filters)
+    cont = b.stream(content_fn(lines), filters=filters, indirect_length=indirect_length)
     return b.build(b.page_tree(font, cont))
 
 

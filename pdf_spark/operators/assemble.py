@@ -28,10 +28,9 @@ from pyspark.sql import functions as F
 def assemble_docs_text(spans: DataFrame) -> DataFrame:
     """spans -> docs_text(url, text, status, error_code).
 
-    PRECONDITION: ``url`` uniquely keys the pages table (the same contract
-    resume/anti-join relies on). Duplicate urls would interleave two
-    documents' spans into one garbled row here, while the fused path would
-    emit two rows — dedup upstream (qt01) first."""
+    PRECONDITION: ``url`` uniquely keys the pages table. Duplicate urls
+    would interleave two documents' spans into one garbled row here, while
+    the fused path would emit two rows — dedup upstream (qt01) first."""
     order = [
         F.col("page").asc(),
         F.col("col").asc(),

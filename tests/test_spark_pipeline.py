@@ -444,9 +444,9 @@ def test_resume_of_an_in_memory_frame_logs_no_error(spark, tmp_path):
 
 def test_resume_with_parquet_pages(spark, pages, tmp_path):
     """Resume over PARQUET-backed pages (the spark-submit shape): the
-    anti-join plan contains two file sources, which input_file_name() must
-    not be projected across — lineage provenance is captured at scan time.
-    Also asserts input_file is actually populated from the scan."""
+    resumed run prunes the committed input files with a filter on the
+    scan's ``_metadata.file_path``, and lineage provenance is captured at
+    scan time. Also asserts input_file is actually populated from the scan."""
     import os
 
     pages_dir = str(tmp_path / "pages_pq")
