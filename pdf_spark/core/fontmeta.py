@@ -1,11 +1,8 @@
-"""Font-file identification metadata — split out of ``core/sfnt.py``.
+"""Font-file identification metadata: ``font_meta`` reads a font file's
+``name``/``head``/``maxp`` tables, unwrapping WOFF 1.0 first (E188, qm38).
 
-``font_meta`` (name/head/maxp + WOFF1 unwrap, E188/qm38) is a READ-ONLY
-consumer of the sfnt byte helpers and is never invoked by the fused
-extraction path — but ``sfnt.py`` IS in the fused module set hashed by
-``scripts/fused_manifest.py``, so keeping asset-mining growth here keeps
-``sfnt.py`` byte-identical to the frozen ``fused_sha`` the BENCH.md
-north-rule row cites (same reasoning as ``core/htmlaudit.py``).
+It is a read-only consumer of the sfnt byte helpers in ``core/sfnt.py``,
+read by the query matrix and never by the fused extraction path.
 """
 
 from __future__ import annotations

@@ -6,7 +6,9 @@ synthesized per ``doc_id`` INSIDE the mapInPandas batch (honest writers
 — stdlib ``zipfile`` builds real containers; the readers under test in
 ``core/`` share no code with them), outputs reproducible by a DuckDB
 oracle as pure ``doc_id`` arithmetic, zero per-row Python at the Spark
-plan level (one Arrow batch in, one batch of rows out).
+plan level (one Arrow batch in, one batch of rows out). Every query
+here has the per-document shape, ``tables.per_doc``: the decorated
+``_qNN(doc_id)`` returns that document's rows.
 
 Reference parity note: the C reference (someone13574/pdf) reads bare
 PDFs only — this module is net-new surface in the E19/E23 tradition
@@ -15,7 +17,6 @@ PDFs only — this module is net-new surface in the E19/E23 tradition
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -24,7 +25,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_spark.functions.tables import load, map_rows
+from pdf_spark.functions.tables import per_doc
 
 QUERIES = {}
 ORACLE = {}
@@ -77,17 +78,12 @@ def _qm37_make_zip(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _qm37(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm37_zip_inventory", _ZIP_INV_SCHEMA)
+def _qm37(d: int) -> list:
     from pdf_spark.core.zipread import zip_inventory
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **zip_inventory(_qm37_make_zip(d))}],
-        _ZIP_INV_SCHEMA,
-    )
+    return [zip_inventory(_qm37_make_zip(d))]
 
-
-QUERIES["qm37_zip_inventory"] = _qm37
 
 # -- qx43: DOCX text extraction (core/docx.py over core/zipread.py) -----------
 #
@@ -171,17 +167,12 @@ def _qx43_make_docx(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _qx43(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx43_docx_text", _DOCX_SCHEMA)
+def _qx43(d: int) -> list:
     from pdf_spark.core.docx import docx_text
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **docx_text(_qx43_make_docx(d))}],
-        _DOCX_SCHEMA,
-    )
+    return [docx_text(_qx43_make_docx(d))]
 
-
-QUERIES["qx43_docx_text"] = _qx43
 
 # -- qx44: EPUB spine-ordered text extraction (core/epub.py) -------------------
 #
@@ -257,17 +248,12 @@ def _qx44_make_epub(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _qx44(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx44_epub_text", _EPUB_SCHEMA)
+def _qx44(d: int) -> list:
     from pdf_spark.core.epub import epub_text
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **epub_text(_qx44_make_epub(d))}],
-        _EPUB_SCHEMA,
-    )
+    return [epub_text(_qx44_make_epub(d))]
 
-
-QUERIES["qx44_epub_text"] = _qx44
 
 # -- qx45: EML/MIME email text extraction (core/eml.py) ------------------------
 #
@@ -338,17 +324,12 @@ def _qx45_make_eml(doc_id: int) -> bytes:
     ).encode()
 
 
-def _qx45(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx45_eml_text", _EML_SCHEMA)
+def _qx45(d: int) -> list:
     from pdf_spark.core.eml import eml_text
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **eml_text(_qx45_make_eml(d))}],
-        _EML_SCHEMA,
-    )
+    return [eml_text(_qx45_make_eml(d))]
 
-
-QUERIES["qx45_eml_text"] = _qx45
 
 # -- qx46: RTF text extraction (core/rtf.py) -----------------------------------
 #
@@ -387,17 +368,12 @@ def _qx46_make_rtf(doc_id: int) -> bytes:
     return ("{\\rtf1\\ansi " + body + "}").encode()
 
 
-def _qx46(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx46_rtf_text", _RTF_SCHEMA)
+def _qx46(d: int) -> list:
     from pdf_spark.core.rtf import rtf_text
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **rtf_text(_qx46_make_rtf(d))}],
-        _RTF_SCHEMA,
-    )
+    return [rtf_text(_qx46_make_rtf(d))]
 
-
-QUERIES["qx46_rtf_text"] = _qx46
 
 # -- qm38: web-font metadata mining (core/sfnt.py::font_meta) ------------------
 #
@@ -514,17 +490,12 @@ def _qm38_make_font(doc_id: int) -> bytes:
     return _build_woff(b"\x00\x01\x00\x00", tables)
 
 
-def _qm38(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm38_font_meta", _FONT_SCHEMA)
+def _qm38(d: int) -> list:
     from pdf_spark.core.fontmeta import font_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **font_meta(_qm38_make_font(d))}],
-        _FONT_SCHEMA,
-    )
+    return [font_meta(_qm38_make_font(d))]
 
-
-QUERIES["qm38_font_meta"] = _qm38
 
 # -- qx47: ODT (OpenDocument) text extraction (core/odt.py) --------------------
 #
@@ -594,17 +565,12 @@ def _qx47_make_odt(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _qx47(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx47_odt_text", _ODT_SCHEMA)
+def _qx47(d: int) -> list:
     from pdf_spark.core.odt import odt_text
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **odt_text(_qx47_make_odt(d))}],
-        _ODT_SCHEMA,
-    )
+    return [odt_text(_qx47_make_odt(d))]
 
-
-QUERIES["qx47_odt_text"] = _qx47
 
 # -- qx48: Markdown source strip + structure (core/mdsrc.py) -------------------
 #
@@ -646,17 +612,12 @@ def _qx48_make_md(doc_id: int) -> str:
     return f"Head {i % 7}\n===\n\n- item {i}\n> quote {i % 4}"
 
 
-def _qx48(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx48_markdown_source", _MD_SCHEMA)
+def _qx48(d: int) -> list:
     from pdf_spark.core.mdsrc import md_structure
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **md_structure(_qx48_make_md(d))}],
-        _MD_SCHEMA,
-    )
+    return [md_structure(_qx48_make_md(d))]
 
-
-QUERIES["qx48_markdown_source"] = _qx48
 
 # -- qx49: LaTeX source extraction (core/latex.py) -----------------------------
 #
@@ -709,17 +670,12 @@ def _qx49_make_tex(doc_id: int) -> str:
     )
 
 
-def _qx49(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx49_latex_source", _TEX_SCHEMA)
+def _qx49(d: int) -> list:
     from pdf_spark.core.latex import latex_text
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **latex_text(_qx49_make_tex(d))}],
-        _TEX_SCHEMA,
-    )
+    return [latex_text(_qx49_make_tex(d))]
 
-
-QUERIES["qx49_latex_source"] = _qx49
 
 # -- qm39: TAR archive inventory (core/tarread.py) -----------------------------
 #
@@ -777,17 +733,12 @@ def _qm39_make_tar(doc_id: int) -> bytes:
     return build([("big.dat", b"\x07" * (5000 + i % 100))])
 
 
-def _qm39(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm39_tar_inventory", _TAR_SCHEMA)
+def _qm39(d: int) -> list:
     from pdf_spark.core.tarread import tar_inventory
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **tar_inventory(_qm39_make_tar(d))}],
-        _TAR_SCHEMA,
-    )
+    return [tar_inventory(_qm39_make_tar(d))]
 
-
-QUERIES["qm39_tar_inventory"] = _qm39
 
 # -- qx50: CSV/TSV dialect sniff + RFC 4180 parse (core/csvsniff.py) ----------
 #
@@ -825,17 +776,12 @@ def _qx50_make_csv(doc_id: int) -> bytes:
     return f"just prose {i} here\nanother line\n".encode()
 
 
-def _qx50(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx50_csv_sniff", _CSV_SCHEMA)
+def _qx50(d: int) -> list:
     from pdf_spark.core.csvsniff import sniff_table
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **sniff_table(_qx50_make_csv(d))}],
-        _CSV_SCHEMA,
-    )
+    return [sniff_table(_qx50_make_csv(d))]
 
-
-QUERIES["qx50_csv_sniff"] = _qx50
 
 # -- qm40: favicon (ICO) directory audit (core/imaging.py::ico_meta) ----------
 #
@@ -884,17 +830,13 @@ def _qm40_make_ico(doc_id: int) -> bytes:
     return build([(48, 48, b"cur" * 5)], kind=2)
 
 
-def _qm40(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm40_favicon_meta", _ICO_SCHEMA)
+def _qm40(d: int) -> list:
     from pdf_spark.core.imaging import ico_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **ico_meta(_qm40_make_ico(d))}],
-        _ICO_SCHEMA,
-    )
+    return [ico_meta(_qm40_make_ico(d))]
 
 
-QUERIES["qm40_favicon_meta"] = _qm40
 ORACLE["qm40_favicon_meta"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -965,17 +907,12 @@ def _qx51_make_http(doc_id: int) -> bytes:
     return b"HTTP/1.1 404 Not Found\r\n\r\n"
 
 
-def _qx51(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx51_http_header_audit", _HTTP_SCHEMA)
+def _qx51(d: int) -> list:
     from pdf_spark.sources.warc import http_header_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **http_header_audit(_qx51_make_http(d))}],
-        _HTTP_SCHEMA,
-    )
+    return [http_header_audit(_qx51_make_http(d))]
 
-
-QUERIES["qx51_http_header_audit"] = _qx51
 
 # -- qx52: XLSX cell extraction (core/xlsx.py) ---------------------------------
 #
@@ -1056,17 +993,12 @@ def _qx52_make_xlsx(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _qx52(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx52_xlsx_cells", _XLSX_SCHEMA)
+def _qx52(d: int) -> list:
     from pdf_spark.core.xlsx import xlsx_cells
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **xlsx_cells(_qx52_make_xlsx(d))}],
-        _XLSX_SCHEMA,
-    )
+    return [xlsx_cells(_qx52_make_xlsx(d))]
 
-
-QUERIES["qx52_xlsx_cells"] = _qx52
 
 # -- qx53: PPTX slide-text extraction (core/pptx.py) ---------------------------
 #
@@ -1133,17 +1065,12 @@ def _qx53_make_pptx(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _qx53(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx53_pptx_text", _PPTX_SCHEMA)
+def _qx53(d: int) -> list:
     from pdf_spark.core.pptx import pptx_text
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **pptx_text(_qx53_make_pptx(d))}],
-        _PPTX_SCHEMA,
-    )
+    return [pptx_text(_qx53_make_pptx(d))]
 
-
-QUERIES["qx53_pptx_text"] = _qx53
 
 # -- qx54: iCalendar event extraction (core/ical.py) ---------------------------
 #
@@ -1196,17 +1123,12 @@ def _qx54_make_ical(doc_id: int) -> bytes:
     ).encode()
 
 
-def _qx54(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx54_ical_events", _ICAL_SCHEMA)
+def _qx54(d: int) -> list:
     from pdf_spark.core.ical import ical_events
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **ical_events(_qx54_make_ical(d))}],
-        _ICAL_SCHEMA,
-    )
+    return [ical_events(_qx54_make_ical(d))]
 
-
-QUERIES["qx54_ical_events"] = _qx54
 
 # -- qx55: JSON payload audit (bounded shape profile) --------------------------
 #
@@ -1288,15 +1210,11 @@ def _qx55_profile(raw: str) -> dict:
     }
 
 
-def _qx55(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **_qx55_profile(_qx55_make_json(d))}],
-        _JSON_SCHEMA,
-    )
+@per_doc(QUERIES, "qx55_json_audit", _JSON_SCHEMA)
+def _qx55(d: int) -> list:
+    return [_qx55_profile(_qx55_make_json(d))]
 
 
-QUERIES["qx55_json_audit"] = _qx55
 ORACLE["qx55_json_audit"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -1343,17 +1261,12 @@ def _qt70_make_text(doc_id: int) -> str:
     return f"alpha βετα gamma {i}"
 
 
-def _qt70(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qt70_script_spoof", _SCRIPT_SCHEMA)
+def _qt70(d: int) -> list:
     from pdf_spark.core.scripts import script_mix
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **script_mix(_qt70_make_text(d))}],
-        _SCRIPT_SCHEMA,
-    )
+    return [script_mix(_qt70_make_text(d))]
 
-
-QUERIES["qt70_script_spoof"] = _qt70
 
 # -- qm41: PNG chunk-integrity audit (core/imaging.py::png_integrity) ---------
 #
@@ -1392,17 +1305,12 @@ def _qm41_make_png(doc_id: int) -> bytes:
     return ok[:40]  # IHDR whole (ends at 33), cut before the next header
 
 
-def _qm41(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm41_png_integrity", _PNGI_SCHEMA)
+def _qm41(d: int) -> list:
     from pdf_spark.core.imaging import png_integrity
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **png_integrity(_qm41_make_png(d))}],
-        _PNGI_SCHEMA,
-    )
+    return [png_integrity(_qm41_make_png(d))]
 
-
-QUERIES["qm41_png_integrity"] = _qm41
 
 # -- qx56: email reply/signature stripping (core/eml.py::strip_reply) ---------
 #
@@ -1438,17 +1346,12 @@ def _qx56_make_body(doc_id: int) -> str:
     return f"Simple {i} body"
 
 
-def _qx56(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx56_reply_strip", _REPLY_SCHEMA)
+def _qx56(d: int) -> list:
     from pdf_spark.core.eml import strip_reply
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **strip_reply(_qx56_make_body(d))}],
-        _REPLY_SCHEMA,
-    )
+    return [strip_reply(_qx56_make_body(d))]
 
-
-QUERIES["qx56_reply_strip"] = _qx56
 
 # -- qx57: MediaWiki wikitext strip (core/wikitext.py) -------------------------
 #
@@ -1491,17 +1394,12 @@ def _qx57_make_wiki(doc_id: int) -> str:
     return f"Plain {i} words here."
 
 
-def _qx57(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx57_wikitext_strip", _WIKI_SCHEMA)
+def _qx57(d: int) -> list:
     from pdf_spark.core.wikitext import wikitext_strip
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **wikitext_strip(_qx57_make_wiki(d))}],
-        _WIKI_SCHEMA,
-    )
+    return [wikitext_strip(_qx57_make_wiki(d))]
 
-
-QUERIES["qx57_wikitext_strip"] = _qx57
 
 # -- qx58: document-format router (the tier capstone, qm23's twin) -------------
 #
@@ -1590,15 +1488,10 @@ def _qx58_make_blob(doc_id: int) -> bytes:
     return _qx45_make_eml(5 * i)  # fam-0 eml
 
 
-def _qx58(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, "kind": route_document(_qx58_make_blob(d))}],
-        _ROUTE_SCHEMA,
-    )
+@per_doc(QUERIES, "qx58_doc_router", _ROUTE_SCHEMA)
+def _qx58(d: int) -> list:
+    return [{"kind": route_document(_qx58_make_blob(d))}]
 
-
-QUERIES["qx58_doc_router"] = _qx58
 
 # -- qx59: HTML table grid normalization (core/tablegrid.py) -------------------
 #
@@ -1641,17 +1534,12 @@ def _qx59_make_html(doc_id: int) -> str:
     return f"<p>No tables {i} here</p>"
 
 
-def _qx59(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx59_table_grid", _GRID_SCHEMA)
+def _qx59(d: int) -> list:
     from pdf_spark.core.tablegrid import table_grid
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **table_grid(_qx59_make_html(d))}],
-        _GRID_SCHEMA,
-    )
+    return [table_grid(_qx59_make_html(d))]
 
-
-QUERIES["qx59_table_grid"] = _qx59
 
 # -- qm42: JPEG structural integrity audit (core/imaging.py) -------------------
 #
@@ -1699,17 +1587,12 @@ def _qm42_make_jpeg(doc_id: int) -> bytes:
     return full[: full.find(b"\xff\xda")]
 
 
-def _qm42(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm42_jpeg_integrity", _JPEGI_SCHEMA)
+def _qm42(d: int) -> list:
     from pdf_spark.core.imaging import jpeg_integrity
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **jpeg_integrity(_qm42_make_jpeg(d))}],
-        _JPEGI_SCHEMA,
-    )
+    return [jpeg_integrity(_qm42_make_jpeg(d))]
 
-
-QUERIES["qm42_jpeg_integrity"] = _qm42
 
 # -- qx60: soft-redirect / doorway audit (core/htmlaudit.py) -------------------
 #
@@ -1758,17 +1641,12 @@ def _qx60_make_html(doc_id: int) -> bytes:
     return f"<html><p>plain page {i}</p></html>".encode()
 
 
-def _qx60(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx60_soft_redirects", _REDIR_SCHEMA)
+def _qx60(d: int) -> list:
     from pdf_spark.core.htmlaudit import soft_redirects
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **soft_redirects(_qx60_make_html(d))}],
-        _REDIR_SCHEMA,
-    )
+    return [soft_redirects(_qx60_make_html(d))]
 
-
-QUERIES["qx60_soft_redirects"] = _qx60
 
 # -- qm43: dominant-color histogram over real decoded pixels -------------------
 #
@@ -1807,17 +1685,13 @@ def _qm43_make_png(doc_id: int) -> bytes:
     return encode_png(6, 6, 1, bytearray([v]) * 36)
 
 
-def _qm43(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm43_color_histogram", _COLOR_SCHEMA)
+def _qm43(d: int) -> list:
     from pdf_spark.core.imaging import color_histogram
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **color_histogram(_qm43_make_png(d))}],
-        _COLOR_SCHEMA,
-    )
+    return [color_histogram(_qm43_make_png(d))]
 
 
-QUERIES["qm43_color_histogram"] = _qm43
 ORACLE["qm43_color_histogram"] = """
 WITH v AS (SELECT doc_id, doc_id % 3 AS fam FROM documents)
 SELECT doc_id,
@@ -2335,17 +2209,13 @@ def _qx61_make_page(doc_id: int) -> bytes:
     )
 
 
-def _qx61(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx61_charset_detect", _CHARSET_SCHEMA)
+def _qx61(d: int) -> list:
     from pdf_spark.core.htmlaudit import charset_detect
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **charset_detect(_qx61_make_page(d))}],
-        _CHARSET_SCHEMA,
-    )
+    return [charset_detect(_qx61_make_page(d))]
 
 
-QUERIES["qx61_charset_detect"] = _qx61
 ORACLE["qx61_charset_detect"] = """
 WITH v AS (SELECT doc_id, doc_id % 6 AS fam FROM documents)
 SELECT doc_id,
@@ -2408,17 +2278,13 @@ def _qx62_make_page(doc_id: int) -> bytes:
     return f"<p>bare page {i}</p>".encode()
 
 
-def _qx62(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx62_hreflang_audit", _HREFLANG_SCHEMA)
+def _qx62(d: int) -> list:
     from pdf_spark.core.htmlaudit import hreflang_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **hreflang_audit(_qx62_make_page(d))}],
-        _HREFLANG_SCHEMA,
-    )
+    return [hreflang_audit(_qx62_make_page(d))]
 
 
-QUERIES["qx62_hreflang_audit"] = _qx62
 ORACLE["qx62_hreflang_audit"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -2467,20 +2333,15 @@ def _qt76_make_text(doc_id: int) -> str:
     return f"word soup {i} with no caps after dots. all lowercase rest"
 
 
-def _qt76(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qt76_sentence_split", _SENTSEG_SCHEMA)
+def _qt76(d: int) -> list:
     from pdf_spark.core.sentseg import sentence_split
 
-    def row(d: int) -> list:
-        m = sentence_split(_qt76_make_text(d))
-        first = m["sentences"][0] if m["sentences"] else None
-        return [{"doc_id": d, **m, "first_sentence": first}]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), row, _SENTSEG_SCHEMA
-    )
+    m = sentence_split(_qt76_make_text(d))
+    first = m["sentences"][0] if m["sentences"] else None
+    return [{**m, "first_sentence": first}]
 
 
-QUERIES["qt76_sentence_split"] = _qt76
 _QT76_ORACLE = """
 WITH v AS (
   SELECT doc_id, doc_id % 4 AS fam,
@@ -2554,17 +2415,13 @@ def _qm44_make_wasm(doc_id: int) -> bytes:
     return b"GIF89a not a module " + bytes((i + k) % 256 for k in range(4))
 
 
-def _qm44(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm44_wasm_audit", _WASM_SCHEMA)
+def _qm44(d: int) -> list:
     from pdf_spark.core.wasm import wasm_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **wasm_audit(_qm44_make_wasm(d))}],
-        _WASM_SCHEMA,
-    )
+    return [wasm_audit(_qm44_make_wasm(d))]
 
 
-QUERIES["qm44_wasm_audit"] = _qm44
 ORACLE["qm44_wasm_audit"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -2630,17 +2487,13 @@ def _qm45_make_ogg(doc_id: int) -> bytes:
     return b"RIFF" + bytes((i + k) % 256 for k in range(30))
 
 
-def _qm45(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm45_ogg_audit", _OGG_SCHEMA)
+def _qm45(d: int) -> list:
     from pdf_spark.core.oggread import ogg_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **ogg_audit(_qm45_make_ogg(d))}],
-        _OGG_SCHEMA,
-    )
+    return [ogg_audit(_qm45_make_ogg(d))]
 
 
-QUERIES["qm45_ogg_audit"] = _qm45
 ORACLE["qm45_ogg_audit"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -2697,23 +2550,18 @@ def _qx63_make_wire(doc_id: int) -> bytes:
     return b"plain body, no framing here"
 
 
-def _qx63(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx63_dechunk", _CHUNK_SCHEMA)
+def _qx63(d: int) -> list:
     import hashlib
 
     from pdf_spark.core.httpwire import dechunk
 
-    def row(d: int) -> list:
-        m = dechunk(_qx63_make_wire(d))
-        return [
-            {"doc_id": d, **m, "body_md5": hashlib.md5(m["body"]).hexdigest()}
-        ]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), row, _CHUNK_SCHEMA
-    )
+    m = dechunk(_qx63_make_wire(d))
+    return [
+        {**m, "body_md5": hashlib.md5(m["body"]).hexdigest()}
+    ]
 
 
-QUERIES["qx63_dechunk"] = _qx63
 ORACLE["qx63_dechunk"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -2783,17 +2631,13 @@ def _qm46_make_font(doc_id: int) -> bytes:
     return b"\x00\x01\x00\x00" + bytes((i + k) % 256 for k in range(20))
 
 
-def _qm46(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm46_woff_audit", _WOFF_SCHEMA)
+def _qm46(d: int) -> list:
     from pdf_spark.core.woff import woff_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **woff_audit(_qm46_make_font(d))}],
-        _WOFF_SCHEMA,
-    )
+    return [woff_audit(_qm46_make_font(d))]
 
 
-QUERIES["qm46_woff_audit"] = _qm46
 ORACLE["qm46_woff_audit"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -2863,17 +2707,13 @@ def _qx64_make_page(doc_id: int) -> bytes:
     ).encode()
 
 
-def _qx64(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx64_spa_shell", _SPA_SCHEMA)
+def _qx64(d: int) -> list:
     from pdf_spark.core.htmlaudit import spa_shell_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **spa_shell_audit(_qx64_make_page(d))}],
-        _SPA_SCHEMA,
-    )
+    return [spa_shell_audit(_qx64_make_page(d))]
 
 
-QUERIES["qx64_spa_shell"] = _qx64
 ORACLE["qx64_spa_shell"] = """
 WITH v AS (
   SELECT doc_id, doc_id % 4 AS fam,
@@ -2953,17 +2793,13 @@ def _qx65_make_page(doc_id: int) -> bytes:
     ).encode()
 
 
-def _qx65(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx65_data_uris", _DATAURI_SCHEMA)
+def _qx65(d: int) -> list:
     from pdf_spark.core.htmlaudit import data_uri_inventory
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **data_uri_inventory(_qx65_make_page(d))}],
-        _DATAURI_SCHEMA,
-    )
+    return [data_uri_inventory(_qx65_make_page(d))]
 
 
-QUERIES["qx65_data_uris"] = _qx65
 ORACLE["qx65_data_uris"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -3037,7 +2873,8 @@ def _qx66_make_page(doc_id: int) -> bytes:
     ).encode()
 
 
-def _qx66(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx66_html_router", _ROUTER_SCHEMA)
+def _qx66(d: int) -> list:
     from pdf_spark.core.htmlaudit import (
         charset_detect,
         soft_redirects,
@@ -3057,14 +2894,9 @@ def _qx66(spark: SparkSession, sf: str) -> DataFrame:
             return ("render", "spa_shell", cs["resolved"], 0, 1)
         return ("extract", "ok", cs["resolved"], 0, 0)
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [dict(zip(_ROUTER_SCHEMA.names, (d, *route_one(d))))],
-        _ROUTER_SCHEMA,
-    )
+    return [dict(zip(_ROUTER_SCHEMA.names, (d, *route_one(d))))]
 
 
-QUERIES["qx66_html_router"] = _qx66
 ORACLE["qx66_html_router"] = """
 WITH v AS (SELECT doc_id, doc_id % 5 AS fam FROM documents)
 SELECT doc_id,
@@ -3119,17 +2951,13 @@ def _qm47_make_mp3(doc_id: int) -> bytes:
     return b"OggS not an mp3 " + bytes((i + k) % 256 for k in range(8))
 
 
-def _qm47(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm47_mp3_audit", _MP3_SCHEMA)
+def _qm47(d: int) -> list:
     from pdf_spark.core.mp3 import mp3_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **mp3_audit(_qm47_make_mp3(d))}],
-        _MP3_SCHEMA,
-    )
+    return [mp3_audit(_qm47_make_mp3(d))]
 
 
-QUERIES["qm47_mp3_audit"] = _qm47
 ORACLE["qm47_mp3_audit"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -3193,17 +3021,13 @@ def _qx67_make_page(doc_id: int) -> bytes:
     ).encode()
 
 
-def _qx67(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx67_srcset_election", _SRCSET_SCHEMA)
+def _qx67(d: int) -> list:
     from pdf_spark.core.htmlaudit import srcset_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **srcset_audit(_qx67_make_page(d))}],
-        _SRCSET_SCHEMA,
-    )
+    return [srcset_audit(_qx67_make_page(d))]
 
 
-QUERIES["qx67_srcset_election"] = _qx67
 ORACLE["qx67_srcset_election"] = """
 WITH v AS (SELECT doc_id, doc_id % 3 AS fam FROM documents)
 SELECT doc_id,
@@ -3267,17 +3091,13 @@ def _qx68_make(doc_id: int):
     return (f"<p>undated {i}</p>".encode(), f"https://ex.com/about-{i}")
 
 
-def _qx68(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx68_pubdate_election", _PUBDATE_SCHEMA)
+def _qx68(d: int) -> list:
     from pdf_spark.core.htmlaudit import pubdate_election
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **pubdate_election(*_qx68_make(d))}],
-        _PUBDATE_SCHEMA,
-    )
+    return [pubdate_election(*_qx68_make(d))]
 
 
-QUERIES["qx68_pubdate_election"] = _qx68
 ORACLE["qx68_pubdate_election"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam,
                   doc_id % 28 + 1 AS day FROM documents)
@@ -3340,17 +3160,13 @@ def _qm48_make_ttc(doc_id: int) -> bytes:
     return b"\x00\x01\x00\x00" + bytes((i + k) % 256 for k in range(16))
 
 
-def _qm48(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm48_ttc_audit", _TTC_SCHEMA)
+def _qm48(d: int) -> list:
     from pdf_spark.core.fontmeta import ttc_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **ttc_audit(_qm48_make_ttc(d))}],
-        _TTC_SCHEMA,
-    )
+    return [ttc_audit(_qm48_make_ttc(d))]
 
 
-QUERIES["qm48_ttc_audit"] = _qm48
 ORACLE["qm48_ttc_audit"] = """
 WITH v AS (SELECT doc_id, doc_id % 3 AS fam FROM documents)
 SELECT doc_id,
@@ -3414,17 +3230,13 @@ def _qx69_make(doc_id: int):
     return tags.encode(), "https://mysite.org/"
 
 
-def _qx69(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx69_third_party", _TPR_SCHEMA)
+def _qx69(d: int) -> list:
     from pdf_spark.core.htmlaudit import third_party_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **third_party_audit(*_qx69_make(d))}],
-        _TPR_SCHEMA,
-    )
+    return [third_party_audit(*_qx69_make(d))]
 
 
-QUERIES["qx69_third_party"] = _qx69
 ORACLE["qx69_third_party"] = """
 WITH v AS (SELECT doc_id, doc_id % 3 AS fam FROM documents)
 SELECT doc_id,
@@ -3487,17 +3299,13 @@ def _qm49_make_svg(doc_id: int) -> bytes:
     return b"\x89PNG\r\n\x1a\n raster " + bytes((i + k) % 256 for k in range(6))
 
 
-def _qm49(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm49_svg_security", _SVGSEC_SCHEMA)
+def _qm49(d: int) -> list:
     from pdf_spark.core.imaging import svg_security
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **svg_security(_qm49_make_svg(d))}],
-        _SVGSEC_SCHEMA,
-    )
+    return [svg_security(_qm49_make_svg(d))]
 
 
-QUERIES["qm49_svg_security"] = _qm49
 ORACLE["qm49_svg_security"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -3560,17 +3368,13 @@ def _qx70_make(doc_id: int):
     return (f"<p>0x{i:x} 12345 67890</p>".encode(), "")
 
 
-def _qx70(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx70_lang_conflict", _LANGC_SCHEMA)
+def _qx70(d: int) -> list:
     from pdf_spark.core.htmlaudit import lang_conflict_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **lang_conflict_audit(*_qx70_make(d))}],
-        _LANGC_SCHEMA,
-    )
+    return [lang_conflict_audit(*_qx70_make(d))]
 
 
-QUERIES["qx70_lang_conflict"] = _qx70
 ORACLE["qx70_lang_conflict"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -3626,17 +3430,13 @@ def _qx71_make_page(doc_id: int) -> bytes:
     return f'<div class="metered-gate">{i % 5} left</div>'.encode()
 
 
-def _qx71(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx71_paywall_flag", _PAYWALL_SCHEMA)
+def _qx71(d: int) -> list:
     from pdf_spark.core.htmlaudit import paywall_audit
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **paywall_audit(_qx71_make_page(d))}],
-        _PAYWALL_SCHEMA,
-    )
+    return [paywall_audit(_qx71_make_page(d))]
 
 
-QUERIES["qx71_paywall_flag"] = _qx71
 ORACLE["qx71_paywall_flag"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -3733,15 +3533,11 @@ def _qx72_eval(doc_id: int):
     return fn_type, len(out), y0, y1
 
 
-def _qx72(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [dict(zip(_PDFFUNC_SCHEMA.names, (d, *_qx72_eval(d))))],
-        _PDFFUNC_SCHEMA,
-    )
+@per_doc(QUERIES, "qx72_pdf_functions", _PDFFUNC_SCHEMA)
+def _qx72(d: int) -> list:
+    return [dict(zip(_PDFFUNC_SCHEMA.names, (d, *_qx72_eval(d))))]
 
 
-QUERIES["qx72_pdf_functions"] = _qx72
 ORACLE["qx72_pdf_functions"] = """
 WITH v AS (
     SELECT doc_id, doc_id % 4 AS fam, doc_id % 5 AS x4, doc_id % 7 AS c7,
@@ -3845,15 +3641,11 @@ def _qm50_eval(doc_id: int):
     )
 
 
-def _qm50(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [dict(zip(_OUTLINE_SCHEMA.names, (d, *_qm50_eval(d))))],
-        _OUTLINE_SCHEMA,
-    )
+@per_doc(QUERIES, "qm50_glyph_outlines", _OUTLINE_SCHEMA)
+def _qm50(d: int) -> list:
+    return [dict(zip(_OUTLINE_SCHEMA.names, (d, *_qm50_eval(d))))]
 
 
-QUERIES["qm50_glyph_outlines"] = _qm50
 ORACLE["qm50_glyph_outlines"] = """
 WITH v AS (
     SELECT doc_id, doc_id % 3 AS fam,
@@ -3927,19 +3719,14 @@ def _qm51_make(doc_id: int) -> bytes:
     )
 
 
-def _qm51(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm51_icc_profile", _ICC_SCHEMA)
+def _qm51(d: int) -> list:
     from pdf_spark.core.icc import icc_meta
 
-    def row(d: int) -> list:
-        m = icc_meta(_qm51_make(d))
-        return [{"doc_id": d, **m, "vmajor": m["version_major"]}]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), row, _ICC_SCHEMA
-    )
+    m = icc_meta(_qm51_make(d))
+    return [{**m, "vmajor": m["version_major"]}]
 
 
-QUERIES["qm51_icc_profile"] = _qm51
 ORACLE["qm51_icc_profile"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam FROM documents)
 SELECT doc_id,
@@ -4003,15 +3790,11 @@ def _qx73_eval(doc_id: int):
             stats["last_row"])
 
 
-def _qx73(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [dict(zip(_RASTER_SCHEMA.names, (d, *_qx73_eval(d))))],
-        _RASTER_SCHEMA,
-    )
+@per_doc(QUERIES, "qx73_page_raster", _RASTER_SCHEMA)
+def _qx73(d: int) -> list:
+    return [dict(zip(_RASTER_SCHEMA.names, (d, *_qx73_eval(d))))]
 
 
-QUERIES["qx73_page_raster"] = _qx73
 ORACLE["qx73_page_raster"] = """
 WITH v AS (
     SELECT doc_id, doc_id % 4 AS fam, 16 + doc_id % 16 AS w1,
@@ -4087,17 +3870,13 @@ def _qm52_make(doc_id: int) -> bytes:
     return encode_j2k(w, h, with_eoc=False)
 
 
-def _qm52(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm52_jp2_meta", _JP2_SCHEMA)
+def _qm52(d: int) -> list:
     from pdf_spark.core.jp2 import jp2_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **jp2_meta(_qm52_make(d))}],
-        _JP2_SCHEMA,
-    )
+    return [jp2_meta(_qm52_make(d))]
 
 
-QUERIES["qm52_jp2_meta"] = _qm52
 ORACLE["qm52_jp2_meta"] = """
 WITH v AS (
     SELECT doc_id, doc_id % 3 AS fam, 128 + doc_id % 64 AS w,
@@ -4184,19 +3963,14 @@ def _qx74_make(doc_id: int) -> bytes:
     return doc
 
 
-def _qx74(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx74_revision_forensics", _REV_SCHEMA)
+def _qx74(d: int) -> list:
     from pdf_spark.core.document import revision_audit
 
-    def row(d: int) -> list:
-        m = revision_audit(_qx74_make(d)) or dict.fromkeys(_REV_SCHEMA.names)
-        return [{**m, "doc_id": d}]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), row, _REV_SCHEMA
-    )
+    m = revision_audit(_qx74_make(d)) or dict.fromkeys(_REV_SCHEMA.names)
+    return [{**m, "doc_id": d}]
 
 
-QUERIES["qx74_revision_forensics"] = _qx74
 ORACLE["qx74_revision_forensics"] = """
 WITH v AS (
     SELECT doc_id, doc_id % 3 AS fam, doc_id % 4 AS k FROM documents
@@ -4299,15 +4073,11 @@ def _qm53_eval(doc_id: int):
     )
 
 
-def _qm53(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [dict(zip(_T1_SCHEMA.names, (d, *_qm53_eval(d))))],
-        _T1_SCHEMA,
-    )
+@per_doc(QUERIES, "qm53_type1_outlines", _T1_SCHEMA)
+def _qm53(d: int) -> list:
+    return [dict(zip(_T1_SCHEMA.names, (d, *_qm53_eval(d))))]
 
 
-QUERIES["qm53_type1_outlines"] = _qm53
 ORACLE["qm53_type1_outlines"] = """
 WITH v AS (
     SELECT doc_id, doc_id % 3 AS fam, 100 + (doc_id % 50) * 2 AS w,

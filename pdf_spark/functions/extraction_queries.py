@@ -13,9 +13,15 @@ knows what must come out without parsing anything.
   error-code histogram the oracle computes arithmetically.
 - qx03_span_geometry: every span of a known-layout variant must land at the
   generator-predicted (page, x, y, size) -> constant-true oracle.
+
+A query that builds one fixture per ``documents.doc_id`` and reads no
+other column has the per-document shape, ``tables.per_doc``: the decorated
+``_qxNN(doc_id)`` returns that document's rows.
 """
 
 from __future__ import annotations
+
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,7 +36,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_spark.core.extract import extract_document, assemble_text
-from pdf_spark.functions.tables import load, map_rows
+from pdf_spark.functions.tables import load, map_rows, per_doc
 from pdf_spark.gen.pdfgen import N_VARIANTS, _GOOD_VARIANTS, generate_doc
 from pdf_spark.operators.extract import extract_spans
 
@@ -915,7 +921,17 @@ FROM documents
 """
 
 
-def _qx15(spark: SparkSession, sf: str) -> DataFrame:
+_QX15_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("probe", StringType()),
+        StructField("allowed", BooleanType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx15_robots_rules", _QX15_SCHEMA)
+def _qx15(i: int) -> Iterator[dict]:
     """robots.txt politeness evaluation (RFC 9309, value oracle).
 
     Per document, build a robots.txt whose Allow exception rotates with
@@ -925,36 +941,23 @@ def _qx15(spark: SparkSession, sf: str) -> DataFrame:
     The oracle recomputes all five verdicts arithmetically."""
     from pdf_spark.core.robots import allowed_mask, parse_robots, is_allowed
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("probe", StringType()),
-            StructField("allowed", BooleanType()),
-        ]
+    robots = (
+        "User-agent: trainbot\n"
+        "Disallow: /private/\n"
+        f"Allow: /private/doc{i % 3}.html\n"
+        "\n"
+        "User-agent: *\n"
+        "Disallow: /\n"
+    ).encode()
+    paths = [f"/private/doc{j}.html" for j in range(3)] + ["/public/x"]
+    verdicts = allowed_mask(robots, "trainbot/1.0", paths)
+    verdicts.append(
+        is_allowed(parse_robots(robots), "otherbot", "/public/x")
     )
-
-    def evaluate(i):
-        robots = (
-            "User-agent: trainbot\n"
-            "Disallow: /private/\n"
-            f"Allow: /private/doc{i % 3}.html\n"
-            "\n"
-            "User-agent: *\n"
-            "Disallow: /\n"
-        ).encode()
-        paths = [f"/private/doc{j}.html" for j in range(3)] + ["/public/x"]
-        verdicts = allowed_mask(robots, "trainbot/1.0", paths)
-        verdicts.append(
-            is_allowed(parse_robots(robots), "otherbot", "/public/x")
-        )
-        for probe, allowed in zip(("p0", "p1", "p2", "pub", "other"), verdicts):
-            yield {"doc_id": i, "probe": probe, "allowed": bool(allowed)}
-
-    return map_rows(docs, evaluate, schema)
+    for probe, allowed in zip(("p0", "p1", "p2", "pub", "other"), verdicts):
+        yield {"probe": probe, "allowed": bool(allowed)}
 
 
-QUERIES["qx15_robots_rules"] = _qx15
 ORACLE["qx15_robots_rules"] = """
 SELECT doc_id, probe,
        CASE probe
@@ -969,7 +972,19 @@ FROM documents,
 """
 
 
-def _qx16(spark: SparkSession, sf: str) -> DataFrame:
+_QX16_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("pos", LongType()),
+        StructField("loc", StringType()),
+        StructField("lastmod", StringType()),
+        StructField("n_index_children", LongType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx16_sitemap_frontier", _QX16_SCHEMA)
+def _qx16(i: int) -> Iterator[dict]:
     """Sitemap frontier extraction (value oracle).
 
     Per document, parse a gzip-wrapped <urlset> sitemap whose entry count
@@ -981,50 +996,34 @@ def _qx16(spark: SparkSession, sf: str) -> DataFrame:
 
     from pdf_spark.core.sitemap import parse_sitemap
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("pos", LongType()),
-            StructField("loc", StringType()),
-            StructField("lastmod", StringType()),
-            StructField("n_index_children", LongType()),
-        ]
+    n = 2 + i % 4
+    urls = "".join(
+        f"<url><loc>https://site{i % 10}.example/p/{j}?a=1&amp;b=2</loc>"
+        f"<lastmod>2024-0{1 + j % 9}-01</lastmod></url>"
+        for j in range(n)
     )
-
-    def frontier(i):
-        n = 2 + i % 4
-        urls = "".join(
-            f"<url><loc>https://site{i % 10}.example/p/{j}?a=1&amp;b=2</loc>"
-            f"<lastmod>2024-0{1 + j % 9}-01</lastmod></url>"
-            for j in range(n)
-        )
-        sm = _gz.compress(
-            (f'<?xml version="1.0"?><urlset>{urls}</urlset>').encode(),
-            mtime=0,
-        )
-        idx = (
-            f"<sitemapindex><sitemap><loc>https://site{i % 10}.example"
-            f"/s-{i}.xml.gz</loc></sitemap></sitemapindex>"
-        ).encode()
-        kind, entries = parse_sitemap(sm)
-        ikind, ientries = parse_sitemap(idx)
-        n_children = len(ientries) if ikind == "index" else -1
-        if kind != "urlset":
-            entries = []
-        for pos, (loc, lastmod) in enumerate(entries):
-            yield {
-                "doc_id": i,
-                "pos": pos,
-                "loc": loc,
-                "lastmod": lastmod,
-                "n_index_children": n_children,
-            }
-
-    return map_rows(docs, frontier, schema)
+    sm = _gz.compress(
+        (f'<?xml version="1.0"?><urlset>{urls}</urlset>').encode(),
+        mtime=0,
+    )
+    idx = (
+        f"<sitemapindex><sitemap><loc>https://site{i % 10}.example"
+        f"/s-{i}.xml.gz</loc></sitemap></sitemapindex>"
+    ).encode()
+    kind, entries = parse_sitemap(sm)
+    ikind, ientries = parse_sitemap(idx)
+    n_children = len(ientries) if ikind == "index" else -1
+    if kind != "urlset":
+        entries = []
+    for pos, (loc, lastmod) in enumerate(entries):
+        yield {
+            "pos": pos,
+            "loc": loc,
+            "lastmod": lastmod,
+            "n_index_children": n_children,
+        }
 
 
-QUERIES["qx16_sitemap_frontier"] = _qx16
 ORACLE["qx16_sitemap_frontier"] = """
 SELECT doc_id,
        CAST(j AS BIGINT) AS pos,
@@ -1036,7 +1035,19 @@ FROM documents,
 """
 
 
-def _qx17(spark: SparkSession, sf: str) -> DataFrame:
+_QX17_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("pos", LongType()),
+        StructField("kind", StringType()),
+        StructField("link", StringType()),
+        StructField("title", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx17_feed_frontier", _QX17_SCHEMA)
+def _qx17(i: int) -> Iterator[dict]:
     """RSS/Atom feed frontier extraction (value oracle).
 
     Even doc_ids parse an RSS 2.0 feed, odd ones an Atom feed — both
@@ -1045,54 +1056,38 @@ def _qx17(spark: SparkSession, sf: str) -> DataFrame:
     ``parse_feed``; the oracle recomputes kind/link/title arithmetically."""
     from pdf_spark.core.sitemap import parse_feed
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("pos", LongType()),
-            StructField("kind", StringType()),
-            StructField("link", StringType()),
-            StructField("title", StringType()),
-        ]
-    )
-
-    def frontier(i):
-        n = 1 + i % 3
-        if i % 2 == 0:
-            items = "".join(
-                f"<item><title><![CDATA[Post {i}-{j}]]></title>"
-                f"<link>https://feed{i % 5}.example/p/{j}</link></item>"
-                for j in range(n)
-            )
-            feed = (
-                '<?xml version="1.0"?><rss version="2.0"><channel>'
-                f"<title>chan</title>{items}</channel></rss>"
-            ).encode()
-        else:
-            items = "".join(
-                f"<entry><title>Post {i}-{j}</title>"
-                f'<link rel="alternate" href="https://feed{i % 5}.example/p/{j}"/>'
-                "</entry>"
-                for j in range(n)
-            )
-            feed = (
-                '<feed xmlns="http://www.w3.org/2005/Atom">'
-                f"<title>chan</title>{items}</feed>"
-            ).encode()
-        kind, entries = parse_feed(feed)
-        for pos, (link, title) in enumerate(entries):
-            yield {
-                "doc_id": i,
-                "pos": pos,
-                "kind": kind,
-                "link": link,
-                "title": title,
-            }
-
-    return map_rows(docs, frontier, schema)
+    n = 1 + i % 3
+    if i % 2 == 0:
+        items = "".join(
+            f"<item><title><![CDATA[Post {i}-{j}]]></title>"
+            f"<link>https://feed{i % 5}.example/p/{j}</link></item>"
+            for j in range(n)
+        )
+        feed = (
+            '<?xml version="1.0"?><rss version="2.0"><channel>'
+            f"<title>chan</title>{items}</channel></rss>"
+        ).encode()
+    else:
+        items = "".join(
+            f"<entry><title>Post {i}-{j}</title>"
+            f'<link rel="alternate" href="https://feed{i % 5}.example/p/{j}"/>'
+            "</entry>"
+            for j in range(n)
+        )
+        feed = (
+            '<feed xmlns="http://www.w3.org/2005/Atom">'
+            f"<title>chan</title>{items}</feed>"
+        ).encode()
+    kind, entries = parse_feed(feed)
+    for pos, (link, title) in enumerate(entries):
+        yield {
+            "pos": pos,
+            "kind": kind,
+            "link": link,
+            "title": title,
+        }
 
 
-QUERIES["qx17_feed_frontier"] = _qx17
 ORACLE["qx17_feed_frontier"] = """
 SELECT doc_id,
        CAST(j AS BIGINT) AS pos,
@@ -1104,7 +1099,18 @@ FROM documents,
 """
 
 
-def _qx18(spark: SparkSession, sf: str) -> DataFrame:
+_QX18_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("pos", LongType()),
+        StructField("level", LongType()),
+        StructField("title", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx18_html_headings", _QX18_SCHEMA)
+def _qx18(i: int) -> Iterator[dict]:
     """HTML heading outline (value oracle) — the HTML twin of qx13.
 
     Each page carries an h1 plus 1 + doc_id % 3 h2 sections (entities in
@@ -1113,33 +1119,19 @@ def _qx18(spark: SparkSession, sf: str) -> DataFrame:
     arithmetically by the oracle."""
     from pdf_spark.core.htmltext import extract_headings
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("pos", LongType()),
-            StructField("level", LongType()),
-            StructField("title", StringType()),
-        ]
+    n = 1 + i % 3
+    secs = "".join(
+        f"<h2>Part {j} &amp; more</h2><p>body</p>" for j in range(n)
     )
-
-    def headings(i):
-        n = 1 + i % 3
-        secs = "".join(
-            f"<h2>Part {j} &amp; more</h2><p>body</p>" for j in range(n)
-        )
-        page = (
-            f"<html><body><h1>Doc {i}</h1>{secs}"
-            "<script>var d='<h3>decoy</h3>';</script>"
-            f"<h2>Tail {i} (unclosed)"
-        ).encode()
-        for pos, (level, title) in enumerate(extract_headings(page)):
-            yield {"doc_id": i, "pos": pos, "level": level, "title": title}
-
-    return map_rows(docs, headings, schema)
+    page = (
+        f"<html><body><h1>Doc {i}</h1>{secs}"
+        "<script>var d='<h3>decoy</h3>';</script>"
+        f"<h2>Tail {i} (unclosed)"
+    ).encode()
+    for pos, (level, title) in enumerate(extract_headings(page)):
+        yield {"pos": pos, "level": level, "title": title}
 
 
-QUERIES["qx18_html_headings"] = _qx18
 # pos 0 = h1; pos 1..n = h2 parts; pos n+1 = the unclosed tail h2
 ORACLE["qx18_html_headings"] = """
 SELECT doc_id,
@@ -1153,7 +1145,18 @@ FROM documents,
 """
 
 
-def _qx19(spark: SparkSession, sf: str) -> DataFrame:
+_QX19_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("pos", LongType()),
+        StructField("href", StringType()),
+        StructField("anchor", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx19_anchor_text", _QX19_SCHEMA)
+def _qx19(i: int) -> Iterator[dict]:
     """Anchor-text link graph (value oracle) — WAT records keep the text.
 
     Each page carries one fixed nav anchor, one per-doc anchor whose text
@@ -1162,33 +1165,19 @@ def _qx19(spark: SparkSession, sf: str) -> DataFrame:
     recomputes from doc_id."""
     from pdf_spark.core.htmltext import extract_links_with_text
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("pos", LongType()),
-            StructField("href", StringType()),
-            StructField("anchor", StringType()),
-        ]
-    )
-
-    def anchors(i):
-        page = (
-            '<html><body><nav><a href="/home">Home page</a></nav>'
-            f'<p>See <a href="/doc/{i}">doc <b>number {i}</b></a> now.</p>'
-            "<a name='x'>not a link</a>"
-            f'<a href="/next?id={i}&amp;ref=a">next &gt; page</a>'
-            "</body></html>"
-        ).encode()
-        for pos, (href, anchor) in enumerate(
-            extract_links_with_text(page)
-        ):
-            yield {"doc_id": i, "pos": pos, "href": href, "anchor": anchor}
-
-    return map_rows(docs, anchors, schema)
+    page = (
+        '<html><body><nav><a href="/home">Home page</a></nav>'
+        f'<p>See <a href="/doc/{i}">doc <b>number {i}</b></a> now.</p>'
+        "<a name='x'>not a link</a>"
+        f'<a href="/next?id={i}&amp;ref=a">next &gt; page</a>'
+        "</body></html>"
+    ).encode()
+    for pos, (href, anchor) in enumerate(
+        extract_links_with_text(page)
+    ):
+        yield {"pos": pos, "href": href, "anchor": anchor}
 
 
-QUERIES["qx19_anchor_text"] = _qx19
 ORACLE["qx19_anchor_text"] = """
 SELECT doc_id,
        CAST(p AS BIGINT) AS pos,
@@ -1262,7 +1251,18 @@ FROM documents
 """
 
 
-def _qx21(spark: SparkSession, sf: str) -> DataFrame:
+_QX21_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("field", StringType()),
+        StructField("ftype", StringType()),
+        StructField("value", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx21_form_fields", _QX21_SCHEMA)
+def _qx21(i: int) -> Iterator[dict]:
     """AcroForm field-value extraction (value oracle).
 
     Filled-form text lives OUTSIDE content streams (§12.7); this is the
@@ -1276,66 +1276,52 @@ def _qx21(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.meta import extract_form_fields
     from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj, _escb
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("field", StringType()),
-            StructField("ftype", StringType()),
-            StructField("value", StringType()),
-        ]
+    b = PdfBuilder.one_page()
+    font = b.add(F_HELV)
+    cont = b.stream(_content_td_tj(["form doc"]), filters="FlateDecode")
+    f1 = b.reserve()
+    w1 = b.add(
+        b"<</Subtype/Widget/Rect[0 0 1 1]/Parent "
+        + str(f1).encode() + b" 0 R>>"
     )
-
-    def fields(i):
-        b = PdfBuilder.one_page()
-        font = b.add(F_HELV)
-        cont = b.stream(_content_td_tj(["form doc"]), filters="FlateDecode")
-        f1 = b.reserve()
-        w1 = b.add(
-            b"<</Subtype/Widget/Rect[0 0 1 1]/Parent "
-            + str(f1).encode() + b" 0 R>>"
+    b.set(
+        f1,
+        b"<</FT/Tx/T(name)/V(User " + str(i).encode() + b")/Kids["
+        + str(w1).encode() + b" 0 R]>>",
+    )
+    utf16 = b"\xfe\xff" + f"Straße — 例 {i}".encode(
+        "utf-16-be"
+    )
+    f2 = b.add(b"<</FT/Tx/T(title)/V(" + _escb(utf16) + b")>>")
+    box = b"/Yes" if i % 2 == 0 else b"/Off"
+    f3 = b.add(b"<</FT/Btn/T(subscribed)/V" + box + b">>")
+    parent = b.reserve()
+    k1 = b.add(
+        b"<</T(street)/Parent " + str(parent).encode()
+        + b" 0 R/V(Main St " + str(i % 97).encode() + b")>>"
+    )
+    k2 = b.add(
+        b"<</T(city)/Parent " + str(parent).encode() + b" 0 R>>"
+    )
+    b.set(
+        parent,
+        b"<</FT/Tx/T(address)/V(Berlin)/Kids["
+        + str(k1).encode() + b" 0 R " + str(k2).encode() + b" 0 R]>>",
+    )
+    acro = b.add(
+        b"<</Fields["
+        + b" ".join(
+            str(f).encode() + b" 0 R" for f in (f1, f2, f3, parent)
         )
-        b.set(
-            f1,
-            b"<</FT/Tx/T(name)/V(User " + str(i).encode() + b")/Kids["
-            + str(w1).encode() + b" 0 R]>>",
-        )
-        utf16 = b"\xfe\xff" + f"Straße — 例 {i}".encode(
-            "utf-16-be"
-        )
-        f2 = b.add(b"<</FT/Tx/T(title)/V(" + _escb(utf16) + b")>>")
-        box = b"/Yes" if i % 2 == 0 else b"/Off"
-        f3 = b.add(b"<</FT/Btn/T(subscribed)/V" + box + b">>")
-        parent = b.reserve()
-        k1 = b.add(
-            b"<</T(street)/Parent " + str(parent).encode()
-            + b" 0 R/V(Main St " + str(i % 97).encode() + b")>>"
-        )
-        k2 = b.add(
-            b"<</T(city)/Parent " + str(parent).encode() + b" 0 R>>"
-        )
-        b.set(
-            parent,
-            b"<</FT/Tx/T(address)/V(Berlin)/Kids["
-            + str(k1).encode() + b" 0 R " + str(k2).encode() + b" 0 R]>>",
-        )
-        acro = b.add(
-            b"<</Fields["
-            + b" ".join(
-                str(f).encode() + b" 0 R" for f in (f1, f2, f3, parent)
-            )
-            + b"]>>"
-        )
-        pdf = b.build(
-            b.page_tree(font, cont, catalog=b"/AcroForm %d 0 R" % acro)
-        )
-        for fname, ftype, val in extract_form_fields(Resolver(pdf)):
-            yield {"doc_id": i, "field": fname, "ftype": ftype, "value": val}
-
-    return map_rows(docs, fields, schema)
+        + b"]>>"
+    )
+    pdf = b.build(
+        b.page_tree(font, cont, catalog=b"/AcroForm %d 0 R" % acro)
+    )
+    for fname, ftype, val in extract_form_fields(Resolver(pdf)):
+        yield {"field": fname, "ftype": ftype, "value": val}
 
 
-QUERIES["qx21_form_fields"] = _qx21
 ORACLE["qx21_form_fields"] = """
 SELECT doc_id, 'name' AS field, 'Tx' AS ftype,
        'User ' || doc_id AS value FROM documents
@@ -1354,7 +1340,19 @@ SELECT doc_id, 'address.city', 'Tx', 'Berlin' FROM documents
 """
 
 
-def _qx22(spark: SparkSession, sf: str) -> DataFrame:
+_QX22_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("n_images", LongType()),
+        StructField("max_w", LongType()),
+        StructField("max_h", LongType()),
+        StructField("sum_pixels", LongType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx22_image_inventory", _QX22_SCHEMA)
+def _qx22(i: int) -> Iterator[dict]:
     """Image XObject inventory (value oracle) — the multimodal mining op.
 
     Each doc synthesizes ``1 + i%3`` top-level page images (deterministic
@@ -1366,67 +1364,51 @@ def _qx22(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.meta import extract_image_inventory
     from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_images", LongType()),
-            StructField("max_w", LongType()),
-            StructField("max_h", LongType()),
-            StructField("sum_pixels", LongType()),
-        ]
-    )
-
-    def inventory(i):
-        w, h = 100 + i % 50, 50 + i % 40
-        b = PdfBuilder.one_page()
-        font = b.add(F_HELV)
-        cont = b.stream(_content_td_tj(["img doc"]), filters="FlateDecode")
-        imgs = [
-            b.stream(
-                b"\x00",
-                extra_dict=(
-                    b"/Subtype/Image/Width " + str(w).encode()
-                    + b"/Height " + str(h).encode()
-                    + b"/BitsPerComponent 8/ColorSpace/DeviceRGB"
-                    + b"/Filter/DCTDecode"
-                ),
-            )
-            for _ in range(1 + i % 3)
-        ]
-        inner = b.stream(
+    w, h = 100 + i % 50, 50 + i % 40
+    b = PdfBuilder.one_page()
+    font = b.add(F_HELV)
+    cont = b.stream(_content_td_tj(["img doc"]), filters="FlateDecode")
+    imgs = [
+        b.stream(
             b"\x00",
             extra_dict=(
-                b"/Subtype/Image/Width 32/Height 32"
-                b"/BitsPerComponent 1/Filter/FlateDecode"
+                b"/Subtype/Image/Width " + str(w).encode()
+                + b"/Height " + str(h).encode()
+                + b"/BitsPerComponent 8/ColorSpace/DeviceRGB"
+                + b"/Filter/DCTDecode"
             ),
         )
-        form = b.stream(
-            b"",
-            extra_dict=(
-                b"/Subtype/Form/BBox[0 0 1 1]"
-                b"/Resources<</XObject<</Inner "
-                + str(inner).encode() + b" 0 R>>>>"
-            ),
-        )
-        xo = b"/Fm0 " + str(form).encode() + b" 0 R" + b"".join(
-            b"/Im" + str(k).encode() + b" " + str(o).encode() + b" 0 R"
-            for k, o in enumerate(imgs)
-        )
-        root = b.page_tree(font, cont, resources=b"/XObject<<" + xo + b">>")
-        rows = extract_image_inventory(Resolver(b.build(root)))
-        yield {
-            "doc_id": i,
-            "n_images": len(rows),
-            "max_w": max((r[2] for r in rows), default=0),
-            "max_h": max((r[3] for r in rows), default=0),
-            "sum_pixels": sum(r[2] * r[3] for r in rows),
-        }
+        for _ in range(1 + i % 3)
+    ]
+    inner = b.stream(
+        b"\x00",
+        extra_dict=(
+            b"/Subtype/Image/Width 32/Height 32"
+            b"/BitsPerComponent 1/Filter/FlateDecode"
+        ),
+    )
+    form = b.stream(
+        b"",
+        extra_dict=(
+            b"/Subtype/Form/BBox[0 0 1 1]"
+            b"/Resources<</XObject<</Inner "
+            + str(inner).encode() + b" 0 R>>>>"
+        ),
+    )
+    xo = b"/Fm0 " + str(form).encode() + b" 0 R" + b"".join(
+        b"/Im" + str(k).encode() + b" " + str(o).encode() + b" 0 R"
+        for k, o in enumerate(imgs)
+    )
+    root = b.page_tree(font, cont, resources=b"/XObject<<" + xo + b">>")
+    rows = extract_image_inventory(Resolver(b.build(root)))
+    yield {
+        "n_images": len(rows),
+        "max_w": max((r[2] for r in rows), default=0),
+        "max_h": max((r[3] for r in rows), default=0),
+        "sum_pixels": sum(r[2] * r[3] for r in rows),
+    }
 
-    return map_rows(docs, inventory, schema)
 
-
-QUERIES["qx22_image_inventory"] = _qx22
 ORACLE["qx22_image_inventory"] = """
 SELECT doc_id,
        CAST(2 + doc_id % 3 AS BIGINT) AS n_images,
@@ -1438,45 +1420,42 @@ FROM documents
 """
 
 
-def _qx23(spark: SparkSession, sf: str) -> DataFrame:
+_QX23_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("idx", LongType()),
+        StructField("src", StringType()),
+        StructField("alt", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx23_image_alt_pairs", _QX23_SCHEMA)
+def _qx23(i: int) -> Iterator[dict]:
     """Image-text pair mining (value oracle) — the LAION shape: every
     ``<img>``'s (src, alt) in document order, with a script-embedded
     decoy img that must NOT count (rawtext skip) and one uncaptioned
     image per doc (alt='')."""
     from pdf_spark.core.htmltext import extract_image_alts
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("idx", LongType()),
-            StructField("src", StringType()),
-            StructField("alt", StringType()),
-        ]
+    n_imgs = 1 + i % 3
+    body = "".join(
+        f'<p>text</p><img src="/img/{i}_{k}.jpg" '
+        f'alt="caption {i} item {k}">'
+        for k in range(n_imgs)
     )
-
-    def pairs(i):
-        n_imgs = 1 + i % 3
-        body = "".join(
-            f'<p>text</p><img src="/img/{i}_{k}.jpg" '
-            f'alt="caption {i} item {k}">'
-            for k in range(n_imgs)
-        )
-        html = (
-            "<html><body>"
-            + body
-            + "<script>var d='<img src=\"/decoy.jpg\" alt=\"x\">';"
-            "</script>"
-            + f'<img src="/img/{i}_plain.png">'
-            + "</body></html>"
-        ).encode()
-        for idx, (src, alt) in enumerate(extract_image_alts(html)):
-            yield {"doc_id": i, "idx": idx, "src": src, "alt": alt}
-
-    return map_rows(docs, pairs, schema)
+    html = (
+        "<html><body>"
+        + body
+        + "<script>var d='<img src=\"/decoy.jpg\" alt=\"x\">';"
+        "</script>"
+        + f'<img src="/img/{i}_plain.png">'
+        + "</body></html>"
+    ).encode()
+    for idx, (src, alt) in enumerate(extract_image_alts(html)):
+        yield {"idx": idx, "src": src, "alt": alt}
 
 
-QUERIES["qx23_image_alt_pairs"] = _qx23
 ORACLE["qx23_image_alt_pairs"] = """
 SELECT doc_id,
        CAST(k AS BIGINT) AS idx,
@@ -1660,22 +1639,17 @@ def _grid_pdf(doc_id: int) -> bytes:
     return b.build(b.page_tree(font, cont))
 
 
-def _qx26(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx26_pdf_table_cells", _TABLE_SCHEMA)
+def _qx26(did: int) -> Iterator[dict]:
     from pdf_spark.core.extract import detect_table_cells
 
-    docs = load(spark, sf, "documents").select("doc_id").filter(
-        F.col("doc_id") % 10 == 0
-    )
-
-    def recover(did):
-        r = extract_document(_grid_pdf(did))
-        for _page, ri, ci, text in detect_table_cells(r.spans):
-            yield dict(zip(_TABLE_SCHEMA.names, (did, ri, ci, text)))
-
-    return map_rows(docs, recover, _TABLE_SCHEMA)
+    if did % 10:
+        return  # one doc in ten is sampled
+    r = extract_document(_grid_pdf(did))
+    for _page, ri, ci, text in detect_table_cells(r.spans):
+        yield dict(zip(_TABLE_SCHEMA.names, (did, ri, ci, text)))
 
 
-QUERIES["qx26_pdf_table_cells"] = _qx26
 ORACLE["qx26_pdf_table_cells"] = """
 SELECT d.doc_id,
        CAST(r AS BIGINT) AS row_idx,
@@ -1726,20 +1700,15 @@ def _heading_pdf(doc_id: int) -> bytes:
     return b.build(b.page_tree(font, cont))
 
 
-def _qx27(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx27_pdf_headings", _HEAD_SCHEMA)
+def _qx27(did: int) -> Iterator[dict]:
     from pdf_spark.core.extract import classify_headings
 
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def detect(did):
-        r = extract_document(_heading_pdf(did))
-        for li, text in classify_headings(r.spans):
-            yield {"doc_id": did, "line_idx": li, "heading": text}
-
-    return map_rows(docs, detect, _HEAD_SCHEMA)
+    r = extract_document(_heading_pdf(did))
+    for li, text in classify_headings(r.spans):
+        yield {"line_idx": li, "heading": text}
 
 
-QUERIES["qx27_pdf_headings"] = _qx27
 ORACLE["qx27_pdf_headings"] = """
 SELECT d.doc_id,
        CAST(i * 3 AS BIGINT) AS line_idx,
@@ -1765,28 +1734,22 @@ _MD_SCHEMA = StructType(
 )
 
 
-def _qx28(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qx28_pdf_markdown", _MD_SCHEMA)
+def _qx28(did: int) -> Iterator[dict]:
     from pdf_spark.core.extract import assemble_markdown
 
-    docs = load(spark, sf, "documents").select("doc_id")
-
-    def serialize(did):
-        r = extract_document(_heading_pdf(did))
-        md = assemble_markdown(r.spans)
-        stripped = "\n".join(
-            l[3:] if l.startswith("## ") else l
-            for l in md.split("\n")
-        )
-        yield {
-            "doc_id": did,
-            "md": md,
-            "coverage_equal": stripped == assemble_text(r.spans),
-        }
-
-    return map_rows(docs, serialize, _MD_SCHEMA)
+    r = extract_document(_heading_pdf(did))
+    md = assemble_markdown(r.spans)
+    stripped = "\n".join(
+        l[3:] if l.startswith("## ") else l
+        for l in md.split("\n")
+    )
+    yield {
+        "md": md,
+        "coverage_equal": stripped == assemble_text(r.spans),
+    }
 
 
-QUERIES["qx28_pdf_markdown"] = _qx28
 ORACLE["qx28_pdf_markdown"] = """
 WITH lines AS (
   SELECT d.doc_id, i,
@@ -1806,7 +1769,18 @@ FROM lines GROUP BY doc_id
 # -- qx29: markup-annotation text (reviewer-comment side channel) -------------
 
 
-def _qx29(spark: SparkSession, sf: str) -> DataFrame:
+_QX29_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("page_no", LongType()),
+        StructField("subtype", StringType()),
+        StructField("text", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx29_annotation_texts", _QX29_SCHEMA)
+def _qx29(i: int) -> Iterator[dict]:
     """Markup-annotation ``/Contents`` extraction (value oracle).
 
     Reviewer comments (§12.5.6.2) live OUTSIDE content streams, like
@@ -1821,66 +1795,51 @@ def _qx29(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.meta import extract_annotation_texts
     from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj, _escb
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("page_no", LongType()),
-            StructField("subtype", StringType()),
-            StructField("text", StringType()),
-        ]
+    b = PdfBuilder.one_page()
+    font = b.add(F_HELV)
+    cont = b.stream(
+        _content_td_tj(["annotated"]), filters="FlateDecode"
     )
-
-    def annots(i):
-        b = PdfBuilder.one_page()
-        font = b.add(F_HELV)
-        cont = b.stream(
-            _content_td_tj(["annotated"]), filters="FlateDecode"
-        )
-        pop = b.reserve()
-        note = b"Fix section " + str(i % 50).encode()
-        a1 = b.add(
-            b"<</Type/Annot/Subtype/Text/Rect[0 0 9 9]/Contents("
-            + note + b")/Popup " + str(pop).encode() + b" 0 R>>"
-        )
-        b.set(
-            pop,
-            b"<</Type/Annot/Subtype/Popup/Rect[0 0 9 9]/Contents("
-            + note + b")>>",
-        )
-        u16 = b"\xfe\xff" + f"Nota — {i}".encode("utf-16-be")
-        a2 = b.add(
-            b"<</Type/Annot/Subtype/FreeText/Rect[0 0 9 9]/Contents("
-            + _escb(u16) + b")>>"
-        )
-        a3 = b.add(
-            b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]/Contents(alt)"
-            b"/A<</S/URI/URI(https://example.com)>>>>"
-        )
-        a4 = b.add(b"<</Type/Annot/Subtype/Square/Rect[0 0 9 9]>>")
-        ids = [a1, pop, a2, a3, a4]
-        if i % 3 == 0:
-            ids.append(
-                b.add(
-                    b"<</Type/Annot/Subtype/Highlight/Rect[0 0 9 9]"
-                    b"/Contents(hl " + str(i % 7).encode() + b")>>"
-                )
+    pop = b.reserve()
+    note = b"Fix section " + str(i % 50).encode()
+    a1 = b.add(
+        b"<</Type/Annot/Subtype/Text/Rect[0 0 9 9]/Contents("
+        + note + b")/Popup " + str(pop).encode() + b" 0 R>>"
+    )
+    b.set(
+        pop,
+        b"<</Type/Annot/Subtype/Popup/Rect[0 0 9 9]/Contents("
+        + note + b")>>",
+    )
+    u16 = b"\xfe\xff" + f"Nota — {i}".encode("utf-16-be")
+    a2 = b.add(
+        b"<</Type/Annot/Subtype/FreeText/Rect[0 0 9 9]/Contents("
+        + _escb(u16) + b")>>"
+    )
+    a3 = b.add(
+        b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]/Contents(alt)"
+        b"/A<</S/URI/URI(https://example.com)>>>>"
+    )
+    a4 = b.add(b"<</Type/Annot/Subtype/Square/Rect[0 0 9 9]>>")
+    ids = [a1, pop, a2, a3, a4]
+    if i % 3 == 0:
+        ids.append(
+            b.add(
+                b"<</Type/Annot/Subtype/Highlight/Rect[0 0 9 9]"
+                b"/Contents(hl " + str(i % 7).encode() + b")>>"
             )
-        pdf = b.build(b.page_tree(font, cont, annots=ids))
-        for page_no, subtype, text in extract_annotation_texts(
-            Resolver(pdf)
-        ):
-            yield {
-                "doc_id": i,
-                "page_no": page_no,
-                "subtype": subtype,
-                "text": text,
-            }
-
-    return map_rows(docs, annots, schema)
+        )
+    pdf = b.build(b.page_tree(font, cont, annots=ids))
+    for page_no, subtype, text in extract_annotation_texts(
+        Resolver(pdf)
+    ):
+        yield {
+            "page_no": page_no,
+            "subtype": subtype,
+            "text": text,
+        }
 
 
-QUERIES["qx29_annotation_texts"] = _qx29
 ORACLE["qx29_annotation_texts"] = """
 SELECT doc_id, 0 AS page_no, 'Text' AS subtype,
        'Fix section ' || (doc_id % 50) AS text FROM documents
@@ -1989,7 +1948,22 @@ FROM documents
 # -- qx31: embedded-file attachments (name tree + FileAttachment annots) ------
 
 
-def _qx31(spark: SparkSession, sf: str) -> DataFrame:
+_QX31_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("source", StringType()),
+        StructField("fname", StringType()),
+        StructField("att_desc", StringType()),
+        StructField("mime", StringType()),
+        StructField("size_declared", LongType()),
+        StructField("size_bytes", LongType()),
+        StructField("md5", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx31_embedded_files", _QX31_SCHEMA)
+def _qx31(i: int) -> Iterator[dict]:
     """Attachment inventory (§7.11 filespecs + §7.7.4 /EmbeddedFiles name
     tree + §12.5.6.15 FileAttachment annots) — E117.
 
@@ -2016,90 +1990,73 @@ def _qx31(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.meta import extract_embedded_files
     from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("source", StringType()),
-            StructField("fname", StringType()),
-            StructField("att_desc", StringType()),
-            StructField("mime", StringType()),
-            StructField("size_declared", LongType()),
-            StructField("size_bytes", LongType()),
-            StructField("md5", StringType()),
-        ]
+    b = PdfBuilder.one_page()
+    font = b.add(F_HELV)
+    cont = b.stream(
+        _content_td_tj(["attached"]), filters="FlateDecode"
     )
-    def attachments(i):
-        b = PdfBuilder.one_page()
-        font = b.add(F_HELV)
-        cont = b.stream(
-            _content_td_tj(["attached"]), filters="FlateDecode"
+    csv = f"id,value\n{i},{i * i}".encode()
+    enc = zlib.compress(csv)
+    ef1 = b.add(
+        b"<</Length " + str(len(enc)).encode()
+        + b"/Filter/FlateDecode/Subtype/text#2Fcsv"
+        b"/Params<</Size " + str(len(csv)).encode() + b">>"
+        b">>\nstream\n" + enc + b"\nendstream"
+    )
+    spec1 = b.add(
+        b"<</Type/Filespec/F(data_" + str(i % 100).encode()
+        + b".csv)/EF<</F " + str(ef1).encode() + b" 0 R>>>>"
+    )
+    readme = f"readme {i % 5}".encode()
+    ef2 = b.add(
+        b"<</Length " + str(len(readme)).encode()
+        + b"/Subtype/text#2Fplain/Params<</Size "
+        + str(len(readme)).encode() + b">>"
+        b">>\nstream\n" + readme + b"\nendstream"
+    )
+    spec2 = b.add(
+        b"<</Type/Filespec/F(readme.txt)/Desc(attachment for doc "
+        + str(i).encode() + b")/EF<</F " + str(ef2).encode()
+        + b" 0 R>>>>"
+    )
+    spec_ext = b.add(b"<</Type/Filespec/F(external-only.bin)>>")
+    kid1 = b.add(
+        b"<</Names[(data) " + str(spec1).encode() + b" 0 R]>>"
+    )
+    kid2 = b.add(
+        b"<</Names[(ext) " + str(spec_ext).encode()
+        + b" 0 R (readme) " + str(spec2).encode() + b" 0 R]>>"
+    )
+    root = b.add(
+        b"<</Kids[" + str(kid1).encode() + b" 0 R "
+        + str(kid2).encode() + b" 0 R]>>"
+    )
+    annots = []
+    if i % 2 == 0:
+        note = f"note {i % 7}".encode()
+        ef3 = b.add(
+            b"<</Length " + str(len(note)).encode()
+            + b"/Subtype/application#2Foctet-stream"
+            b"/Params<</Size " + str(len(note)).encode() + b">>"
+            b">>\nstream\n" + note + b"\nendstream"
         )
-        csv = f"id,value\n{i},{i * i}".encode()
-        enc = zlib.compress(csv)
-        ef1 = b.add(
-            b"<</Length " + str(len(enc)).encode()
-            + b"/Filter/FlateDecode/Subtype/text#2Fcsv"
-            b"/Params<</Size " + str(len(csv)).encode() + b">>"
-            b">>\nstream\n" + enc + b"\nendstream"
+        spec3 = b.add(
+            b"<</Type/Filespec/F(note.bin)/EF<</F "
+            + str(ef3).encode() + b" 0 R>>>>"
         )
-        spec1 = b.add(
-            b"<</Type/Filespec/F(data_" + str(i % 100).encode()
-            + b".csv)/EF<</F " + str(ef1).encode() + b" 0 R>>>>"
+        a = b.add(
+            b"<</Type/Annot/Subtype/FileAttachment"
+            b"/Rect[0 0 9 9]/FS " + str(spec3).encode() + b" 0 R>>"
         )
-        readme = f"readme {i % 5}".encode()
-        ef2 = b.add(
-            b"<</Length " + str(len(readme)).encode()
-            + b"/Subtype/text#2Fplain/Params<</Size "
-            + str(len(readme)).encode() + b">>"
-            b">>\nstream\n" + readme + b"\nendstream"
-        )
-        spec2 = b.add(
-            b"<</Type/Filespec/F(readme.txt)/Desc(attachment for doc "
-            + str(i).encode() + b")/EF<</F " + str(ef2).encode()
-            + b" 0 R>>>>"
-        )
-        spec_ext = b.add(b"<</Type/Filespec/F(external-only.bin)>>")
-        kid1 = b.add(
-            b"<</Names[(data) " + str(spec1).encode() + b" 0 R]>>"
-        )
-        kid2 = b.add(
-            b"<</Names[(ext) " + str(spec_ext).encode()
-            + b" 0 R (readme) " + str(spec2).encode() + b" 0 R]>>"
-        )
-        root = b.add(
-            b"<</Kids[" + str(kid1).encode() + b" 0 R "
-            + str(kid2).encode() + b" 0 R]>>"
-        )
-        annots = []
-        if i % 2 == 0:
-            note = f"note {i % 7}".encode()
-            ef3 = b.add(
-                b"<</Length " + str(len(note)).encode()
-                + b"/Subtype/application#2Foctet-stream"
-                b"/Params<</Size " + str(len(note)).encode() + b">>"
-                b">>\nstream\n" + note + b"\nendstream"
-            )
-            spec3 = b.add(
-                b"<</Type/Filespec/F(note.bin)/EF<</F "
-                + str(ef3).encode() + b" 0 R>>>>"
-            )
-            a = b.add(
-                b"<</Type/Annot/Subtype/FileAttachment"
-                b"/Rect[0 0 9 9]/FS " + str(spec3).encode() + b" 0 R>>"
-            )
-            annots = [a]
-        catalog = b"/Names<</EmbeddedFiles %d 0 R>>" % root
-        pdf = b.build(
-            b.page_tree(font, cont, catalog=catalog, annots=annots)
-        )
-        for row in extract_embedded_files(Resolver(pdf)):
-            yield dict(zip(schema.names, (i, *row)))
-
-    return map_rows(docs, attachments, schema)
+        annots = [a]
+    catalog = b"/Names<</EmbeddedFiles %d 0 R>>" % root
+    pdf = b.build(
+        b.page_tree(font, cont, catalog=catalog, annots=annots)
+    )
+    for row in extract_embedded_files(Resolver(pdf)):
+        yield dict(zip(_QX31_SCHEMA.names, (i, *row)))
 
 
-QUERIES["qx31_embedded_files"] = _qx31
 ORACLE["qx31_embedded_files"] = """
 WITH payloads AS (
     SELECT doc_id, 'names' AS source,
@@ -2129,7 +2086,20 @@ FROM payloads
 # -- qx32: internal GoTo/Dest link graph (the PDF twin of HTML anchors) -------
 
 
-def _qx32(spark: SparkSession, sf: str) -> DataFrame:
+_QX32_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("page_from", LongType()),
+        StructField("via", StringType()),
+        StructField("dest_name", StringType()),
+        StructField("page_to", LongType()),
+        StructField("fit", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx32_internal_links", _QX32_SCHEMA)
+def _qx32(i: int) -> Iterator[dict]:
     """Intra-document navigation graph (§12.3.2 destinations) — E118.
 
     TOC pages, "see section N" cross-references and figure callouts are
@@ -2147,103 +2117,88 @@ def _qx32(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.meta import extract_internal_links
     from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("page_from", LongType()),
-            StructField("via", StringType()),
-            StructField("dest_name", StringType()),
-            StructField("page_to", LongType()),
-            StructField("fit", StringType()),
-        ]
+    b = PdfBuilder()
+    cat = b.reserve()
+    pages_id = b.reserve()
+    p1, p2, p3 = b.reserve(), b.reserve(), b.reserve()
+    font = b.add(F_HELV)
+    cont = b.stream(
+        _content_td_tj(["linked"]), filters="FlateDecode"
     )
-    def links(i):
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        p1, p2, p3 = b.reserve(), b.reserve(), b.reserve()
-        font = b.add(F_HELV)
-        cont = b.stream(
-            _content_td_tj(["linked"]), filters="FlateDecode"
+    target = p2 if i % 2 == 0 else p3
+    a_dest = b.add(
+        b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]/Dest["
+        + str(target).encode() + b" 0 R/XYZ 0 792 0]>>"
+    )
+    wrapped = b.add(b"<</D[" + str(p2).encode() + b" 0 R/Fit]>>")
+    a_goto = b.add(
+        b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
+        b"/A<</S/GoTo/D(sec.two)>>>>"
+    )
+    annot_ids = [a_dest, a_goto]
+    if i % 3 == 0:
+        annot_ids.append(
+            b.add(
+                b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
+                b"/A<</S/GoTo/D(no.such)>>>>"
+            )
         )
-        target = p2 if i % 2 == 0 else p3
-        a_dest = b.add(
-            b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]/Dest["
-            + str(target).encode() + b" 0 R/XYZ 0 792 0]>>"
-        )
-        wrapped = b.add(b"<</D[" + str(p2).encode() + b" 0 R/Fit]>>")
-        a_goto = b.add(
+    annot_ids.append(
+        b.add(
             b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
-            b"/A<</S/GoTo/D(sec.two)>>>>"
+            b"/A<</S/GoToR/F(other.pdf)/D[0/Fit]>>>>"
         )
-        annot_ids = [a_dest, a_goto]
-        if i % 3 == 0:
-            annot_ids.append(
-                b.add(
-                    b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
-                    b"/A<</S/GoTo/D(no.such)>>>>"
-                )
-            )
-        annot_ids.append(
-            b.add(
-                b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
-                b"/A<</S/GoToR/F(other.pdf)/D[0/Fit]>>>>"
-            )
+    )
+    annot_ids.append(
+        b.add(
+            b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
+            b"/A<</S/URI/URI(https://example.com)>>>>"
         )
-        annot_ids.append(
-            b.add(
-                b"<</Type/Annot/Subtype/Link/Rect[0 0 9 9]"
-                b"/A<</S/URI/URI(https://example.com)>>>>"
-            )
-        )
-        leaf = b.add(
-            b"<</Names[(sec.two) " + str(wrapped).encode()
-            + b" 0 R]>>"
-        )
-        b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode()
-            + b" 0 R/Names<</Dests " + str(leaf).encode()
-            + b" 0 R>>>>",
-        )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids[" + str(p1).encode() + b" 0 R "
-            + str(p2).encode() + b" 0 R " + str(p3).encode()
-            + b" 0 R]/Count 3>>",
-        )
-        common = (
-            b" 0 R/MediaBox[0 0 612 792]"
-            b"/Resources<</Font<</F1 " + str(font).encode()
-            + b" 0 R>>>>"
-            b"/Contents " + str(cont).encode() + b" 0 R"
-        )
-        b.set(
-            p1,
-            b"<</Type/Page/Parent " + str(pages_id).encode() + common
-            + b"/Annots["
-            + b" ".join(str(a).encode() + b" 0 R" for a in annot_ids)
-            + b"]>>",
-        )
-        b.set(
-            p2,
-            b"<</Type/Page/Parent " + str(pages_id).encode()
-            + common + b">>",
-        )
-        b.set(
-            p3,
-            b"<</Type/Page/Parent " + str(pages_id).encode()
-            + common + b">>",
-        )
-        pdf = b.build(cat)
-        for row in extract_internal_links(Resolver(pdf)):
-            yield dict(zip(schema.names, (i, *row)))
-
-    return map_rows(docs, links, schema)
+    )
+    leaf = b.add(
+        b"<</Names[(sec.two) " + str(wrapped).encode()
+        + b" 0 R]>>"
+    )
+    b.set(
+        cat,
+        b"<</Type/Catalog/Pages " + str(pages_id).encode()
+        + b" 0 R/Names<</Dests " + str(leaf).encode()
+        + b" 0 R>>>>",
+    )
+    b.set(
+        pages_id,
+        b"<</Type/Pages/Kids[" + str(p1).encode() + b" 0 R "
+        + str(p2).encode() + b" 0 R " + str(p3).encode()
+        + b" 0 R]/Count 3>>",
+    )
+    common = (
+        b" 0 R/MediaBox[0 0 612 792]"
+        b"/Resources<</Font<</F1 " + str(font).encode()
+        + b" 0 R>>>>"
+        b"/Contents " + str(cont).encode() + b" 0 R"
+    )
+    b.set(
+        p1,
+        b"<</Type/Page/Parent " + str(pages_id).encode() + common
+        + b"/Annots["
+        + b" ".join(str(a).encode() + b" 0 R" for a in annot_ids)
+        + b"]>>",
+    )
+    b.set(
+        p2,
+        b"<</Type/Page/Parent " + str(pages_id).encode()
+        + common + b">>",
+    )
+    b.set(
+        p3,
+        b"<</Type/Page/Parent " + str(pages_id).encode()
+        + common + b">>",
+    )
+    pdf = b.build(cat)
+    for row in extract_internal_links(Resolver(pdf)):
+        yield dict(zip(_QX32_SCHEMA.names, (i, *row)))
 
 
-QUERIES["qx32_internal_links"] = _qx32
 ORACLE["qx32_internal_links"] = """
 SELECT doc_id, CAST(0 AS BIGINT) AS page_from, 'Dest' AS via,
        CAST(NULL AS VARCHAR) AS dest_name,
@@ -2260,7 +2215,17 @@ FROM documents WHERE doc_id % 3 = 0
 # -- qx33: display page labels (§12.4.2 number tree) --------------------------
 
 
-def _qx33(spark: SparkSession, sf: str) -> DataFrame:
+_QX33_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("page_no", LongType()),
+        StructField("label", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx33_page_labels", _QX33_SCHEMA)
+def _qx33(i: int) -> Iterator[dict]:
     """Display page labels (§12.4.2) — E119: the numbers HUMANS cite.
 
     Front matter labels as lowercase Roman ('i', 'ii'), the body
@@ -2275,57 +2240,44 @@ def _qx33(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.meta import extract_page_labels
     from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("page_no", LongType()),
-            StructField("label", StringType()),
-        ]
+    b = PdfBuilder()
+    cat = b.reserve()
+    pages_id = b.reserve()
+    kids = [b.reserve() for _ in range(4)]
+    font = b.add(F_HELV)
+    cont = b.stream(
+        _content_td_tj(["labeled"]), filters="FlateDecode"
     )
-
-    def labels(i):
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        kids = [b.reserve() for _ in range(4)]
-        font = b.add(F_HELV)
-        cont = b.stream(
-            _content_td_tj(["labeled"]), filters="FlateDecode"
-        )
-        nums = (
-            b"<</Nums[0<</S/r>> 2<</S/D/P(c" + str(i % 3).encode()
-            + b"-)/St " + str(1 + i % 7).encode() + b">>]>>"
-        )
-        lab = b.add(nums)
+    nums = (
+        b"<</Nums[0<</S/r>> 2<</S/D/P(c" + str(i % 3).encode()
+        + b"-)/St " + str(1 + i % 7).encode() + b">>]>>"
+    )
+    lab = b.add(nums)
+    b.set(
+        cat,
+        b"<</Type/Catalog/Pages " + str(pages_id).encode()
+        + b" 0 R/PageLabels " + str(lab).encode() + b" 0 R>>",
+    )
+    b.set(
+        pages_id,
+        b"<</Type/Pages/Kids["
+        + b" ".join(str(k).encode() + b" 0 R" for k in kids)
+        + b"]/Count 4>>",
+    )
+    for k in kids:
         b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode()
-            + b" 0 R/PageLabels " + str(lab).encode() + b" 0 R>>",
+            k,
+            b"<</Type/Page/Parent " + str(pages_id).encode()
+            + b" 0 R/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode()
+            + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R>>",
         )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids["
-            + b" ".join(str(k).encode() + b" 0 R" for k in kids)
-            + b"]/Count 4>>",
-        )
-        for k in kids:
-            b.set(
-                k,
-                b"<</Type/Page/Parent " + str(pages_id).encode()
-                + b" 0 R/MediaBox[0 0 612 792]"
-                b"/Resources<</Font<</F1 " + str(font).encode()
-                + b" 0 R>>>>"
-                b"/Contents " + str(cont).encode() + b" 0 R>>",
-            )
-        pdf = b.build(cat)
-        for page_no, label in extract_page_labels(Resolver(pdf)):
-            yield {"doc_id": i, "page_no": page_no, "label": label}
-
-    return map_rows(docs, labels, schema)
+    pdf = b.build(cat)
+    for page_no, label in extract_page_labels(Resolver(pdf)):
+        yield {"page_no": page_no, "label": label}
 
 
-QUERIES["qx33_page_labels"] = _qx33
 ORACLE["qx33_page_labels"] = """
 SELECT doc_id, CAST(0 AS BIGINT) AS page_no, 'i' AS label FROM documents
 UNION ALL
@@ -2342,7 +2294,22 @@ FROM documents
 # -- qx34: document triage profile (/Lang + structure booleans) ---------------
 
 
-def _qx34(spark: SparkSession, sf: str) -> DataFrame:
+_QX34_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("lang", StringType()),
+        StructField("version", StringType()),
+        StructField("page_count", LongType()),
+        StructField("tagged", BooleanType()),
+        StructField("has_acroform", BooleanType()),
+        StructField("file_id", StringType()),
+        StructField("id_unchanged", BooleanType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx34_doc_profile", _QX34_SCHEMA)
+def _qx34(i: int) -> Iterator[dict]:
     """Document triage profile (§14.9.2 /Lang, §7.7.2 /Version, §14.7
     MarkInfo) — E120: the FIRST pass a 100 TB pipeline runs.
 
@@ -2362,80 +2329,62 @@ def _qx34(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.meta import extract_doc_profile
     from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("lang", StringType()),
-            StructField("version", StringType()),
-            StructField("page_count", LongType()),
-            StructField("tagged", BooleanType()),
-            StructField("has_acroform", BooleanType()),
-            StructField("file_id", StringType()),
-            StructField("id_unchanged", BooleanType()),
-        ]
+    b = PdfBuilder()
+    cat = b.reserve()
+    pages_id = b.reserve()
+    n_pages = 1 + i % 3
+    kids = [b.reserve() for _ in range(n_pages)]
+    font = b.add(F_HELV)
+    cont = b.stream(
+        _content_td_tj(["profiled"]), filters="FlateDecode"
     )
-
-    def profiles(i):
-        b = PdfBuilder()
-        cat = b.reserve()
-        pages_id = b.reserve()
-        n_pages = 1 + i % 3
-        kids = [b.reserve() for _ in range(n_pages)]
-        font = b.add(F_HELV)
-        cont = b.stream(
-            _content_td_tj(["profiled"]), filters="FlateDecode"
-        )
-        extra = b""
-        lang = {0: b"en", 1: b"de-DE", 2: b"ja", 4: b"pt-BR"}.get(
-            i % 5
-        )
-        if lang is not None:
-            extra += b"/Lang(" + lang + b")"
-        if i % 4 == 0:
-            extra += b"/Version/2.0"
-        if i % 2 == 0:
-            extra += b"/MarkInfo<</Marked true>>"
-        if i % 7 == 0:
-            acro = b.add(b"<</Fields[]>>")
-            extra += b"/AcroForm " + str(acro).encode() + b" 0 R"
+    extra = b""
+    lang = {0: b"en", 1: b"de-DE", 2: b"ja", 4: b"pt-BR"}.get(
+        i % 5
+    )
+    if lang is not None:
+        extra += b"/Lang(" + lang + b")"
+    if i % 4 == 0:
+        extra += b"/Version/2.0"
+    if i % 2 == 0:
+        extra += b"/MarkInfo<</Marked true>>"
+    if i % 7 == 0:
+        acro = b.add(b"<</Fields[]>>")
+        extra += b"/AcroForm " + str(acro).encode() + b" 0 R"
+    b.set(
+        cat,
+        b"<</Type/Catalog/Pages " + str(pages_id).encode()
+        + b" 0 R" + extra + b">>",
+    )
+    b.set(
+        pages_id,
+        b"<</Type/Pages/Kids["
+        + b" ".join(str(k).encode() + b" 0 R" for k in kids)
+        + b"]/Count " + str(n_pages).encode() + b">>",
+    )
+    for k in kids:
         b.set(
-            cat,
-            b"<</Type/Catalog/Pages " + str(pages_id).encode()
-            + b" 0 R" + extra + b">>",
+            k,
+            b"<</Type/Page/Parent " + str(pages_id).encode()
+            + b" 0 R/MediaBox[0 0 612 792]"
+            b"/Resources<</Font<</F1 " + str(font).encode()
+            + b" 0 R>>>>"
+            b"/Contents " + str(cont).encode() + b" 0 R>>",
         )
-        b.set(
-            pages_id,
-            b"<</Type/Pages/Kids["
-            + b" ".join(str(k).encode() + b" 0 R" for k in kids)
-            + b"]/Count " + str(n_pages).encode() + b">>",
+    trailer_extra = b""
+    if i % 3:
+        first = i.to_bytes(16, "big")
+        second = first if i % 3 == 1 else (i + 1).to_bytes(16, "big")
+        trailer_extra = (
+            b"/ID[<" + first.hex().encode() + b"><"
+            + second.hex().encode() + b">]"
         )
-        for k in kids:
-            b.set(
-                k,
-                b"<</Type/Page/Parent " + str(pages_id).encode()
-                + b" 0 R/MediaBox[0 0 612 792]"
-                b"/Resources<</Font<</F1 " + str(font).encode()
-                + b" 0 R>>>>"
-                b"/Contents " + str(cont).encode() + b" 0 R>>",
-            )
-        trailer_extra = b""
-        if i % 3:
-            first = i.to_bytes(16, "big")
-            second = first if i % 3 == 1 else (i + 1).to_bytes(16, "big")
-            trailer_extra = (
-                b"/ID[<" + first.hex().encode() + b"><"
-                + second.hex().encode() + b">]"
-            )
-        prof = extract_doc_profile(
-            Resolver(b.build(cat, trailer_extra=trailer_extra))
-        )
-        yield {"doc_id": i, **prof}
-
-    return map_rows(docs, profiles, schema)
+    prof = extract_doc_profile(
+        Resolver(b.build(cat, trailer_extra=trailer_extra))
+    )
+    yield prof
 
 
-QUERIES["qx34_doc_profile"] = _qx34
 ORACLE["qx34_doc_profile"] = """
 SELECT doc_id,
        CASE doc_id % 5 WHEN 0 THEN 'en' WHEN 1 THEN 'de-DE'
@@ -2455,7 +2404,22 @@ FROM documents
 # -- qx35: digital-signature & revision forensics (§12.8) ---------------------
 
 
-def _qx35(spark: SparkSession, sf: str) -> DataFrame:
+_QX35_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("field_name", StringType()),
+        StructField("subfilter", StringType()),
+        StructField("signer", StringType()),
+        StructField("sign_time", StringType()),
+        StructField("reason", StringType()),
+        StructField("whole_file", BooleanType()),
+        StructField("revisions", LongType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx35_signatures", _QX35_SCHEMA)
+def _qx35(i: int) -> Iterator[dict]:
     """Signature forensics (E122): one row per signed ``/FT /Sig`` field —
     subfilter, signer, sign time, reason, the §12.8.1 whole-file
     ByteRange check, and the ``%%EOF`` revision count.
@@ -2479,75 +2443,54 @@ def _qx35(spark: SparkSession, sf: str) -> DataFrame:
     from pdf_spark.core.meta import extract_signatures
     from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("field_name", StringType()),
-            StructField("subfilter", StringType()),
-            StructField("signer", StringType()),
-            StructField("sign_time", StringType()),
-            StructField("reason", StringType()),
-            StructField("whole_file", BooleanType()),
-            StructField("revisions", LongType()),
-        ]
+    placeholder = b"/ByteRange[0 0000000000 0000000000 0000000000]"
+    if i % 5 == 4:
+        return  # unsigned doc: no row
+    b = PdfBuilder.one_page()
+    font = b.add(F_HELV)
+    cont = b.stream(
+        _content_td_tj(["signed"]), filters="FlateDecode"
     )
-
-    _BR_PLACEHOLDER = (
-        b"/ByteRange[0 0000000000 0000000000 0000000000]"
+    subfilter = (
+        b"adbe.pkcs7.detached" if i % 2 == 0
+        else b"ETSI.CAdES.detached"
     )
-
-    def rows(i):
-        if i % 5 == 4:
-            return  # unsigned doc: no row
-        b = PdfBuilder.one_page()
-        font = b.add(F_HELV)
-        cont = b.stream(
-            _content_td_tj(["signed"]), filters="FlateDecode"
+    reason = b"certification" if i % 3 == 0 else b"approval"
+    sig_date = b"D:202601011200%02d+00'00'" % (i % 60)
+    sig = b.add(
+        b"<</Type/Sig/Filter/Adobe.PPKLite/SubFilter/"
+        + subfilter
+        + b"/Name(Signer " + str(i % 11).encode() + b")"
+        + b"/M(" + sig_date + b")"
+        + b"/Reason(" + reason + b")"
+        + placeholder
+        + b"/Contents<" + b"00" * 16 + b">>>"
+    )
+    fld = b.add(
+        b"<</FT/Sig/T(Sig1)/V " + str(sig).encode() + b" 0 R"
+        b"/Type/Annot/Subtype/Widget/Rect[0 0 0 0]>>"
+    )
+    catalog = b"/AcroForm<</SigFlags 3/Fields[%d 0 R]>>" % fld
+    raw = b.build(b.page_tree(font, cont, catalog=catalog))
+    # patch the ByteRange placeholder to the real [0 a b c]
+    # (same byte length -> xref offsets stay valid)
+    hole_a = raw.index(b"/Contents<") + len(b"/Contents")
+    hole_b = raw.index(b">", hole_a) + 1
+    br = b"/ByteRange[0 %010d %010d %010d]" % (
+        hole_a, hole_b, len(raw) - hole_b
+    )
+    assert len(br) == len(placeholder)
+    raw = raw.replace(placeholder, br, 1)
+    if i % 4 == 0:  # post-signing incremental update
+        raw += (
+            b"\nxref\n0 0\ntrailer\n<<>>\nstartxref\n0\n%%EOF\n"
         )
-        subfilter = (
-            b"adbe.pkcs7.detached" if i % 2 == 0
-            else b"ETSI.CAdES.detached"
-        )
-        reason = b"certification" if i % 3 == 0 else b"approval"
-        sig_date = b"D:202601011200%02d+00'00'" % (i % 60)
-        sig = b.add(
-            b"<</Type/Sig/Filter/Adobe.PPKLite/SubFilter/"
-            + subfilter
-            + b"/Name(Signer " + str(i % 11).encode() + b")"
-            + b"/M(" + sig_date + b")"
-            + b"/Reason(" + reason + b")"
-            + _BR_PLACEHOLDER
-            + b"/Contents<" + b"00" * 16 + b">>>"
-        )
-        fld = b.add(
-            b"<</FT/Sig/T(Sig1)/V " + str(sig).encode() + b" 0 R"
-            b"/Type/Annot/Subtype/Widget/Rect[0 0 0 0]>>"
-        )
-        catalog = b"/AcroForm<</SigFlags 3/Fields[%d 0 R]>>" % fld
-        raw = b.build(b.page_tree(font, cont, catalog=catalog))
-        # patch the ByteRange placeholder to the real [0 a b c]
-        # (same byte length -> xref offsets stay valid)
-        hole_a = raw.index(b"/Contents<") + len(b"/Contents")
-        hole_b = raw.index(b">", hole_a) + 1
-        br = b"/ByteRange[0 %010d %010d %010d]" % (
-            hole_a, hole_b, len(raw) - hole_b
-        )
-        assert len(br) == len(_BR_PLACEHOLDER)
-        raw = raw.replace(_BR_PLACEHOLDER, br, 1)
-        if i % 4 == 0:  # post-signing incremental update
-            raw += (
-                b"\nxref\n0 0\ntrailer\n<<>>\nstartxref\n0\n%%EOF\n"
-            )
-        elif i % 3 == 0:  # post-signing junk, no new revision
-            raw += b"\n% appended-after-signing junk\n"
-        for row in extract_signatures(Resolver(raw)):
-            yield dict(zip(schema.names, (i, *row)))
-
-    return map_rows(docs, rows, schema)
+    elif i % 3 == 0:  # post-signing junk, no new revision
+        raw += b"\n% appended-after-signing junk\n"
+    for row in extract_signatures(Resolver(raw)):
+        yield dict(zip(_QX35_SCHEMA.names, (i, *row)))
 
 
-QUERIES["qx35_signatures"] = _qx35
 ORACLE["qx35_signatures"] = """
 SELECT doc_id,
        'Sig1' AS field_name,
@@ -2569,7 +2512,19 @@ WHERE doc_id % 5 <> 4
 # -- qx36: head link-relation graph (<link rel>) -------------------------------
 
 
-def _qx36(spark: SparkSession, sf: str) -> DataFrame:
+_QX36_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("pos", LongType()),
+        StructField("rel", StringType()),
+        StructField("hreflang", StringType()),
+        StructField("href", StringType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx36_link_relations", _QX36_SCHEMA)
+def _qx36(i: int) -> Iterator[dict]:
     """Head ``<link rel>`` relation extraction (E123): one row per tracked
     relation in document order — the hreflang/pagination/AMP/canonical
     edge set a crawl pipeline mines beyond the single canonical slot
@@ -2593,60 +2548,44 @@ def _qx36(spark: SparkSession, sf: str) -> DataFrame:
     The oracle rebuilds every (pos, rel, hreflang, href) arithmetically."""
     from pdf_spark.core.htmltext import extract_link_relations
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("pos", LongType()),
-            StructField("rel", StringType()),
-            StructField("hreflang", StringType()),
-            StructField("href", StringType()),
-        ]
-    )
     langs = ["EN-US", "DE", "FR-ca"]
-
-    def rows(i):
-        head = [f'<link rel="canonical" href="https://ex.org/p{i}">']
-        for j in range(1 + i % 3):
-            head.append(
-                f'<link rel="alternate" hreflang="{langs[j]}" '
-                f'href="https://ex.org/p{i}?lang={langs[j].lower()}">'
-            )
+    head = [f'<link rel="canonical" href="https://ex.org/p{i}">']
+    for j in range(1 + i % 3):
         head.append(
-            '<link rel="alternate" type="application/rss+xml" '
-            f'href="/feed{i}.xml">'
+            f'<link rel="alternate" hreflang="{langs[j]}" '
+            f'href="https://ex.org/p{i}?lang={langs[j].lower()}">'
         )
-        if i % 2 == 0:
-            head.append('<link rel="next" href="?page=2">')
-        else:
-            head.append('<link rel="prev" href="?page=0">')
-        head.append(f'<link rel="amphtml" href="https://amp.ex.org/p{i}">')
-        if i % 5 == 0:
-            head.append(
-                f'<link rel="canonical" href="https://ex.org/dup{i}">'
-            )
-        head.append('<link rel="stylesheet" href="/s.css">')
-        head.append('<link rel="next">')
-        page = (
-            "<html><head>" + "".join(head) + "</head><body>"
-            "<script>document.write('<link rel=\"canonical\" "
-            "href=\"https://evil/x\">')</script>p</body></html>"
-        ).encode()
-        for pos, (rel, hreflang, href) in enumerate(
-            extract_link_relations(page)
-        ):
-            yield {
-                "doc_id": i,
-                "pos": pos,
-                "rel": rel,
-                "hreflang": hreflang,
-                "href": href,
-            }
+    head.append(
+        '<link rel="alternate" type="application/rss+xml" '
+        f'href="/feed{i}.xml">'
+    )
+    if i % 2 == 0:
+        head.append('<link rel="next" href="?page=2">')
+    else:
+        head.append('<link rel="prev" href="?page=0">')
+    head.append(f'<link rel="amphtml" href="https://amp.ex.org/p{i}">')
+    if i % 5 == 0:
+        head.append(
+            f'<link rel="canonical" href="https://ex.org/dup{i}">'
+        )
+    head.append('<link rel="stylesheet" href="/s.css">')
+    head.append('<link rel="next">')
+    page = (
+        "<html><head>" + "".join(head) + "</head><body>"
+        "<script>document.write('<link rel=\"canonical\" "
+        "href=\"https://evil/x\">')</script>p</body></html>"
+    ).encode()
+    for pos, (rel, hreflang, href) in enumerate(
+        extract_link_relations(page)
+    ):
+        yield {
+            "pos": pos,
+            "rel": rel,
+            "hreflang": hreflang,
+            "href": href,
+        }
 
-    return map_rows(docs, rows, schema)
 
-
-QUERIES["qx36_link_relations"] = _qx36
 ORACLE["qx36_link_relations"] = """
 SELECT doc_id, CAST(0 AS BIGINT) AS pos, 'canonical' AS rel,
        CAST(NULL AS VARCHAR) AS hreflang,
@@ -2785,7 +2724,103 @@ FROM d
 """
 
 
-def _qx38(spark: SparkSession, sf: str) -> DataFrame:
+_QX38_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("n_images", LongType()),
+        StructField("n_ok", LongType()),
+        StructField("luma_flate", LongType()),
+        StructField("luma_dct", LongType()),
+        StructField("luma_indexed", LongType()),
+        StructField("luma_subbyte", LongType()),
+        StructField("luma_dct_prog", LongType()),
+        StructField("luma_ccitt", LongType()),
+    ]
+)
+
+
+def _qx38_make_pdf(i: int) -> bytes:
+    from pdf_spark.core.ccitt import encode_ccitt_g3_1d, encode_ccitt_g4
+    from pdf_spark.core.imaging import encode_jpeg, encode_jpeg_progressive
+    from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
+
+    b = PdfBuilder.one_page()
+    font = b.add(F_HELV)
+    cont = b.stream(_content_td_tj(["img"]), filters="FlateDecode")
+    w, h = 8 + i % 5, 8 + i % 3
+    v1 = (i * 29) % 256
+    im0 = b.stream(
+        bytes([v1]) * (w * h),
+        extra_dict=(
+            b"/Subtype/Image/Width " + str(w).encode()
+            + b"/Height " + str(h).encode()
+            + b"/BitsPerComponent 8/ColorSpace/DeviceGray"
+        ),
+        filters="FlateDecode",
+    )
+    dc = (i * 13) % 192 + 32
+    im1 = b.stream(
+        encode_jpeg(16, 16, [(dc, 0)] * 4),
+        extra_dict=(
+            b"/Subtype/Image/Width 16/Height 16/BitsPerComponent 8"
+            b"/ColorSpace/DeviceGray/Filter/DCTDecode"
+        ),
+    )
+    p, q = (i * 17) % 256, (i * 17 + 90) % 256
+    pal = bytes([p, p, p, q, q, q]).hex().encode()
+    im2 = b.stream(
+        (b"\x00" if i % 2 == 0 else b"\xff") * 4,
+        extra_dict=(
+            b"/Subtype/Image/Width 8/Height 4/BitsPerComponent 1"
+            b"/ColorSpace[/Indexed/DeviceRGB 1 <" + pal + b">]"
+        ),
+        filters="FlateDecode",
+    )
+    n1, n2 = i % 16, (i * 5) % 16
+    im3 = b.stream(
+        bytes([(n1 << 4) | n2, 0]) * 2,
+        extra_dict=(
+            b"/Subtype/Image/Width 2/Height 2/BitsPerComponent 4"
+            b"/ColorSpace/DeviceGray"
+        ),
+    )
+    dc2 = (i * 19) % 180 + 40
+    im4 = b.stream(
+        encode_jpeg_progressive(
+            16, 16, [(dc2, 24)] * 4, successive=bool(i % 2)
+        ),
+        extra_dict=(
+            b"/Subtype/Image/Width 16/Height 16/BitsPerComponent 8"
+            b"/ColorSpace/DeviceGray/Filter/DCTDecode"
+        ),
+    )
+    t = i % 17
+    fax_rows = [[1] * t + [0] * (16 - t) for _y in range(8)]
+    if i % 3 == 0:
+        fax, kparm = encode_ccitt_g3_1d(fax_rows, 16), b"0"
+    else:
+        fax, kparm = encode_ccitt_g4(fax_rows, 16), b"-1"
+    im5 = b.stream(
+        fax,
+        extra_dict=(
+            b"/Subtype/Image/Width 16/Height 8/BitsPerComponent 1"
+            b"/ColorSpace/DeviceGray/Filter/CCITTFaxDecode"
+            b"/DecodeParms<</K " + kparm + b"/Columns 16/Rows 8"
+            + (b"/BlackIs1 true" if i % 2 else b"") + b">>"
+        ),
+    )
+    xo = b"".join(
+        b"/Im" + str(k).encode() + b" " + str(o).encode() + b" 0 R"
+        for k, o in enumerate((im0, im1, im2, im3, im4, im5))
+    )
+    return b.build(
+        b.page_tree(font, cont, resources=b"/XObject<<" + xo + b">>")
+    )
+
+
+
+@per_doc(QUERIES, "qx38_embedded_image_decode", _QX38_SCHEMA)
+def _qx38(i: int) -> Iterator[dict]:
     """Embedded-image PIXEL decode (value oracle) — the decode tier the
     qx22 inventory gates.
 
@@ -2804,120 +2839,22 @@ def _qx38(spark: SparkSession, sf: str) -> DataFrame:
     unpack, JPEG Huffman/IDCT, fax mode/MH decode — lands on a value
     mismatch, not just a row count."""
     from pdf_spark.core.document import Resolver
-    from pdf_spark.core.imaging import encode_jpeg, encode_jpeg_progressive
     from pdf_spark.core.pdfimages import extract_embedded_images
-    from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_images", LongType()),
-            StructField("n_ok", LongType()),
-            StructField("luma_flate", LongType()),
-            StructField("luma_dct", LongType()),
-            StructField("luma_indexed", LongType()),
-            StructField("luma_subbyte", LongType()),
-            StructField("luma_dct_prog", LongType()),
-            StructField("luma_ccitt", LongType()),
-        ]
-    )
-
-    def build_doc(i: int) -> bytes:
-        from pdf_spark.core.ccitt import encode_ccitt_g3_1d, encode_ccitt_g4
-
-        b = PdfBuilder.one_page()
-        font = b.add(F_HELV)
-        cont = b.stream(_content_td_tj(["img"]), filters="FlateDecode")
-        w, h = 8 + i % 5, 8 + i % 3
-        v1 = (i * 29) % 256
-        im0 = b.stream(
-            bytes([v1]) * (w * h),
-            extra_dict=(
-                b"/Subtype/Image/Width " + str(w).encode()
-                + b"/Height " + str(h).encode()
-                + b"/BitsPerComponent 8/ColorSpace/DeviceGray"
-            ),
-            filters="FlateDecode",
-        )
-        dc = (i * 13) % 192 + 32
-        im1 = b.stream(
-            encode_jpeg(16, 16, [(dc, 0)] * 4),
-            extra_dict=(
-                b"/Subtype/Image/Width 16/Height 16/BitsPerComponent 8"
-                b"/ColorSpace/DeviceGray/Filter/DCTDecode"
-            ),
-        )
-        p, q = (i * 17) % 256, (i * 17 + 90) % 256
-        pal = bytes([p, p, p, q, q, q]).hex().encode()
-        im2 = b.stream(
-            (b"\x00" if i % 2 == 0 else b"\xff") * 4,
-            extra_dict=(
-                b"/Subtype/Image/Width 8/Height 4/BitsPerComponent 1"
-                b"/ColorSpace[/Indexed/DeviceRGB 1 <" + pal + b">]"
-            ),
-            filters="FlateDecode",
-        )
-        n1, n2 = i % 16, (i * 5) % 16
-        im3 = b.stream(
-            bytes([(n1 << 4) | n2, 0]) * 2,
-            extra_dict=(
-                b"/Subtype/Image/Width 2/Height 2/BitsPerComponent 4"
-                b"/ColorSpace/DeviceGray"
-            ),
-        )
-        dc2 = (i * 19) % 180 + 40
-        im4 = b.stream(
-            encode_jpeg_progressive(
-                16, 16, [(dc2, 24)] * 4, successive=bool(i % 2)
-            ),
-            extra_dict=(
-                b"/Subtype/Image/Width 16/Height 16/BitsPerComponent 8"
-                b"/ColorSpace/DeviceGray/Filter/DCTDecode"
-            ),
-        )
-        t = i % 17
-        fax_rows = [[1] * t + [0] * (16 - t) for _y in range(8)]
-        if i % 3 == 0:
-            fax, kparm = encode_ccitt_g3_1d(fax_rows, 16), b"0"
-        else:
-            fax, kparm = encode_ccitt_g4(fax_rows, 16), b"-1"
-        im5 = b.stream(
-            fax,
-            extra_dict=(
-                b"/Subtype/Image/Width 16/Height 8/BitsPerComponent 1"
-                b"/ColorSpace/DeviceGray/Filter/CCITTFaxDecode"
-                b"/DecodeParms<</K " + kparm + b"/Columns 16/Rows 8"
-                + (b"/BlackIs1 true" if i % 2 else b"") + b">>"
-            ),
-        )
-        xo = b"".join(
-            b"/Im" + str(k).encode() + b" " + str(o).encode() + b" 0 R"
-            for k, o in enumerate((im0, im1, im2, im3, im4, im5))
-        )
-        return b.build(
-            b.page_tree(font, cont, resources=b"/XObject<<" + xo + b">>")
-        )
-
-    def run(i):
-        rows = extract_embedded_images(Resolver(build_doc(i)))
-        by_name = {r[1]: r for r in rows}
-        yield {
-            "doc_id": i,
-            "n_images": len(rows),
-            "n_ok": sum(1 for r in rows if r[8] is None),
-            "luma_flate": by_name["Im0"][5],
-            "luma_dct": by_name["Im1"][5],
-            "luma_indexed": by_name["Im2"][5],
-            "luma_subbyte": by_name["Im3"][5],
-            "luma_dct_prog": by_name["Im4"][5],
-            "luma_ccitt": by_name["Im5"][5],
-        }
-
-    return map_rows(docs, run, schema)
+    rows = extract_embedded_images(Resolver(_qx38_make_pdf(i)))
+    by_name = {r[1]: r for r in rows}
+    yield {
+        "n_images": len(rows),
+        "n_ok": sum(1 for r in rows if r[8] is None),
+        "luma_flate": by_name["Im0"][5],
+        "luma_dct": by_name["Im1"][5],
+        "luma_indexed": by_name["Im2"][5],
+        "luma_subbyte": by_name["Im3"][5],
+        "luma_dct_prog": by_name["Im4"][5],
+        "luma_ccitt": by_name["Im5"][5],
+    }
 
 
-QUERIES["qx38_embedded_image_decode"] = _qx38
 # gray palettes/samples: luma == the gray value everywhere; sub-byte
 # scaling is v*255//15 per nibble, floor-mean over the 2x2 (second row
 # is the 0x00 pad byte -> two zero samples)
@@ -3016,7 +2953,20 @@ FROM documents
 # -- qx40: AI-training opt-out compliance (robots noai + TDM Reservation) ---------
 
 
-def _qx40(spark: SparkSession, sf: str) -> DataFrame:
+_QX40_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("noai", IntegerType()),
+        StructField("noimageai", IntegerType()),
+        StructField("tdm_reservation", IntegerType()),
+        StructField("tdm_policy", StringType()),
+        StructField("train_allowed", IntegerType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx40_ai_optout", _QX40_SCHEMA)
+def _qx40(d: int) -> Iterator[dict]:
     """The machine-learning OPT-OUT gate (E158) — run before any quality
     filter: robots-meta extension tokens (noai / noimageai) and the W3C
     TDM Reservation Protocol, in BOTH delivery channels (meta tags and
@@ -3030,53 +2980,37 @@ def _qx40(spark: SparkSession, sf: str) -> DataFrame:
     must NOT honor it)."""
     from pdf_spark.core.htmlaudit import ai_optout
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("noai", IntegerType()),
-            StructField("noimageai", IntegerType()),
-            StructField("tdm_reservation", IntegerType()),
-            StructField("tdm_policy", StringType()),
-            StructField("train_allowed", IntegerType()),
-        ]
-    )
-
-    def run(d):
-        fam = d % 6
-        meta_tags = ""
-        headers = None
-        if d % 7 == 5:  # rawtext decoy, never honored
-            meta_tags += (
-                "<script>var s = \"<meta name='robots'"
-                " content='noai'>\";</script>"
-            )
-        if fam == 1:
-            meta_tags += '<meta name="robots" content="noindex, noai">'
-        elif fam == 2:
-            meta_tags += (
-                '<meta name="robots" content="noimageai">'
-                '<meta name="tdm-policy"'
-                f' content="https://example.com/tdm/{d % 9}.json">'
-            )
-        elif fam == 3:
-            meta_tags += '<meta name="tdm-reservation" content="1">'
-        elif fam == 4:
-            headers = "X-Robots-Tag: trainbot: noai\r\nServer: x"
-        elif fam == 5:
-            meta_tags += '<meta name="tdm-reservation" content="0">'
-            headers = "tdm-reservation: 1"
-        page = (
-            "<html><head>" + meta_tags
-            + f"<title>d{d}</title></head><body>b</body></html>"
+    fam = d % 6
+    meta_tags = ""
+    headers = None
+    if d % 7 == 5:  # rawtext decoy, never honored
+        meta_tags += (
+            "<script>var s = \"<meta name='robots'"
+            " content='noai'>\";</script>"
         )
-        r = ai_optout(page.encode("utf-8"), headers=headers)
-        yield {"doc_id": d, **r}
+    if fam == 1:
+        meta_tags += '<meta name="robots" content="noindex, noai">'
+    elif fam == 2:
+        meta_tags += (
+            '<meta name="robots" content="noimageai">'
+            '<meta name="tdm-policy"'
+            f' content="https://example.com/tdm/{d % 9}.json">'
+        )
+    elif fam == 3:
+        meta_tags += '<meta name="tdm-reservation" content="1">'
+    elif fam == 4:
+        headers = "X-Robots-Tag: trainbot: noai\r\nServer: x"
+    elif fam == 5:
+        meta_tags += '<meta name="tdm-reservation" content="0">'
+        headers = "tdm-reservation: 1"
+    page = (
+        "<html><head>" + meta_tags
+        + f"<title>d{d}</title></head><body>b</body></html>"
+    )
+    r = ai_optout(page.encode("utf-8"), headers=headers)
+    yield r
 
-    return map_rows(docs, run, schema)
 
-
-QUERIES["qx40_ai_optout"] = _qx40
 ORACLE["qx40_ai_optout"] = """
 SELECT doc_id,
        CAST(CASE WHEN doc_id % 6 IN (1, 4) THEN 1 ELSE 0 END AS INTEGER)
@@ -3138,7 +3072,20 @@ def _qx41_make_pdf(doc_id: int) -> bytes:
     return g._simple_doc(["x"], content)
 
 
-def _qx41(spark: SparkSession, sf: str) -> DataFrame:
+_QX41_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("n_inline", LongType()),
+        StructField("width", LongType()),
+        StructField("height", LongType()),
+        StructField("channels", LongType()),
+        StructField("mean_luma", LongType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx41_inline_image_decode", _QX41_SCHEMA)
+def _qx41(d: int) -> Iterator[dict]:
     """Inline-image PIXEL decode (E168): the reference PANICS on BI
     (operator.h:259-261) and our text path spec-correctly skips; this
     tier DECODES them through the same decode_image_xobject path the
@@ -3147,31 +3094,16 @@ def _qx41(spark: SparkSession, sf: str) -> DataFrame:
     and the Indexed /I array). Enumeration uses real tokenization — a
     '(BI)' string literal can never fake an image. mean_luma is
     arithmetic per family, so the oracle restates it closed-form."""
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_inline", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("channels", LongType()),
-            StructField("mean_luma", LongType()),
-        ]
-    )
 
     from pdf_spark.core.document import Resolver
     from pdf_spark.core.pdfimages import extract_inline_images
 
-    def run(d):
-        imgs = extract_inline_images(Resolver(_qx41_make_pdf(d)))
-        assert len(imgs) == 1 and imgs[0][8] is None, imgs
-        _pg, _idx, w, h, ch, luma, _ah, _md5, _err = imgs[0]
-        yield dict(zip(schema.names, (d, len(imgs), w, h, ch, luma)))
-
-    return map_rows(docs, run, schema)
+    imgs = extract_inline_images(Resolver(_qx41_make_pdf(d)))
+    assert len(imgs) == 1 and imgs[0][8] is None, imgs
+    _pg, _idx, w, h, ch, luma, _ah, _md5, _err = imgs[0]
+    yield dict(zip(_QX41_SCHEMA.names, (d, len(imgs), w, h, ch, luma)))
 
 
-QUERIES["qx41_inline_image_decode"] = _qx41
 # family lumas: 0 raw two-tone mean of a/a+40 -> a+20; 1 bilevel -> 127;
 # 2 AHx solid v; 3 RGB solid -> ITU-R 601 integer luma of (r,g,b);
 # 4 indexed half/half of two grays (palette entries are r=g=b).
@@ -3206,7 +3138,19 @@ FROM v
 # -- qx42: hidden-content / cloaking audit (E171) ----------------------------------
 
 
-def _qx42(spark: SparkSession, sf: str) -> DataFrame:
+_QX42_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("visible_chars", LongType()),
+        StructField("hidden_chars", LongType()),
+        StructField("n_hidden_nodes", LongType()),
+        StructField("hidden_milli", LongType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qx42_hidden_content", _QX42_SCHEMA)
+def _qx42(d: int) -> Iterator[dict]:
     """Cloaked-text audit (E171): text a browser never shows (inline
     display:none / visibility:hidden / font-size:0 / off-screen
     offsets, the ``hidden`` attribute, ``aria-hidden="true"``) but a
@@ -3218,54 +3162,39 @@ def _qx42(spark: SparkSession, sf: str) -> DataFrame:
     rawtext-safe walk must ignore."""
     from pdf_spark.core.htmlaudit import hidden_audit
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("visible_chars", LongType()),
-            StructField("hidden_chars", LongType()),
-            StructField("n_hidden_nodes", LongType()),
-            StructField("hidden_milli", LongType()),
-        ]
-    )
-
-    def run(d):
-        fam = d % 5
-        vis = "v" * (10 + d % 13)
-        h1 = "h" * (5 + d % 7)
-        body = f"<p>{vis}</p>"
-        if fam == 1:
-            body += f'<div style="display: none">{h1}</div>'
-        elif fam == 2:
-            body += f"<span hidden>{h1}</span>"
-        elif fam == 3:
-            q = "q" * (2 + d % 3)
-            body += (
-                f'<div aria-hidden="true"><p>{h1}</p>'
-                f'<span style="visibility:hidden">{q}</span></div>'
-            )
-        elif fam == 4:
-            k = "k" * (3 + d % 4)
-            body += (
-                f'<p style="text-indent:-9999px">{h1}</p>'
-                f'<i style="font-size:0">{k}</i>'
-            )
-        if d % 3 == 0:
-            body += (
-                "<script>var s = \"<div style='display:none'>"
-                "zzzzz</div>\";</script>"
-            )
-        page = (
-            "<html><head><title>t</title></head><body>"
-            + body + "</body></html>"
+    fam = d % 5
+    vis = "v" * (10 + d % 13)
+    h1 = "h" * (5 + d % 7)
+    body = f"<p>{vis}</p>"
+    if fam == 1:
+        body += f'<div style="display: none">{h1}</div>'
+    elif fam == 2:
+        body += f"<span hidden>{h1}</span>"
+    elif fam == 3:
+        q = "q" * (2 + d % 3)
+        body += (
+            f'<div aria-hidden="true"><p>{h1}</p>'
+            f'<span style="visibility:hidden">{q}</span></div>'
         )
-        r = hidden_audit(page.encode("utf-8"))
-        yield {"doc_id": d, **r}
+    elif fam == 4:
+        k = "k" * (3 + d % 4)
+        body += (
+            f'<p style="text-indent:-9999px">{h1}</p>'
+            f'<i style="font-size:0">{k}</i>'
+        )
+    if d % 3 == 0:
+        body += (
+            "<script>var s = \"<div style='display:none'>"
+            "zzzzz</div>\";</script>"
+        )
+    page = (
+        "<html><head><title>t</title></head><body>"
+        + body + "</body></html>"
+    )
+    r = hidden_audit(page.encode("utf-8"))
+    yield r
 
-    return map_rows(docs, run, schema)
 
-
-QUERIES["qx42_hidden_content"] = _qx42
 ORACLE["qx42_hidden_content"] = """
 WITH v AS (
     SELECT doc_id, doc_id % 5 AS fam,
@@ -3301,84 +3230,79 @@ FROM h
 # real catalog+page-tree walk.
 
 
-def _qx75(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.types import IntegerType as _I
+_QX75_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("has_openaction", IntegerType()),
+        StructField("openaction_kind", StringType()),
+        StructField("has_catalog_aa", IntegerType()),
+        StructField("n_doc_js", IntegerType()),
+        StructField("n_annot_js", IntegerType()),
+        StructField("n_launch", IntegerType()),
+        StructField("n_uri", IntegerType()),
+        StructField("n_submit", IntegerType()),
+        StructField("risky", IntegerType()),
+    ]
+)
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("has_openaction", _I()),
-            StructField("openaction_kind", StringType()),
-            StructField("has_catalog_aa", _I()),
-            StructField("n_doc_js", _I()),
-            StructField("n_annot_js", _I()),
-            StructField("n_launch", _I()),
-            StructField("n_uri", _I()),
-            StructField("n_submit", _I()),
-            StructField("risky", _I()),
-        ]
-    )
 
-    def _make(i: int) -> bytes:
-        from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
+def _qx75_make_pdf(i: int) -> bytes:
+    from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-        b = PdfBuilder.one_page()
-        b.add(F_HELV)  # font (unreferenced annots-only docs keep it too)
-        cont = b.stream(_content_td_tj([f"audit {i}"]))
-        fam = i % 4
-        annots = []
-        extra = b""
-        if fam == 0:
-            link = b.add(
-                b"<</Type/Annot/Subtype/Link/Rect[0 0 100 20]"
-                b"/A<</S/URI/URI(https://example.com/" + str(i).encode()
-                + b")>>>>"
-            )
-            annots = [link]
-            extra = b"/OpenAction[%d 0 R/Fit]" % b.PAGE
-        elif fam == 1:
-            k = i % 3 + 1
-            pairs = b" ".join(
-                b"(js" + str(j).encode() + b") "
-                + str(b.add(
-                    b"<</S/JavaScript/JS(app.alert(" + str(j).encode()
-                    + b"))>>"
-                )).encode() + b" 0 R"
-                for j in range(k)
-            )
-            js_tree = b.add(b"<</Names[" + pairs + b"]>>")
-            names = b.add(
-                b"<</JavaScript " + str(js_tree).encode() + b" 0 R>>"
-            )
-            oa = b.add(b"<</S/JavaScript/JS(this.print\\(\\))>>")
-            extra = (
-                b"/Names " + str(names).encode() + b" 0 R/OpenAction "
-                + str(oa).encode() + b" 0 R"
-            )
-        elif fam == 2:
-            launch = b.add(
-                b"<</Type/Annot/Subtype/Link/Rect[0 0 50 20]"
-                b"/A<</S/Launch/F(cmd.exe)>>>>"
-            )
-            submit = b.add(
-                b"<</Type/Annot/Subtype/Widget/Rect[0 30 50 50]"
-                b"/A<</S/SubmitForm/F(https://evil.example/post)>>>>"
-            )
-            annots = [launch, submit]
-        return b.build(b.page_tree(None, cont, catalog=extra, annots=annots))
+    b = PdfBuilder.one_page()
+    b.add(F_HELV)  # font (unreferenced annots-only docs keep it too)
+    cont = b.stream(_content_td_tj([f"audit {i}"]))
+    fam = i % 4
+    annots = []
+    extra = b""
+    if fam == 0:
+        link = b.add(
+            b"<</Type/Annot/Subtype/Link/Rect[0 0 100 20]"
+            b"/A<</S/URI/URI(https://example.com/" + str(i).encode()
+            + b")>>>>"
+        )
+        annots = [link]
+        extra = b"/OpenAction[%d 0 R/Fit]" % b.PAGE
+    elif fam == 1:
+        k = i % 3 + 1
+        pairs = b" ".join(
+            b"(js" + str(j).encode() + b") "
+            + str(b.add(
+                b"<</S/JavaScript/JS(app.alert(" + str(j).encode()
+                + b"))>>"
+            )).encode() + b" 0 R"
+            for j in range(k)
+        )
+        js_tree = b.add(b"<</Names[" + pairs + b"]>>")
+        names = b.add(
+            b"<</JavaScript " + str(js_tree).encode() + b" 0 R>>"
+        )
+        oa = b.add(b"<</S/JavaScript/JS(this.print\\(\\))>>")
+        extra = (
+            b"/Names " + str(names).encode() + b" 0 R/OpenAction "
+            + str(oa).encode() + b" 0 R"
+        )
+    elif fam == 2:
+        launch = b.add(
+            b"<</Type/Annot/Subtype/Link/Rect[0 0 50 20]"
+            b"/A<</S/Launch/F(cmd.exe)>>>>"
+        )
+        submit = b.add(
+            b"<</Type/Annot/Subtype/Widget/Rect[0 30 50 50]"
+            b"/A<</S/SubmitForm/F(https://evil.example/post)>>>>"
+        )
+        annots = [launch, submit]
+    return b.build(b.page_tree(None, cont, catalog=extra, annots=annots))
 
+
+@per_doc(QUERIES, "qx75_active_content", _QX75_SCHEMA)
+def _qx75(d: int) -> list:
     from pdf_spark.core.document import Resolver
     from pdf_spark.core.meta import active_content_audit
 
-    return map_rows(
-        docs,
-        lambda d: [{"doc_id": d, **active_content_audit(Resolver(_make(d)))}],
-        schema,
-    )
+    return [active_content_audit(Resolver(_qx75_make_pdf(d)))]
 
 
-QUERIES["qx75_active_content"] = _qx75
 ORACLE["qx75_active_content"] = """
 WITH v AS (SELECT doc_id, doc_id % 4 AS fam, doc_id % 3 + 1 AS k
            FROM documents)
@@ -3408,82 +3332,77 @@ FROM v
 # tree (f Figures, alt on even indices) / untagged.
 
 
-def _qx76(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.types import IntegerType as _I
+_QX76_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("tagged", IntegerType()),
+        StructField("n_elems", IntegerType()),
+        StructField("n_para", IntegerType()),
+        StructField("n_headings", IntegerType()),
+        StructField("n_figures", IntegerType()),
+        StructField("n_fig_alt", IntegerType()),
+        StructField("max_depth", IntegerType()),
+    ]
+)
 
-    docs = load(spark, sf, "documents").select("doc_id")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("tagged", _I()),
-            StructField("n_elems", _I()),
-            StructField("n_para", _I()),
-            StructField("n_headings", _I()),
-            StructField("n_figures", _I()),
-            StructField("n_fig_alt", _I()),
-            StructField("max_depth", _I()),
-        ]
-    )
 
-    def _make(i: int) -> bytes:
-        from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
+def _qx76_make_pdf(i: int) -> bytes:
+    from pdf_spark.gen.pdfgen import F_HELV, PdfBuilder, _content_td_tj
 
-        b = PdfBuilder.one_page()
-        b.add(F_HELV)
-        cont = b.stream(_content_td_tj([f"census {i}"]))
-        fam = i % 3
-        extra = b""
-        if fam in (0, 1):
-            doc_elem = b.reserve()
-            if fam == 0:
-                p = i % 4 + 1
-                kids = [b.add(b"<</S/H1/P " + str(doc_elem).encode()
-                              + b" 0 R/K 0>>")]
-                kids += [
-                    b.add(b"<</S/P/P " + str(doc_elem).encode()
-                          + b" 0 R/K " + str(j + 1).encode() + b">>")
-                    for j in range(p)
-                ]
-            else:
-                f = i % 3 + 1
-                kids = [
-                    b.add(
-                        b"<</S/Figure/P " + str(doc_elem).encode() + b" 0 R"
-                        + (b"/Alt(figure " + str(j).encode() + b")"
-                           if j % 2 == 0 else b"")
-                        + b"/K " + str(j).encode() + b">>"
-                    )
-                    for j in range(f)
-                ]
-            root = b.reserve()
-            b.set(
-                doc_elem,
-                b"<</S/Document/P " + str(root).encode() + b" 0 R/K["
-                + b" ".join(str(k).encode() + b" 0 R" for k in kids)
-                + b"]>>",
-            )
-            b.set(
-                root,
-                b"<</Type/StructTreeRoot/K[" + str(doc_elem).encode()
-                + b" 0 R]>>",
-            )
-            extra = (
-                b"/MarkInfo<</Marked true>>/StructTreeRoot "
-                + str(root).encode() + b" 0 R"
-            )
-        return b.build(b.page_tree(None, cont, catalog=extra))
+    b = PdfBuilder.one_page()
+    b.add(F_HELV)
+    cont = b.stream(_content_td_tj([f"census {i}"]))
+    fam = i % 3
+    extra = b""
+    if fam in (0, 1):
+        doc_elem = b.reserve()
+        if fam == 0:
+            p = i % 4 + 1
+            kids = [b.add(b"<</S/H1/P " + str(doc_elem).encode()
+                          + b" 0 R/K 0>>")]
+            kids += [
+                b.add(b"<</S/P/P " + str(doc_elem).encode()
+                      + b" 0 R/K " + str(j + 1).encode() + b">>")
+                for j in range(p)
+            ]
+        else:
+            f = i % 3 + 1
+            kids = [
+                b.add(
+                    b"<</S/Figure/P " + str(doc_elem).encode() + b" 0 R"
+                    + (b"/Alt(figure " + str(j).encode() + b")"
+                       if j % 2 == 0 else b"")
+                    + b"/K " + str(j).encode() + b">>"
+                )
+                for j in range(f)
+            ]
+        root = b.reserve()
+        b.set(
+            doc_elem,
+            b"<</S/Document/P " + str(root).encode() + b" 0 R/K["
+            + b" ".join(str(k).encode() + b" 0 R" for k in kids)
+            + b"]>>",
+        )
+        b.set(
+            root,
+            b"<</Type/StructTreeRoot/K[" + str(doc_elem).encode()
+            + b" 0 R]>>",
+        )
+        extra = (
+            b"/MarkInfo<</Marked true>>/StructTreeRoot "
+            + str(root).encode() + b" 0 R"
+        )
+    return b.build(b.page_tree(None, cont, catalog=extra))
 
+
+@per_doc(QUERIES, "qx76_struct_census", _QX76_SCHEMA)
+def _qx76(d: int) -> list:
     from pdf_spark.core.document import Resolver
     from pdf_spark.core.meta import struct_census
 
-    return map_rows(
-        docs,
-        lambda d: [{"doc_id": d, **struct_census(Resolver(_make(d)))}],
-        schema,
-    )
+    return [struct_census(Resolver(_qx76_make_pdf(d)))]
 
 
-QUERIES["qx76_struct_census"] = _qx76
 ORACLE["qx76_struct_census"] = """
 WITH v AS (SELECT doc_id, doc_id % 3 AS fam, doc_id % 4 + 1 AS p,
                   doc_id % 3 + 1 AS f

@@ -9,6 +9,9 @@ behavior, and the metadata queries. Fixtures are synthesized
 deterministically from doc ids so a DuckDB oracle can restate every
 post-decode feature arithmetically — the construction is arithmetic,
 but the bytes each executor decodes are genuine container formats.
+A query that reads only ``documents.doc_id`` has the per-document shape,
+``tables.per_doc``: the decorated ``_qNN(doc_id)`` returns that
+document's rows.
 
 - ``qm01_binary_meta``    — JVM-side binary column ops (encode/length/
   hash), DuckDB-verified.
@@ -33,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_spark.functions.tables import load, map_rows, register_views
+from pdf_spark.functions.tables import load, map_rows, per_doc, register_views
 
 QUERIES = {}
 ORACLE = {}
@@ -107,17 +110,13 @@ def _qm02_make_blob(doc_id: int) -> bytes:
     return encode_png(w, h, ch, bytearray(vals), "cycle" if i % 2 else "none")
 
 
-def _qm02(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm02_image_features", _FEATURES_SCHEMA)
+def _qm02(d: int) -> list:
     from pdf_spark.core.imaging import image_features
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_features_row(d, image_features(_qm02_make_blob(d)))],
-        _FEATURES_SCHEMA,
-    )
+    return [_features_row(d, image_features(_qm02_make_blob(d)))]
 
 
-QUERIES["qm02_image_features"] = _qm02
 # oracle: every decoded feature restated arithmetically from the
 # construction (two-tone halves, all-equal channels => luma == value)
 ORACLE["qm02_image_features"] = """
@@ -180,31 +179,25 @@ def _qm03_make_gif(doc_id: int) -> bytes:
     return encode_gif_animation(8, 8, _QM03_PAL, frames, [10] * nf)
 
 
-def _qm03(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm03_frame_sample", _FRAMES_SCHEMA)
+def _qm03(d: int) -> list:
     import hashlib
 
     from pdf_spark.core import imaging
 
-    def sample(d: int) -> list:
-        frames = imaging.gif_frames(_qm03_make_gif(d))
-        return [
-            {
-                "doc_id": d,
-                "frame_idx": k,
-                "frame_md5": hashlib.md5(
-                    b"".join(bytes(r) for r in imaging._luma_rows(w, h, ch, s))
-                ).hexdigest(),
-            }
-            for k, (w, h, ch, s) in enumerate(frames)
-            if k % 3 == 0
-        ]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), sample, _FRAMES_SCHEMA
-    )
+    frames = imaging.gif_frames(_qm03_make_gif(d))
+    return [
+        {
+            "frame_idx": k,
+            "frame_md5": hashlib.md5(
+                b"".join(bytes(r) for r in imaging._luma_rows(w, h, ch, s))
+            ).hexdigest(),
+        }
+        for k, (w, h, ch, s) in enumerate(frames)
+        if k % 3 == 0
+    ]
 
 
-QUERIES["qm03_frame_sample"] = _qm03
 ORACLE["qm03_frame_sample"] = """
 WITH vids AS (
   SELECT doc_id, doc_id % 101 AS pat, CAST(doc_id % 7 + 2 AS INT) AS nf
@@ -257,30 +250,24 @@ def _qm04_make_wav(doc_id: int) -> bytes:
     return encode_wav(rate, 1, 16, samples)
 
 
-def _qm04(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm04_audio_features", _AUDIO_SCHEMA)
+def _qm04(d: int) -> list:
     from pdf_spark.core import audio
 
-    def featurize(d: int) -> list:
-        rate, _ch, _bits, frames, dur, _peak, mean_abs = (
-            audio.audio_features(_qm04_make_wav(d))
-        )
-        return [
-            {
-                "doc_id": d,
-                "sample_rate": rate,
-                "n_samples": frames,
-                "duration_ms": dur,
-                "mean_amp": mean_abs,
-                "n_hops": -(-frames // 160),
-            }
-        ]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), featurize, _AUDIO_SCHEMA
+    rate, _ch, _bits, frames, dur, _peak, mean_abs = (
+        audio.audio_features(_qm04_make_wav(d))
     )
+    return [
+        {
+            "sample_rate": rate,
+            "n_samples": frames,
+            "duration_ms": dur,
+            "mean_amp": mean_abs,
+            "n_hops": -(-frames // 160),
+        }
+    ]
 
 
-QUERIES["qm04_audio_features"] = _qm04
 ORACLE["qm04_audio_features"] = """
 WITH auds AS (
   SELECT doc_id,
@@ -469,17 +456,13 @@ def _qm06_make_png(doc_id: int) -> bytes:
     return encode_png(w, h, ch, samples, "cycle")
 
 
-def _qm06(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm06_png_decode_features", _FEATURES_SCHEMA)
+def _qm06(d: int) -> list:
     from pdf_spark.core.imaging import image_features
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_features_row(d, image_features(_qm06_make_png(d)))],
-        _FEATURES_SCHEMA,
-    )
+    return [_features_row(d, image_features(_qm06_make_png(d)))]
 
 
-QUERIES["qm06_png_decode_features"] = _qm06
 # constant-pixel image: luma == the pixel value for gray AND for rgb
 # ((299+587+114)*v // 1000 == v)
 ORACLE["qm06_png_decode_features"] = """
@@ -516,15 +499,11 @@ def _qm07_make_png(doc_id: int) -> bytes:
     return encode_png(16, 16, 1, samples, "cycle")
 
 
-def _qm07(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_ahash_row(d, _qm07_make_png(d))],
-        _PNG_AHASH_SCHEMA,
-    )
+@per_doc(QUERIES, "qm07_png_ahash", _PNG_AHASH_SCHEMA)
+def _qm07(d: int) -> list:
+    return [_ahash_row(d, _qm07_make_png(d))]
 
 
-QUERIES["qm07_png_ahash"] = _qm07
 ORACLE["qm07_png_ahash"] = """
 SELECT doc_id,
        CASE WHEN (doc_id % 256) >
@@ -559,17 +538,13 @@ def _qm08_make_gif(doc_id: int) -> bytes:
     return encode_gif(w, h, pal, [i % 4] * (w * h), interlace=bool(i % 2))
 
 
-def _qm08(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm08_gif_decode_features", _FEATURES_SCHEMA)
+def _qm08(d: int) -> list:
     from pdf_spark.core.imaging import image_features
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_features_row(d, image_features(_qm08_make_gif(d)))],
-        _FEATURES_SCHEMA,
-    )
+    return [_features_row(d, image_features(_qm08_make_gif(d)))]
 
 
-QUERIES["qm08_gif_decode_features"] = _qm08
 # constant gray palette slot: luma == the palette value (r=g=b)
 ORACLE["qm08_gif_decode_features"] = """
 SELECT doc_id,
@@ -598,15 +573,11 @@ def _qm09_make_gif(doc_id: int) -> bytes:
     return encode_gif(16, 16, pal, idx, interlace=bool(i % 2))
 
 
-def _qm09(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_ahash_row(d, _qm09_make_gif(d))],
-        _PNG_AHASH_SCHEMA,
-    )
+@per_doc(QUERIES, "qm09_gif_ahash", _PNG_AHASH_SCHEMA)
+def _qm09(d: int) -> list:
+    return [_ahash_row(d, _qm09_make_gif(d))]
 
 
-QUERIES["qm09_gif_ahash"] = _qm09
 ORACLE["qm09_gif_ahash"] = """
 SELECT doc_id,
        CASE WHEN (doc_id % 256) >
@@ -649,7 +620,19 @@ def _qm10_make_blob(doc_id: int) -> bytes:
     return b"BLOB" + str(i).encode()
 
 
-def _qm10(spark: SparkSession, sf: str) -> DataFrame:
+_QM10_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("format", StringType()),
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("n_channels", IntegerType()),
+    ]
+)
+
+
+@per_doc(QUERIES, "qm10_image_meta", _QM10_SCHEMA)
+def _qm10(d: int) -> list:
     """Header-only image inventory (E127): format/dims/channels read from
     ~100 header bytes with NO pixel decode or decompression — the op a
     10^12-image corpus actually runs to gate the expensive decode tier
@@ -657,24 +640,10 @@ def _qm10(spark: SparkSession, sf: str) -> DataFrame:
     formats surface as 'other' rows, not errors."""
     from pdf_spark.core.imaging import image_meta
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("format", StringType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("n_channels", IntegerType()),
-        ]
-    )
-
-    def row(d: int) -> list:
-        meta = image_meta(_qm10_make_blob(d)) or ("other", None, None, None)
-        return [dict(zip(schema.names, (d, *meta)))]
-
-    return map_rows(load(spark, sf, "documents").select("doc_id"), row, schema)
+    meta = image_meta(_qm10_make_blob(d)) or ("other", None, None, None)
+    return [dict(zip(_QM10_SCHEMA.names, (d, *meta)))]
 
 
-QUERIES["qm10_image_meta"] = _qm10
 ORACLE["qm10_image_meta"] = """
 SELECT doc_id,
        CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
@@ -729,17 +698,13 @@ def _qm11_make_jpeg(doc_id: int) -> bytes:
     )
 
 
-def _qm11(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm11_jpeg_decode_features", _FEATURES_SCHEMA)
+def _qm11(d: int) -> list:
     from pdf_spark.core.imaging import image_features
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_features_row(d, image_features(_qm11_make_jpeg(d)))],
-        _FEATURES_SCHEMA,
-    )
+    return [_features_row(d, image_features(_qm11_make_jpeg(d)))]
 
 
-QUERIES["qm11_jpeg_decode_features"] = _qm11
 # constant-DC blocks, zero-sum AC, gray chroma (128/128 -> r=g=b=Y):
 # mean luma == the DC value for both the gray and the color shape
 ORACLE["qm11_jpeg_decode_features"] = """
@@ -776,15 +741,11 @@ def _qm12_make_jpeg(doc_id: int) -> bytes:
     return encode_jpeg(16, 16, blocks, restart_interval=rst)
 
 
-def _qm12(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_ahash_row(d, _qm12_make_jpeg(d))],
-        _PNG_AHASH_SCHEMA,
-    )
+@per_doc(QUERIES, "qm12_jpeg_ahash", _PNG_AHASH_SCHEMA)
+def _qm12(d: int) -> list:
+    return [_ahash_row(d, _qm12_make_jpeg(d))]
 
 
-QUERIES["qm12_jpeg_ahash"] = _qm12
 ORACLE["qm12_jpeg_ahash"] = """
 SELECT doc_id,
        CASE WHEN ((doc_id * 11) % 200 + 28) >
@@ -835,15 +796,11 @@ _PALETTE_SCHEMA = StructType(
 )
 
 
-def _qm13(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_palette_row(d, _qm13_make_png(d))],
-        _PALETTE_SCHEMA,
-    )
+@per_doc(QUERIES, "qm13_png_palette_features", _PALETTE_SCHEMA)
+def _qm13(d: int) -> list:
+    return [_palette_row(d, _qm13_make_png(d))]
 
 
-QUERIES["qm13_png_palette_features"] = _qm13
 # gray palette entries: luma == the entry value; halves are 128px each
 # so the mean is the floor average of the two entries
 ORACLE["qm13_png_palette_features"] = """
@@ -895,15 +852,11 @@ def _qm14_make_jpeg(doc_id: int) -> bytes:
     return encode_jpeg_progressive(16, 16, blocks, successive=succ)
 
 
-def _qm14(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_palette_row(d, _qm14_make_jpeg(d))],
-        _PALETTE_SCHEMA,
-    )
+@per_doc(QUERIES, "qm14_jpeg_progressive", _PALETTE_SCHEMA)
+def _qm14(d: int) -> list:
+    return [_palette_row(d, _qm14_make_jpeg(d))]
 
 
-QUERIES["qm14_jpeg_progressive"] = _qm14
 # each 8x8 block's AC ripple sums to zero and every aligned 2x2 aHash
 # cell straddles a sign-balanced pair, so mean = floor((a+b)/2) and the
 # hash is the pure two-tone pattern
@@ -959,15 +912,11 @@ def _qm15_make_webp(doc_id: int) -> bytes:
     return encode_webp_lossless(16, 16, 1, samples, **kw)
 
 
-def _qm15(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_palette_row(d, _qm15_make_webp(d))],
-        _PALETTE_SCHEMA,
-    )
+@per_doc(QUERIES, "qm15_webp_lossless_features", _PALETTE_SCHEMA)
+def _qm15(d: int) -> list:
+    return [_palette_row(d, _qm15_make_webp(d))]
 
 
-QUERIES["qm15_webp_lossless_features"] = _qm15
 ORACLE["qm15_webp_lossless_features"] = """
 WITH v AS (
     SELECT doc_id,
@@ -1024,19 +973,14 @@ def _qm16_make_wav(doc_id: int) -> bytes:
     return encode_wav(8000, channels, bits, samples)
 
 
-def _qm16(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm16_wav_pcm_features", _WAV_SCHEMA)
+def _qm16(d: int) -> list:
     from pdf_spark.core.audio import audio_features
 
-    def row(d: int) -> list:
-        feats = audio_features(_qm16_make_wav(d))
-        return [dict(zip(_WAV_SCHEMA.names, (d, *feats)))]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), row, _WAV_SCHEMA
-    )
+    feats = audio_features(_qm16_make_wav(d))
+    return [dict(zip(_WAV_SCHEMA.names, (d, *feats)))]
 
 
-QUERIES["qm16_wav_pcm_features"] = _qm16
 ORACLE["qm16_wav_pcm_features"] = """
 WITH v AS (
     SELECT doc_id,
@@ -1183,15 +1127,11 @@ def _qm18_make_bmp(doc_id: int) -> bytes:
     return encode_bmp(16, 16, ch, vals, top_down=bool(i % 2))
 
 
-def _qm18(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_palette_row(d, _qm18_make_bmp(d))],
-        _PALETTE_SCHEMA,
-    )
+@per_doc(QUERIES, "qm18_bmp_features", _PALETTE_SCHEMA)
+def _qm18(d: int) -> list:
+    return [_palette_row(d, _qm18_make_bmp(d))]
 
 
-QUERIES["qm18_bmp_features"] = _qm18
 # top half = a, bottom = b REGARDLESS of storage order; 32 top hash
 # bits set iff a > b
 ORACLE["qm18_bmp_features"] = """
@@ -1256,15 +1196,11 @@ def _qm19_make_tiff(doc_id: int) -> bytes:
     )
 
 
-def _qm19(spark: SparkSession, sf: str) -> DataFrame:
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [_palette_row(d, _qm19_make_tiff(d))],
-        _PALETTE_SCHEMA,
-    )
+@per_doc(QUERIES, "qm19_tiff_features", _PALETTE_SCHEMA)
+def _qm19(d: int) -> list:
+    return [_palette_row(d, _qm19_make_tiff(d))]
 
 
-QUERIES["qm19_tiff_features"] = _qm19
 # palette (mode 2) decodes to RGB -> 3 channels; modes 0/3 stay gray
 ORACLE["qm19_tiff_features"] = """
 WITH v AS (
@@ -1335,17 +1271,13 @@ def _qm20_make_mp4(doc_id: int) -> bytes:
     )
 
 
-def _qm20(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm20_mp4_meta", _MP4_SCHEMA)
+def _qm20(d: int) -> list:
     from pdf_spark.core.video import mp4_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **mp4_meta(_qm20_make_mp4(d))}],
-        _MP4_SCHEMA,
-    )
+    return [mp4_meta(_qm20_make_mp4(d))]
 
 
-QUERIES["qm20_mp4_meta"] = _qm20
 ORACLE["qm20_mp4_meta"] = """
 SELECT doc_id,
        CASE doc_id % 3 WHEN 0 THEN 'isom' WHEN 1 THEN 'mp42'
@@ -1414,17 +1346,13 @@ def _qm21_make_mkv(doc_id: int) -> bytes:
     )
 
 
-def _qm21(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm21_mkv_meta", _MKV_SCHEMA)
+def _qm21(d: int) -> list:
     from pdf_spark.core.video import video_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **video_meta(_qm21_make_mkv(d))}],
-        _MKV_SCHEMA,
-    )
+    return [video_meta(_qm21_make_mkv(d))]
 
 
-QUERIES["qm21_mkv_meta"] = _qm21
 ORACLE["qm21_mkv_meta"] = """
 SELECT doc_id,
        CASE WHEN doc_id % 2 = 0 THEN 'webm' ELSE 'matroska' END AS format,
@@ -1488,17 +1416,13 @@ def _qm22_make_audio(doc_id: int) -> bytes:
     return encode_ogg_skeleton("vorbis", 1, 44100, total)
 
 
-def _qm22(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm22_audio_meta", _AUDIO_META_SCHEMA)
+def _qm22(d: int) -> list:
     from pdf_spark.core.audio import audio_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **audio_meta(_qm22_make_audio(d))}],
-        _AUDIO_META_SCHEMA,
-    )
+    return [audio_meta(_qm22_make_audio(d))]
 
 
-QUERIES["qm22_audio_meta"] = _qm22
 # mp3 CBR duration = frames * frame_len * 8 // kbps with the spec frame
 # size frame_len = spf//8 * kbps*1000 // rate (padding bit 0); Xing docs
 # (i%4==0) report frames * spf * 1000 // rate instead. Opus granule is
@@ -1593,30 +1517,25 @@ def _qm23_make_blob(doc_id: int) -> bytes:
     return b"%!garbage-blob " + bytes([i % 256]) * 64
 
 
-def _qm23(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm23_media_router", _ROUTER_SCHEMA)
+def _qm23(d: int) -> list:
     from pdf_spark.core.audio import audio_meta
     from pdf_spark.core.imaging import image_meta
     from pdf_spark.core.video import video_meta
 
-    def route(d: int) -> list:
-        blob = _qm23_make_blob(d)
-        im = image_meta(blob)
-        if im is not None:
-            return [{"doc_id": d, "modality": "image", "format": im[0]}]
-        au = audio_meta(blob)
-        if au["codec"] != "unknown":
-            return [{"doc_id": d, "modality": "audio", "format": au["codec"]}]
-        vi = video_meta(blob)
-        if vi["format"] != "unknown":
-            return [{"doc_id": d, "modality": "video", "format": vi["format"]}]
-        return [{"doc_id": d, "modality": "unknown", "format": "unknown"}]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), route, _ROUTER_SCHEMA
-    )
+    blob = _qm23_make_blob(d)
+    im = image_meta(blob)
+    if im is not None:
+        return [{"modality": "image", "format": im[0]}]
+    au = audio_meta(blob)
+    if au["codec"] != "unknown":
+        return [{"modality": "audio", "format": au["codec"]}]
+    vi = video_meta(blob)
+    if vi["format"] != "unknown":
+        return [{"modality": "video", "format": vi["format"]}]
+    return [{"modality": "unknown", "format": "unknown"}]
 
 
-QUERIES["qm23_media_router"] = _qm23
 ORACLE["qm23_media_router"] = """
 SELECT doc_id,
        CASE WHEN doc_id % 12 <= 5 THEN 'image'
@@ -1684,17 +1603,13 @@ def _qm24_make_jpeg(doc_id: int) -> bytes:
     return splice_exif(jpeg, app1)
 
 
-def _qm24(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm24_exif_meta", _EXIF_SCHEMA)
+def _qm24(d: int) -> list:
     from pdf_spark.core.imaging import exif_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **exif_meta(_qm24_make_jpeg(d))}],
-        _EXIF_SCHEMA,
-    )
+    return [exif_meta(_qm24_make_jpeg(d))]
 
 
-QUERIES["qm24_exif_meta"] = _qm24
 ORACLE["qm24_exif_meta"] = """
 SELECT doc_id,
        CAST(CASE WHEN doc_id % 5 = 4 THEN 0 ELSE 1 END AS INTEGER)
@@ -1758,17 +1673,13 @@ def _qm25_make_flac(doc_id: int) -> bytes:
     )
 
 
-def _qm25(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm25_flac_meta", _FLAC_SCHEMA)
+def _qm25(d: int) -> list:
     from pdf_spark.core.audio import flac_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **flac_meta(_qm25_make_flac(d))}],
-        _FLAC_SCHEMA,
-    )
+    return [flac_meta(_qm25_make_flac(d))]
 
 
-QUERIES["qm25_flac_meta"] = _qm25
 ORACLE["qm25_flac_meta"] = """
 WITH v AS (
     SELECT doc_id,
@@ -1837,17 +1748,13 @@ def _qm26_make_blob(doc_id: int) -> bytes:
     return encode_png(3, 3, 1, bytes(9))  # static PNG
 
 
-def _qm26(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm26_animation_meta", _ANIM_SCHEMA)
+def _qm26(d: int) -> list:
     from pdf_spark.core.imaging import animation_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **animation_meta(_qm26_make_blob(d))}],
-        _ANIM_SCHEMA,
-    )
+    return [animation_meta(_qm26_make_blob(d))]
 
 
-QUERIES["qm26_animation_meta"] = _qm26
 # GIF duration = k frames x (delay_cs x 10) ms; APNG per-frame ms is
 # num*1000 // den with den 0 -> 100, summed over k identical frames.
 ORACLE["qm26_animation_meta"] = """
@@ -1925,32 +1832,26 @@ def _qm27_make_jpeg(doc_id: int) -> bytes:
     return splice_exif(jpeg, app1)
 
 
-def _qm27(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm27_exif_gps_strip", _GPS_SCHEMA)
+def _qm27(d: int) -> list:
     from pdf_spark.core.imaging import exif_gps, exif_meta, strip_exif_gps
 
-    def row(d: int) -> list:
-        blob = _qm27_make_jpeg(d)
-        g = exif_gps(blob)
-        stripped = strip_exif_gps(blob)
-        orientation = exif_meta(blob)["orientation"]
-        kept = exif_meta(stripped)["orientation"] == orientation
-        return [
-            {
-                "doc_id": d,
-                "has_gps": g["has_gps"],
-                "lat_microdeg": g["lat_microdeg"],
-                "lon_microdeg": g["lon_microdeg"],
-                "gps_after_strip": exif_gps(stripped)["has_gps"],
-                "orientation_kept": 1 if kept else 0,
-            }
-        ]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), row, _GPS_SCHEMA
-    )
+    blob = _qm27_make_jpeg(d)
+    g = exif_gps(blob)
+    stripped = strip_exif_gps(blob)
+    orientation = exif_meta(blob)["orientation"]
+    kept = exif_meta(stripped)["orientation"] == orientation
+    return [
+        {
+            "has_gps": g["has_gps"],
+            "lat_microdeg": g["lat_microdeg"],
+            "lon_microdeg": g["lon_microdeg"],
+            "gps_after_strip": exif_gps(stripped)["has_gps"],
+            "orientation_kept": 1 if kept else 0,
+        }
+    ]
 
 
-QUERIES["qm27_exif_gps_strip"] = _qm27
 ORACLE["qm27_exif_gps_strip"] = """
 WITH v AS (
     SELECT doc_id,
@@ -2017,17 +1918,13 @@ def _qm28_make_mp4(doc_id: int) -> bytes:
     )
 
 
-def _qm28(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm28_mp4_keyframes", _STBL_SCHEMA)
+def _qm28(d: int) -> list:
     from pdf_spark.core.video import mp4_sample_table
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **mp4_sample_table(_qm28_make_mp4(d))}],
-        _STBL_SCHEMA,
-    )
+    return [mp4_sample_table(_qm28_make_mp4(d))]
 
 
-QUERIES["qm28_mp4_keyframes"] = _qm28
 ORACLE["qm28_mp4_keyframes"] = """
 WITH v AS (
     SELECT doc_id,
@@ -2099,17 +1996,13 @@ def _qm29_make_jpeg(doc_id: int) -> bytes:
     return splice_exif(base, app1)
 
 
-def _qm29(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm29_xmp_ai_provenance", _XMP_SCHEMA)
+def _qm29(d: int) -> list:
     from pdf_spark.core.imaging import jpeg_xmp_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **jpeg_xmp_meta(_qm29_make_jpeg(d))}],
-        _XMP_SCHEMA,
-    )
+    return [jpeg_xmp_meta(_qm29_make_jpeg(d))]
 
 
-QUERIES["qm29_xmp_ai_provenance"] = _qm29
 ORACLE["qm29_xmp_ai_provenance"] = """
 SELECT doc_id,
        CAST(CASE WHEN doc_id % 5 = 4 THEN 0 ELSE 1 END AS INTEGER) AS has_xmp,
@@ -2146,17 +2039,13 @@ def _qm30_make_webp(doc_id: int) -> bytes:
     return encode_webp_animation(8, 6, [dur] * k, loop_count=i % 6)
 
 
-def _qm30(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm30_webp_animation", _ANIM_SCHEMA)
+def _qm30(d: int) -> list:
     from pdf_spark.core.imaging import animation_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **animation_meta(_qm30_make_webp(d))}],
-        _ANIM_SCHEMA,
-    )
+    return [animation_meta(_qm30_make_webp(d))]
 
 
-QUERIES["qm30_webp_animation"] = _qm30
 ORACLE["qm30_webp_animation"] = """
 SELECT doc_id,
        'webp' AS format,
@@ -2210,17 +2099,13 @@ def _qm31_make_mp3(doc_id: int) -> bytes:
     return tag + mp3
 
 
-def _qm31(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm31_id3_tags", _ID3_SCHEMA)
+def _qm31(d: int) -> list:
     from pdf_spark.core.audio import id3_tags
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **id3_tags(_qm31_make_mp3(d))}],
-        _ID3_SCHEMA,
-    )
+    return [id3_tags(_qm31_make_mp3(d))]
 
 
-QUERIES["qm31_id3_tags"] = _qm31
 ORACLE["qm31_id3_tags"] = """
 SELECT doc_id,
        CAST(CASE WHEN doc_id % 5 = 4 THEN 0 ELSE 1 END AS INTEGER)
@@ -2280,7 +2165,8 @@ def _qm32_make_blob(fam: str, i: int) -> bytes:
     return b"#!opaque " + bytes([i % 256]) * 32
 
 
-def _qm32(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm32_mime_mismatch", _MISMATCH_SCHEMA)
+def _qm32(d: int) -> list:
     from pdf_spark.core.audio import audio_meta
     from pdf_spark.core.imaging import image_meta
     from pdf_spark.core.video import video_meta
@@ -2297,26 +2183,19 @@ def _qm32(spark: SparkSession, sf: str) -> DataFrame:
             return vi["format"]
         return "bin"
 
-    def row(d: int) -> list:
-        declared = _QM32_FAMS[d % 6]
-        # every third doc's bytes are actually a DIFFERENT family
-        actual = _QM32_FAMS[(d + 2) % 6] if d % 3 == 0 else declared
-        sn = sniff(_qm32_make_blob(actual, d))
-        return [
-            {
-                "doc_id": d,
-                "declared": declared,
-                "sniffed": sn,
-                "mismatch": int(sn != declared),
-            }
-        ]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), row, _MISMATCH_SCHEMA
-    )
+    declared = _QM32_FAMS[d % 6]
+    # every third doc's bytes are actually a DIFFERENT family
+    actual = _QM32_FAMS[(d + 2) % 6] if d % 3 == 0 else declared
+    sn = sniff(_qm32_make_blob(actual, d))
+    return [
+        {
+            "declared": declared,
+            "sniffed": sn,
+            "mismatch": int(sn != declared),
+        }
+    ]
 
 
-QUERIES["qm32_mime_mismatch"] = _qm32
 ORACLE["qm32_mime_mismatch"] = """
 WITH fams AS (
     SELECT doc_id,
@@ -2380,17 +2259,13 @@ def _qm33_make_png(doc_id: int) -> bytes:
     return png_add_text(base, [("iTXt", "Title", "t" + str(i % 9))])
 
 
-def _qm33(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm33_png_text_provenance", _PNGTEXT_SCHEMA)
+def _qm33(d: int) -> list:
     from pdf_spark.core.imaging import png_text_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **png_text_meta(_qm33_make_png(d))}],
-        _PNGTEXT_SCHEMA,
-    )
+    return [png_text_meta(_qm33_make_png(d))]
 
 
-QUERIES["qm33_png_text_provenance"] = _qm33
 ORACLE["qm33_png_text_provenance"] = """
 SELECT doc_id,
        CAST(CASE WHEN doc_id % 4 = 0 THEN 0 ELSE 1 END AS INTEGER)
@@ -2459,17 +2334,13 @@ def _qm34_make_svg(doc_id: int) -> bytes:
     return ('<?xml version="1.0"?>' + decoy + body).encode("utf-8")
 
 
-def _qm34(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm34_svg_meta", _SVG_SCHEMA)
+def _qm34(d: int) -> list:
     from pdf_spark.core.imaging import svg_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **svg_meta(_qm34_make_svg(d))}],
-        _SVG_SCHEMA,
-    )
+    return [svg_meta(_qm34_make_svg(d))]
 
 
-QUERIES["qm34_svg_meta"] = _qm34
 ORACLE["qm34_svg_meta"] = """
 WITH v AS (
     SELECT doc_id,
@@ -2534,23 +2405,18 @@ def _qm35_make_blob(doc_id: int) -> bytes:
     return encode_heif_skeleton(b"avis", [(w, h)], 1)  # animated sequence
 
 
-def _qm35(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm35_heif_meta", _HEIF_SCHEMA)
+def _qm35(d: int) -> list:
     from pdf_spark.core.video import heif_meta
 
-    def row(d: int) -> list:
-        try:
-            m = heif_meta(_qm35_make_blob(d))
-        except ValueError:
-            return [{**dict.fromkeys(_HEIF_SCHEMA.names), "doc_id": d,
-                     "is_heif": 0}]
-        return [{**m, "doc_id": d, "is_heif": 1}]
-
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"), row, _HEIF_SCHEMA
-    )
+    try:
+        m = heif_meta(_qm35_make_blob(d))
+    except ValueError:
+        return [{**dict.fromkeys(_HEIF_SCHEMA.names), "doc_id": d,
+                 "is_heif": 0}]
+    return [{**m, "doc_id": d, "is_heif": 1}]
 
 
-QUERIES["qm35_heif_meta"] = _qm35
 ORACLE["qm35_heif_meta"] = """
 WITH v AS (
     SELECT doc_id,
@@ -2643,17 +2509,13 @@ def _qm36_make_blob(doc_id: int) -> bytes:
     ).encode("utf-8")
 
 
-def _qm36(spark: SparkSession, sf: str) -> DataFrame:
+@per_doc(QUERIES, "qm36_subtitle_cues", _SUB_SCHEMA)
+def _qm36(d: int) -> list:
     from pdf_spark.core.subtitles import subtitle_meta
 
-    return map_rows(
-        load(spark, sf, "documents").select("doc_id"),
-        lambda d: [{"doc_id": d, **subtitle_meta(_qm36_make_blob(d))}],
-        _SUB_SCHEMA,
-    )
+    return [subtitle_meta(_qm36_make_blob(d))]
 
 
-QUERIES["qm36_subtitle_cues"] = _qm36
 ORACLE["qm36_subtitle_cues"] = """
 WITH v AS (
     SELECT doc_id,

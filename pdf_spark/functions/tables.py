@@ -1,4 +1,8 @@
-"""Table loading + temp-view registration for the query matrix."""
+"""Table loading + temp-view registration for the query matrix, and its
+two query shapes: ``map_rows`` (one typed Arrow map stage over any frame)
+and ``per_doc``, the per-document shape — a decorated ``fn(doc_id)``
+builds that document's fixture and returns its rows, registered as one
+``map_rows`` stage over ``documents.doc_id``."""
 
 from __future__ import annotations
 
@@ -66,6 +70,24 @@ def map_rows(
             )
 
     return df.mapInPandas(run, schema)
+
+
+def per_doc(queries: dict, name: str, schema: StructType) -> Callable:
+    """Register the decorated ``fn(doc_id)`` as query ``queries[name]``:
+    one ``map_rows`` stage over ``documents.doc_id`` whose output rows
+    are ``fn``'s rows with the ``doc_id`` merged in front (a row's own
+    ``doc_id`` wins). Returns ``fn`` unchanged, so workers import it by
+    name from its module."""
+
+    def register(fn: Callable[[int], Iterable[dict]]) -> Callable:
+        queries[name] = lambda spark, sf: map_rows(
+            load(spark, sf, "documents").select("doc_id"),
+            lambda d: ({"doc_id": d, **row} for row in fn(d)),
+            schema,
+        )
+        return fn
+
+    return register
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

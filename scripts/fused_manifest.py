@@ -45,6 +45,8 @@ FUSED_MODULES = [
     "pdf_spark/core/sfnt.py",
     "pdf_spark/core/type1.py",
     "pdf_spark/operators/extract.py",
+    "pdf_spark/operators/lineage.py",
+    "pdf_spark/session.py",
 ]
 
 

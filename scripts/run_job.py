@@ -8,9 +8,10 @@ Usage (see scripts/submit.sh for the --py-files packaging):
         [--format parquet|warc]
 
 Reads the Common-Crawl-style pages table (parquet, or raw WARC archives
-via the sources.warc connector), runs the fused extraction with
-skew salting, writes docs_text (run_id-partitioned) + lineage, and prints
-the run summary as one JSON line. Re-running with the same --out resumes:
+via the sources.warc connector), runs the fused extraction (skew
+salting over N partitions with --salt N, none without it), writes
+docs_text (run_id-partitioned) + lineage, and prints the run summary
+as one JSON line. Re-running with the same --out resumes:
 the input files that a committed run read are skipped, and the new run's
 lineage reports only what it actually processed.
 """

@@ -1,4 +1,5 @@
-"""``map_rows``: the one typed map stage behind the query matrix.
+"""``map_rows``: the one typed map stage behind the query matrix, and
+``per_doc``, the per-document query shape built on it.
 
 Column dtypes come from the output ``StructType`` alone, so nullable
 ints, >2**53 longs, empty batches and missing keys are pinned here once
@@ -13,7 +14,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_spark.functions.tables import map_rows
+from pdf_spark.functions.tables import load, map_rows, per_doc
 
 _SCHEMA = StructType(
     [
@@ -83,3 +84,48 @@ def test_extra_keys_ignored_missing_key_raises(spark):
     )
     with pytest.raises(Exception, match="KeyError"):
         missing.collect()
+
+
+def _doc_ids(spark, sf_dir):
+    return sorted(
+        r.doc_id
+        for r in load(spark, sf_dir, "documents").select("doc_id").collect()
+    )
+
+
+def test_per_doc_registers_and_returns_fn():
+    queries = {}
+
+    def rows(d):
+        return []
+
+    assert per_doc(queries, "q_rows", _SCHEMA)(rows) is rows
+    assert list(queries) == ["q_rows"] and callable(queries["q_rows"])
+
+
+def test_per_doc_rows_per_document(spark, sf_dir):
+    queries = {}
+
+    @per_doc(queries, "q_fan", _SCHEMA)
+    def fan(d):
+        # doc d emits d % 3 rows: 0, 1 or 2
+        return ({"n": k, "big": _BIG + k, "label": f"d{d}"}
+                for k in range(d % 3))
+
+    ids = _doc_ids(spark, sf_dir)
+    assert {d % 3 for d in ids} == {0, 1, 2}
+    got = sorted(tuple(r) for r in queries["q_fan"](spark, sf_dir).collect())
+    assert got == [
+        (d, k, _BIG + k, f"d{d}") for d in ids for k in range(d % 3)
+    ]
+
+
+def test_per_doc_row_doc_id_wins(spark, sf_dir):
+    queries = {}
+
+    @per_doc(queries, "q_own_id", _SCHEMA)
+    def own_id(d):
+        return [{"doc_id": -d, "n": 1, "big": 2, "label": None}]
+
+    got = sorted(r.doc_id for r in queries["q_own_id"](spark, sf_dir).collect())
+    assert got == sorted(-d for d in _doc_ids(spark, sf_dir))

@@ -1087,6 +1087,35 @@ def test_signature_field_tree_dotted_name_and_garbage():
         assert extract_signatures(r) == []
 
 
+def test_signature_field_inherits_ft_from_parent():
+    from pdf_spark.core.meta import (
+        acro_fields,
+        extract_form_fields,
+        extract_signatures,
+    )
+    from pdf_spark.gen.pdfgen import PdfBuilder
+
+    # /FT is inheritable (§12.7.4.1): the parent says /Sig, the kid signs
+    b = PdfBuilder()
+    cat = b.reserve()
+    pages = b.reserve()
+    parent = b.reserve()
+    kid = b.add(b"<</T(c)/Parent " + str(parent).encode() + b" 0 R"
+                b"/V<</Type/Sig/SubFilter/adbe.pkcs7.detached"
+                b"/ByteRange[0 10 20 30]>>>>")
+    b.set(parent, b"<</FT/Sig/T(grp)/Kids[" + str(kid).encode() + b" 0 R]>>")
+    b.set(cat, b"<</Type/Catalog/Pages " + str(pages).encode()
+          + b" 0 R/AcroForm<</Fields[" + str(parent).encode() + b" 0 R]>>>>")
+    b.set(pages, b"<</Type/Pages/Kids[]/Count 0>>")
+    raw = b.build(cat)
+    assert [(n, str(ft)) for n, _, ft, _ in acro_fields(Resolver(raw))] == [
+        ("grp.c", "Sig")
+    ]
+    assert extract_form_fields(Resolver(raw)) == [("grp.c", "Sig", None)]
+    rows = extract_signatures(Resolver(raw))
+    assert [r[:2] for r in rows] == [("grp.c", "adbe.pkcs7.detached")]
+
+
 class TestFileId:
     def _doc(self, trailer_extra=b""):
         from pdf_spark.core.document import Resolver
