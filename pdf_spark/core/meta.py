@@ -1064,8 +1064,9 @@ def extract_signatures(resolver) -> list:
     Unsigned fields (``/V`` absent) are skipped — an empty signature
     field is a placeholder, not a signature. The field-tree walk
     (``/Kids``, dotted names, visited set) is :func:`acro_fields`, shared
-    with :func:`extract_form_fields`; a field counts when its ``/FT``,
-    its own or inherited from a parent field (§12.7.4.1), is ``/Sig``.
+    with :func:`extract_form_fields`; a field counts when its ``/FT`` is
+    ``/Sig`` and its ``/V`` is a dict, each its own or inherited from a
+    parent field (§12.7.4.1).
     At most ``SIG_FIELD_CAP`` rows. Never raises.
     """
     out: list = []
@@ -1077,12 +1078,8 @@ def extract_signatures(resolver) -> list:
             return pdf_text_string(bytes(v))
         return None
 
-    for name, node, ft, _ in acro_fields(resolver):
+    for name, _, ft, sig in acro_fields(resolver):
         if not (isinstance(ft, Name) and str(ft) == "Sig"):
-            continue
-        try:
-            sig = resolver.resolve(node.get("V"))
-        except Exception:
             continue
         if not isinstance(sig, dict):
             continue  # unsigned placeholder field

@@ -10,6 +10,8 @@ catch-all ``bad``); see its comment for the grammar. Both lexers use it:
   ``endobj``/``stream`` keyword (or the trailer's ``startxref``, the next
   ObjStm member), and ``_settle`` builds the value with an explicit
   container stack. A stream is read when the top-level dict closes.
+  A body whose exact bytes recur is served from ``_BODY_MEMO`` in fresh
+  containers (see its comment).
 - ``content.parse_content_stream``: one ``findall`` per window of a
   content stream.
 
@@ -584,6 +586,30 @@ def number_token(tok: bytes) -> Any:
 # parses and a Ref construction
 _REF_CACHE: dict[tuple, Ref] = {}
 
+# Settled object bodies by their exact bytes, for the life of the process.
+# Catalogs, page-tree nodes, font dicts, /Widths arrays and trailers repeat
+# byte for byte across the documents of one producer, and ``_settle``'s
+# result depends only on those bytes. A body's first sight stores only
+# the marker ``_SEEN``, so a one-off body (a content stream's dict with
+# its own /Length) costs a lookup and never a copy; its second sight
+# keeps the value. A hit hands out fresh dicts and lists around the
+# shared leaves (bytes, Name, numbers, bools, None and the interned Ref,
+# none of which is ever mutated), so each document still owns its
+# containers: in-place decryption of a Stream's dict, the ``id()``-keyed
+# page, OCG and form caches and ``Resolver._cache`` see exactly what a
+# fresh parse gives.
+# Bound: at most _BODY_MEMO_MAX entries, each keyed by at most
+# _BODY_LEN_MAX bytes. The costliest entry is a ``[[][]…]`` body (an empty
+# list and its slot per two bytes, ~33 bytes per body byte): under 18 KiB
+# with its key, so the memo holds under 18 MiB even when every body is
+# built to fill it. It is cleared when full, so a worker that moves on to
+# another producer refills it with that producer's bodies; a longer body
+# is settled every time.
+_BODY_MEMO: dict[bytes, Any] = {}
+_BODY_MEMO_MAX = 1024
+_BODY_LEN_MAX = 512
+_SEEN = object()
+
 
 def _settle(toks: list) -> Any:
     """The one object that ``toks`` (``TOKEN_RE.findall`` tuples) spell,
@@ -659,20 +685,56 @@ def _settle(toks: list) -> Any:
     return _UNSETTLED if cur is not None else top
 
 
+_BOXES = (dict, list)
+
+
+def _fresh(v: Any) -> Any:
+    """``v`` with every dict and list in it copied; the leaves are shared."""
+    if type(v) is dict:
+        return {k: _fresh(x) if type(x) in _BOXES else x for k, x in v.items()}
+    return [_fresh(x) if type(x) in _BOXES else x for x in v]
+
+
 def _scan(buf: bytes, start: int, stop: int) -> Any:
     """The one object alone (but for whitespace) in ``buf[start:stop]``,
-    tokenized by one ``findall``, or ``_UNSETTLED``. A range holding a
-    ``%`` is left to ``ObjectParser`` (the stop keyword may sit in a
-    comment), as is a range whose last byte is regular (its token may run
-    on past ``stop``: ``/Fooendobj``)."""
-    if buf.find(b"%", start, stop) >= 0 or (
-        stop < len(buf) and buf[stop - 1] not in _NON_REGULAR
-    ):
+    tokenized by one ``findall`` (or copied out of ``_BODY_MEMO``), or
+    ``_UNSETTLED``. A range holding a ``%`` is left to ``ObjectParser``
+    (the stop keyword may sit in a comment), as is a range whose last byte
+    is regular (its token may run on past ``stop``: ``/Fooendobj``)."""
+    if stop < len(buf) and buf[stop - 1] not in _NON_REGULAR:
         return _UNSETTLED
-    try:
-        return _settle(TOKEN_RE.findall(buf, start, stop))
-    except PdfError:  # bad #xx escape, i32 overflow: ObjectParser raises it
-        return _UNSETTLED
+    key = hit = None
+    if stop - start <= _BODY_LEN_MAX:
+        key = buf[start:stop]
+        try:
+            hit = _BODY_MEMO.get(key)
+        except TypeError:  # a bytearray's slices are unhashable
+            key = None
+        if hit is not None and hit is not _SEEN:
+            value, copy = hit
+            return value if copy is None else copy(value)
+    if buf.find(b"%", start, stop) >= 0:
+        value = _UNSETTLED
+    else:
+        try:
+            value = _settle(TOKEN_RE.findall(buf, start, stop))
+        except PdfError:  # bad #xx escape, i32 overflow: ObjectParser raises it
+            value = _UNSETTLED
+    if key is None:
+        return value
+    if hit is None:  # first sight: remember the body, keep no value
+        if len(_BODY_MEMO) >= _BODY_MEMO_MAX:
+            _BODY_MEMO.clear()
+        _BODY_MEMO[key] = _SEEN
+        return value
+    # second sight: keep this value, hand out a copy
+    copy = None
+    if type(value) in _BOXES:
+        # one opener in the bytes: no container inside the value
+        flat = key.count(b"<<") + key.count(b"[") == 1
+        copy = type(value).copy if flat else _fresh
+    _BODY_MEMO[key] = (value, copy)
+    return value if copy is None else copy(value)
 
 
 def parse_indirect_at(buf: bytes, offset: int, resolver=None) -> tuple:
